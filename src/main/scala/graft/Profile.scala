@@ -23,24 +23,4 @@ object Profile {
         println(f"[stage-$cores] id=${si.stageId}%3d tasks=${si.numTasks}%4d wall=$wall%7.2fs cpu=$cpu%7.1fs run=$run%7.1fs gc=$gc%6.1fs spill=$spillM%6.0f/$spillD%6.0fMB in=$inB%6.0f shw=$shW%6.0f shr=$shR%6.0f ${si.name.take(40)}")
       }
     })
-
-  def main(args: Array[String]): Unit = {
-    val work = args(0)
-    val cores = args(1).toInt
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    attach(spark, cores)
-    def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
-    for (round <- 1 to 2) {
-      rm(new java.io.File(s"$work/tile_stats"))
-      println(s"[round $round]")
-      val t0 = System.nanoTime()
-      val (out, n) = Pipeline.run(spark, work, zoom = 8, level = sys.env.getOrElse("GRAFT_LEVEL", "10").toInt)
-      println(f"[total-$cores r$round] ${(System.nanoTime() - t0) / 1e9}%.2f s  images=$n tiles=$out")
-    }
-    spark.stop()
-  }
 }

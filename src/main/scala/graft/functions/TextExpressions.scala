@@ -235,12 +235,6 @@ object textexprs {
     override def prettyName: String = "doc_fingerprint"
   }
 
-  /** Stopword-membership language-ID heuristic over a small built-in
-    * profile set (en/de/fr/es + unknown): score(lang) = number of TOKENS
-    * (whitespace-split, lowercased, with multiplicity) in the language's
-    * stopword set; prediction = highest score, ties broken by profile
-    * order, zero score -> "und". Token membership (not substring counting)
-    * keeps the heuristic exactly reproducible in SQL. */
   /** ngram_hash_set(text, n): SORTED, duplicate-free [[portableHash60]]
     * hashes of every character n-gram (a text shorter than n contributes
     * its whole self as the single gram; an empty text hashes the empty
@@ -377,6 +371,12 @@ object textexprs {
     override def prettyName: String = "minhash_set"
   }
 
+  /** Stopword-membership language-ID heuristic over a small built-in
+    * profile set (en/de/fr/es + unknown): score(lang) = number of TOKENS
+    * (whitespace-split, lowercased, with multiplicity) in the language's
+    * stopword set; prediction = highest score, ties broken by profile
+    * order, zero score -> "und". Token membership (not substring counting)
+    * keeps the heuristic exactly reproducible in SQL. */
   case class LangId(child: Expression)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = StringType

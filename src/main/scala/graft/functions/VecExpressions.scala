@@ -90,7 +90,8 @@ object vecexprs {
 
   /** Intersection size of two SORTED ascending long arrays (allocation-free
     * two-pointer merge) — the per-candidate-pair verify kernel of the
-    * n-gram Jaccard join. `array_intersect` builds a hash set per CALL;
+    * word-set and n-gram Jaccard joins, which both carry token sets as
+    * hashed longs. `array_intersect` builds a hash set per CALL;
     * on a near-all-pairs candidate set (template corpora defeat prefix
     * filtering) that allocation dominated the stage. Inputs must be sorted
     * and duplicate-free (array_sort(array_distinct(...)) upstream) — with
@@ -135,54 +136,6 @@ object vecexprs {
     override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedInterCount =
       copy(left = l, right = r)
     override def prettyName: String = "sorted_inter_count"
-  }
-
-  /** [[SortedInterCount]] for STRING arrays sorted in Spark's binary
-    * (UTF8String) order — the per-candidate-pair verify kernel of the
-    * word-set Jaccard join, where the elements are the tokens themselves
-    * (hashing them to longs could collide and change the exact count).
-    * Same contract: inputs sorted ascending and duplicate-free
-    * (array_sort(array_distinct(...)) upstream), allocation-free two-pointer
-    * merge instead of `array_intersect`'s per-call hash set. */
-  case class SortedInterCountStr(left: Expression, right: Expression)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes =
-      Seq(ArrayType(org.apache.spark.sql.types.StringType),
-        ArrayType(org.apache.spark.sql.types.StringType))
-    override def dataType: DataType = IntegerType
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val na = x.numElements(); val nb = y.numElements()
-      var i = 0; var j = 0; var c = 0
-      while (i < na && j < nb) {
-        val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-        if (cmp == 0) { c += 1; i += 1; j += 1 }
-        else if (cmp < 0) i += 1
-        else j += 1
-      }
-      c
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-        val i = ctx.freshName("i"); val j = ctx.freshName("j")
-        val c = ctx.freshName("c"); val cmp = ctx.freshName("cmp")
-        s"""
-           |final int $na = $a.numElements();
-           |final int $nb = $b.numElements();
-           |int $i = 0, $j = 0, $c = 0;
-           |while ($i < $na && $j < $nb) {
-           |  final int $cmp = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-           |  if ($cmp == 0) { $c++; $i++; $j++; }
-           |  else if ($cmp < 0) { $i++; } else { $j++; }
-           |}
-           |${ev.value} = $c;
-         """.stripMargin
-      })
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedInterCountStr =
-      copy(left = l, right = r)
-    override def prettyName: String = "sorted_inter_count_str"
   }
 
   /** Deterministic sparse-hyperplane weight for LSH plane `p`, component

@@ -259,9 +259,11 @@ object Dedup {
     *    dictionary-encoded into a single 64-bit mask, identical masks
     *    collapsed, and mask pairs compared with one popcount each in a
     *    blocked self-join. Per-pair cost is two bit-ops instead of a
-    *    string-array intersection (~100x), and duplicate masks pay once.
+    *    sorted-array merge, and duplicate masks pay once.
     *  - otherwise: [[jaccardPairsPrefix]] — PPJoin-style prefix filter.
-    */
+    *
+    * Tokens are carried as 64-bit `xxhash64` values (see [[tokenSets]]),
+    * the same sorted-long representation as [[ngramJaccardPairs]]. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, minTokenLen: Int = 0): DataFrame =
     adaptiveJaccard(tokenSets(df, idCol, textCol, minTokenLen), threshold)
@@ -278,7 +280,7 @@ object Dedup {
     *
     * Grams are carried as PORTABLE 60-bit md5 hashes (the q23/q26 hash:
     * `conv(substr(md5(g), 1, 15), 16, 10)`, recomputed verbatim by the
-    * oracle) rather than strings: candidate verification intersects long
+    * oracle) rather than strings: candidate verification merges long
     * arrays instead of 12-char strings — measured 26 s -> ~8 s at sf0.1,
     * where a template corpus defeats prefix filtering and verification is
     * near-all-pairs. Jaccard over injectively-hashed grams equals gram
@@ -286,14 +288,15 @@ object Dedup {
     * both engines hash identically so the comparison can never drift.
     * Goes straight to the PPJoin prefix plan (an n-gram vocabulary is
     * never <= 64). For web-scale fuzzy matching use [[minhashPairs]]
-    * (LSH-bounded candidates); exact n-gram Jaccard is the verifier tier. */
-  /** `maxCandidatePairs > 0` arms the candidate-explosion circuit breaker
-    * (see [[prefixPlan]]): template-heavy corpora defeat prefix filtering
-    * (every doc shares mid-frequency grams with every other), degenerating
-    * the exact plan toward an all-pairs verify; past the bound, candidates
-    * come from a minhash band join instead (bounded by true similarity, not
-    * gram sharing) at a documented near-1-but-not-provably-1 recall. The
-    * default 0 keeps the plan fully exact. */
+    * (LSH-bounded candidates); exact n-gram Jaccard is the verifier tier.
+    *
+    * `maxCandidatePairs > 0` arms the candidate-explosion circuit breaker
+    * (see [[jaccardPairsPrefix]]): template-heavy corpora defeat prefix
+    * filtering (every doc shares mid-frequency grams with every other),
+    * degenerating the exact plan toward an all-pairs verify; past the
+    * bound, candidates come from a minhash band join instead (bounded by
+    * true similarity, not gram sharing) at a documented near-1-but-not-
+    * provably-1 recall. The default 0 keeps the plan fully exact. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 12, threshold: Double = 0.8,
                         maxCandidatePairs: Long = 0L): DataFrame = {
@@ -305,7 +308,7 @@ object Dedup {
     val grams = widen(df).select(col(idCol).as("id"),
         ngram_hash_set(col(textCol), n).as("toks"))
       .withColumn("sz", size(col("toks")))
-    jaccardPairsPrefixSortedLongs(grams, threshold, maxCandidatePairs)
+    jaccardPairsPrefix(grams, threshold, maxCandidatePairs)
   }
 
   /** Shared dispatch: one bounded vocabulary probe (<= 65 rows collected)
@@ -319,21 +322,24 @@ object Dedup {
     // as the plans themselves (see jaccardPairsDict docstring).
     val toks = toks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocab = toks.select(explode(col("toks")).as("tok")).distinct()
-      .orderBy("tok").as(org.apache.spark.sql.Encoders.STRING).take(65)
+      .orderBy("tok").as(org.apache.spark.sql.Encoders.scalaLong).take(65)
     if (vocab.length <= 64) jaccardPairsDict(toks, vocab, threshold)
     else jaccardPairsPrefix(toks, threshold)
   }
 
+  /** Word token sets as SORTED, duplicate-free `array<bigint>`: the tokens
+    * of `split(text, ' ')` (empty tokens from repeated or trailing spaces
+    * included), filtered to `length >= minTokenLen`, each hashed with
+    * Spark's built-in `xxhash64`. Set Jaccard over the hashes equals set
+    * Jaccard over the words except under a 64-bit collision, and the
+    * sorted-long contract is the one [[jaccardPairsPrefix]]'s merge verify
+    * and [[jaccardPairsDict]]'s mask encoding read. */
   private def tokenSets(df: DataFrame, idCol: String, textCol: String,
                         minTokenLen: Int): DataFrame =
     widen(df).select(col(idCol).as("id"),
-        array_distinct(split(col(textCol), " ")).as("toks"))
-      .withColumn("toks",
-        // sorted once per doc (binary UTF8String order) so the per-pair
-        // verify can run the allocation-free merge kernel instead of
-        // array_intersect's per-call hash set (r6); the set content — and
-        // therefore every mask/signature/Jaccard downstream — is unchanged
-        array_sort(expr(s"filter(toks, t -> length(t) >= $minTokenLen)")))
+        array_sort(array_distinct(transform(
+          filter(split(col(textCol), " "), t => length(t) >= minTokenLen),
+          t => xxhash64(t)))).as("toks"))
       .withColumn("sz", size(col("toks")))
       // Jaccard over two EMPTY sets is 0/0: such docs pair with nothing in
       // the naive/prefix plan, so drop them here too — otherwise the dict
@@ -363,11 +369,11 @@ object Dedup {
     * materialize each result (write / localCheckpoint(eager = true)) and
     * then `spark.catalog.clearCache()` between calls. Same contract for
     * the prefix plan's token cache and [[graft.operators.Ann.ivfTopK]]. */
-  def jaccardPairsDict(toks: DataFrame, vocab: Array[String],
-                       threshold: Double, blocks: Int = 0): DataFrame = {
+  def jaccardPairsDict(toks: DataFrame, vocab: Array[Long],
+                       threshold: Double): DataFrame = {
     val spark = toks.sparkSession
     import spark.implicits._
-    val nBlocks = ThetaBlocks.resolve(spark, blocks)
+    val nBlocks = ThetaBlocks.resolve(spark, 0)
     val vmap = typedLit(vocab.sorted.zipWithIndex.toMap)
     // cached: this subtree feeds FOUR joins below (both sides of the
     // same-mask pairing, both sides of the mask-pair expansion) — without
@@ -474,8 +480,8 @@ object Dedup {
     * shape). Provably the same output as the naive all-token join, at a
     * fraction of the fan-out:
     *
-    *   1. global token order = (document frequency asc, token asc) — hub
-    *      tokens ("the") sort LAST;
+    *   1. global token order = (document frequency asc, token hash asc)
+    *      — hub tokens ("the") sort LAST;
     *   2. each doc indexes only its first p = sz - ceil(t/(1+t) * sz) + 1
     *      tokens in that order (its rarest ~53% at t = 0.9). Completeness:
     *      if two sets with J >= t shared no prefix token, every common
@@ -487,105 +493,19 @@ object Dedup {
     *      fan-out is bounded by rare-token df, not corpus size;
     *   3. candidates are size-filtered (t * max(sa, sb) <= min(sa, sb) is
     *      necessary for J >= t) and verified EXACTLY on the full token
-    *      sets (array_intersect) — no approximation anywhere.
+    *      sets with the allocation-free two-pointer merge
+    *      [[graft.functions.vecexprs.SortedInterCount]] — no approximation
+    *      anywhere.
     *
-    */
-  /** Contract (r6): `toks` must hold SORTED (Spark binary string order),
-    * duplicate-free arrays — [[tokenSets]] satisfies it via
-    * array_sort(array_distinct(...)) — so the exact verify runs the
-    * allocation-free [[graft.functions.vecexprs.SortedInterCountStr]] merge
-    * instead of `array_intersect`'s per-pair hash set. */
-  def jaccardPairsPrefix(toks: DataFrame, threshold: Double): DataFrame =
-    prefixPlan(toks, threshold, sortedLongs = false)
-
-  /** [[jaccardPairsPrefix]] with the candidate verify running through the
-    * codegen'd [[graft.functions.vecexprs.SortedInterCount]] merge kernel —
-    * requires `toks` to be SORTED, duplicate-free `array<bigint>`. Used by
-    * [[ngramJaccardPairs]], whose hashed gram sets satisfy the contract;
-    * on near-all-pairs candidate sets the per-pair hash-set allocation of
-    * `array_intersect` was the dominant stage cost (~2x the whole query). */
-  private[graft] def jaccardPairsPrefixSortedLongs(toks: DataFrame, threshold: Double,
-                                                   maxCandidatePairs: Long = 0L): DataFrame =
-    prefixPlan(toks, threshold, sortedLongs = true, maxCandidatePairs)
-
-  /** Prefix-index fan-out estimate: sum over indexed prefix tokens of
-    * d*(d-1)/2 (d = docs indexing the token) — an upper bound on the
-    * candidate pairs the prefix self-join can emit, in ONE cheap agg over
-    * the (id, tok) prefix frame. Summed in DOUBLE: in exactly the
-    * template-corpus regime the breaker exists for, d ~ 10^7 over 10^5
-    * tokens overflows a Long sum (ANSI crash or silent wrap-negative, which
-    * would DISARM the breaker); a threshold estimate needs magnitude, not
-    * exactness. */
-  private[graft] def prefixFanout(prefix: DataFrame): Double =
-    prefix.groupBy("tok").agg(count(lit(1)).cast("double").as("d"))
-      .agg(coalesce(sum(col("d") * (col("d") - lit(1.0))), lit(0.0)).as("f"))
-      .first().getDouble(0) / 2.0
-
-  /** Breaker candidate route: minhash band join over the element SETS
-    * ([[graft.functions.textexprs.MinHashSet]] — equal sets get equal
-    * signatures). Candidate volume is bounded by TRUE pairwise similarity
-    * (band collisions), not by gram co-occurrence, which is what makes it
-    * immune to the template-corpus explosion. Banding is threshold-adaptive
-    * (`bands = 0`): rows-per-band r is the largest power-of-2 divisor
-    * keeping recall 1 - (1 - t^r)^(n/r) >= 0.98 at J = t — longer bands
-    * suppress the sub-threshold collisions a template corpus is full of,
-    * which is the entire point of the breaker. Recall is near 1, NOT
-    * provably 1 (exact-pair duplicates always collide — equal sets, equal
-    * signatures); the exact prefix route stays the default and this route
-    * only arms past `maxCandidatePairs`. */
-  private[graft] def bandCandidates(toks: DataFrame, threshold: Double,
-                                    numHashes: Int = 64, bands: Int = 0): DataFrame = {
-    val nBands =
-      if (bands > 0) bands
-      else {
-        val r = Seq(32, 16, 8, 4, 2, 1).find { r =>
-          val b = math.max(1, numHashes / r)
-          1.0 - math.pow(1.0 - math.pow(threshold, r), b.toDouble) >= 0.98
-        }.getOrElse(1)
-        math.max(1, numHashes / r)
-      }
-    // signature frame persisted below the band explode: both self-join
-    // sides (r6, same as minhashPairs)
-    val sigs0 = toks
-      .select(col("id"), col("sz"),
-        lsh_bands(minhash_set(col("toks"), numHashes), nBands).as("bands"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = sigs0
-      .select(col("id"), col("sz"),
-        posexplode(col("bands")).as(Seq("band_idx", "bucket")))
-    val a = sigs.select(col("id").as("id_a"), col("sz").as("sz_a"), col("band_idx"), col("bucket"))
-    val b = sigs.select(col("id").as("id_b"), col("sz").as("sz_b"), col("band_idx"), col("bucket"))
-    a.join(b, Seq("band_idx", "bucket"))
-      .where(col("id_a") < col("id_b") &&
-        lit(threshold) * greatest(col("sz_a"), col("sz_b")) <=
-          least(col("sz_a"), col("sz_b")).cast("double"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-  }
-
-  /** The per-doc prefix inverted index of [[prefixPlan]] step 1-2 (one row
-    * per (id, indexed prefix token), with the doc size). Factored out so
-    * the fan-out estimate and tests see exactly the frame the candidate
-    * join runs over. */
-  private[graft] def prefixIndex(toks: DataFrame, threshold: Double): DataFrame = {
-    val c = threshold / (1.0 + threshold)
-    val inv = toks.select(col("id"), explode(col("toks")).as("tok"))
-    val dfreq = inv.groupBy("tok").agg(count(lit(1)).as("df"))
-    // per-doc prefix in global (df, tok) order
-    inv.join(dfreq, "tok")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("sorted"))
-      .withColumn("sz", size(col("sorted")))
-      // FP-safe overlap bound: subtract an epsilon before ceil so a
-      // rounding artifact that lands c*sz infinitesimally ABOVE an exact
-      // integer cannot shorten the prefix by one (longer prefix = extra
-      // candidates only; the exact verify removes them)
-      .withColumn("plen", (col("sz") - ceil(lit(c) * col("sz") - lit(1e-9)) + 1).cast("int"))
-      .select(col("id"), col("sz"),
-        explode(expr("transform(slice(sorted, 1, plen), s -> s.tok)")).as("tok"))
-  }
-
-  private def prefixPlan(toks0: DataFrame, threshold: Double, sortedLongs: Boolean,
+    * Contract: `toks` holds (id, toks, sz) with `toks` a SORTED,
+    * duplicate-free `array<bigint>` — [[tokenSets]] and `ngram_hash_set`
+    * both produce it.
+    *
+    * `maxCandidatePairs > 0` arms the candidate-explosion circuit breaker:
+    * when the prefix index's fan-out estimate ([[prefixFanout]]) exceeds
+    * the bound, candidates come from [[bandCandidates]] instead; the exact
+    * verify is shared by both candidate routes. */
+  def jaccardPairsPrefix(toks0: DataFrame, threshold: Double,
                          maxCandidatePairs: Long = 0L): DataFrame = {
     // the tokenize/gram subtree feeds THREE consumers (the inverted index
     // and both sides of the verify join) — persist it once, same lifecycle
@@ -630,17 +550,82 @@ object Dedup {
     cand
       .join(full.select(col("id").as("id_a"), col("toks").as("toks_a"), col("sz").as("sz_a")), "id_a")
       .join(full.select(col("id").as("id_b"), col("toks").as("toks_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("inter",
-        // both token-set producers emit SORTED duplicate-free arrays
-        // (ngram_hash_set contract / tokenSets' array_sort), so the verify
-        // is always the two-pointer merge kernel — array_intersect's
-        // per-pair hash set was the dominant verify cost on big candidate
-        // sets for the string path too (q27 r6 profile: 4.4 CPU-s)
-        if (sortedLongs) sorted_inter_count(col("toks_a"), col("toks_b"))
-        else sorted_inter_count_str(col("toks_a"), col("toks_b")))
+      .withColumn("inter", sorted_inter_count(col("toks_a"), col("toks_b")))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+  }
+
+  /** Prefix-index fan-out estimate: sum over indexed prefix tokens of
+    * d*(d-1)/2 (d = docs indexing the token) — an upper bound on the
+    * candidate pairs the prefix self-join can emit, in ONE cheap agg over
+    * the (id, tok) prefix frame. Summed in DOUBLE: in exactly the
+    * template-corpus regime the breaker exists for, d ~ 10^7 over 10^5
+    * tokens overflows a Long sum (ANSI crash or silent wrap-negative, which
+    * would DISARM the breaker); a threshold estimate needs magnitude, not
+    * exactness. */
+  private[graft] def prefixFanout(prefix: DataFrame): Double =
+    prefix.groupBy("tok").agg(count(lit(1)).cast("double").as("d"))
+      .agg(coalesce(sum(col("d") * (col("d") - lit(1.0))), lit(0.0)).as("f"))
+      .first().getDouble(0) / 2.0
+
+  /** Breaker candidate route: minhash band join over the element SETS
+    * ([[graft.functions.textexprs.MinHashSet]] — equal sets get equal
+    * signatures). Candidate volume is bounded by TRUE pairwise similarity
+    * (band collisions), not by gram co-occurrence, which is what makes it
+    * immune to the template-corpus explosion. Banding is threshold-adaptive
+    * over a 64-hash signature: rows-per-band r is the largest power-of-2
+    * divisor keeping recall 1 - (1 - t^r)^(n/r) >= 0.98 at J = t — longer
+    * bands suppress the sub-threshold collisions a template corpus is full
+    * of, which is the entire point of the breaker. Recall is near 1, NOT
+    * provably 1 (exact-pair duplicates always collide — equal sets, equal
+    * signatures); the exact prefix route stays the default and this route
+    * only arms past `maxCandidatePairs`. */
+  private[graft] def bandCandidates(toks: DataFrame, threshold: Double): DataFrame = {
+    val numHashes = 64
+    val r = Seq(32, 16, 8, 4, 2, 1).find { r =>
+      1.0 - math.pow(1.0 - math.pow(threshold, r), (numHashes / r).toDouble) >= 0.98
+    }.getOrElse(1)
+    val nBands = numHashes / r
+    // signature frame persisted below the band explode: both self-join
+    // sides (r6, same as minhashPairs)
+    val sigs0 = toks
+      .select(col("id"), col("sz"),
+        lsh_bands(minhash_set(col("toks"), numHashes), nBands).as("bands"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = sigs0
+      .select(col("id"), col("sz"),
+        posexplode(col("bands")).as(Seq("band_idx", "bucket")))
+    val a = sigs.select(col("id").as("id_a"), col("sz").as("sz_a"), col("band_idx"), col("bucket"))
+    val b = sigs.select(col("id").as("id_b"), col("sz").as("sz_b"), col("band_idx"), col("bucket"))
+    a.join(b, Seq("band_idx", "bucket"))
+      .where(col("id_a") < col("id_b") &&
+        lit(threshold) * greatest(col("sz_a"), col("sz_b")) <=
+          least(col("sz_a"), col("sz_b")).cast("double"))
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** The per-doc prefix inverted index of [[jaccardPairsPrefix]] steps 1-2
+    * (one row per (id, indexed prefix token), with the doc size). Factored
+    * out so the fan-out estimate and tests see exactly the frame the
+    * candidate join runs over. */
+  private[graft] def prefixIndex(toks: DataFrame, threshold: Double): DataFrame = {
+    val c = threshold / (1.0 + threshold)
+    val inv = toks.select(col("id"), explode(col("toks")).as("tok"))
+    val dfreq = inv.groupBy("tok").agg(count(lit(1)).as("df"))
+    // per-doc prefix in global (df, tok) order
+    inv.join(dfreq, "tok")
+      .groupBy("id")
+      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("sorted"))
+      .withColumn("sz", size(col("sorted")))
+      // FP-safe overlap bound: subtract an epsilon before ceil so a
+      // rounding artifact that lands c*sz infinitesimally ABOVE an exact
+      // integer cannot shorten the prefix by one (longer prefix = extra
+      // candidates only; the exact verify removes them)
+      .withColumn("plen", (col("sz") - ceil(lit(c) * col("sz") - lit(1e-9)) + 1).cast("int"))
+      .select(col("id"), col("sz"),
+        explode(expr("transform(slice(sorted, 1, plen), s -> s.tok)")).as("tok"))
   }
 }

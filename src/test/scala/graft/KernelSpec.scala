@@ -85,19 +85,6 @@ class KernelSpec extends SparkTestBase {
     }
   }
 
-  test("sorted_inter_count_str == intersection size on sorted distinct string arrays") {
-    val cases = Seq.fill(80) {
-      val a = Seq.fill(rnd.nextInt(30))(s"w${rnd.nextInt(40)}").distinct.sorted
-      val b = Seq.fill(rnd.nextInt(30))(s"w${rnd.nextInt(40)}").distinct.sorted
-      (a, b)
-    } :+ ((Seq.empty[String], Seq("a", "b"))) :+ ((Seq.empty[String], Seq.empty[String]))
-    val got = cases.toDF("a", "b")
-      .select(sorted_inter_count_str($"a", $"b")).collect().map(_.getInt(0))
-    cases.zip(got).foreach { case ((a, b), g) =>
-      assert(g == (a.toSet intersect b.toSet).size, s"a=$a b=$b")
-    }
-  }
-
   test("vec_nearest == scalar argmin with zero-padding on mixed-length vectors") {
     val dim = 6
     val cents: Array[Array[Double]] = Array.fill(5)(

@@ -152,12 +152,62 @@ class OperatorsSpec extends SparkTestBase {
     // and directly exercise the prefix path on the small-vocab corpus too
     val toks = small.toDF("doc_id", "text")
       .select(col("doc_id").as("id"),
-        // sorted: jaccardPairsPrefix's r6 contract (merge-kernel verify)
-        array_sort(array_distinct(split(col("text"), " "))).as("toks"))
+        // jaccardPairsPrefix's contract: sorted, distinct array<bigint>
+        array_sort(array_distinct(
+          transform(split(col("text"), " "), t => xxhash64(t)))).as("toks"))
       .withColumn("sz", size(col("toks")))
     val viaPrefix = Dedup.jaccardPairsPrefix(toks, 0.7)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(viaPrefix == naive(small, 0.7))
+  }
+
+  test("jaccard tokenizer: empty tokens, minTokenLen and empty sets match a naive split on both routes") {
+    val rnd = new scala.util.Random(23)
+    // split(" ", -1) keeps empty tokens from double and trailing spaces, the
+    // same tokens Spark's split and DuckDB's string_split produce
+    def naive(docs: Seq[(Long, String)], t: Double, minLen: Int): Set[(Long, Long)] = {
+      val sets = docs.map { case (id, s) => id -> s.split(" ", -1).filter(_.length >= minLen).toSet }
+        .filter(_._2.nonEmpty)
+      (for {
+        (a, sa) <- sets; (b, sb) <- sets if a < b
+        j = (sa intersect sb).size.toDouble / (sa union sb).size
+        if j >= t
+      } yield (a, b)).toSet
+    }
+    // every separator is one or two spaces, and some docs end in a space
+    def doc(vocab: IndexedSeq[String], k: Int): String =
+      rnd.shuffle(vocab).take(k).map(w => if (rnd.nextInt(4) == 0) w + " " else w)
+        .mkString(" ") + (if (rnd.nextBoolean()) " " else "")
+    def corpus(vocab: IndexedSeq[String], n: Int, k: Int): Seq[(Long, String)] = {
+      val base = (0 until n).map(i => (i.toLong, doc(vocab, k)))
+      // near-dups that differ only in spacing or in short tokens, plus
+      // docs whose sets are empty once minTokenLen filters them
+      base ++ base.take(n / 3).map { case (id, s) => (id + 1000L, s.replace(" ", "  ") + " x") } ++
+        Seq((5000L, "a b  c "), (5001L, "a b c"), (5002L, ""), (5003L, " "))
+    }
+    def run(docs: Seq[(Long, String)], t: Double, minLen: Int): (Set[(Long, Long)], String) = {
+      val out = Dedup.jaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text", t,
+        minTokenLen = minLen)
+      val plan = out.queryExecution.optimizedPlan.toString
+      (out.select("id_a", "id_b").as[(Long, Long)].collect().toSet, plan)
+    }
+    val small = corpus((1 to 12).map(i => s"t$i") ++ Seq("u", "v"), 60, 7)
+    val big = corpus((1 to 200).map(i => s"w$i") ++ Seq("u", "v"), 60, 20)
+    for ((minLen, t) <- Seq((0, 0.5), (2, 0.8))) {
+      val (dictPairs, dictPlan) = run(small, t, minLen)
+      assert(dictPlan.contains("bit_count") && !dictPlan.contains("sorted_inter_count"),
+        "a vocabulary of <= 64 tokens takes the dict route")
+      assert(dictPairs == naive(small, t, minLen), s"dict route, minTokenLen=$minLen t=$t")
+      val (prefixPairs, prefixRoutePlan) = run(big, t, minLen)
+      assert(prefixRoutePlan.contains("sorted_inter_count"),
+        "a vocabulary above 64 tokens takes the prefix route")
+      assert(prefixPairs == naive(big, t, minLen), s"prefix route, minTokenLen=$minLen t=$t")
+      spark.catalog.clearCache()
+    }
+    // the empty token is a real token at minTokenLen 0 and filtered above it
+    assert(!run(small, 0.99, 0)._1.contains((5000L, 5001L)))
+    assert(run(small, 0.99, 1)._1.contains((5000L, 5001L)))
+    spark.catalog.clearCache()
   }
 
   test("character-n-gram jaccard pairs == naive; order-sensitive vs word sets") {
@@ -228,7 +278,7 @@ class OperatorsSpec extends SparkTestBase {
     assert(bandCand <= 10, s"band candidates must stay bounded, got $bandCand")
     // armed breaker: same output, through the bounded candidate route
     assert(run(1000L) == exact)
-    spark.catalog.clearCache() // prefixPlan persists its token subtree
+    spark.catalog.clearCache() // jaccardPairsPrefix persists its token subtree
   }
 
   test("ANN LSH top-k achieves high recall vs brute force") {

@@ -131,6 +131,30 @@ class PlanAuditSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  test("word jaccard: one hashed-long token path, merge-kernel verify") {
+    spark.catalog.clearCache()
+    // 120 distinct words: above the 64-token dict cutoff, so the prefix route
+    val docs = (0 until 40).map(i =>
+      (i.toLong, (0 until 12).map(j => s"w${(i * 7 + j * 11) % 120}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val opt = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5).queryExecution.optimizedPlan
+    val p = opt.toString
+    assert("sorted_inter_count\\(".r.findFirstIn(p).isDefined, "merge-kernel verify expected")
+    assert(!p.contains("array_intersect"), "no per-pair hash-set intersect")
+    // token columns anywhere in the plan, including inside the cached
+    // tokenize/prefix subtrees, are array<bigint> — never array<string>
+    val stringArrays = opt.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.cacheBuilder.cachedPlan.collect { case n => n.output }.flatten
+      case n => n.output
+    }.flatten.filter(_.dataType match {
+      case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, _) => true
+      case _ => false
+    })
+    assert(stringArrays.isEmpty, s"array<string> columns in the plan: $stringArrays")
+    spark.catalog.clearCache()
+  }
+
   test("tile counts: single shuffle with partial aggregation") {
     val p = plan(SpatialJoin.tileCounts(SynthData.points(spark, dir), 6))
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, "exactly one shuffle")
