@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (guide §1.4/§1.5) — NOT the
   * driver contract (Bench.scala is frozen): times each query in isolation
   * with the noop sink, optionally with the per-stage Profile listener
@@ -17,19 +15,8 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-benchextra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    if (sys.env.getOrElse("SPARK_GRAFT_PROFILE", "0") == "1")
-      Profile.attach(spark, cpus.toInt)
+    val spark = ParUtil.localSession("graft-benchextra", cpus.toInt)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
 
     val only = ParUtil.onlyFilter
     def wanted(name: String): Boolean = only.forall(_.contains(name))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parallelism guard for narrow-but-CPU-heavy stages.
   *
@@ -40,6 +40,27 @@ object ParUtil {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** The local session every non-frozen main starts from: `cores` task
+    * slots and as many shuffle partitions, AQE with skew-join splitting, no
+    * UI, WARN logging, the graft functions registered, and the per-stage
+    * [[Profile]] listener attached when `SPARK_GRAFT_PROFILE=1`. A main that
+    * needs more (e.g. a broadcast threshold) sets it on the returned
+    * session's runtime conf. */
+  def localSession(appName: String, cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.register(spark)
+    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("1")) Profile.attach(spark, cores)
+    spark
+  }
 
   /** The `SPARK_GRAFT_ONLY` query filter, ONE parse shared by Bench and
     * Verify so the contract cannot drift: comma-separated names, tokens

@@ -27,25 +27,10 @@ import org.apache.spark.sql.functions._
   */
 object ScaleBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scale-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
-    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("1")) Profile.attach(s, cores)
-    s
-  }
-
   /** One warmup + two measured runs at `cores` in one session;
     * returns best (seconds, rows/sec). */
   private def timed(cores: Int, rows: Long)(run: SparkSession => Unit): (Double, Double) = {
-    val spark = session(cores)
+    val spark = ParUtil.localSession(s"graft-scale-$cores", cores)
     try {
       def once(): (Double, Double) = {
         // clean slate per pass: clearCache drops CacheManager entries, and
@@ -84,7 +69,7 @@ object ScaleBench {
     val n4Cores = nCores * 4
 
     // ---- prepare once (32 cores), job-specific input ----
-    val prep = session(32)
+    val prep = ParUtil.localSession("graft-scale-32", 32)
     try job match {
       case "pipeline" =>
         // the count file is written LAST: a crashed prepare (e.g. ENOSPC)

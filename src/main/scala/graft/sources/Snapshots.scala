@@ -4,7 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Checkpointed partition lineage with Iceberg-shaped semantics, emulated on
@@ -63,10 +65,6 @@ object Snapshots {
         r.getAs[Long]("row_count"), r.getAs[Long]("lineage_hash"))).toSeq
   }
 
-  /** Partitions already committed for snapshot `sid` (resume set). */
-  def committedPartitions(spark: SparkSession, table: String, sid: Long): Set[Int] =
-    committedMetas(spark, table, sid).map(_.partId).toSet
-
   /** Write `df` bucketed into `nParts` logical partitions with per-partition
     * lineage rows; skips partitions already committed for this snapshot id
     * (idempotent resume). Returns per-partition metadata for the WHOLE
@@ -81,7 +79,10 @@ object Snapshots {
     *
     * `portableParts`: partition by `keyCol % nParts` on the (numeric) key
     * instead of Spark's murmur hash — lets an external SQL oracle recompute
-    * the partition assignment verbatim (q42 evidence path).
+    * the partition assignment verbatim (q42 evidence path). A null key lands
+    * in part 0 (`coalesce(k % n, 0)` in SQL), so it is counted and read back
+    * like any other row; the hash route needs no rule (`hash(null)` is the
+    * seed).
     * `maxPartsPerRun`: commit at most this many still-pending partitions,
     * then stop WITHOUT flipping the CURRENT pointer or writing the
     * manifest row — a micro-batch commit that doubles as a deterministic
@@ -125,36 +126,34 @@ object Snapshots {
       return committed
     }
     val pending = pendingAll.take(maxPartsPerRun)
-    // a zero-budget micro-batch call commits nothing — return before the
-    // observe path would build an empty aggregate list
+    // a zero-budget micro-batch call commits nothing: no job, no lineage
     if (pending.isEmpty) return committed
     val partialRun = pending.length < pendingAll.length
 
-    // ONE job for data + stats, NOT a job per partition (a driver-side loop
-    // would serialize nParts small jobs and wreck N->4N scaling efficiency —
-    // Amdahl) and NOT a second stats pass over a persisted copy either
-    // (guide §1.2/§5): the per-partition row counts and order-independent
-    // lineage hashes ride the write job itself as observed metrics — two
-    // conditional aggregates per pending part, collected by the same tasks
-    // that write the files. The CollectMetrics node sits ABOVE the
-    // repartition exchange, i.e. inside the write's result stage, where the
-    // scheduler applies accumulator updates exactly once per partition
-    // (failed and duplicate speculative completions are dropped), so the
-    // lineage stats stay exact under retries at cluster scale. Snapshots
-    // wider than 64 pending parts fall back to the persisted two-job path
-    // rather than generating hundreds of aggregate columns.
-    // Dynamic partition overwrite keeps resume safe: a crashed run's
+    // ONE job for data + stats at every width, NOT a job per partition (a
+    // driver-side loop would serialize nParts small jobs and wreck N->4N
+    // scaling efficiency — Amdahl) and NOT a second stats pass over a
+    // persisted copy either (guide §1.2/§5): the per-partition row counts
+    // and order-independent lineage hashes ride the write job itself as one
+    // observed [[PartStats]] aggregate, collected by the same tasks that
+    // write the files, with a buffer of 2 * nParts longs. The CollectMetrics
+    // node sits ABOVE the repartition exchange, i.e. inside the write's
+    // result stage, where the scheduler applies accumulator updates exactly
+    // once per partition (failed and duplicate speculative completions are
+    // dropped), so the lineage stats stay exact under retries at cluster
+    // scale. Dynamic partition overwrite keeps resume safe: a crashed run's
     // partially-written partitions are simply rewritten, and
     // already-committed partitions are filtered out up front.
     val partExpr =
-      if (portableParts) pmod(col(keyCol).cast("long"), lit(nParts.toLong)).cast("int")
+      if (portableParts)
+        coalesce(pmod(col(keyCol).cast("long"), lit(nParts.toLong)).cast("int"), lit(0))
       else pmod(hash(col(keyCol)), lit(nParts)).cast("int")
     val withPart = df.withColumn("part_id", partExpr)
     val filtered = if (pending.length == nParts) withPart
                    else withPart.where(col("part_id").isin(pending: _*))
 
-    val dataCols = df.columns
-    val rowHash = hash(dataCols.map(col): _*).cast("long")
+    val rowHash = hash(df.columns.map(col): _*).cast("long")
+    val obs = Observation()
     // co-locate each logical partition into ONE writer task: without this,
     // every upstream task writes a file per part_id it sees (cores x nParts
     // small files + commit objects — the file churn was 2-3 s of fixed wall
@@ -165,43 +164,16 @@ object Snapshots {
     // snapshots' files — that immutability is what makes asOf reads and
     // snapshot isolation work); dynamic overwrite within it keeps the
     // crash-resume rewrite of a partially-written partition safe.
-    def writeData(frame: DataFrame): Unit =
-      frame.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(s"$table/data/snap_id=$snapshotId")
-    val repart = filtered.repartition(nParts, col("part_id"))
-    val stats: Map[Int, (Long, Long)] =
-      if (pending.length <= 64) {
-        val obs = org.apache.spark.sql.Observation(
-          s"snap-$snapshotId-${java.util.UUID.randomUUID}")
-        val aggs = pending.flatMap { pid => Seq(
-          sum(when(col("part_id") === pid, 1L).otherwise(0L)).as(s"c$pid"),
-          sum(when(col("part_id") === pid, rowHash).otherwise(0L)).as(s"h$pid")) }
-        // observe ABOVE the repartition: the metrics are collected in the
-        // write result stage itself (see the exactly-once note above)
-        writeData(repart.observe(obs, aggs.head, aggs.tail: _*))
-        val m = obs.get // the write action completed, so this returns promptly
-        def l(k: String): Long = m.get(k) match {
-          case Some(v: java.lang.Number) => v.longValue
-          case _ => 0L // empty input: sums are null
-        }
-        pending.map(pid => pid -> ((l(s"c$pid"), l(s"h$pid")))).toMap
-      } else {
-        val persisted = filtered.persist()
-        writeData(persisted.repartition(nParts, col("part_id")))
-        val s = persisted.groupBy("part_id")
-          .agg(count(lit(1)).as("rows"), sum(rowHash).as("lhash"))
-          .collect()
-          .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-        persisted.unpersist()
-        s
-      }
-
-    val metas = pending.map { pid =>
-      val (rows, lhash) = stats.getOrElse(pid, (0L, 0L))
-      PartitionMeta(snapshotId, pid, rows, lhash)
-    }
+    filtered.repartition(nParts, col("part_id"))
+      .observe(obs, udaf(new PartStats(nParts)).apply(col("part_id"), rowHash).as("stats"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("part_id")
+      .parquet(s"$table/data/snap_id=$snapshotId")
+    // the write action completed, so this returns promptly
+    val stats = obs.get("stats").asInstanceOf[scala.collection.Seq[Long]]
+    val metas = pending.map(pid =>
+      PartitionMeta(snapshotId, pid, stats(2 * pid), stats(2 * pid + 1)))
     // metadata-scale rows: written directly by the driver (atomic publish),
     // not via a Spark job — see MetaParquet
     MetaParquet.appendLineage(s"${metaDir(table)}/partitions",
@@ -225,9 +197,9 @@ object Snapshots {
     *      where the winner holds the lock but has not yet published, the
     *      loser falls through — publishing is idempotent and the atomic
     *      replace below still leaves exactly one valid file);
-    *   2. the winner writes the one-row manifest as a parquet file in a
-    *      hidden temp dir (dot-prefixed paths are invisible to parquet
-    *      readers), then
+    *   2. the winner writes the one-row manifest to a dot-prefixed temp
+    *      file beside the target (dot-prefixed paths are invisible to
+    *      parquet readers), then
     *   3. publishes it into `_meta/snapshots/manifest-<sid>.parquet` with a
     *      same-directory ATOMIC_MOVE — readers can never observe a
     *      half-written file, and the manifest can never hold two rows for
@@ -236,7 +208,7 @@ object Snapshots {
     * A crash between steps leaves a lock with no published target; the next
     * (sequential) resume detects that and completes the publish. Concurrent DATA writes for the
     * same snapshot remain single-writer-per-snapshot territory — two
-    * writers racing the same `data/part_id=N` directories is undefined, as
+    * writers racing the same `data/snap_id=S/part_id=N` directories is undefined, as
     * it is for any filesystem table format without a catalog lock; the
     * crash-then-RESUME path (sequential) is fully safe and q42-proven. */
   private[graft] def ensureManifest(spark: SparkSession, table: String, snapshotId: Long,
@@ -277,6 +249,28 @@ object Snapshots {
       java.time.Instant.now.toString, operation, nParts)
   }
 
+  /** Per-part (rows, lineage hash) of a snapshot write as one flat buffer
+    * of `2 * nParts` longs: slot `2p` counts part p's rows, slot `2p + 1`
+    * sums their row hashes (order-independent, so the lineage hash does not
+    * depend on task order). An empty input yields the zero buffer. */
+  private final class PartStats(nParts: Int)
+      extends Aggregator[(Int, Long), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](2 * nParts)
+    def reduce(b: Array[Long], in: (Int, Long)): Array[Long] = {
+      b(2 * in._1) += 1L
+      b(2 * in._1 + 1) += in._2
+      b
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
   /** Atomic CURRENT pointer flip (idempotent). */
   private def ensureCurrent(table: String, snapshotId: Long): Unit = {
     if (currentSnapshot(table).contains(snapshotId)) return
@@ -297,8 +291,7 @@ object Snapshots {
     Paths.get(s"${metaDir(table)}/snapshots/manifest-$sid.parquet")
 
   /** Entry names of `dir` (empty when it is not a directory). Every
-    * name-based listing goes through here; [[ensureManifest]] keeps two raw
-    * `Files.list` sites that need Path objects (temp-part lookup/cleanup). */
+    * directory listing in this object goes through here. */
   private def entryNames(dir: Path): Vector[String] = {
     if (!Files.isDirectory(dir)) return Vector.empty
     val s = Files.list(dir)

@@ -201,6 +201,77 @@ class ImagesSpec extends SparkTestBase {
       .where(pmod(col("k"), lit(4)) === 1).count() == 150)
   }
 
+  test("portable parts: null keys land in part 0, are counted and read back") {
+    // pmod(null, n) is null, and a null part_id is written to a
+    // __HIVE_DEFAULT_PARTITION__ dir that lineage never counts and readData
+    // never reads
+    val dir = java.nio.file.Files.createTempDirectory("snap-nullkey").toString
+    val df = Seq((Some(1L), "a"), (None, "b"), (Some(2L), "c"), (None, "d")).toDF("k", "v")
+    val m = Snapshots.writeSnapshot(spark, df, s"$dir/t", snapshotId = 1L,
+      nParts = 2, keyCol = "k", portableParts = true)
+    assert(m.map(_.rowCount).sum == 4)
+    assert(m.find(_.partId == 0).map(_.rowCount).contains(3L), "2 null keys + key 2")
+    val back = Snapshots.readData(spark, s"$dir/t")
+    assert(back.count() == 4)
+    assert(back.where($"k".isNull).select("part_id").distinct().collect()
+      .map(_.getInt(0)).toSeq == Seq(0))
+  }
+
+  test("wide snapshot: 256 parts take the one-job observed stats path, exact on resume") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("snap-wide").toString
+    val n = 256
+    val nRows = 20000
+    val df = (1 to nRows).map(i => (i.toLong, s"v${i % 977}")).toDF("k", "v")
+    val want: Map[Int, (Long, Long)] = df
+      .groupBy(pmod(hash($"k"), lit(n)).as("p"))
+      .agg(count(lit(1)), sum(hash($"k", $"v").cast("long")))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val wantAll = (0 until n).map(p => p -> want.getOrElse(p, (0L, 0L))).toMap
+    def check(t: String, metas: Seq[Snapshots.PartitionMeta]): Unit = {
+      assert(metas.map(m => m.partId -> ((m.rowCount, m.lineageHash))).toMap == wantAll)
+      val lineage = Snapshots.readPartitionMeta(spark, t).collect().map(r =>
+        r.getAs[Int]("part_id") -> ((r.getAs[Long]("row_count"), r.getAs[Long]("lineage_hash"))))
+      assert(lineage.length == n, "one lineage row per part")
+      assert(lineage.toMap == wantAll)
+      assert(Snapshots.readData(spark, t).count() == nRows)
+    }
+    val sc = spark.sparkContext
+    def jobsOf(body: => Unit): Int = {
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      }
+      org.apache.spark.grafttest.Bus.drain(sc)
+      sc.addSparkListener(listener)
+      try { body; org.apache.spark.grafttest.Bus.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      started.get
+    }
+
+    var wide = Seq.empty[Snapshots.PartitionMeta]
+    val wideJobs = jobsOf {
+      wide = Snapshots.writeSnapshot(spark, df, s"$dir/wide", snapshotId = 1L,
+        nParts = n, keyCol = "k")
+    }
+    check(s"$dir/wide", wide)
+    val narrowJobs = jobsOf {
+      Snapshots.writeSnapshot(spark, df, s"$dir/narrow", snapshotId = 1L, nParts = 8, keyCol = "k")
+    }
+    assert(wideJobs <= narrowJobs, s"256-part commit ran $wideJobs jobs, 8-part ran $narrowJobs")
+
+    // micro-batch of 100 parts, then a resume of the other 156: both runs
+    // are wider than 64 pending parts
+    val first = Snapshots.writeSnapshot(spark, df, s"$dir/resumed", snapshotId = 1L,
+      nParts = n, keyCol = "k", maxPartsPerRun = 100)
+    assert(first.map(_.partId) == (0 until 100))
+    assert(Snapshots.currentSnapshot(s"$dir/resumed").isEmpty)
+    val resumed = Snapshots.writeSnapshot(spark, df, s"$dir/resumed", snapshotId = 1L,
+      nParts = n, keyCol = "k")
+    assert(Snapshots.currentSnapshot(s"$dir/resumed").contains(1L))
+    check(s"$dir/resumed", resumed)
+  }
+
   test("time travel: asOf reads each snapshot exactly; expire keeps referenced files") {
     val dir = java.nio.file.Files.createTempDirectory("snap-tt").toString
     val t = s"$dir/t"
