@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
   *
   *   prepare: synthesize the images table (REAL encoded bytes via
   *            javax.imageio) + polygon layer once, write to Parquet.
-  *   run:     read the prepared tables and execute
-  *            WKT parse (once) -> centroid -> cell ancestors
+  *   run:     read the prepared tables and execute ONE plan
+  *            one narrow pass over the images scan: WKT parse (once)
+  *              -> centroid, header-only decode dims; bytes dropped
   *            polygons -> disjoint quadtree cover
   *            cell equijoin (broadcast cover) -> ray-cast refinement
-  *            image decode -> 8x8 pixel-block -> Z/X/Y tile explode
+  *            group per matched image (n_matches = its polygon count)
+  *            8x8 pixel-block -> Z/X/Y tile explode, weighted by n_matches
   *            groupBy(z,x,y) tile aggregation
   *            write with per-partition lineage snapshot (resumable).
   *
@@ -25,29 +27,23 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** Images table with real encoded bytes + WKT footprint. */
-  def prepareImages(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
-    SynthData.images(spark, sfDir)
-      .withColumn("bytes", image_synth(struct(col("image_id"), col("w"), col("h"), col("fmt"))))
-      .withColumn("footprint_wkt", st_point_wkt(col("lon"), col("lat"), 16))
-      .select("image_id", "point_id", "bytes", "w", "h", "fmt", "caption", "phash",
-        "footprint_wkt")
-  }
-
   def prepare(spark: SparkSession, sfDir: String, workDir: String): Unit =
-    prepareWith(spark, prepareImages(spark, sfDir), sfDir, workDir)
+    prepareWith(spark, withBytes(spark, SynthData.images(spark, sfDir)), sfDir, workDir)
 
   /** Scale-test prepare: n synthetic images (table-free) + the sfDir polygon
     * layer. */
-  def prepareN(spark: SparkSession, n: Long, sfDir: String, workDir: String): Unit = {
+  def prepareN(spark: SparkSession, n: Long, sfDir: String, workDir: String): Unit =
+    prepareWith(spark, withBytes(spark, SynthData.imagesN(spark, n)), sfDir, workDir)
+
+  /** Images table with real encoded bytes + WKT footprint, in the prepared
+    * table's column order. */
+  private def withBytes(spark: SparkSession, imgs: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
-    val imgs = SynthData.imagesN(spark, n)
+    imgs
       .withColumn("bytes", image_synth(struct(col("image_id"), col("w"), col("h"), col("fmt"))))
       .withColumn("footprint_wkt", st_point_wkt(col("lon"), col("lat"), 16))
       .select("image_id", "point_id", "bytes", "w", "h", "fmt", "caption", "phash",
         "footprint_wkt")
-    prepareWith(spark, imgs, sfDir, workDir)
   }
 
   private def prepareWith(spark: SparkSession, imgs: DataFrame, sfDir: String,
@@ -84,77 +80,43 @@ object Pipeline {
         java.nio.file.Files.readString(countFile).trim.toLong
       else images.count()
 
-    // geometry frontend: WKT parsed ONCE into the struct, centroid reused
+    // one narrow pass over the scan: the WKT is parsed ONCE into the
+    // struct, the centroid reused, and the decode reads only the codec
+    // header (image_decode_dims), so the encoded bytes are dropped here and
+    // never reach the join, a shuffle or a broadcast
     val pts = images
-      .withColumn("g", st_geomfromtext(col("footprint_wkt")))
-      .withColumn("c", st_centroid(col("g")))
-      .withColumn("lon", col("c.lon")).withColumn("lat", col("c.lat"))
-      .drop("g", "c", "footprint_wkt")
+      .withColumn("c", st_centroid(st_geomfromtext(col("footprint_wkt"))))
+      .select(col("image_id"), col("c.lon").as("lon"), col("c.lat").as("lat"),
+        col("w"), col("h"), image_decode_dims(col("bytes")).as("px"))
 
     val polys = spark.read.parquet(s"$workDir/polygons")
       .withColumn("geom", st_geomfromtext(col("wkt")))
       .select("poly_id", "geom")
 
-    // cell equijoin + raycast; bytes are pruned from the probe side BEFORE
-    // the explode/join (never shuffle or replicate the payload)
-    val joined = SpatialJoin.pointsInPolygons(
-      pts.drop("bytes", "caption"), polys, level = level,
+    val joined = SpatialJoin.pointsInPolygons(pts, polys, level = level,
       broadcastCover = Some(true))
 
-    // per-image match multiplicity: with hot-region skew a single image can
-    // match many polygons — decode each image ONCE, not once per match, and
-    // weight its tile contributions by the match count. Skinny shuffle
-    // (image_id, 1) with map-side partial aggregation.
-    val matchCnt = joined.groupBy("image_id")
+    // one row per matched image: with hot-region skew a single image can
+    // match many polygons, so its tiles are exploded ONCE and weighted by
+    // the match count. A skinny shuffle with map-side partial aggregation;
+    // unmatched images never reach the tile explode.
+    val matched = joined.groupBy("image_id", "lon", "lat", "w", "h", "px")
       .agg(count(lit(1)).as("n_matches"))
-      .persist()
-    val nMatched = matchCnt.count()
 
-    // semi-join pushed BELOW the decode, without shuffling bytes: the
-    // matched-id set is reduced to a fixed-size Bloom filter (broadcastable
-    // no matter how many images matched), so with a SELECTIVE polygon layer
-    // decode work is proportional to matches, not corpus size. False
-    // positives only waste a decode — the exact inner join on matchCnt
-    // below removes them from the output. Runtime-adaptive: when most
-    // images match anyway (dense layer), the filter can't save decode work,
-    // so skip building/applying it and keep the stage overhead at zero.
-    val selective = nMatched < (nImages / 2)
-    // expectedNumItems is CAPPED: sizing by nMatched alone would make the
-    // driver-built literal grow ~10 bits per matched image (1.2 GB at 10^9
-    // matches — a driver/plan-size scale-killer on exactly the selective
-    // inputs this pushdown targets). Past the cap the fpp degrades
-    // gracefully instead: false positives only waste a decode, and the
-    // exact matchCnt join below removes them from the output.
-    val bloomCap = 64L << 20 // ~64 MB of filter at 2% fpp
-    val bloomBytes =
-      if (!selective) Array.empty[Byte]
-      else graft.functions.sketchexprs.toBytes(
-        matchCnt.stat.bloomFilter(xxhash64(col("image_id")),
-          math.min(math.max(nMatched, 1L), bloomCap), 0.02))
-
-    // raster-tile assignment: decode pixels and map 8x8 blocks of the
-    // footprint bbox (centroid +- half a pixel-degree extent) to tiles —
-    // a NARROW stage straight off the parquet scan (bytes never shuffle,
-    // nothing broadcast: matchCnt grows with the corpus, so the combine is
-    // a skinny shuffle join on image_id instead of a driver-side broadcast)
-    val ptsPruned =
-      if (selective) pts.where(bloom_contains(bloomBytes, xxhash64(col("image_id"))))
-      else pts
-    val tilesPerImage = ptsPruned
+    // raster-tile assignment: map 8x8 blocks of the footprint bbox
+    // (centroid +- half a pixel-degree extent) to tiles
+    val tiles = matched
       .withColumn("half_w", col("w").cast("double") / 2.0 / 1000.0)
       .withColumn("half_h", col("h").cast("double") / 2.0 / 1000.0)
-      .withColumn("px", image_decode_dims(col("bytes")))
       .withColumn("tb", explode(image_tile_blocks(struct(
         (col("lon") - col("half_w")).as("lon_min"),
         (col("lat") - col("half_h")).as("lat_min"),
         (col("lon") + col("half_w")).as("lon_max"),
         (col("lat") + col("half_h")).as("lat_max"),
         col("px.w"), col("px.h"), lit(zoom).as("z"), lit(8).as("block")))))
-      .select(col("image_id"),
+      .select(col("image_id"), col("n_matches"),
         lit(zoom).as("z"), col("tb.tx").as("x"), col("tb.ty").as("y"),
         col("tb.px_count").as("px_count"))
-
-    val tiles = tilesPerImage.join(matchCnt, "image_id")
 
     val agg = tiles.groupBy("z", "x", "y")
       .agg(sum(col("n_matches")).as("assignments"),
@@ -166,7 +128,6 @@ object Pipeline {
     val out =
       if (metas.nonEmpty) metas.map(_.rowCount).sum
       else Snapshots.readData(spark, s"$workDir/tile_stats").count() // resumed no-op
-    matchCnt.unpersist(false)
     (out, nImages)
   }
 

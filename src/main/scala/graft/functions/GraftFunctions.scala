@@ -55,18 +55,6 @@ object GraftFunctions {
     "st_ring_cells" -> arity(4, a => E.StRingCells(a)),
     "st_tile_x" -> arity(2, a => E.StTileX(a(0), a(1))),
     "st_tile_y" -> arity(2, a => E.StTileY(a(0), a(1))),
-    "bloom_contains" -> arity(2, a => {
-      // the filter must be a plan-time BINARY constant: guard before eval so
-      // a SQL caller passing a column/non-binary gets a clean error, not a
-      // raw NPE/ClassCastException from deep inside planning
-      require(a.head.foldable,
-        "bloom_contains: first argument must be a foldable BINARY literal (the serialized filter)")
-      val v = a.head.eval(null)
-      require(v.isInstanceOf[Array[Byte]],
-        "bloom_contains: first argument must evaluate to BINARY (serialized Bloom filter)")
-      sketchexprs.BloomContains(
-        new sketchexprs.BloomBytes(v.asInstanceOf[Array[Byte]]), a(1))
-    }),
     "vec_dot" -> arity(2, a => vecexprs.VecDot(a(0), a(1))),
     "vec_norm2" -> arity(1, a => vecexprs.VecNorm2(a(0))),
     "vec_lsh_bucket" -> arity(2, a => vecexprs.VecLshBucket(a(0), a(1))),
@@ -169,8 +157,6 @@ object GraftFunctions {
     call_function("st_ring_cells", lon, lat, lit(level), r)
   def st_tile_x(lon: Column, z: Int): Column = call_function("st_tile_x", lon, lit(z))
   def st_tile_y(lat: Column, z: Int): Column = call_function("st_tile_y", lat, lit(z))
-  def bloom_contains(filterBytes: Array[Byte], key: Column): Column =
-    call_function("bloom_contains", lit(filterBytes), key)
   def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
   def vec_norm2(v: Column): Column = call_function("vec_norm2", v)
   def vec_lsh_bucket(v: Column, nBits: Int): Column =

@@ -22,14 +22,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB / 1000 executors):
   *  - the cover side is |polys| × O(cells) rows of (long, bool, rings) —
-  *    broadcast it whenever it fits (`broadcast = Some(true)`);
+  *    broadcast it whenever it fits (`broadcastCover = Some(true)`);
   *  - the point side explodes to (maxLevel+1) rows per point but is joined
   *    immediately (no materialization) and whole-stage codegen fuses
   *    explode+join probe;
   *  - for huge polygon layers the equijoin shuffles both sides hashed by
   *    cell; AQE skew-join splits oversized partitions, and
-  *    [[saltedJoin]] additionally spreads identified hot cells over S salt
-  *    buckets (north_rule: "skew handled explicitly").
+  *    [[pointsInPolygonsSalted]] additionally spreads identified hot cells
+  *    over S salt buckets (north_rule: "skew handled explicitly").
   */
 object SpatialJoin {
 
@@ -51,8 +51,9 @@ object SpatialJoin {
 
   /** points(pointCols..., lon, lat) ⋈ polys(polyCols..., geom) -> matches.
     *
-    * @param broadcastCover Some(true) to force broadcast of the cover side,
-    *   Some(false) to force shuffle, None = let Catalyst/AQE decide. */
+    * @param broadcastCover Some(true) pins the cover side as the broadcast
+    *   build; None (and Some(false), which is treated the same) lets
+    *   Catalyst/AQE pick the join strategy. Nothing forces a shuffle. */
   def pointsInPolygons(
       points: DataFrame,
       polys: DataFrame,
@@ -115,8 +116,8 @@ object SpatialJoin {
     // same contract as pointsInPolygons: Some(true) pins the cover side as
     // the broadcast build (r6: the salt explode defeats the planner's size
     // estimate, silently degrading the equijoin to sort-merge — two extra
-    // exchanges — on a cover that comfortably fits a broadcast), None lets
-    // Catalyst/AQE decide for huge polygon layers
+    // exchanges — on a cover that comfortably fits a broadcast); None, like
+    // Some(false), lets Catalyst/AQE decide for huge polygon layers
     val bc: DataFrame => DataFrame = broadcastCover match {
       case Some(true) => broadcast
       case _          => identity

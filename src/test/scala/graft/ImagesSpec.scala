@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.GraftFunctions._
-import graft.operators.Images
+import graft.operators.{Images, SpatialJoin}
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 
@@ -104,11 +104,11 @@ class ImagesSpec extends SparkTestBase {
     assert(out.count() > 0)
   }
 
-  test("sparse polygon layer: bloom-pruned decode, pixel totals match the matched set") {
+  test("sparse polygon layer: selective join, pixel totals match the matched set") {
     val work = java.nio.file.Files.createTempDirectory("pipe-sparse").toString
     Pipeline.prepare(spark, "/root/testdata/sf0.001", work)
-    // overwrite the layer with ONE small polygon -> selective (engages the
-    // bloom semi-join below the decode; exact join removes false positives)
+    // overwrite the layer with ONE small polygon -> selective: most images
+    // match nothing and must contribute no tile rows
     Seq((1L, "POLYGON ((0 0, 8 0, 8 6, 0 6, 0 0))")).toDF("poly_id", "wkt")
       .write.mode("overwrite").parquet(s"$work/polygons")
     val (tiles, n) = Pipeline.run(spark, work)
@@ -124,6 +124,44 @@ class ImagesSpec extends SparkTestBase {
       .agg(sum("pixels")).collect()(0).getLong(0)
     val wantPixels = matched.agg(sum($"w".cast("long") * $"h")).collect()(0).getLong(0)
     assert(gotPixels == wantPixels, s"pixels $gotPixels != matched-set pixels $wantPixels")
+  }
+
+  test("dense polygon layer: tile stats weight each image by its polygon matches") {
+    val work = java.nio.file.Files.createTempDirectory("pipe-dense").toString
+    Pipeline.prepare(spark, "/root/testdata/sf0.001", work)
+    // the sf0.001 rectangles do not overlap: add two nested ones over the
+    // hot point region so that images there match two or three polygons
+    val layer = spark.read.parquet(s"$work/polygons").collect()
+      .map(r => (r.getLong(0), r.getString(1))) ++ Seq(
+        (-1L, "POLYGON ((0 0, 8 0, 8 6, 0 6, 0 0))"),
+        (-2L, "POLYGON ((2 1, 6 1, 6 5, 2 5, 2 1))"))
+    layer.toSeq.toDF("poly_id", "wkt").write.mode("overwrite").parquet(s"$work/polygons")
+    Pipeline.run(spark, work)
+    val got = Snapshots.readData(spark, s"$work/tile_stats")
+      .agg(sum("assignments"), sum("pixels")).collect()(0)
+    // the (image, polygon) pairs over the same footprints, joined apart
+    // from the pipeline (other cover level, full decode for the dims)
+    val pts = spark.read.parquet(s"$work/images")
+      .withColumn("c", st_centroid(st_geomfromtext($"footprint_wkt")))
+      .select($"image_id", $"c.lon".as("lon"), $"c.lat".as("lat"), $"w", $"h", $"bytes")
+    val polys = spark.read.parquet(s"$work/polygons")
+      .select($"poly_id", st_geomfromtext($"wkt").as("geom"))
+    val perImage = SpatialJoin.pointsInPolygons(pts, polys, level = 12)
+      .groupBy("image_id", "lon", "lat", "w", "h", "bytes")
+      .agg(count(lit(1)).as("n_matches"))
+      .withColumn("px", image_decode($"bytes"))
+      .withColumn("n_tiles", size(image_tile_blocks(struct(
+        ($"lon" - $"w" / 2000.0).as("lon_min"), ($"lat" - $"h" / 2000.0).as("lat_min"),
+        ($"lon" + $"w" / 2000.0).as("lon_max"), ($"lat" + $"h" / 2000.0).as("lat_max"),
+        $"px.w", $"px.h", lit(8).as("z"), lit(8).as("block")))))
+      .select($"n_matches", $"n_tiles", ($"w".cast("long") * $"h").as("px"))
+      .collect()
+    assert(perImage.exists(_.getLong(0) > 1), "the layer must give some image several matches")
+    // one assignment per (image, polygon) pair and tile the image's blocks land in
+    val wantAssignments = perImage.map(r => r.getLong(0) * r.getInt(1)).sum
+    val wantPixels = perImage.map(r => r.getLong(0) * r.getLong(2)).sum
+    assert(got.getLong(0) == wantAssignments, s"assignments ${got.getLong(0)} != $wantAssignments")
+    assert(got.getLong(1) == wantPixels, s"pixels ${got.getLong(1)} != $wantPixels")
   }
 
   test("snapshot write + lineage + idempotent resume") {

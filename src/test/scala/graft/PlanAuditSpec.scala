@@ -3,8 +3,17 @@ package graft
 import graft.functions.GraftFunctions._
 import graft.operators.{Ann, Dedup, SpatialJoin}
 import graft.sources.SynthData
+import org.apache.spark.grafttest.Bus
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan shape audit: the properties that make the operators safe at
   * 100x the data are asserted on `explain` output, not just prose —
@@ -43,6 +52,47 @@ class PlanAuditSpec extends SparkTestBase {
     val analyzed = joined.queryExecution.optimizedPlan.toString()
     assert(!analyzed.contains("bytes") && !analyzed.contains("caption"),
       "payload columns must be pruned below the join")
+  }
+
+  test("pipeline: one plan, no cache, images scanned once and only by the snapshot write") {
+    val work = java.nio.file.Files.createTempDirectory("pipe-audit").toString
+    Pipeline.prepare(spark, dir, work)
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = runs.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = runs.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try Pipeline.run(spark, work)
+    finally {
+      Bus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    def images(h: HadoopFsRelation): Int =
+      h.location.rootPaths.count(_.toString.endsWith(s"$work/images"))
+    // scans of the images table, counting those inside a cached relation
+    def imageScans(p: LogicalPlan): Int = p.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => images(h)
+        case _ => 0
+      }
+      case r: InMemoryRelation => AqeTree.collect(r.cacheBuilder.cachedPlan) {
+        case s: FileSourceScanExec => images(s.relation)
+      }.sum
+    }.sum
+    val plans = runs.asScala.toSeq
+    assert(plans.nonEmpty, "the listener saw no executed plan")
+    plans.foreach { qe =>
+      val cached = qe.optimizedPlan.collect { case r: InMemoryRelation => r }
+      assert(cached.isEmpty && !qe.executedPlan.toString.contains("InMemoryTableScan"),
+        s"an executed plan reads a cached relation:\n${qe.optimizedPlan.treeString.take(1500)}")
+    }
+    val readers = plans.filter(qe => imageScans(qe.optimizedPlan) > 0)
+    val nReaders = readers.size
+    assert(nReaders == 1, s"only the snapshot write may read images, got $nReaders plans")
+    assert(readers.head.logical.toString.contains(s"$work/tile_stats"),
+      s"the images reader must be the tile_stats write:\n${readers.head.logical.treeString.take(1500)}")
+    assert(imageScans(readers.head.optimizedPlan) == 1, "images scanned once")
   }
 
   test("exact dedup: partial (map-side) aggregation precedes the shuffle") {
@@ -168,3 +218,6 @@ class PlanAuditSpec extends SparkTestBase {
       s"scan must read only the projected columns, got:\n${p.take(800)}")
   }
 }
+
+/** Physical-plan traversal that descends into adaptive query stages. */
+private object AqeTree extends AdaptiveSparkPlanHelper
