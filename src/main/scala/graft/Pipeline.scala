@@ -118,10 +118,13 @@ object Pipeline {
         lit(zoom).as("z"), col("tb.tx").as("x"), col("tb.ty").as("y"),
         col("tb.px_count").as("px_count"))
 
+    // `matched` has one row per image and image_tile_blocks emits each tile
+    // once per image, so the row count per tile IS the exact distinct-image
+    // count
     val agg = tiles.groupBy("z", "x", "y")
       .agg(sum(col("n_matches")).as("assignments"),
         sum(col("px_count") * col("n_matches")).as("pixels"),
-        approx_count_distinct(col("image_id")).as("n_images"))
+        count(lit(1)).as("n_images"))
 
     val metas = Snapshots.writeSnapshot(spark, agg, s"$workDir/tile_stats",
       snapshotId, nParts = 8, keyCol = "x", operation = "tile-assign")

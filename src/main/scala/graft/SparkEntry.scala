@@ -25,24 +25,16 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     ParUtil.widen(spark.read.parquet(s"$dir/$name.parquet"))
 
-  /** Flagship: the full spatial pipeline on sf0.001 — WKT parsed once,
-    * covered, cell-equijoined, ray-cast refined, tiled. */
+  /** Flagship: [[Pipeline.run]] on sf0.001 in a fresh temp dir — WKT
+    * parsed once, header-only decode, cell-equijoined and ray-cast refined,
+    * pixel blocks tiled, snapshot committed. Returns the committed
+    * `tile_stats`. */
   def entry(spark: SparkSession): DataFrame = {
-    reg(spark)
     val dir = "/root/testdata/sf0.001"
-    val pts = SynthData.images(spark, dir)
-      .withColumn("footprint_wkt", st_point_wkt(col("lon"), col("lat"), 16))
-      .withColumn("g", st_geomfromtext(col("footprint_wkt")))
-      .withColumn("c", st_centroid(col("g")))
-      .select(col("image_id"), col("point_id"), col("c.lon").as("lon"), col("c.lat").as("lat"))
-    val polys = SynthData.polygons(spark, dir)
-      .withColumn("geom", st_geomfromtext(col("wkt")))
-      .select("poly_id", "geom")
-    val joined = SpatialJoin.pointsInPolygons(pts, polys, level = 10, broadcastCover = Some(true))
-    joined
-      .withColumn("x", st_tile_x(col("lon"), 6))
-      .withColumn("y", st_tile_y(col("lat"), 6))
-      .groupBy("poly_id", "x", "y").agg(count(lit(1)).as("images"))
+    val work = java.nio.file.Files.createTempDirectory("graft-entry").toString
+    Pipeline.prepare(spark, dir, work)
+    Pipeline.run(spark, work)
+    Snapshots.readData(spark, s"$work/tile_stats")
   }
 
   // ---------- shared synthetic layers (Spark side) ----------

@@ -67,7 +67,6 @@ object GraftFunctions {
     "doc_fingerprint" -> arity(2, a => textexprs.Fingerprint(a(0), a(1))),
     "ngram_hash_set" -> arity(2, a => textexprs.NgramHashSet(a(0), a(1))),
     "word_ngram_hash_set" -> arity(2, a => textexprs.WordNgramHashSet(a(0), a(1))),
-    "minhash_set" -> arity(2, a => textexprs.MinHashSet(a(0), a(1))),
     "lang_id" -> arity(1, a => textexprs.LangId(a(0))),
     "image_decode" -> arity(1, a => graft.operators.Images.ImageDecode(a(0))),
     "image_decode_dims" -> arity(1, a => graft.operators.Images.ImageDecodeDims(a(0))),
@@ -175,8 +174,6 @@ object GraftFunctions {
     call_function("ngram_hash_set", text, lit(n))
   def word_ngram_hash_set(text: Column, n: Int): Column =
     call_function("word_ngram_hash_set", text, lit(n))
-  def minhash_set(arr: Column, n: Int): Column =
-    call_function("minhash_set", arr, lit(n))
   def lang_id(text: Column): Column = call_function("lang_id", text)
   def image_decode(bytes: Column): Column = call_function("image_decode", bytes)
   def image_decode_dims(bytes: Column): Column = call_function("image_decode_dims", bytes)

@@ -297,80 +297,6 @@ object textexprs {
     override def prettyName: String = "word_ngram_hash_set"
   }
 
-  /** minhash_set(arr, n): MinHash signature of an ELEMENT SET (vs [[MinHash]],
-    * which re-shingles raw text). The permutation family is
-    * `mix64(base ^ seed_j)` — a full-avalanche 64-bit bijection per row, so
-    * the n agreement trials are effectively independent and the agreement
-    * rate tracks set Jaccard tightly. (Deliberately NOT [[MinHash]]'s
-    * SQL-portable affine family: with 60-bit inputs against the 2^61-1
-    * modulus and small multipliers, those permutations barely wrap and are
-    * nearly order-preserving — all rows then agree or disagree together,
-    * which is unusable for banding. This kernel backs only the
-    * candidate-explosion breaker in [[graft.operators.Dedup]]'s prefix
-    * plan, where candidates are re-verified exactly, so no oracle ever
-    * needs to recompute it.) Elements: array<bigint> values are used as
-    * base hashes directly (the [[NgramHashSet]] / [[WordNgramHashSet]]
-    * outputs are already [[portableHash60]] hashes); array<string> elements
-    * are [[portableHash60]]-hashed first. Empty set -> null (no signature),
-    * mirroring [[MinHash]] on token-less text. */
-  case class MinHashSet(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = true
-    // registered as a SQL function, so reject bad calls at ANALYSIS time:
-    // raw text in slot 1 (the natural mistake — the sibling gram functions
-    // take strings) would otherwise CCE per row on the executor, and an
-    // array<int> would silently read garbage through getLong
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      val ok = left.dataType match {
-        case ArrayType(LongType, _) | ArrayType(StringType, _) => true
-        case _ => false
-      }
-      if (ok && right.dataType == IntegerType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash_set expects (array<bigint>|array<string>, int), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
-    private lazy val stringElems: Boolean = left.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    override protected def nullSafeEval(arrAny: Any, nAny: Any): Any = {
-      val arr = arrAny.asInstanceOf[ArrayData]
-      val m = arr.numElements()
-      if (m == 0) return null
-      val n = math.max(1, nAny.asInstanceOf[Int]) // n <= 0 would silently yield an empty signature
-      val sig = Array.fill(n)(Long.MaxValue)
-      var any = false
-      var i = 0
-      while (i < m) {
-        // null ELEMENTS are skipped explicitly: ArrayData.getLong on a null
-        // slot would silently hash an arbitrary value (typically 0) — a
-        // containsNull=true caller (e.g. a hand-built SQL array) must not
-        // acquire a signature component from nothing (r5 advice)
-        if (!arr.isNullAt(i)) {
-          any = true
-          val base =
-            if (stringElems) portableHash60(arr.getUTF8String(i).toString)
-            else arr.getLong(i)
-          var j = 0
-          while (j < n) {
-            val h = mix64(base ^ (0x9e3779b97f4a7c15L * (j + 1)))
-            if (h < sig(j)) sig(j) = h
-            j += 1
-          }
-        }
-        i += 1
-      }
-      if (!any) return null // all-null set: no signature, like the empty set
-      UnsafeArrayData.fromPrimitiveArray(sig)
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): MinHashSet =
-      copy(left = l, right = r)
-    override def prettyName: String = "minhash_set"
-  }
-
   /** Stopword-membership language-ID heuristic over a small built-in
     * profile set (en/de/fr/es + unknown): score(lang) = number of TOKENS
     * (whitespace-split, lowercased, with multiplicity) in the language's

@@ -149,49 +149,26 @@ object Ann {
     *     candidate) pair appears once: no dedup shuffle.
     *
     * Scale shape: the broadcasts are the capped centroid frame, the
-    * per-query probe lists, and (default mode) the quantized QUERY frame
-    * itself — queries are the small side in the service shape; pass
-    * `broadcastQueries = false` for huge batches to route query vectors
-    * through shuffle joins instead ([[ivfSearchWithHandle]]); the
-    * corpus-side assignment is ONE
-    * narrow kernel pass whose result is persisted (MEMORY_AND_DISK) so the
-    * d_k and phase-2 subtrees reuse it instead of recomputing it per
-    * consumer (the round-3 5x-re-execution smell); the probe join is a
-    * plain equijoin on cell id. Nothing is ever all-pairs and the corpus is
-    * never broadcast. Exactness has no data assumptions, so the DuckDB
-    * brute-force oracle must match bit-for-bit (q41).
+    * per-query probe lists, and the quantized QUERY frame itself — queries
+    * are the small side in the service shape (batches of 10^3-10^6 against
+    * a corpus of 10^9+); the corpus-side assignment is ONE narrow kernel
+    * pass whose result is persisted (MEMORY_AND_DISK) so the d_k and
+    * phase-2 subtrees reuse it instead of recomputing it per consumer (the
+    * round-3 5x-re-execution smell); the probe join is a plain equijoin on
+    * cell id. Nothing is ever all-pairs and the corpus is never broadcast.
+    * Exactness has no data assumptions, so the DuckDB brute-force oracle
+    * must match bit-for-bit (q41).
     *
     * Lifecycle: the two persisted intermediates (assignment, query-centroid
     * distances) back the RETURNED plan, so they cannot be unpersisted here;
     * Dataset-level persist is held by the session CacheManager until an
     * explicit `spark.catalog.clearCache()` / uncache (NOT freed by GC), so
     * one-shot jobs are unaffected but long-lived sessions should clear
-    * between batches. A service issuing many query batches over one corpus should
-    * build the index ONCE with [[writeIvfIndex]] and answer batches with
-    * [[ivfTopKIndexed]] — no per-call count/sample/assignment work and no
-    * in-memory cache to manage. */
+    * between batches. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              maxCentroids: Int = 4096, nProbe: Int = 4,
-              broadcastQueries: Boolean = true): DataFrame = {
+              maxCentroids: Int = 4096, nProbe: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    buildIvfAssigned(corpus, maxCentroids) match {
-      case None => bruteTopK(corpus, queries, k) // empty corpus
-      case Some((assigned, centVecs)) =>
-        val cells = assigned.groupBy("cell").agg(max(col("dc")).as("rc"))
-        val centsDf = centVecs.zipWithIndex
-          .map { case (v, i) => (i, v.toSeq) }.toSeq.toDF("cent_id", "cv")
-        ivfSearchWithHandle(queries, assigned, cells, centsDf, k, nProbe,
-          persistQc = true, broadcastQueries)._1
-    }
-  }
-
-  /** Shared index build: quantize + capped deterministic centroid sample
-    * (count() + one distributed top-C are the only extra actions) + ONE
-    * narrow [[graft.functions.vecexprs.VecNearest]] assignment pass,
-    * persisted MEMORY_AND_DISK for its consumers. None on an empty corpus. */
-  private def buildIvfAssigned(corpus: DataFrame, maxCentroids: Int)
-      : Option[(DataFrame, Array[Array[Double]])] = {
     val c = quantize(corpus, "vec_id", "v").withColumn("n_v", vec_norm2(col("v")))
     // ONE distributed top-maxCentroids pass doubles as the corpus-size probe:
     // when it returns fewer than maxCentroids rows, that number IS n and the
@@ -204,7 +181,7 @@ object Ann {
       .select(col("vec_id"), col("v"))
       .orderBy(hash(col("vec_id")), col("vec_id")).limit(capMax)
       .collect()
-    if (sample.isEmpty) return None
+    if (sample.isEmpty) return bruteTopK(corpus, queries, k) // empty corpus
     val n = if (sample.length < capMax) sample.length.toLong else c.count()
     val cCap = centroidCap(n, capMax)
     val centVecs: Array[Array[Double]] = sample.take(cCap)
@@ -221,149 +198,41 @@ object Ann {
       .select(col("vec_id"), col("v"), col("n_v"), col("nc.cell").as("cell"),
         sqrt(greatest(col("nc.d2"), lit(0.0))).as("dc"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Some((assigned, centVecs))
-  }
-
-  /** Build the IVF index ONCE to `path` — the repeated-query-batch shape
-    * ([[Knn.writeCelledCorpus]]'s pattern for embeddings): three parquet
-    * tables (`centroids` — the capped sample; `assigned` — the corpus with
-    * its cell id and centroid distance, co-located by cell; `cells` — per
-    * cell radii). [[ivfTopKIndexed]] then answers any number of query
-    * batches against the files with no per-call count/sample/assignment
-    * work and no in-memory cache to manage. */
-  def writeIvfIndex(corpus: DataFrame, path: String, maxCentroids: Int = 4096): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    buildIvfAssigned(corpus, maxCentroids) match {
-      case None => // empty corpus: an empty-but-readable index
-        Seq.empty[(Int, Seq[Double])].toDF("cent_id", "cv")
-          .write.mode("overwrite").parquet(s"$path/centroids")
-        Seq.empty[(Long, Seq[Double], Double, Int, Double)]
-          .toDF("vec_id", "v", "n_v", "cell", "dc")
-          .write.mode("overwrite").parquet(s"$path/assigned")
-        Seq.empty[(Int, Double)].toDF("cell", "rc")
-          .write.mode("overwrite").parquet(s"$path/cells")
-      case Some((assigned, centVecs)) =>
-        // co-locate cells so probe equijoins read whole row groups per cell
-        assigned.repartition(col("cell")).sortWithinPartitions("cell")
-          .write.mode("overwrite").parquet(s"$path/assigned")
-        assigned.groupBy("cell").agg(max(col("dc")).as("rc"))
-          .write.mode("overwrite").parquet(s"$path/cells")
-        assigned.unpersist(false)
-        centVecs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-          .toDF("cent_id", "cv").write.mode("overwrite").parquet(s"$path/centroids")
-    }
-  }
-
-  /** EXACT top-k against a prebuilt [[writeIvfIndex]] index — identical
-    * output to [[ivfTopK]]/[[bruteTopK]], but the per-call cost is search
-    * only (the parquet index IS the materialization; nothing is persisted
-    * here by default).
-    *
-    * `cacheQueryDists = true` is the huge-query-batch mode: the |q| x C
-    * query-centroid distance frame is persisted so both probe phases pay
-    * the centroid kernel ONCE, the result is materialized eagerly
-    * (localCheckpoint), and the cache is dropped before returning — so the
-    * no-cache-to-manage service contract still holds (nothing stays in the
-    * CacheManager), at the cost of the result being computed at call time
-    * rather than lazily. Free the returned frame's blocks with
-    * [[graft.ParUtil.freeCheckpoint]] when done.
-    *
-    * `broadcastQueries = false` routes query vectors through shuffle joins
-    * instead of broadcasting the query frame — the plan for batches too
-    * big for the broadcast limit (see [[ivfSearchWithHandle]]). */
-  def ivfTopKIndexed(queries: DataFrame, indexPath: String, k: Int,
-                     nProbe: Int = 4, cacheQueryDists: Boolean = false,
-                     broadcastQueries: Boolean = true): DataFrame = {
-    val spark = queries.sparkSession
-    val assigned = spark.read.parquet(s"$indexPath/assigned")
-    val cells = spark.read.parquet(s"$indexPath/cells")
-    val centsDf = spark.read.parquet(s"$indexPath/centroids")
-    if (centsDf.isEmpty) { // empty index (empty corpus): zero neighbors
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Int, Double)]
-        .toDF("query_id", "vec_id", "rnk", "dist2")
-    }
-    if (!cacheQueryDists)
-      // lazy plan, zero session cache: the two probe phases recompute the
-      // (skinny, narrow) |q| x C distance frame — right default for a
-      // long-lived service that must not accumulate one pinned RDD per call
-      ivfSearchWithHandle(queries, assigned, cells, centsDf, k, nProbe,
-        persistQc = false, broadcastQueries)._1
-    else {
-      val (plan, qc) = ivfSearchWithHandle(queries, assigned, cells, centsDf,
-        k, nProbe, persistQc = true, broadcastQueries)
-      val eager = plan.localCheckpoint(true) // materialize while qc is hot
-      qc.foreach(_.unpersist(false))
-      eager
-    }
+    val cells = assigned.groupBy("cell").agg(max(col("dc")).as("rc"))
+    val centsDf = centVecs.zipWithIndex
+      .map { case (v, i) => (i, v.toSeq) }.toSeq.toDF("cent_id", "cv")
+    ivfSearch(queries, assigned, cells, centsDf, k, nProbe)
   }
 
   /** Search internals: `assigned(vec_id, v, n_v, cell, dc)` must be a
     * PARTITION of the corpus; `cells(cell, rc)` its radii; `centsDf
     * (cent_id, cv)` the centroid vectors (capped, hence broadcastable).
-    * Returns the result plan plus the persisted |q| x C frame (when
-    * `persistQc`) so a caller that eagerly materializes the result can
-    * unpersist it instead of leaving it to the session CacheManager.
-    *
-    * Broadcast inventory (the scale contract), default mode: the capped
-    * centroid frame, the per-query probe lists, AND the quantized query
-    * frame itself (ids + vectors, into both rankMembers joins) — so
-    * QUERIES MUST BE THE SMALL SIDE, which is the ANN service shape (query
-    * batches of 10^3-10^6 against a corpus of 10^9+).
-    * `broadcastQueries = false` is the LARGE-batch plan: query vectors are
-    * attached to the skinny probe rows with a shuffle join on query_id and
-    * ride the cell equijoin shuffle instead — nothing query-sized is ever
-    * broadcast (only the capped centroid frame remains), at the cost of
-    * shipping each query vector once per probe row. Identical output. */
-  private def ivfSearchWithHandle(queries: DataFrame, assigned: DataFrame, cells: DataFrame,
-                                  centsDf: DataFrame, k: Int, nProbe: Int,
-                                  persistQc: Boolean,
-                                  broadcastQueries: Boolean): (DataFrame, Option[DataFrame]) = {
+    * The quantized query frame is broadcast into both rankMembers joins
+    * (see ivfTopK's scale shape). */
+  private def ivfSearch(queries: DataFrame, assigned: DataFrame, cells: DataFrame,
+                        centsDf: DataFrame, k: Int, nProbe: Int): DataFrame = {
     // query-to-centroid distances (|q| x C, C capped): skinny rows; both
-    // probe phases read them, so the in-session path persists (held by the
+    // probe phases read them, so they are persisted (held by the
     // CacheManager until the caller clears it — see ivfTopK's lifecycle
-    // note) while the indexed path recomputes the narrow frame to stay
-    // cache-free
+    // note)
     val cents = centsDf.withColumn("n_c", vec_norm2(col("cv")))
     val q = quantize(queries, "query_id", "qv").withColumn("n_q", vec_norm2(col("qv")))
-    val qc0 = q.crossJoin(broadcast(cents))
+    val qc = q.crossJoin(broadcast(cents))
       .withColumn("dqc2", col("n_q") - lit(2.0) * vec_dot(col("qv"), col("cv")) + col("n_c"))
       .select(col("query_id"), col("cent_id"),
         sqrt(greatest(col("dqc2"), lit(0.0))).as("dqc"))
-    val qc = if (persistQc) qc0.persist(StorageLevel.MEMORY_AND_DISK) else qc0
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     val pWin = Window.partitionBy("query_id").orderBy(col("dqc"), col("cent_id"))
     val rWin = Window.partitionBy("query_id").orderBy(col("dist2"), col("vec_id"))
-    def rankMembers(probes: DataFrame): DataFrame = {
-      // default: probe rows meet the corpus on cell, then the small query
-      // frame is broadcast in. Large-batch: attach qv/n_q to the skinny
-      // probe rows FIRST (shuffle join on query_id), so the cell equijoin
-      // carries them and no query-sized broadcast exists.
-      // the shuffle_hash hints ENFORCE the no-query-broadcast contract:
-      // without them the planner would happily auto-broadcast q (or the
-      // query-carrying probe frame) whenever its size ESTIMATE (often
-      // wildly low behind a selective-looking filter) falls under the
-      // threshold — exactly the failure the caller opted out of. BOTH
-      // query-carrying joins are hinted: the q attach AND the cell
-      // equijoin's probe side (the r5 advice gap — only the first join was
-      // pinned, so the planner could still broadcast the query-carrying
-      // frame into `assigned`).
-      val withQ =
-        if (broadcastQueries)
-          probes.join(assigned, probes("cent_id") === assigned("cell"))
-            .join(broadcast(q), "query_id")
-        else
-          probes.join(q.hint("shuffle_hash"), "query_id")
-            .hint("shuffle_hash")
-            .join(assigned, probes("cent_id") === assigned("cell"))
-      withQ
+    def rankMembers(probes: DataFrame): DataFrame =
+      probes.join(assigned, probes("cent_id") === assigned("cell"))
+        .join(broadcast(q), "query_id")
         .where(col("query_id") =!= col("vec_id"))
         .withColumn("dist2",
           col("n_q") - lit(2.0) * vec_dot(col("qv"), col("v")) + col("n_v"))
         .withColumn("rnk", row_number().over(rWin))
         .where(col("rnk") <= k)
-    }
 
     // phase 1: nProbe nearest cells -> d_k upper bound (null if < k found,
     // which falls back to probing every cell — still exact, never wrong)
@@ -375,16 +244,13 @@ object Ann {
 
     // phase 2: all cells whose lower bound beats d_k (includes every
     // phase-1 cell that contributed a top-k member, by the same inequality).
-    // dk is query-sized too, so the large-batch mode keeps it out of
-    // broadcasts as well; the capped `cells` frame may broadcast freely in
-    // either mode (corpus-bounded, <= maxCentroids rows).
+    // The capped `cells` frame may broadcast freely (corpus-bounded,
+    // <= maxCentroids rows).
     val probes2 = qc.join(cells, qc("cent_id") === cells("cell"))
-      .join(if (broadcastQueries) dk else dk.hint("shuffle_hash"),
-        Seq("query_id"), "left")
+      .join(dk, Seq("query_id"), "left")
       .where(col("dk").isNull || (col("dqc") - col("rc") <= col("dk") + lit(1e-6)))
       .select("query_id", "cent_id")
-    (rankMembers(probes2).select("query_id", "vec_id", "rnk", "dist2"),
-      if (persistQc) Some(qc) else None)
+    rankMembers(probes2).select("query_id", "vec_id", "rnk", "dist2")
   }
 
   /** Embedding-cosine near-duplicate pairs (quantized, exact arithmetic):

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data curation at 100 TB scale.
@@ -36,13 +35,6 @@ object Dedup {
     df.groupBy(col(keyCol))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dupes"))
 
-  /** Exact-duplicate removal: retains one row per key (deterministic:
-    * smallest id wins). */
-  def dropExact(df: DataFrame, idCol: String, keyCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(col(idCol))
-    df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
-  }
-
   /** Connected-component grouping over near-duplicate PAIRS — the standard
     * last stage of a dedup pipeline: pairs from [[minhashPairs]] /
     * [[simhashPairs]] / [[jaccardPairs]] /
@@ -64,7 +56,7 @@ object Dedup {
     * previous round's blocks are released immediately. Termination is the
     * round's changed-label count — the same action that materializes the
     * new labels. `reliableCheckpoint = true` (with `sc.setCheckpointDir`)
-    * makes rounds durable on a real cluster, as in [[Knn.knnCelled]].
+    * makes rounds durable on a real cluster, as in [[Knn.knn]].
     *
     * Exactness: labels start at own id and only ever decrease via mins over
     * component members, so the fixpoint label of every node is exactly the
@@ -169,8 +161,7 @@ object Dedup {
     * estimator; note the SQL-portable affine permutation family trades
     * statistical independence across rows for oracle reproducibility — the
     * rows are correlated, so `est_jaccard` is coarser than an ideal
-    * 64-trial estimate; [[graft.functions.textexprs.MinHashSet]] is the
-    * independent-family variant where no oracle has to recompute it).
+    * 64-trial estimate).
     *
     * Scale shape: explode by `bands` band keys, self-join on (band, bucket)
     * — only colliding docs meet; signature verify is a zip-compare, no
@@ -288,18 +279,9 @@ object Dedup {
     * both engines hash identically so the comparison can never drift.
     * Goes straight to the PPJoin prefix plan (an n-gram vocabulary is
     * never <= 64). For web-scale fuzzy matching use [[minhashPairs]]
-    * (LSH-bounded candidates); exact n-gram Jaccard is the verifier tier.
-    *
-    * `maxCandidatePairs > 0` arms the candidate-explosion circuit breaker
-    * (see [[jaccardPairsPrefix]]): template-heavy corpora defeat prefix
-    * filtering (every doc shares mid-frequency grams with every other),
-    * degenerating the exact plan toward an all-pairs verify; past the
-    * bound, candidates come from a minhash band join instead (bounded by
-    * true similarity, not gram sharing) at a documented near-1-but-not-
-    * provably-1 recall. The default 0 keeps the plan fully exact. */
+    * (LSH-bounded candidates); exact n-gram Jaccard is the verifier tier. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 12, threshold: Double = 0.8,
-                        maxCandidatePairs: Long = 0L): DataFrame = {
+                        n: Int = 12, threshold: Double = 0.8): DataFrame = {
     require(n >= 1, "ngramJaccardPairs needs n >= 1")
     // ngram_hash_set: one narrow kernel pass producing the sorted distinct
     // hash set directly (replaces a sequence/transform/md5-hex/conv/
@@ -308,7 +290,7 @@ object Dedup {
     val grams = widen(df).select(col(idCol).as("id"),
         ngram_hash_set(col(textCol), n).as("toks"))
       .withColumn("sz", size(col("toks")))
-    jaccardPairsPrefix(grams, threshold, maxCandidatePairs)
+    jaccardPairsPrefix(grams, threshold)
   }
 
   /** Shared dispatch: one bounded vocabulary probe (<= 65 rows collected)
@@ -499,14 +481,8 @@ object Dedup {
     *
     * Contract: `toks` holds (id, toks, sz) with `toks` a SORTED,
     * duplicate-free `array<bigint>` — [[tokenSets]] and `ngram_hash_set`
-    * both produce it.
-    *
-    * `maxCandidatePairs > 0` arms the candidate-explosion circuit breaker:
-    * when the prefix index's fan-out estimate ([[prefixFanout]]) exceeds
-    * the bound, candidates come from [[bandCandidates]] instead; the exact
-    * verify is shared by both candidate routes. */
-  def jaccardPairsPrefix(toks0: DataFrame, threshold: Double,
-                         maxCandidatePairs: Long = 0L): DataFrame = {
+    * both produce it. */
+  def jaccardPairsPrefix(toks0: DataFrame, threshold: Double): DataFrame = {
     // the tokenize/gram subtree feeds THREE consumers (the inverted index
     // and both sides of the verify join) — persist it once, same lifecycle
     // contract as jaccardPairsDict's mask cache (held by the CacheManager
@@ -516,35 +492,20 @@ object Dedup {
       if (toks0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         toks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else toks0
-    // the prefix frame ALWAYS has two consumers — both sides of the
-    // candidate self-join (plus, when armed, the fan-out estimate action):
-    // ReuseExchange does NOT deduplicate the two sides here (the r6 q52/q27
-    // before-plans show the whole inverted-index subtree — df aggregate,
-    // df join, per-doc sort, prefix explode — planned twice, once under a
-    // BroadcastExchange), so persist it unconditionally; same CacheManager
+    // the prefix frame has two consumers — both sides of the candidate
+    // self-join: ReuseExchange does NOT deduplicate the two sides here (the
+    // r6 q52/q27 before-plans show the whole inverted-index subtree — df
+    // aggregate, df join, per-doc sort, prefix explode — planned twice, once
+    // under a BroadcastExchange), so persist it; same CacheManager
     // lifecycle contract as `toks`
-    val armed = maxCandidatePairs > 0L
-    val prefix =
-      prefixIndex(toks, threshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // circuit breaker (armed by maxCandidatePairs > 0): when the prefix
-    // index's own fan-out estimate says the candidate join degenerates
-    // toward all-pairs (template corpora), generate candidates from the
-    // minhash band join instead — the exact verify below is shared by both
-    // routes, only candidate GENERATION changes
-    val usePrefix = !armed || prefixFanout(prefix) <= maxCandidatePairs.toDouble
-    // tripped: the materialized prefix cache is dead weight from here on —
-    // release it now rather than taxing the rest of the session
-    if (armed && !usePrefix) prefix.unpersist(false)
-    val cand =
-      if (usePrefix)
-        prefix.as("a").join(prefix.as("b"),
-            col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-              lit(threshold) * greatest(col("a.sz"), col("b.sz")) <=
-                least(col("a.sz"), col("b.sz")).cast("double"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .dropDuplicates("id_a", "id_b")
-      else bandCandidates(toks, threshold)
+    val prefix = prefixIndex(toks, threshold)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = prefix.as("a").join(prefix.as("b"),
+        col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
+          lit(threshold) * greatest(col("a.sz"), col("b.sz")) <=
+            least(col("a.sz"), col("b.sz")).cast("double"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
     // exact verify on the full token sets
     val full = toks.select(col("id"), col("toks"), col("sz"))
     cand
@@ -557,61 +518,9 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Prefix-index fan-out estimate: sum over indexed prefix tokens of
-    * d*(d-1)/2 (d = docs indexing the token) — an upper bound on the
-    * candidate pairs the prefix self-join can emit, in ONE cheap agg over
-    * the (id, tok) prefix frame. Summed in DOUBLE: in exactly the
-    * template-corpus regime the breaker exists for, d ~ 10^7 over 10^5
-    * tokens overflows a Long sum (ANSI crash or silent wrap-negative, which
-    * would DISARM the breaker); a threshold estimate needs magnitude, not
-    * exactness. */
-  private[graft] def prefixFanout(prefix: DataFrame): Double =
-    prefix.groupBy("tok").agg(count(lit(1)).cast("double").as("d"))
-      .agg(coalesce(sum(col("d") * (col("d") - lit(1.0))), lit(0.0)).as("f"))
-      .first().getDouble(0) / 2.0
-
-  /** Breaker candidate route: minhash band join over the element SETS
-    * ([[graft.functions.textexprs.MinHashSet]] — equal sets get equal
-    * signatures). Candidate volume is bounded by TRUE pairwise similarity
-    * (band collisions), not by gram co-occurrence, which is what makes it
-    * immune to the template-corpus explosion. Banding is threshold-adaptive
-    * over a 64-hash signature: rows-per-band r is the largest power-of-2
-    * divisor keeping recall 1 - (1 - t^r)^(n/r) >= 0.98 at J = t — longer
-    * bands suppress the sub-threshold collisions a template corpus is full
-    * of, which is the entire point of the breaker. Recall is near 1, NOT
-    * provably 1 (exact-pair duplicates always collide — equal sets, equal
-    * signatures); the exact prefix route stays the default and this route
-    * only arms past `maxCandidatePairs`. */
-  private[graft] def bandCandidates(toks: DataFrame, threshold: Double): DataFrame = {
-    val numHashes = 64
-    val r = Seq(32, 16, 8, 4, 2, 1).find { r =>
-      1.0 - math.pow(1.0 - math.pow(threshold, r), (numHashes / r).toDouble) >= 0.98
-    }.getOrElse(1)
-    val nBands = numHashes / r
-    // signature frame persisted below the band explode: both self-join
-    // sides (r6, same as minhashPairs)
-    val sigs0 = toks
-      .select(col("id"), col("sz"),
-        lsh_bands(minhash_set(col("toks"), numHashes), nBands).as("bands"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = sigs0
-      .select(col("id"), col("sz"),
-        posexplode(col("bands")).as(Seq("band_idx", "bucket")))
-    val a = sigs.select(col("id").as("id_a"), col("sz").as("sz_a"), col("band_idx"), col("bucket"))
-    val b = sigs.select(col("id").as("id_b"), col("sz").as("sz_b"), col("band_idx"), col("bucket"))
-    a.join(b, Seq("band_idx", "bucket"))
-      .where(col("id_a") < col("id_b") &&
-        lit(threshold) * greatest(col("sz_a"), col("sz_b")) <=
-          least(col("sz_a"), col("sz_b")).cast("double"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-  }
-
   /** The per-doc prefix inverted index of [[jaccardPairsPrefix]] steps 1-2
-    * (one row per (id, indexed prefix token), with the doc size). Factored
-    * out so the fan-out estimate and tests see exactly the frame the
-    * candidate join runs over. */
-  private[graft] def prefixIndex(toks: DataFrame, threshold: Double): DataFrame = {
+    * (one row per (id, indexed prefix token), with the doc size). */
+  private def prefixIndex(toks: DataFrame, threshold: Double): DataFrame = {
     val c = threshold / (1.0 + threshold)
     val inv = toks.select(col("id"), explode(col("toks")).as("tok"))
     val dfreq = inv.groupBy("tok").agg(count(lit(1)).as("df"))

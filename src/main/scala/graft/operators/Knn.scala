@@ -22,15 +22,13 @@ import org.apache.spark.storage.StorageLevel
   * shape so the DuckDB oracle reproduces the exact doubles; ties break on
   * point_id — fully deterministic output.
   *
-  * Scale shape: the celled corpus is persisted ONCE before the loop — or,
-  * at 100 TB, written once as a cell-co-located table
-  * ([[writeCelledCorpus]]) that [[knnCelled]] reads per query batch with
-  * no re-celling or re-persisting — every round joins the
-  * broadcast exploded query-disk against the same materialized blocks, no
-  * per-round rescan of the raw table. Pending queries shrink geometrically
-  * (tracked by one count per round on the new pending set — the same
-  * action that materializes it). Per-round caches are unpersisted as soon
-  * as their successor is materialized, so storage stays O(one round).
+  * Scale shape: the celled corpus is persisted ONCE before the loop —
+  * every round joins the broadcast exploded query-disk against the same
+  * materialized blocks, no per-round rescan of the raw table. Pending
+  * queries shrink geometrically (tracked by one count per round on the new
+  * pending set — the same action that materializes it). Per-round caches
+  * are unpersisted as soon as their successor is materialized, so storage
+  * stays O(one round).
   *
   * Fault tolerance: by default the per-round pending set is truncated with
   * `localCheckpoint(eager = true)`, which stores blocks on executors
@@ -65,26 +63,10 @@ object Knn {
     finally pts.unpersist(false)
   }
 
-  /** Write the celled corpus ONCE as a cell-co-located parquet table — the
-    * 100 TB shape for repeated query batches: [[knnCelled]] over this table
-    * reads the materialized cells instead of re-celling and re-persisting
-    * the raw corpus per call. Rows are repartitioned by cell and sorted
-    * within files, so row-group min/max stats prune corpus scans. On a
-    * cluster with a catalog, use `bucketBy(nBuckets, "cell").sortBy("cell")
-    * .saveAsTable` for the same layout plus shuffle-free cell equijoins. */
-  def writeCelledCorpus(points: DataFrame, path: String, level: Int): Unit =
-    points.withColumn("cell", st_cellid(col("lon"), col("lat"), level))
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell")
-      .write.mode("overwrite").parquet(path)
-
-  /** kNN over an ALREADY-celled corpus: `celledPts` must carry a `cell`
-    * column computed at the SAME `level` (e.g. the table written by
-    * [[writeCelledCorpus]], read back with `spark.read.parquet`). No cache
-    * is taken here — the caller owns the corpus materialization (a
-    * parquet-backed corpus IS the materialization). */
-  def knnCelled(queries: DataFrame, celledPts: DataFrame, k: Int, level: Int = 8,
-                reliableCheckpoint: Boolean = false): DataFrame = {
+  /** The round loop of [[knn]] over the persisted celled corpus
+    * (`pts` carries a `cell` column computed at the SAME `level`). */
+  private def knnCelled(queries: DataFrame, pts: DataFrame, k: Int, level: Int,
+                        reliableCheckpoint: Boolean): DataFrame = {
     if (reliableCheckpoint)
       require(queries.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "knn(reliableCheckpoint = true) needs sc.setCheckpointDir(...)")
@@ -93,8 +75,7 @@ object Knn {
     val cellH = 180.0 / (1L << level).toDouble
     val maxR = (1L << level).toInt
 
-    val pts = celledPts
-    val nPts = pts.count() // one pass: sizes r0 (and fills any caller cache)
+    val nPts = pts.count() // one pass: sizes r0 (and fills the corpus cache)
 
     // adaptive start radius: size disk(r0) so it expects ~4k points under a
     // uniform-density estimate — most queries then retire in round one and

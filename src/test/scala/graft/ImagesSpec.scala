@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.{Centroid, RayCast, TileMath, WktParser}
 import graft.functions.GraftFunctions._
 import graft.operators.{Images, SpatialJoin}
 import graft.sources.Snapshots
@@ -126,7 +127,9 @@ class ImagesSpec extends SparkTestBase {
     assert(gotPixels == wantPixels, s"pixels $gotPixels != matched-set pixels $wantPixels")
   }
 
-  test("dense polygon layer: tile stats weight each image by its polygon matches") {
+  /** sf0.001 with a dense polygon layer, prepared and run through
+    * [[Pipeline.run]] once; shared by the dense-layer cases. */
+  private lazy val denseWork: String = {
     val work = java.nio.file.Files.createTempDirectory("pipe-dense").toString
     Pipeline.prepare(spark, "/root/testdata/sf0.001", work)
     // the sf0.001 rectangles do not overlap: add two nested ones over the
@@ -137,6 +140,11 @@ class ImagesSpec extends SparkTestBase {
         (-2L, "POLYGON ((2 1, 6 1, 6 5, 2 5, 2 1))"))
     layer.toSeq.toDF("poly_id", "wkt").write.mode("overwrite").parquet(s"$work/polygons")
     Pipeline.run(spark, work)
+    work
+  }
+
+  test("dense polygon layer: tile stats weight each image by its polygon matches") {
+    val work = denseWork
     val got = Snapshots.readData(spark, s"$work/tile_stats")
       .agg(sum("assignments"), sum("pixels")).collect()(0)
     // the (image, polygon) pairs over the same footprints, joined apart
@@ -162,6 +170,55 @@ class ImagesSpec extends SparkTestBase {
     val wantPixels = perImage.map(r => r.getLong(0) * r.getLong(2)).sum
     assert(got.getLong(0) == wantAssignments, s"assignments ${got.getLong(0)} != $wantAssignments")
     assert(got.getLong(1) == wantPixels, s"pixels ${got.getLong(1)} != $wantPixels")
+  }
+
+  test("dense polygon layer: tile_stats equals a brute-force oracle row for row") {
+    val work = denseWork
+    val zoom = 8
+    // every (image, polygon) pair by ray cast against every polygon's rings:
+    // no cover, no cells
+    val rings = spark.read.parquet(s"$work/polygons").collect()
+      .map(r => WktParser.parse(r.getString(1)).polygonRings)
+    // each image's 8x8 pixel blocks (edge blocks clipped; pixel rows run
+    // north to south) land in the zoom tile holding the block center
+    def blockTiles(lonMin: Double, latMin: Double, lonMax: Double, latMax: Double,
+                   w: Int, h: Int): Map[(Long, Long), Long] =
+      (for (by <- 0 until h by 8; bx <- 0 until w by 8) yield {
+        val bh = math.min(8, h - by)
+        val bw = math.min(8, w - bx)
+        val lat = latMax - (by + bh / 2.0) / h * (latMax - latMin)
+        val lon = lonMin + (bx + bw / 2.0) / w * (lonMax - lonMin)
+        (TileMath.tileX(lon, zoom), TileMath.tileY(lat, zoom)) -> (bw * bh).toLong
+      }).groupMapReduce(_._1)(_._2)(_ + _)
+    // (x, y) -> (assignments, pixels, n_images)
+    val want = scala.collection.mutable.Map[(Long, Long), (Long, Long, Long)]()
+    var multi = 0
+    spark.read.parquet(s"$work/images").select("footprint_wkt", "w", "h", "bytes")
+      .collect().foreach { r =>
+        val (lon, lat) = Centroid.centroid(WktParser.parse(r.getString(0))).get
+        val nMatches = rings.count(RayCast.containsRings(_, lon, lat)).toLong
+        if (nMatches > 1) multi += 1
+        if (nMatches > 0) {
+          val halfW = r.getInt(1).toDouble / 2.0 / 1000.0
+          val halfH = r.getInt(2).toDouble / 2.0 / 1000.0
+          val px = Images.decodeToPixels(r.getAs[Array[Byte]](3))
+          blockTiles(lon - halfW, lat - halfH, lon + halfW, lat + halfH, px.w, px.h)
+            .foreach { case (tile, n) =>
+              val (a, p, i) = want.getOrElse(tile, (0L, 0L, 0L))
+              want(tile) = (a + nMatches, p + n * nMatches, i + 1)
+            }
+        }
+      }
+    assert(multi > 0, "the layer must give some image several matches")
+    val got = Snapshots.readData(spark, s"$work/tile_stats")
+      .select("z", "x", "y", "assignments", "pixels", "n_images").collect()
+    assert(got.forall(_.getInt(0) == zoom))
+    val gotMap = got.map(r =>
+      (r.getLong(1), r.getLong(2)) -> ((r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+    assert(gotMap.size == got.length, "one tile_stats row per tile")
+    val diff = (gotMap.keySet ++ want.keySet).filter(t => gotMap.get(t) != want.get(t))
+    assert(diff.isEmpty, s"${diff.size} of ${want.size} tiles differ, e.g. " +
+      diff.take(3).map(t => s"$t: got ${gotMap.get(t)} want ${want.get(t)}").mkString("; "))
   }
 
   test("snapshot write + lineage + idempotent resume") {

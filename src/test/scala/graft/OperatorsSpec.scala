@@ -78,22 +78,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(a == b && a.nonEmpty)
   }
 
-  test("kNN over the bucketed celled-corpus table matches the inline path") {
-    // 100 TB shape: cell the corpus ONCE into a cell-co-located parquet
-    // table; knnCelled reads it back with no re-cell / no re-persist and
-    // must produce the identical result set
-    val pts = randomPoints(2500).toDF("point_id", "lon", "lat")
-    val qs = (0 until 15).map(i => (i.toLong, (i * 41 % 340) - 170.0 + 0.2, (i * 59 % 160) - 80.0 + 0.5))
-      .toDF("query_id", "qlon", "qlat")
-    val dir = java.nio.file.Files.createTempDirectory("knn-bucketed").toString
-    Knn.writeCelledCorpus(pts, s"$dir/celled", level = 6)
-    val bucketed = Knn.knnCelled(qs, spark.read.parquet(s"$dir/celled"), k = 7, level = 6)
-      .select("query_id", "point_id", "rnk").as[(Long, Long, Int)].collect().toSet
-    val inline = Knn.knn(qs, pts, k = 7, level = 6)
-      .select("query_id", "point_id", "rnk").as[(Long, Long, Int)].collect().toSet
-    assert(bucketed == inline && bucketed.nonEmpty)
-  }
-
   test("kNN with k larger than point count falls back to brute force") {
     val pts = randomPoints(5).toDF("point_id", "lon", "lat")
     val qs = Seq((0L, 0.0, 0.0)).toDF("query_id", "qlon", "qlat")
@@ -106,8 +90,6 @@ class OperatorsSpec extends SparkTestBase {
     val kept = Dedup.exactKeep(df, "id", "k").as[(String, Long, Long)].collect()
       .map { case (k, keep, n) => k -> ((keep, n)) }.toMap
     assert(kept("aa") == ((1L, 3L)))
-    val dropped = Dedup.dropExact(df, "id", "k").select("id").as[Long].collect().toSet
-    assert(dropped == Set(1L, 2L))
   }
 
   test("minhash LSH finds planted near-duplicates") {
@@ -242,45 +224,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(got.contains((5L, 6L)), "empty texts are exact duplicates of each other")
   }
 
-  test("candidate-explosion breaker: bounded candidates, same pairs on a template corpus") {
-    // pathological for prefix filtering: every doc is the same template with
-    // one word swapped, so mid-frequency grams put every doc in every other
-    // doc's candidate list, but true gram Jaccard stays BELOW threshold for
-    // non-planted pairs. Planted exact duplicates are the only true pairs.
-    // every doc is a PERMUTATION of the same 30 two-word phrases (words =
-    // distinct random letters, so no shared prefixes across junctions):
-    // phrase-interior grams appear in EVERY doc (flat df = n — the prefix
-    // index can't avoid them and its fan-out estimate explodes), while two
-    // permutations share almost no phrase ADJACENCIES, so boundary grams
-    // differ and true gram Jaccard stays far below the 0.9 threshold
-    def word(seed: Int): String = {
-      val r = new scala.util.Random(seed)
-      (0 until 8).map(_ => ('a' + r.nextInt(26)).toChar).mkString
-    }
-    val phrases = (1 to 30).map(k => s"${word(2 * k)} ${word(2 * k + 1)}")
-    val docs = ((0 until 60).map { i =>
-      (i.toLong, new scala.util.Random(i).shuffle(phrases).mkString(" "))
-    } ++ Seq(100L, 101L, 102L).map(id => (id, phrases.mkString(" "))))
-      .toDF("doc_id", "text")
-    def run(guard: Long) = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 12, threshold = 0.9, maxCandidatePairs = guard)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val exact = run(0L)
-    assert(exact == Set((100L, 101L), (100L, 102L), (101L, 102L)))
-    val grams = docs.select(col("doc_id").as("id"),
-        ngram_hash_set(col("text"), 12).as("toks"))
-      .withColumn("sz", size(col("toks")))
-    // the prefix route's own fan-out estimate trips any reasonable bound...
-    assert(Dedup.prefixFanout(Dedup.prefixIndex(grams, 0.9)) > 1000L)
-    // ...while band-route candidate volume tracks TRUE similarity: the
-    // planted dup trio (plus at most a stray sub-threshold collision)
-    val bandCand = Dedup.bandCandidates(grams, 0.9).count()
-    assert(bandCand <= 10, s"band candidates must stay bounded, got $bandCand")
-    // armed breaker: same output, through the bounded candidate route
-    assert(run(1000L) == exact)
-    spark.catalog.clearCache() // jaccardPairsPrefix persists its token subtree
-  }
-
   test("ANN LSH top-k achieves high recall vs brute force") {
     // clustered embeddings (LSH's applicability regime): 20 centers + noise
     val rnd = new scala.util.Random(5)
@@ -345,58 +288,6 @@ class OperatorsSpec extends SparkTestBase {
     // the cap is corpus-size-independent: C(n) is monotone then flat
     assert(Ann.centroidCap(100) == 40 && Ann.centroidCap(1L << 40) == 4096 &&
       Ann.centroidCap(1) == 16)
-  }
-
-  test("IVF over a prebuilt on-disk index matches brute force") {
-    // repeated-query-batch shape: build the index ONCE to parquet, then
-    // answer batches against the files — identical output to ivfTopK/brute
-    val rnd = new scala.util.Random(13)
-    val centers = Array.fill(8)(Array.fill(16)(rnd.nextFloat() * 2 - 1))
-    val vecs = (0 until 240).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => v + rnd.nextFloat() * 0.2f - 0.1f).toSeq)
-    }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("ivf-index").toString
-    Ann.writeIvfIndex(vecs, s"$dir/idx", maxCentroids = 16)
-    for (qmod <- Seq(40, 60)) { // two query batches over the SAME index
-      val queries = vecs.where($"vec_id" % qmod === 0)
-      val got = Ann.ivfTopKIndexed(queries, s"$dir/idx", k = 6, nProbe = 2)
-        .select("query_id", "vec_id", "rnk").as[(Long, Long, Int)].collect().toSet
-      val brute = Ann.bruteTopK(vecs, queries, k = 6)
-        .select("query_id", "vec_id", "rnk").as[(Long, Long, Int)].collect().toSet
-      assert(got == brute && got.nonEmpty, s"indexed IVF must be exact (qmod=$qmod)")
-    }
-    // empty corpus -> empty-but-readable index -> zero neighbors, no crash
-    Ann.writeIvfIndex(vecs.where($"vec_id" < 0), s"$dir/empty")
-    assert(Ann.ivfTopKIndexed(vecs.limit(2), s"$dir/empty", k = 3).count() == 0)
-
-    // large-batch plan: query vectors routed through shuffle joins instead
-    // of a query-frame broadcast — identical output by construction
-    for (qmod <- Seq(40, 60)) {
-      val queries = vecs.where($"vec_id" % qmod === 0)
-      val shuffled = Ann.ivfTopKIndexed(queries, s"$dir/idx", k = 6, nProbe = 2,
-          broadcastQueries = false)
-        .select("query_id", "vec_id", "rnk").as[(Long, Long, Int)].collect().toSet
-      val brute = Ann.bruteTopK(vecs, queries, k = 6)
-        .select("query_id", "vec_id", "rnk").as[(Long, Long, Int)].collect().toSet
-      assert(shuffled == brute && shuffled.nonEmpty, s"large-batch plan must be exact (qmod=$qmod)")
-    }
-
-    // huge-batch mode: cacheQueryDists pays the centroid kernel once and
-    // must (a) return identical rows and (b) leave NOTHING in the session
-    // CacheManager (the no-cache-to-manage service contract)
-    spark.catalog.clearCache()
-    val queries = vecs.where($"vec_id" % 40 === 0)
-    val cached = Ann.ivfTopKIndexed(queries, s"$dir/idx", k = 6, nProbe = 2,
-      cacheQueryDists = true)
-    val want = Ann.ivfTopKIndexed(queries, s"$dir/idx", k = 6, nProbe = 2)
-      .select("query_id", "vec_id", "rnk").as[(Long, Long, Int)].collect().toSet
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "cacheQueryDists must drop its cache before returning")
-    val gotCached = cached.select("query_id", "vec_id", "rnk")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(gotCached == want && gotCached.nonEmpty)
-    graft.ParUtil.freeCheckpoint(cached)
   }
 
   test("blocked theta-joins: output invariant across block counts (incl. auto)") {

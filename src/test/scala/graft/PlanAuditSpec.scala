@@ -146,23 +146,6 @@ class PlanAuditSpec extends SparkTestBase {
     assert("HashAggregate".r.findAllIn(p).size >= 2, "partial+final aggregate expected")
   }
 
-  test("IVF large-batch mode: query frame rides shuffle joins, never broadcast") {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val df = Ann.ivfTopK(e, e.where(col("vec_id") % 50 === 0), k = 10, nProbe = 3,
-      broadcastQueries = false)
-    val p = plan(df)
-    // the shuffle_hash hints must win over the planner's (often wildly low)
-    // size estimate for the query frame — that IS the mode's contract. BOTH
-    // query-carrying joins are pinned (r6): the q attach AND the cell
-    // equijoin of the query-carrying frame with `assigned`, in both probe
-    // phases — without the second hint the planner could still
-    // auto-broadcast the query-carrying side into the corpus join.
-    assert("ShuffledHashJoin".r.findAllIn(p).size >= 2,
-      s"both query-carrying joins must be shuffled, got plan:\n${p.take(1200)}")
-    assert(!p.contains("CartesianProduct"), "no cartesian product")
-    assert(p.contains("vec_nearest") && p.contains("vec_dot"), "kernels unchanged")
-  }
-
   test("dict jaccard: distinct-mask frame computed once, not once per join side") {
     spark.catalog.clearCache()
     val docs = Seq((1L, "a b c"), (2L, "a b c"), (3L, "b c d"), (4L, "d e"),
