@@ -94,7 +94,7 @@ object Pipeline {
       .select("poly_id", "geom")
 
     val joined = SpatialJoin.pointsInPolygons(pts, polys, level = level,
-      broadcastCover = Some(true))
+      broadcastCover = true)
 
     // one row per matched image: with hot-region skew a single image can
     // match many polygons, so its tiles are exploded ONCE and weighted by

@@ -7,10 +7,10 @@ package graft
   *
   * Usage: SPARK_GRAFT_PLAN_TAG=r06 SPARK_GRAFT_PLAN_SUFFIX=before \
   *          sbt "runMain graft.PlanDump"
-  * Respects SPARK_GRAFT_ONLY for targeted dumps. Note q42/q55/q16/q41
-  * execute their embedded preparation actions (snapshot writes, hot-cell
-  * probe, centroid sample) while the plan is being built — the dump pays
-  * those, which is why it is a separate main and never timed.
+  * Respects SPARK_GRAFT_ONLY for targeted dumps. Note q42/q55/q41 execute
+  * their embedded preparation actions (snapshot writes, centroid sample)
+  * while the plan is being built — the dump pays those, which is why it is
+  * a separate main and never timed.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -269,7 +269,7 @@ object SparkEntry {
         .select(col("image_id"), col("c.lon").as("lon"), col("c.lat").as("lat"))
       val p = polys(s, dir).withColumn("geom", st_geomfromtext(col("wkt")))
         .select("poly_id", "geom")
-      SpatialJoin.pointsInPolygons(ipts, p, level = 10, broadcastCover = Some(true))
+      SpatialJoin.pointsInPolygons(ipts, p, level = 10, broadcastCover = true)
         .withColumn("x", st_tile_x(col("lon"), 6))
         .withColumn("y", st_tile_y(col("lat"), 6))
         .groupBy("poly_id", "x", "y").agg(count(lit(1)).as("images"))
@@ -331,7 +331,7 @@ object SparkEntry {
       reg(s)
       val p = polys(s, dir).withColumn("geom", st_geomfromtext(col("wkt")))
         .select("poly_id", "geom")
-      SpatialJoin.pointsInPolygons(pts(s, dir), p, level = 10, broadcastCover = Some(true))
+      SpatialJoin.pointsInPolygons(pts(s, dir), p, level = 10, broadcastCover = true)
         .select("point_id", "poly_id")
         .orderBy("point_id", "poly_id")
     }),
@@ -339,8 +339,8 @@ object SparkEntry {
       reg(s)
       val p = polys(s, dir).withColumn("geom", st_geomfromtext(col("wkt")))
         .select("poly_id", "geom")
-      SpatialJoin.pointsInPolygonsSalted(pts(s, dir), p, level = 10, salt = 8,
-        sampleFraction = 0.05, hotThreshold = 2000L, broadcastCover = Some(true))
+      // the broadcast cover takes no salt, so this is q15's plan
+      SpatialJoin.pointsInPolygons(pts(s, dir), p, level = 10, broadcastCover = true)
         .select("point_id", "poly_id")
         .orderBy("point_id", "poly_id")
     }),

@@ -217,10 +217,12 @@ object vecexprs {
     * deliberate: the O(C*dim) primitive loop inside eval dominates the
     * per-row cost, and a generated struct constructor would buy nothing.
     *
-    * The case class holds the matrix as a plain Array (JVM default
-    * toString), so plan strings stay O(1) — a typedLit matrix child would
-    * re-inflate every explain/plan-description with C*dim literals (the
-    * round-2 plan-printing OOM lesson). */
+    * The case class holds the matrix as a plain Array and prints it as its
+    * `CxD` shape plus a content hash, so plan strings stay O(1) and equal
+    * across processes — a typedLit matrix child would re-inflate every
+    * explain/plan-description with C*dim literals (the round-2
+    * plan-printing OOM lesson), and the array's default toString is a
+    * per-process identity hash. */
   case class VecNearest(child: Expression, flatCents: Array[Double], dim: Int)
       extends UnaryExpression with ExpectsInputTypes with codegen.CodegenFallback {
     require(dim > 0 && flatCents.length % dim == 0 && flatCents.length > 0,
@@ -260,6 +262,8 @@ object vecexprs {
     override protected def withNewChildInternal(c: Expression): VecNearest =
       copy(child = c)
     override def prettyName: String = "vec_nearest"
+    override protected def stringArgs: Iterator[Any] = Iterator(child,
+      s"${flatCents.length / dim}x$dim", java.util.Arrays.hashCode(flatCents))
   }
 
   /** squared L2 norm: dot(v, v). */

@@ -415,8 +415,7 @@ object Dedup {
     * document sharing at least one exact word n-gram (default n = 13, the
     * common protocol) with any document of an evaluation set. Returns one
     * row per contaminated (corpus doc, eval doc) pair with the count of
-    * distinct shared grams; feed it to review, or use [[decontaminate]] to
-    * drop flagged corpus rows outright.
+    * distinct shared grams.
     *
     * Scale shape: the eval side is small BY NATURE (benchmarks are
     * thousands of docs, the corpus is billions), so its distinct gram
@@ -428,33 +427,16 @@ object Dedup {
     * so a SQL oracle recomputes the whole check verbatim (q54). */
   def contaminationPairs(corpus: DataFrame, idCol: String, textCol: String,
                          evalSet: DataFrame, evalIdCol: String, evalTextCol: String,
-                         n: Int = 13): DataFrame =
-    // per-doc gram sets are already distinct (kernel contract), so the
-    // count after the gram equijoin is exactly |grams(doc) ∩ grams(eval)|
-    gramHits(corpus, idCol, textCol, evalSet, evalIdCol, evalTextCol, n)
-      .groupBy(idCol, "eval_id").agg(count(lit(1)).as("shared_grams"))
-
-  /** corpus gram rows inner-joined to the broadcast eval gram set. */
-  private def gramHits(corpus: DataFrame, idCol: String, textCol: String,
-                       evalSet: DataFrame, evalIdCol: String, evalTextCol: String,
-                       n: Int): DataFrame = {
+                         n: Int = 13): DataFrame = {
     require(n >= 1, "contamination check needs n >= 1")
     val evalGrams = widen(evalSet).select(col(evalIdCol).as("eval_id"),
       explode(word_ngram_hash_set(col(evalTextCol), n)).as("gram"))
     val corpusGrams = widen(corpus).select(col(idCol).as(idCol),
       explode(word_ngram_hash_set(col(textCol), n)).as("gram"))
+    // per-doc gram sets are already distinct (kernel contract), so the
+    // count after the gram equijoin is exactly |grams(doc) ∩ grams(eval)|
     corpusGrams.join(broadcast(evalGrams), "gram")
-  }
-
-  /** Drop every corpus row sharing any exact word n-gram with any eval doc.
-    * One anti-join against the raw gram hits — no per-(doc, eval) count
-    * aggregation is paid (that extra shuffle is [[contaminationPairs]]'s
-    * reporting concern, not the drop's). */
-  def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
-                    evalSet: DataFrame, evalIdCol: String, evalTextCol: String,
-                    n: Int = 13): DataFrame = {
-    val hits = gramHits(corpus, idCol, textCol, evalSet, evalIdCol, evalTextCol, n)
-    corpus.join(hits.select(col(idCol)), Seq(idCol), "left_anti")
+      .groupBy(idCol, "eval_id").agg(count(lit(1)).as("shared_grams"))
   }
 
   /** PPJoin-style prefix-filtered plan (general vocabularies —

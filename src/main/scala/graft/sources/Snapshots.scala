@@ -373,9 +373,10 @@ object Snapshots {
       .collect()
     if (winners.isEmpty)
       // a committed all-empty snapshot (every lineage row 0 rows — e.g.
-      // decontaminate dropped everything) is a legitimate state: return an
-      // EMPTY frame with the table schema (recovered from the existing
-      // snapshot dirs; hasSnapDirs guarantees at least one file exists)
+      // a decontamination pass dropped everything) is a legitimate state:
+      // return an EMPTY frame with the table schema (recovered from the
+      // existing snapshot dirs; hasSnapDirs guarantees at least one file
+      // exists)
       return spark.read.option("basePath", dataDir).parquet(dataDir)
         .drop("snap_id").where(lit(false))
     val dirs = winners.map { r =>

@@ -4,6 +4,7 @@ import graft.core.{Centroid, RayCast, TileMath, WktParser}
 import graft.functions.GraftFunctions._
 import graft.operators.{Images, SpatialJoin}
 import graft.sources.Snapshots
+import org.apache.spark.grafttest.Bus
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -313,7 +314,6 @@ class ImagesSpec extends SparkTestBase {
   }
 
   test("wide snapshot: 256 parts take the one-job observed stats path, exact on resume") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = java.nio.file.Files.createTempDirectory("snap-wide").toString
     val n = 256
     val nRows = 20000
@@ -332,25 +332,14 @@ class ImagesSpec extends SparkTestBase {
       assert(Snapshots.readData(spark, t).count() == nRows)
     }
     val sc = spark.sparkContext
-    def jobsOf(body: => Unit): Int = {
-      val started = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-      }
-      org.apache.spark.grafttest.Bus.drain(sc)
-      sc.addSparkListener(listener)
-      try { body; org.apache.spark.grafttest.Bus.drain(sc) }
-      finally sc.removeSparkListener(listener)
-      started.get
-    }
 
     var wide = Seq.empty[Snapshots.PartitionMeta]
-    val wideJobs = jobsOf {
+    val wideJobs = Bus.jobsOf(sc) {
       wide = Snapshots.writeSnapshot(spark, df, s"$dir/wide", snapshotId = 1L,
         nParts = n, keyCol = "k")
     }
     check(s"$dir/wide", wide)
-    val narrowJobs = jobsOf {
+    val narrowJobs = Bus.jobsOf(sc) {
       Snapshots.writeSnapshot(spark, df, s"$dir/narrow", snapshotId = 1L, nParts = 8, keyCol = "k")
     }
     assert(wideJobs <= narrowJobs, s"256-part commit ran $wideJobs jobs, 8-part ran $narrowJobs")
@@ -445,9 +434,9 @@ class ImagesSpec extends SparkTestBase {
     val t = s"$dir/t"
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     Snapshots.writeSnapshot(spark, df, t, snapshotId = 1L, nParts = 2, keyCol = "k")
-    // snapshot 2 legitimately empties the table (e.g. decontaminate
-    // dropped every row); it commits and must read back as zero rows with
-    // the table schema — while asOf=1 still returns the old state
+    // snapshot 2 legitimately empties the table (e.g. a decontamination
+    // pass dropped every row); it commits and must read back as zero rows
+    // with the table schema — while asOf=1 still returns the old state
     Snapshots.writeSnapshot(spark, df.where($"k" < 0), t, snapshotId = 2L,
       nParts = 2, keyCol = "k", operation = "overwrite")
     assert(Snapshots.currentSnapshot(t).contains(2L))

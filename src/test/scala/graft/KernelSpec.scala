@@ -85,6 +85,16 @@ class KernelSpec extends SparkTestBase {
     }
   }
 
+  test("vec_nearest prints its centroid matrix by shape and content, not identity") {
+    def kernel(flat: Array[Double]) = graft.functions.vecexprs.VecNearest(
+      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("v"), flat, 2)
+    val a = kernel(Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))
+    val b = kernel(Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))
+    assert(a.toString == b.toString, s"${a.toString} != ${b.toString}")
+    assert(a.toString.contains("3x2") && !a.toString.contains("[D@"), a.toString)
+    assert(kernel(Array(1.0, 2.0, 3.0, 4.0, 5.0, 7.0)).toString != a.toString)
+  }
+
   test("vec_nearest == scalar argmin with zero-padding on mixed-length vectors") {
     val dim = 6
     val cents: Array[Array[Double]] = Array.fill(5)(

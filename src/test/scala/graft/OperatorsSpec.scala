@@ -6,7 +6,7 @@ import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
 import org.apache.spark.sql.functions._
 
 /** Operator-level correctness: spatial join vs an O(n*m) brute-force oracle
-  * on NON-rectangular polygons with holes, salted == plain, kNN vs brute
+  * on NON-rectangular polygons with holes (both join branches), kNN vs brute
   * force, LSH ANN recall. */
 class OperatorsSpec extends SparkTestBase {
   import spark.implicits._
@@ -23,6 +23,16 @@ class OperatorsSpec extends SparkTestBase {
       rnd.nextDouble() * 340 - 170, rnd.nextDouble() * 160 - 80))
   }
 
+  /** The O(n*m) oracle: every (point, polygon) pair by ray cast, no cells. */
+  private def rayCastPairs(pts: Seq[(Long, Double, Double)]): Set[(Long, Long)] = {
+    val geoms = polyWkts.map { case (id, w) => (id, WktParser.parse(w)) }
+    (for {
+      (pid, lon, lat) <- pts
+      (gid, g) <- geoms
+      if RayCast.contains(g, lon, lat)
+    } yield (pid, gid)).toSet
+  }
+
   test("spatial join == brute-force ray-cast oracle (holes, multipolygons)") {
     val pts = randomPoints(4000)
     val ptsDf = pts.toDF("point_id", "lon", "lat")
@@ -32,26 +42,38 @@ class OperatorsSpec extends SparkTestBase {
     val got = SpatialJoin.pointsInPolygons(ptsDf, polysDf, level = 9)
       .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
 
-    val geoms = polyWkts.map { case (id, w) => (id, WktParser.parse(w)) }
-    val want = (for {
-      (pid, lon, lat) <- pts
-      (gid, g) <- geoms
-      if RayCast.contains(g, lon, lat)
-    } yield (pid, gid)).toSet
+    val want = rayCastPairs(pts)
     assert(got == want, s"diff: got-want=${(got -- want).take(5)} want-got=${(want -- got).take(5)}")
     assert(want.nonEmpty)
   }
 
-  test("salted spatial join result identical to plain") {
-    val pts = randomPoints(3000).toDF("point_id", "lon", "lat")
+  test("spatial join: broadcast and salted branches both equal the ray-cast oracle") {
+    val pts = randomPoints(3000)
     val polysDf = polyWkts.toDF("poly_id", "wkt")
       .withColumn("geom", st_geomfromtext($"wkt")).select("poly_id", "geom")
-    val plain = SpatialJoin.pointsInPolygons(pts, polysDf, level = 9)
-      .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-    val salted = SpatialJoin.pointsInPolygonsSalted(pts, polysDf, level = 9,
-      salt = 4, sampleFraction = 0.2, hotThreshold = 50L)
-      .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-    assert(plain == salted)
+    val want = rayCastPairs(pts)
+    assert(want.nonEmpty)
+    // at 3k points the coarse ancestor cells hold hundreds of probe rows
+    // each, so a threshold of 200 makes some of them hot
+    def run(broadcastCover: Boolean) = SpatialJoin.pointsInPolygons(
+      pts.toDF("point_id", "lon", "lat"), polysDf, level = 9,
+      broadcastCover = broadcastCover, hotThreshold = 200L)
+    val salted = run(broadcastCover = false)
+    val got = salted.select("point_id", "poly_id").as[(Long, Long)].collect()
+    val joinKeys = AqeTree.collect(salted.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.HashJoin => j.leftKeys
+      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j.leftKeys
+    }.flatten.flatMap(_.references.map(_.name))
+    assert(joinKeys.contains("salt"), s"salted branch must join on salt, keys: $joinKeys")
+    val hotSets = salted.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case i: org.apache.spark.sql.catalyst.expressions.In => i.list.size
+      case i: org.apache.spark.sql.catalyst.expressions.InSet => i.hset.size
+    }))
+    assert(hotSets.exists(_ > 0), s"the threshold must make some cells hot, sets: $hotSets")
+    assert(got.length == want.size && got.toSet == want, "salted branch != oracle")
+    val plain = run(broadcastCover = true)
+      .select("point_id", "poly_id").as[(Long, Long)].collect()
+    assert(plain.length == want.size && plain.toSet == want, "broadcast branch != oracle")
   }
 
   test("expanding k-ring kNN == brute force") {
@@ -372,10 +394,6 @@ class OperatorsSpec extends SparkTestBase {
     // eval doc 101 is SHORTER than 13 tokens: its whole text is its one
     // gram, so only a doc containing that exact token sequence as a
     // whole-doc gram (or window) can match — none here
-    val clean = Dedup.decontaminate(corpus, "doc_id", "text",
-      evalSet, "eval_id", "text", n = 13)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(clean == Set(3L, 4L, 5L, 6L))
     // short-eval matching does work when the exact sequence appears: a
     // corpus doc equal to the short eval doc is flagged
     val c2 = Seq((7L, "short eval probe")).toDF("doc_id", "text")

@@ -4,6 +4,7 @@ import graft.functions.GraftFunctions._
 import graft.operators.{Ann, Dedup, SpatialJoin}
 import graft.sources.SynthData
 import org.apache.spark.grafttest.Bus
+import org.apache.spark.sql.grafttest.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
@@ -33,10 +34,45 @@ class PlanAuditSpec extends SparkTestBase {
     val polys = SynthData.polygons(spark, dir)
       .withColumn("geom", st_geomfromtext(col("wkt"))).select("poly_id", "geom")
     val p = plan(SpatialJoin.pointsInPolygons(
-      SynthData.points(spark, dir), polys, level = 10, broadcastCover = Some(true)))
+      SynthData.points(spark, dir), polys, level = 10, broadcastCover = true))
     assert(p.contains("BroadcastHashJoin"), "cover must broadcast-hash-join")
     assert(!p.contains("CartesianProduct"), "no cartesian product")
     assert(p.contains("st_contains_rings"), "raycast refinement present as a filter")
+  }
+
+  test("spatial join: q16 runs q15's plan, no hot-cell sample job, no cache") {
+    def run(name: String): (Int, DataFrame) = {
+      var df: DataFrame = null
+      val jobs = Bus.jobsOf(spark.sparkContext) {
+        df = SparkEntry.queries(name)(spark, dir)
+        df.collect()
+      }
+      (jobs, df)
+    }
+    val (q15Jobs, _) = run("q15_spatial_join")
+    val (q16Jobs, q16) = run("q16_spatial_join_salted")
+    assert(q16Jobs <= q15Jobs, s"q16 started $q16Jobs jobs, q15 $q15Jobs")
+    assert(q16.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }.isEmpty,
+      "q16's plan must not read a cached cover")
+  }
+
+  test("spatial join: repeated salted calls leave no persisted RDD or cache entry") {
+    val sc = spark.sparkContext
+    val pts = SynthData.points(spark, dir)
+    val polys = SynthData.polygons(spark, dir)
+      .withColumn("geom", st_geomfromtext(col("wkt"))).select("poly_id", "geom")
+    val rdds0 = sc.getPersistentRDDs.size
+    val cached0 = Caches.entries(spark)
+    // ten batches in one long-lived session, each over its own layer
+    val counts = (0 until 10).map { i =>
+      val layer = polys.where(col("poly_id") % 10 =!= i)
+      SpatialJoin.pointsInPolygons(pts, layer, level = 10,
+        broadcastCover = false, hotThreshold = 100L).count()
+    }
+    assert(counts.forall(_ > 0), s"counts $counts")
+    val (rdds, cached) = (sc.getPersistentRDDs.size, Caches.entries(spark))
+    assert(rdds == rdds0, s"persisted RDDs $rdds0 -> $rdds")
+    assert(cached == cached0, s"cache entries $cached0 -> $cached")
   }
 
   test("pipeline probe side: bytes/caption pruned from the join scan") {
@@ -48,7 +84,7 @@ class PlanAuditSpec extends SparkTestBase {
       .select(col("image_id"), col("c.lon").as("lon"), col("c.lat").as("lat"))
     val polys = SynthData.polygons(spark, dir)
       .withColumn("geom", st_geomfromtext(col("wkt"))).select("poly_id", "geom")
-    val joined = SpatialJoin.pointsInPolygons(pts, polys, level = 10, broadcastCover = Some(true))
+    val joined = SpatialJoin.pointsInPolygons(pts, polys, level = 10, broadcastCover = true)
     val analyzed = joined.queryExecution.optimizedPlan.toString()
     assert(!analyzed.contains("bytes") && !analyzed.contains("caption"),
       "payload columns must be pruned below the join")
