@@ -128,10 +128,8 @@ object Pipeline {
 
     val metas = Snapshots.writeSnapshot(spark, agg, s"$workDir/tile_stats",
       snapshotId, nParts = 8, keyCol = "x", operation = "tile-assign")
-    val out =
-      if (metas.nonEmpty) metas.map(_.rowCount).sum
-      else Snapshots.readData(spark, s"$workDir/tile_stats").count() // resumed no-op
-    (out, nImages)
+    // every path, a no-op resume included, returns one meta per part
+    (metas.map(_.rowCount).sum, nImages)
   }
 
   def main(args: Array[String]): Unit = {

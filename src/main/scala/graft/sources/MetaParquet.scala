@@ -2,32 +2,42 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 
-/** Direct (driver-side, no Spark job) parquet writer for the snapshot
-  * store's METADATA tables — strictly metadata-scale payloads: the
+import Snapshots.PartitionMeta
+
+/** Direct (driver-side, no Spark job) parquet reader and writer for the
+  * snapshot store's METADATA tables — strictly metadata-scale payloads: the
   * per-partition lineage rows (nParts rows per commit) and the one-row
-  * snapshot manifest.
+  * snapshot manifests. This is the one module that knows their schemas.
   *
-  * Why: each `writeSnapshot` previously launched two extra Spark jobs just
-  * to land these few rows (a `toDF.write.parquet` append and a
-  * `coalesce(1)` manifest write). Per guide §1.2 the distributed algorithm
-  * should not pay distributed-execution fixed costs for driver-sized data —
-  * measured at ~0.2-0.3 s of scheduler/commit overhead per job on this
-  * harness, times 2 jobs times every snapshot commit (q42 resumes twice,
-  * q55 commits twice, the flagship pipeline once per run). The files are
-  * written with parquet-mr (ships with Spark) using the same
-  * optional-field schema Spark itself produces, so `spark.read.parquet`
-  * over the directory sees them as just another part file.
+  * Why: a Spark job costs ~0.2-0.3 s of scheduler overhead on this engine's
+  * local harness, and these tables hold a few rows per commit. Writing them
+  * through Spark cost two jobs per commit (a `toDF.write.parquet` append
+  * and a `coalesce(1)` manifest write); reading them through Spark cost a
+  * schema-inference job plus a collect for every resume, winner resolution
+  * and expiry — 5 jobs to build one `readData` frame. Per guide §1.2 the
+  * distributed algorithm should not pay distributed-execution fixed costs
+  * for driver-sized data; Iceberg reads its manifests on the driver for the
+  * same reason. The files are written with parquet-mr (ships with Spark)
+  * using the same optional-field schema Spark itself produces, so any
+  * parquet reader sees them as plain part files.
   *
-  * Crash safety: the file is materialized under a dot-prefixed temp name
-  * (invisible to parquet directory readers) and published with a
-  * same-directory ATOMIC_MOVE — a torn write can never corrupt the
-  * directory, matching the commit discipline of [[Snapshots]].
+  * Crash safety: a file is materialized under a dot-prefixed temp name and
+  * published with a same-directory ATOMIC_MOVE, matching the commit
+  * discipline of [[Snapshots]]. The readers skip dot- and
+  * underscore-prefixed names exactly as Spark's file index does, so a torn
+  * temp file, a claim lock or a tombstone is never read as table content.
   */
 private[sources] object MetaParquet {
 
@@ -55,8 +65,9 @@ private[sources] object MetaParquet {
     c
   }
 
-  private def writeGroups(schema: MessageType, target: Path)
-                         (fill: (MessageType, SimpleGroup => Unit) => Unit): Unit = {
+  /** Write `rows` (values in `schema`'s column order) to `target`: a
+    * dot-prefixed temp file, then a same-directory ATOMIC_MOVE. */
+  private def writeRows(schema: MessageType, target: Path, rows: Seq[Seq[Any]]): Unit = {
     Files.createDirectories(target.getParent)
     val tmp = target.getParent.resolve(s".${target.getFileName}.inprogress-${java.util.UUID.randomUUID}")
     val writer = ExampleParquetWriter
@@ -65,38 +76,76 @@ private[sources] object MetaParquet {
       .withConf(conf())
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
-    try fill(schema, g => writer.write(g))
+    try rows.foreach { r =>
+      val g = new SimpleGroup(schema)
+      schema.getFields.asScala.map(_.getName).zip(r).foreach {
+        case (n, v: Long) => g.add(n, v)
+        case (n, v: Int) => g.add(n, v)
+        case (n, v) => g.add(n, v.toString)
+      }
+      writer.write(g)
+    }
     finally writer.close()
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Append one lineage part-file with the given rows (atomic publish). */
-  def appendLineage(partitionsDir: String,
-                    rows: Seq[(Long, Int, Long, Long)]): Unit = {
-    val target = Paths.get(partitionsDir,
-      s"part-meta-${java.util.UUID.randomUUID}.parquet")
-    writeGroups(lineageSchema, target) { (schema, emit) =>
-      rows.foreach { case (sid, pid, cnt, lhash) =>
-        val g = new SimpleGroup(schema)
-        g.add("snapshot_id", sid)
-        g.add("part_id", pid)
-        g.add("row_count", cnt)
-        g.add("lineage_hash", lhash)
-        emit(g)
-      }
+  /** The rows of every visible file in `dir` (none when it is missing), in
+    * `schema`'s column order: the mirror of [[writeRows]]. Dot- and
+    * underscore-prefixed names are hidden, as they are to Spark. */
+  private def readRows(schema: MessageType, dir: String): Vector[Row] = {
+    val files = Option(new java.io.File(dir).listFiles).toVector.flatten
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    val cols = columns(schema)
+    files.sortBy(_.getName).flatMap { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(f.toURI)).withConf(conf()).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        Row.fromSeq(cols.map {
+          case (n, LongType) => g.getLong(n, 0)
+          case (n, IntegerType) => g.getInteger(n, 0)
+          case (n, _) => g.getString(n, 0)
+        })
+      }.toVector
+      finally reader.close()
     }
   }
+
+  /** Column names of `schema` with the Spark types `spark.read.parquet`
+    * infers for them. */
+  private def columns(schema: MessageType): Vector[(String, DataType)] =
+    schema.getFields.asScala.toVector.map(f => f.getName ->
+      (f.asPrimitiveType.getPrimitiveTypeName match {
+        case PrimitiveTypeName.INT64 => LongType
+        case PrimitiveTypeName.INT32 => IntegerType
+        case _ => StringType
+      }))
+
+  /** Append one lineage part-file with the given rows (atomic publish). */
+  def appendLineage(partitionsDir: String, rows: Seq[PartitionMeta]): Unit =
+    writeRows(lineageSchema, Paths.get(partitionsDir,
+      s"part-meta-${java.util.UUID.randomUUID}.parquet"),
+      rows.map(m => Seq[Any](m.snapshotId, m.partId, m.rowCount, m.lineageHash)))
 
   /** Write the one-row manifest to `target` (atomic publish). */
   def writeManifest(target: Path, snapshotId: Long, ts: String,
                     operation: String, nParts: Int): Unit =
-    writeGroups(manifestSchema, target) { (schema, emit) =>
-      val g = new SimpleGroup(schema)
-      g.add("snapshot_id", snapshotId)
-      g.add("ts", ts)
-      g.add("operation", operation)
-      g.add("n_partitions", nParts)
-      emit(g)
-    }
+    writeRows(manifestSchema, target, Seq(Seq(snapshotId, ts, operation, nParts)))
+
+  /** Every lineage row under `partitionsDir`. */
+  def readLineage(partitionsDir: String): Vector[PartitionMeta] =
+    readRows(lineageSchema, partitionsDir).map(r =>
+      PartitionMeta(r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+
+  /** The lineage table as a DataFrame over driver-read rows. */
+  def lineageFrame(spark: SparkSession, partitionsDir: String): DataFrame =
+    frame(spark, lineageSchema, partitionsDir)
+
+  /** The manifest table as a DataFrame over driver-read rows. */
+  def manifestFrame(spark: SparkSession, snapshotsDir: String): DataFrame =
+    frame(spark, manifestSchema, snapshotsDir)
+
+  private def frame(spark: SparkSession, schema: MessageType, dir: String): DataFrame =
+    spark.createDataFrame(readRows(schema, dir).asJava,
+      StructType(columns(schema).map { case (n, t) => StructField(n, t) }))
 }

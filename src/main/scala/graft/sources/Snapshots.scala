@@ -38,6 +38,12 @@ import org.apache.spark.sql.functions._
   * from checkpoint with per-partition lineage + metrics"). Concurrent DATA
   * writes to one snapshot stay single-writer (documented in
   * [[ensureManifest]]); the metadata commit itself is race-safe.
+  *
+  * The `_meta` tables are metadata-scale (nParts rows per commit), so they
+  * are read and written on the driver by [[MetaParquet]], never by a Spark
+  * job: resume, winner resolution ([[winners]]) and expiry run in plain
+  * Scala, and the only Spark work is the data write of a commit and the
+  * data scan of the winning dirs in [[readData]].
   */
 object Snapshots {
 
@@ -51,19 +57,31 @@ object Snapshots {
     if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
   }
 
+  private def partitionsDir(table: String) = s"${metaDir(table)}/partitions"
+  private def lineage(table: String) = MetaParquet.readLineage(partitionsDir(table))
+
+  /** The one winner rule of the store: for each part, the newest lineage row
+    * among snapshots `sids` (ties — crash-resume duplicates of one part —
+    * carry identical recomputed stats). Reads keep winners with rows > 0,
+    * expiry keeps winners older than the oldest retained snapshot, and the
+    * resume set is the winners of the one snapshot being written. */
+  private def winners(lineage: Seq[PartitionMeta], sids: Set[Long]): Seq[PartitionMeta] =
+    lineage.filter(m => sids.contains(m.snapshotId)).groupBy(_.partId).values
+      .map(_.maxBy(m => (m.snapshotId, m.rowCount))).toSeq.sortBy(_.partId)
+
   /** Per-partition metadata already committed for snapshot `sid` (resume
-    * set). Deduplicated by part_id so a crash-then-resume that produced a
+    * set), one row per part_id so a crash-then-resume that produced a
     * duplicate lineage row can never double-count. */
-  def committedMetas(spark: SparkSession, table: String, sid: Long): Seq[PartitionMeta] = {
-    val dir = s"${metaDir(table)}/partitions"
-    if (!Files.exists(Paths.get(dir))) Seq.empty
-    else spark.read.parquet(dir)
-      .where(col("snapshot_id") === sid)
-      .dropDuplicates("part_id")
-      .collect()
-      .map(r => PartitionMeta(sid, r.getAs[Int]("part_id"),
-        r.getAs[Long]("row_count"), r.getAs[Long]("lineage_hash"))).toSeq
-  }
+  private def committedMetas(table: String, sid: Long): Seq[PartitionMeta] =
+    winners(lineage(table), Set(sid))
+
+  /** Refuse a pre-snapshot-dir flat `data/part_id=N` table: it has no
+    * snap_id dirs for winner resolution to point at and no history to time
+    * travel through. Migrating means rewriting it through [[writeSnapshot]]
+    * into a fresh table path. */
+  private def requireSnapshotLayout(table: String): Unit =
+    require(!entryNames(Paths.get(s"$table/data")).exists(_.startsWith("part_id=")),
+      s"$table/data uses the pre-snapshot-dir flat layout; rewrite it into a fresh table first")
 
   /** Write `df` bucketed into `nParts` logical partitions with per-partition
     * lineage rows; skips partitions already committed for this snapshot id
@@ -94,16 +112,7 @@ object Snapshots {
       operation: String = "append",
       portableParts: Boolean = false,
       maxPartsPerRun: Int = Int.MaxValue): Seq[PartitionMeta] = {
-    // refuse to mix layouts: writing snap_id dirs next to a legacy FLAT
-    // data/part_id=N table would leave readData's winner resolution
-    // pointing at data/snap_id=<old>/... dirs that never existed, making
-    // the table unreadable. Legacy tables stay readable (readData's flat
-    // branch); migrating means rewriting them through writeSnapshot into a
-    // fresh table path.
-    val legacyFlat =
-      entryNames(Paths.get(s"$table/data")).exists(_.startsWith("part_id="))
-    require(!legacyFlat,
-      s"$table/data uses the pre-snapshot-dir flat layout; rewrite it into a fresh table first")
+    requireSnapshotLayout(table)
     // resume safety (r5 advice): expireSnapshots can sweep the data dirs of
     // an UNCOMMITTED (crashed/abandoned) snapshot id below the retention
     // horizon while its lineage rows survive — trusting those rows on
@@ -111,9 +120,9 @@ object Snapshots {
     // reads hit deleted dirs. A committed part counts as done only if its
     // data dir still exists; 0-row parts write no dir and stay trusted
     // (there is nothing on disk to lose). The rewrite appends a duplicate
-    // lineage row with identical recomputed stats, which committedMetas /
-    // readData already deduplicate.
-    val committed = committedMetas(spark, table, snapshotId).filter(m =>
+    // lineage row with identical recomputed stats, which the winner rule
+    // deduplicates.
+    val committed = committedMetas(table, snapshotId).filter(m =>
       m.rowCount == 0L || Files.isDirectory(
         Paths.get(s"$table/data/snap_id=$snapshotId/part_id=${m.partId}")))
     val done = committed.map(_.partId).toSet
@@ -121,7 +130,7 @@ object Snapshots {
     if (pendingAll.isEmpty) {
       // a crash can land AFTER the last lineage append but BEFORE the
       // manifest write — the resume must still complete the commit fully
-      ensureManifest(spark, table, snapshotId, operation, nParts)
+      ensureManifest(table, snapshotId, operation, nParts)
       ensureCurrent(table, snapshotId)
       return committed
     }
@@ -176,13 +185,12 @@ object Snapshots {
       PartitionMeta(snapshotId, pid, stats(2 * pid), stats(2 * pid + 1)))
     // metadata-scale rows: written directly by the driver (atomic publish),
     // not via a Spark job — see MetaParquet
-    MetaParquet.appendLineage(s"${metaDir(table)}/partitions",
-      metas.map(m => (m.snapshotId, m.partId, m.rowCount, m.lineageHash)))
+    MetaParquet.appendLineage(partitionsDir(table), metas)
     // a partial (micro-batch / crash-simulation) run stops here: no
     // manifest row, no CURRENT flip — the snapshot is not yet complete
     if (partialRun) return committed ++ metas
 
-    ensureManifest(spark, table, snapshotId, operation, nParts)
+    ensureManifest(table, snapshotId, operation, nParts)
     ensureCurrent(table, snapshotId)
     committed ++ metas
   }
@@ -211,23 +219,11 @@ object Snapshots {
     * writers racing the same `data/snap_id=S/part_id=N` directories is undefined, as
     * it is for any filesystem table format without a catalog lock; the
     * crash-then-RESUME path (sequential) is fully safe and q42-proven. */
-  private[graft] def ensureManifest(spark: SparkSession, table: String, snapshotId: Long,
-                                      operation: String, nParts: Int): Unit = {
+  private[graft] def ensureManifest(table: String, snapshotId: Long,
+                                    operation: String, nParts: Int): Unit = {
     val snapDir = Paths.get(s"${metaDir(table)}/snapshots")
     val target = snapDir.resolve(s"manifest-$snapshotId.parquet")
     if (Files.exists(target)) return
-    // legacy tables (pre-CAS layout) appended part-*.parquet rows: honor
-    // them so a resume on an old table does not duplicate the manifest row
-    // hidden entries (the persistent .manifest-<sid>.lock claim files, crashed
-    // .tmp dirs) are NOT legacy parts — counting them made a fresh table whose
-    // first commit crashed mid-publish probe an all-hidden snapshots dir with
-    // spark.read.parquet, which throws unable-to-infer-schema and wedged the
-    // documented crash-resume path
-    val hasLegacyParts = entryNames(snapDir)
-      .exists(n => !n.startsWith("manifest-") && !n.startsWith("."))
-    if (hasLegacyParts &&
-        !readSnapshots(spark, table).where(col("snapshot_id") === snapshotId).isEmpty) return
-
     // claim FIRST with an atomic dot-file create (invisible to parquet
     // readers): losers of a live race stop here without even paying the
     // temp write. A lock with no published target means the claimant
@@ -281,11 +277,15 @@ object Snapshots {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** The manifest table (snapshot_id, ts, operation, n_partitions), read on
+    * the driver. */
   def readSnapshots(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(s"${metaDir(table)}/snapshots")
+    MetaParquet.manifestFrame(spark, s"${metaDir(table)}/snapshots")
 
+  /** The lineage table (snapshot_id, part_id, row_count, lineage_hash), read
+    * on the driver. */
   def readPartitionMeta(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(s"${metaDir(table)}/partitions")
+    MetaParquet.lineageFrame(spark, partitionsDir(table))
 
   private def manifestPath(table: String, sid: Long): Path =
     Paths.get(s"${metaDir(table)}/snapshots/manifest-$sid.parquet")
@@ -302,10 +302,7 @@ object Snapshots {
   /** Snapshot ids with a LIVE published manifest, ascending — the
     * time-travelable set. */
   private def committedSids(table: String): Vector[Long] =
-    entryNames(Paths.get(s"${metaDir(table)}/snapshots"))
-      .collect { case n if n.startsWith("manifest-") && n.endsWith(".parquet") =>
-        n.stripPrefix("manifest-").stripSuffix(".parquet").toLong }
-      .sorted
+    sidsNamed(table, "manifest-", ".parquet")
 
   /** Snapshot ids that were EVER committed: live manifests plus the hidden
     * `.expired-<sid>` tombstones [[expireSnapshots]] leaves behind. Winner
@@ -314,20 +311,21 @@ object Snapshots {
     * and trusting them would leak uncommitted data into reads), and not
     * only live manifests (an expired snapshot's surviving still-referenced
     * files must keep resolving for the retained snapshots that read
-    * through them). */
-  private def everCommittedSids(table: String): Vector[Long] =
+    * through them). Only ids <= `upTo` are returned. */
+  private def everCommittedSids(table: String, upTo: Long): Set[Long] =
+    (committedSids(table) ++ sidsNamed(table, ".expired-", "")).filter(_ <= upTo).toSet
+
+  /** Ids of the `<prefix><sid><suffix>` entries of the snapshots dir,
+    * ascending. */
+  private def sidsNamed(table: String, prefix: String, suffix: String): Vector[Long] =
     entryNames(Paths.get(s"${metaDir(table)}/snapshots"))
-      .collect {
-        case n if n.startsWith("manifest-") && n.endsWith(".parquet") =>
-          n.stripPrefix("manifest-").stripSuffix(".parquet").toLong
-        case n if n.startsWith(".expired-") =>
-          n.stripPrefix(".expired-").toLong
-      }
-      .distinct.sorted
+      .collect { case n if n.startsWith(prefix) && n.endsWith(suffix) =>
+        n.stripPrefix(prefix).stripSuffix(suffix).toLong }
+      .sorted
 
   /** Table state at a snapshot: for each part_id, the files written by the
-    * NEWEST snapshot <= `asOf` that wrote that partition (resolved from the
-    * lineage table — metadata-scale work, nParts result rows). Defaults to
+    * NEWEST snapshot <= `asOf` that wrote that partition (resolved on the
+    * driver from the lineage table by [[winners]]). Defaults to
     * the CURRENT snapshot; pass `asOf = Some(sid)` to time-travel to any
     * still-retained snapshot. A snapshot whose winning lineage row counts 0
     * rows for a partition hides all older data for it (overwrite-to-empty).
@@ -337,18 +335,8 @@ object Snapshots {
     * publishes and CURRENT advances, and nothing ever rewrites a committed
     * snapshot's files under a reader. */
   def readData(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
+    requireSnapshotLayout(table)
     val dataDir = s"$table/data"
-    // pre-r5 tables laid data out flat (data/part_id=N, overwritten in
-    // place): no snap_id dirs to resolve, read as-is
-    val hasSnapDirs = entryNames(Paths.get(dataDir)).exists(_.startsWith("snap_id="))
-    if (!hasSnapDirs) {
-      // legacy tables overwrote data/part_id=N in place — no history
-      // exists, so silently serving CURRENT data for an asOf read would be
-      // wrong data with no error
-      require(asOf.isEmpty,
-        s"$table uses the pre-snapshot-dir flat layout; time travel is not available")
-      return spark.read.parquet(dataDir)
-    }
     val sid = asOf.orElse(currentSnapshot(table)).getOrElse(
       throw new IllegalArgumentException(s"$table has no committed snapshot"))
     asOf.foreach { s =>
@@ -360,29 +348,18 @@ object Snapshots {
     // abandoned partial write leaves lineage rows without a manifest, and
     // those rows must never beat a committed writer — otherwise readers
     // would see data from a snapshot that never published
-    val committed = everCommittedSids(table).filter(_ <= sid)
-    // struct max = lexicographic on (snapshot_id, row_count); snapshot_id is
-    // unique per (snapshot, part) modulo crash-resume duplicates, which carry
-    // identical recomputed stats
-    val winners = readPartitionMeta(spark, table)
-      .where(col("snapshot_id").isin(committed: _*))
-      .groupBy("part_id")
-      .agg(max(struct(col("snapshot_id"), col("row_count"))).as("w"))
-      .select(col("part_id"), col("w.snapshot_id").as("sid"), col("w.row_count").as("rows"))
-      .where(col("rows") > 0)
-      .collect()
-    if (winners.isEmpty)
+    val committed = everCommittedSids(table, sid)
+    val dirs = winners(lineage(table), committed)
+      .collect { case m if m.rowCount > 0 =>
+        s"$dataDir/snap_id=${m.snapshotId}/part_id=${m.partId}" }
+    if (dirs.isEmpty)
       // a committed all-empty snapshot (every lineage row 0 rows — e.g.
       // a decontamination pass dropped everything) is a legitimate state:
-      // return an EMPTY frame with the table schema (recovered from the
-      // existing snapshot dirs; hasSnapDirs guarantees at least one file
-      // exists)
+      // return an EMPTY frame with the table schema, recovered from the
+      // existing snapshot dirs
       return spark.read.option("basePath", dataDir).parquet(dataDir)
         .drop("snap_id").where(lit(false))
-    val dirs = winners.map { r =>
-      s"$dataDir/snap_id=${r.getAs[Long]("sid")}/part_id=${r.getAs[Int]("part_id")}"
-    }
-    spark.read.option("basePath", dataDir).parquet(dirs.toIndexedSeq: _*).drop("snap_id")
+    spark.read.option("basePath", dataDir).parquet(dirs: _*).drop("snap_id")
   }
 
   /** Iceberg-style `expire_snapshots`: drop all but the newest `keepLast`
@@ -402,19 +379,14 @@ object Snapshots {
     val rMin = committed(committed.size - keepLast) // oldest retained
     // (S, P) with S expired stays on disk iff S is still the newest
     // ever-committed writer of P as of the oldest retained snapshot — then
-    // every retained snapshot's read of P resolves to S's file (same
-    // rule as readData's winner resolution, so previously-expired-but-
-    // still-referenced snapshots compete too and their surviving files are
-    // never deleted out from under a retained read)
-    val resolvable = everCommittedSids(table).filter(_ <= rMin)
-    val stillReferenced: Set[(Long, Int)] = readPartitionMeta(spark, table)
-      .where(col("snapshot_id").isin(resolvable: _*))
-      .groupBy("part_id")
-      .agg(max(col("snapshot_id")).as("sid"))
-      .collect()
-      .map(r => (r.getAs[Long]("sid"), r.getAs[Int]("part_id")))
-      .filter { case (s, _) => s < rMin }
-      .toSet
+    // every retained snapshot's read of P resolves to S's file (readData's
+    // winners rule, so previously-expired-but-still-referenced snapshots
+    // compete too and their surviving files are never deleted out from
+    // under a retained read)
+    val resolvable = everCommittedSids(table, rMin)
+    val stillReferenced: Set[(Long, Int)] =
+      winners(lineage(table), resolvable)
+        .collect { case m if m.snapshotId < rMin => (m.snapshotId, m.partId) }.toSet
     // retract the expired snapshots from the catalog BEFORE touching any
     // data file: tombstone (the was-ever-committed fact must survive for
     // winner resolution), then delete the manifest. A crash mid-expire then

@@ -426,7 +426,53 @@ class ImagesSpec extends SparkTestBase {
     // history, so serving current data for asOf would be silently wrong
     val e2 = intercept[IllegalArgumentException](
       Snapshots.readData(spark, t, asOf = Some(1L)))
-    assert(e2.getMessage.contains("time travel"))
+    assert(e2.getMessage.contains("flat layout"))
+    // a plain read refuses the same way: the store reads only its own layout
+    val e3 = intercept[IllegalArgumentException](Snapshots.readData(spark, t))
+    assert(e3.getMessage.contains("flat layout"))
+  }
+
+  test("leftover hidden files in _meta are ignored by every read") {
+    // a crash inside a driver-side metadata write leaves a dot-prefixed
+    // .part-meta-*.inprogress-* temp file in _meta/partitions; it sits next
+    // to the manifest claim locks and the .expired-* tombstones. Two tables
+    // get the same operations, one with a complete and a torn temp file
+    // planted: every answer must match
+    val dir = java.nio.file.Files.createTempDirectory("snap-hidden").toString
+    def rows(n: Int, tag: String) = (1 to n).map(i => (i.toLong, s"$tag$i")).toDF("k", "v")
+    def run(t: String, plant: Boolean) = {
+      Snapshots.writeSnapshot(spark, rows(300, "a"), t, snapshotId = 1L, nParts = 4, keyCol = "k")
+      Snapshots.writeSnapshot(spark, rows(200, "b"), t, snapshotId = 2L, nParts = 2, keyCol = "k")
+      Snapshots.writeSnapshot(spark, rows(250, "c"), t, snapshotId = 3L, nParts = 4,
+        keyCol = "k", maxPartsPerRun = 2)
+      if (plant) {
+        val parts = java.nio.file.Paths.get(s"$t/_meta/partitions")
+        val published = {
+          val s = java.nio.file.Files.list(parts)
+          try s.iterator().asScala.toList finally s.close()
+        }
+        // a complete file (crash after close, before the publishing move)
+        // whose rows would double the lineage, and a torn one that would
+        // fail any parquet reader
+        java.nio.file.Files.copy(published.head,
+          parts.resolve(s".${published.head.getFileName}.inprogress-1"))
+        val bytes = java.nio.file.Files.readAllBytes(published.head)
+        java.nio.file.Files.write(parts.resolve(".part-meta-x.parquet.inprogress-2"),
+          bytes.take(bytes.length / 2))
+      }
+      val resumed = Snapshots.writeSnapshot(spark, rows(250, "c"), t, snapshotId = 3L,
+        nParts = 4, keyCol = "k")
+      def read(asOf: Option[Long]) = Snapshots.readData(spark, t, asOf).select("k", "v")
+        .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      def lineage() = Snapshots.readPartitionMeta(spark, t).collect().map(_.toSeq).sortBy(_.toString).toSeq
+      val before = (Seq(1L, 2L, 3L).map(s => read(Some(s))), lineage())
+      val expired = Snapshots.expireSnapshots(spark, t, keepLast = 2)
+      (resumed, before, expired, read(None), read(Some(2L)), lineage())
+    }
+    val clean = run(s"$dir/clean", plant = false)
+    val dirty = run(s"$dir/dirty", plant = true)
+    assert(clean._3 == Seq(1L))
+    assert(dirty == clean)
   }
 
   test("a committed all-empty snapshot reads back as an empty frame, not an error") {
@@ -530,6 +576,40 @@ class ImagesSpec extends SparkTestBase {
     }.toSet
   }
 
+  test("snapshot metadata runs no Spark job: resume, expire and readData stay in budget") {
+    // the _meta tables are read on the driver, so on an 80-part table with
+    // 3 snapshots a commit pays only its data write, a no-op resume and
+    // expiry run no job, and a readData frame costs what a plain parquet
+    // read of the same number of winning dirs costs
+    val dir = java.nio.file.Files.createTempDirectory("snap-jobs").toString
+    val t = s"$dir/t"
+    val n = 80
+    val df = (1 to 8000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    val sc = spark.sparkContext
+    var fresh = Seq.empty[Snapshots.PartitionMeta]
+    val freshJobs = Bus.jobsOf(sc) {
+      fresh = Snapshots.writeSnapshot(spark, df, s"$dir/fresh", 1L, n, "k")
+    }
+    Snapshots.writeSnapshot(spark, df, t, 1L, n, "k")
+    Snapshots.writeSnapshot(spark, df, t, 2L, n, "k")
+    val historyJobs = Bus.jobsOf(sc)(Snapshots.writeSnapshot(spark, df, t, 3L, n, "k"))
+    assert(historyJobs == freshJobs, s"commit with history ran $historyJobs jobs, fresh $freshJobs")
+    var noop = Seq.empty[Snapshots.PartitionMeta]
+    assert(Bus.jobsOf(sc) { noop = Snapshots.writeSnapshot(spark, df, t, 3L, n, "k") } == 0)
+    assert(noop.map(_.partId) == (0 until n))
+    // the plain read goes over the fresh table's dirs, so neither read
+    // finds a listing the other one cached
+    val dirs = fresh.filter(_.rowCount > 0)
+      .map(m => s"$dir/fresh/data/snap_id=1/part_id=${m.partId}")
+    val plainJobs = Bus.jobsOf(sc)(spark.read.option("basePath", s"$dir/fresh/data").parquet(dirs: _*))
+    val readJobs = Bus.jobsOf(sc)(Snapshots.readData(spark, t))
+    assert(readJobs <= plainJobs, s"readData built in $readJobs jobs, a plain read in $plainJobs")
+    var expired = Seq.empty[Long]
+    assert(Bus.jobsOf(sc) { expired = Snapshots.expireSnapshots(spark, t, keepLast = 2) } == 0)
+    assert(expired == Seq(1L))
+    assert(Snapshots.readData(spark, t).count() == 8000)
+  }
+
   test("resume completes a first commit that crashed between lock and publish") {
     // regression: a snapshots dir holding ONLY hidden entries (the claim
     // lock, a crashed .tmp dir) was counted as legacy manifest parts, and
@@ -564,7 +644,7 @@ class ImagesSpec extends SparkTestBase {
       pool.submit(new Runnable {
         override def run(): Unit = {
           gate.await()
-          Snapshots.ensureManifest(spark, s"$dir/t", 7L, "append", 4)
+          Snapshots.ensureManifest(s"$dir/t", 7L, "append", 4)
         }
       })
     }
