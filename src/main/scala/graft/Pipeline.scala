@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *   run:     read the prepared tables and execute ONE plan
   *            one narrow pass over the images scan: WKT parse (once)
   *              -> centroid, header-only decode dims; bytes dropped
-  *            polygons -> disjoint quadtree cover
-  *            cell equijoin (broadcast cover) -> ray-cast refinement
-  *            group per matched image (n_matches = its polygon count)
+  *            polygons -> disjoint quadtree cover -> compact cover table,
+  *              collected and broadcast once
+  *            per image, one probe of its ancestor cells with inline
+  *              ray-cast refinement -> n_matches; unmatched images dropped
   *            8x8 pixel-block -> Z/X/Y tile explode, weighted by n_matches
   *            groupBy(z,x,y) tile aggregation
   *            write with per-partition lineage snapshot (resumable).
@@ -71,7 +72,11 @@ object Pipeline {
   def run(spark: SparkSession, workDir: String, zoom: Int = 8, level: Int = 10,
           snapshotId: Long = 1L): (Long, Long) = {
     GraftFunctions.register(spark)
-    val images = spark.read.parquet(s"$workDir/images")
+    // declared schemas: what withBytes and prepareWith write, so the reads
+    // infer nothing (each inference is a Spark job)
+    val images = spark.read
+      .schema("image_id STRING, w INT, h INT, bytes BINARY, footprint_wkt STRING")
+      .parquet(s"$workDir/images")
     // input cardinality was fixed at prepare time — re-counting here would
     // add a serial metadata job to every measured run
     val countFile = java.nio.file.Paths.get(s"$workDir/images_count.txt")
@@ -83,25 +88,22 @@ object Pipeline {
     // one narrow pass over the scan: the WKT is parsed ONCE into the
     // struct, the centroid reused, and the decode reads only the codec
     // header (image_decode_dims), so the encoded bytes are dropped here and
-    // never reach the join, a shuffle or a broadcast
+    // never reach a shuffle or a broadcast
     val pts = images
       .withColumn("c", st_centroid(st_geomfromtext(col("footprint_wkt"))))
       .select(col("image_id"), col("c.lon").as("lon"), col("c.lat").as("lat"),
         col("w"), col("h"), image_decode_dims(col("bytes")).as("px"))
 
-    val polys = spark.read.parquet(s"$workDir/polygons")
-      .withColumn("geom", st_geomfromtext(col("wkt")))
-      .select("poly_id", "geom")
-
-    val joined = SpatialJoin.pointsInPolygons(pts, polys, level = level,
-      broadcastCover = true)
-
-    // one row per matched image: with hot-region skew a single image can
-    // match many polygons, so its tiles are exploded ONCE and weighted by
-    // the match count. A skinny shuffle with map-side partial aggregation;
-    // unmatched images never reach the tile explode.
-    val matched = joined.groupBy("image_id", "lon", "lat", "w", "h", "px")
-      .agg(count(lit(1)).as("n_matches"))
+    // counting needs no polygon column, so only the WKT is read (poly_id's
+    // type differs between layers)
+    val polys = spark.read.schema("wkt STRING").parquet(s"$workDir/polygons")
+      .select(st_geomfromtext(col("wkt")).as("geom"))
+    val cover = SpatialJoin.collectCover(polys, level)
+    // one row per matched image (image_id is unique), carrying its polygon
+    // count: with hot-region skew a single image can match many polygons,
+    // so its tiles are exploded ONCE and weighted by the match count.
+    // Unmatched images never reach the tile explode.
+    val matched = SpatialJoin.matchCounts(pts, cover)
 
     // raster-tile assignment: map 8x8 blocks of the footprint bbox
     // (centroid +- half a pixel-degree extent) to tiles
@@ -126,8 +128,10 @@ object Pipeline {
         sum(col("px_count") * col("n_matches")).as("pixels"),
         count(lit(1)).as("n_images"))
 
-    val metas = Snapshots.writeSnapshot(spark, agg, s"$workDir/tile_stats",
+    // the commit runs the plan; the table broadcast is released after it
+    val metas = try Snapshots.writeSnapshot(spark, agg, s"$workDir/tile_stats",
       snapshotId, nParts = 8, keyCol = "x", operation = "tile-assign")
+    finally cover.close()
     // every path, a no-op resume included, returns one meta per part
     (metas.map(_.rowCount).sum, nImages)
   }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.core._
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -473,6 +474,45 @@ object exprs {
     override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): StContainsRings =
       copy(first = f, second = s, third = t)
     override def prettyName: String = "st_contains_rings"
+  }
+
+  /** Probe of a broadcast [[graft.core.CoverTable]]: walks the point's
+    * `level + 1` ancestor cells against the table, ray-casts boundary
+    * entries inline and emits only hits. `counting = false` emits one
+    * `poly_idx` row per matching polygon; `counting = true` emits one
+    * `n_matches` row per point with at least one match. A generator, so it
+    * runs exactly once per point: a probe UDF under a filter would be
+    * evaluated again wherever the optimizer pushes the filter. Not in the
+    * SQL registry, because the table is not a column. */
+  case class StCoverProbe(children: Seq[Expression], table: Broadcast[CoverTable],
+                          level: Int, counting: Boolean)
+      extends Generator with CodegenFallback with ImplicitCastInputTypes {
+    override def inputTypes = Seq(DoubleType, DoubleType)
+    override def elementSchema: StructType =
+      if (counting) new StructType().add("n_matches", LongType, nullable = false)
+      else new StructType().add("poly_idx", IntegerType, nullable = false)
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      val x = children(0).eval(input)
+      val y = children(1).eval(input)
+      if (x == null || y == null) return Nil
+      if (counting) {
+        val n = local.count(x.asInstanceOf[Double], y.asInstanceOf[Double], level)
+        if (n == 0) Nil else InternalRow(n.toLong) :: Nil
+      } else {
+        var out: List[InternalRow] = Nil
+        local.probe(x.asInstanceOf[Double], y.asInstanceOf[Double], level)(p =>
+          out = InternalRow(p) :: out)
+        out
+      }
+    }
+    // read once per deserialized expression, not once per row
+    @transient private lazy val local: CoverTable = table.value
+    override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): StCoverProbe =
+      copy(children = cs)
+    override def prettyName: String = "st_cover_probe"
+    // the table prints as its broadcast id, never its contents
+    override protected def stringArgs: Iterator[Any] = Iterator(children, level,
+      if (counting) "n_matches" else "poly_idx", s"broadcast ${table.id}")
   }
 
   /** Rings of a polygonal geometry as a plain rank-3 array column. */

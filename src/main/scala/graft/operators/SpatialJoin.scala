@@ -1,33 +1,54 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import graft.core.CoverTable
 import graft.functions.GraftFunctions._
-import org.apache.spark.sql.DataFrame
+import graft.functions.exprs
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Cell-equijoin spatial join (north_star: "broadcast-or-shuffled
   * cell-equijoin followed by exact ray-casting point-in-polygon refinement").
   *
   * One operator, [[SpatialJoin.pointsInPolygons]], with two join branches:
   *
-  *   polys ──st_cover(geom, L)──explode──▸ (poly cols, cell, full, rings)
-  *   points ──st_cell_ancestors(lon,lat,L)──explode──▸ (point cols, cell)
-  *   broadcastCover = true:  join on cell, cover side broadcast
-  *   broadcastCover = false: join on (cell, salt); hot cells salted
-  *   filter full OR st_contains_rings(rings, lon, lat)
+  *   broadcastCover = true (the compact cover table):
+  *     polys ──st_cover(geom, L), st_rings(geom)──collect, one row per polygon
+  *       ──▸ driver: CoverTable (cell keys, CSR entries, flat rings) ──broadcast
+  *     points ──st_cover_probe(lon, lat, L)──▸ (point cols, poly_idx)
+  *       walks the L+1 ancestor cells, ray-casts boundary entries inline,
+  *       emits only hits
+  *     ⋈ poly_idx with the one-row-per-polygon attribute frame ──▸ poly cols
+  *   broadcastCover = false (salted):
+  *     polys ──st_cover(geom, L)──explode──▸ (poly cols, cell, full, rings)
+  *     points ──st_cell_ancestors(lon,lat,L)──explode──▸ (point cols, cell)
+  *     join on (cell, salt); hot cells salted
+  *     filter full OR st_contains_rings(rings, lon, lat)
   *
   * Because the quadtree cover is DISJOINT (graft.core.CellIndex.cover), a
   * point's ancestor chain meets each polygon's cover in at most one cell —
-  * the join emits each (point, polygon) candidate exactly once and needs NO
+  * either branch emits each (point, polygon) pair exactly once and needs NO
   * dropDuplicates shuffle afterwards. `full` cells skip the ray-cast.
   *
   * Scale notes (100 TB / 1000 executors):
-  *  - the cover side is |polys| × O(cells) rows of (long, bool, rings) —
-  *    broadcast it whenever it fits (`broadcastCover = true`): a broadcast
-  *    hash join has no shuffle partitions to skew, so it takes no hot-cell
-  *    sample and no salt;
-  *  - the point side explodes to (maxLevel+1) rows per point but is joined
-  *    immediately (no materialization) and whole-stage codegen fuses
-  *    explode+join probe;
+  *  - the broadcast branch collects the cover when the operator is called
+  *    and ships it as a [[graft.core.CoverTable]]: each polygon's rings
+  *    once, each cover cell as a hash key and a 4-byte entry. The exploded
+  *    cover this replaces carried a ring copy per boundary cell (75.5 MB
+  *    for the flagship's 1,000 rectangles, against 7.3 MB of table now);
+  *  - the point side is neither exploded nor joined: one generator call per
+  *    point does the level+1 hash probes and the refinement, inside the
+  *    scan's stage, and emits only hits. [[SpatialJoin.matchCounts]] emits
+  *    one row per matched point with its match count, so a per-point
+  *    regroup needs no shuffle;
+  *  - a pair frame keeps its table broadcast alive while the frame is
+  *    reachable; Spark's ContextCleaner removes it after that, as it does
+  *    for its own broadcast joins. A caller that runs its plan at once can
+  *    `close()` the [[SpatialJoin.CoverBroadcast]] instead;
   *  - for huge polygon layers (`broadcastCover = false`) the equijoin may
   *    shuffle both sides; hot cells found by a point-side sample are spread
   *    over S salt buckets (north_rule: "skew handled explicitly") and AQE
@@ -56,10 +77,63 @@ object SpatialJoin {
       .withColumn("rings", when(col("full"), lit(null)).otherwise(col("rings")))
       .drop("cov", "geom")
 
+  /** The broadcast branch's build side: the layer's cover as one broadcast
+    * [[CoverTable]], and the layer's other columns as one row per polygon
+    * keyed by `_poly_idx`, its index in the table (None when `geom` is the
+    * only column). `close()` destroys the broadcast. */
+  final class CoverBroadcast private[SpatialJoin] (
+      private[SpatialJoin] val table: Broadcast[CoverTable],
+      private[SpatialJoin] val level: Int,
+      private[SpatialJoin] val attrs: Option[DataFrame]) extends AutoCloseable {
+    def close(): Unit = table.destroy()
+  }
+
+  /** Collects polys(polyCols..., geom) as one row per polygon — its cover
+    * cells, their `full` flags and its rings, through a typed encoder — and
+    * broadcasts the [[CoverTable]] built from them on the driver. Runs the
+    * cover's repartition and collect now. */
+  def collectCover(polys: DataFrame, level: Int): CoverBroadcast = {
+    val spark = polys.sparkSession
+    val attrSchema = polys.drop("geom").schema
+    val rows = polys
+      .repartition(spark.sparkContext.defaultParallelism)
+      .withColumn("cov", st_cover(col("geom"), level))
+      .select(struct(attrSchema.fieldNames.toSeq.map(col): _*).as("_1"), struct(
+        col("cov.cell").as("cells"), col("cov.full").as("full"),
+        st_rings(col("geom")).as("rings")).as("_2"))
+      .as(Encoders.tuple(Encoders.row(attrSchema), Encoders.product[CoverTable.Polygon]))
+      .collect()
+    val table = spark.sparkContext.broadcast(CoverTable.build(rows.map(_._2).toIndexedSeq))
+    val attrs = Option.when(attrSchema.nonEmpty)(spark.createDataFrame(
+      rows.iterator.zipWithIndex.map { case ((r, _), i) => Row.fromSeq(r.toSeq :+ i) }.toSeq.asJava,
+      attrSchema.add("_poly_idx", IntegerType, nullable = false)))
+    new CoverBroadcast(table, level, attrs)
+  }
+
+  private def probe(cover: CoverBroadcast, counting: Boolean): Column =
+    GraftColumnBridge.column(exprs.StCoverProbe(
+      Seq(UnresolvedAttribute("lon"), UnresolvedAttribute("lat")),
+      cover.table, cover.level, counting))
+
+  /** points(pointCols..., lon, lat) -> (pointCols..., lon, lat, n_matches):
+    * one row per point that lies in at least one polygon of `cover`, with
+    * the number of such polygons. No shuffle: the probe runs in the
+    * points' own stage. */
+  def matchCounts(points: DataFrame, cover: CoverBroadcast): DataFrame =
+    points.select(col("*"), probe(cover, counting = true).as("n_matches"))
+
+  /** The (point, polygon) pairs of `cover`: point columns, then the
+    * polygon columns joined on by polygon index. */
+  private def matchPairs(points: DataFrame, cover: CoverBroadcast): DataFrame = {
+    val hits = points.select(col("*"), probe(cover, counting = false).as("_poly_idx"))
+    cover.attrs.fold(hits)(a => hits.join(broadcast(a), "_poly_idx")).drop("_poly_idx")
+  }
+
   /** points(pointCols..., lon, lat) ⋈ polys(polyCols..., geom) -> matches.
     *
-    * @param broadcastCover true pins the cover side as the broadcast build
-    *   and joins on `cell` alone. false takes the salted `(cell, salt)`
+    * @param broadcastCover true collects the layer into a broadcast
+    *   [[CoverTable]] now ([[collectCover]]) and returns
+    *   [[matchPairs]] over it. false takes the salted `(cell, salt)`
     *   equijoin: a cheap pre-pass counts a `sampleFraction` sample of the
     *   points per ancestor cell and collects the cells at or above
     *   `hotThreshold` (scaled to the sample); a hot cell's point rows each
@@ -76,34 +150,31 @@ object SpatialJoin {
       polys: DataFrame,
       level: Int = 12,
       broadcastCover: Boolean = false,
-      hotThreshold: Long = 10000L): DataFrame = {
-    val cover = coverSide(polys, level)
-    val pts = points.withColumn("cell",
-      explode(st_cell_ancestors(col("lon"), col("lat"), level)))
-    val joined =
-      if (broadcastCover) pts.join(broadcast(cover), "cell")
-      else {
-        val hot = points.sample(sampleFraction)
-          .select(explode(st_cell_ancestors(col("lon"), col("lat"), level)).as("cell"))
-          .groupBy("cell").count()
-          .where(col("count") >= math.max(1L, (hotThreshold * sampleFraction).toLong))
-          .select("cell").collect().map(_.getLong(0))
-        // Catalyst turns a long literal list into one InSet hash lookup
-        val isHot = col("cell").isin(hot: _*)
-        val saltedPts = pts.withColumn("salt",
-          when(isHot, pmod(hash(points.columns.map(col): _*), lit(salt))).otherwise(lit(0)))
-        // the named `_hot` marker is how plans (and perfbench's salt_rows
-        // metric) find the salt explode
-        val saltedCover = cover.withColumn("_hot", isHot)
-          .withColumn("salt", explode(when(col("_hot"),
-            sequence(lit(0), lit(salt - 1))).otherwise(array(lit(0)))))
-          .drop("_hot")
-        saltedPts.join(saltedCover, Seq("cell", "salt")).drop("salt")
-      }
-    joined
-      .where(col("full") || st_contains_rings(col("rings"), col("lon"), col("lat")))
-      .drop("cell", "full", "rings")
-  }
+      hotThreshold: Long = 10000L): DataFrame =
+    if (broadcastCover) matchPairs(points, collectCover(polys, level))
+    else {
+      val cover = coverSide(polys, level)
+      val pts = points.withColumn("cell",
+        explode(st_cell_ancestors(col("lon"), col("lat"), level)))
+      val hot = points.sample(sampleFraction)
+        .select(explode(st_cell_ancestors(col("lon"), col("lat"), level)).as("cell"))
+        .groupBy("cell").count()
+        .where(col("count") >= math.max(1L, (hotThreshold * sampleFraction).toLong))
+        .select("cell").collect().map(_.getLong(0))
+      // Catalyst turns a long literal list into one InSet hash lookup
+      val isHot = col("cell").isin(hot: _*)
+      val saltedPts = pts.withColumn("salt",
+        when(isHot, pmod(hash(points.columns.map(col): _*), lit(salt))).otherwise(lit(0)))
+      // the named `_hot` marker is how plans (and perfbench's salt_rows
+      // metric) find the salt explode
+      val saltedCover = cover.withColumn("_hot", isHot)
+        .withColumn("salt", explode(when(col("_hot"),
+          sequence(lit(0), lit(salt - 1))).otherwise(array(lit(0)))))
+        .drop("_hot")
+      saltedPts.join(saltedCover, Seq("cell", "salt")).drop("salt")
+        .where(col("full") || st_contains_rings(col("rings"), col("lon"), col("lat")))
+        .drop("cell", "full", "rings")
+    }
 
   /** Forwarding alias under the name perfbench's skew probe calls. */
   def pointsInPolygonsSalted(points: DataFrame, polys: DataFrame, level: Int = 12,

@@ -20,6 +20,29 @@ class KernelSpec extends SparkTestBase {
     (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
   }
 
+  test("cover table probe == brute-force ray cast, root cell 0L included") {
+    import graft.core.{CoverTable, RayCast}
+    val layer = AdversarialLayer
+    for (level <- Seq(0, 3, 9, 12)) {
+      val polys = layer.geoms.map(layer.tablePolygon(_, level)).toIndexedSeq
+      // the world polygon's cover is the full root cell at every level; at
+      // level 0 every other polygon adds the root cell as a boundary cell
+      assert(polys.last.cells.sameElements(Array(0L)), s"level $level")
+      val table = CoverTable.build(polys)
+      layer.points.foreach { case (x, y) =>
+        val want = layer.geoms.indices.filter(i => RayCast.contains(layer.geoms(i), x, y))
+        val got = Seq.newBuilder[Int]
+        table.probe(x, y, level)(got += _)
+        assert(got.result().sorted == want, s"level $level point ($x, $y)")
+        assert(table.count(x, y, level) == want.size)
+      }
+    }
+    // null geometries match nothing; an empty layer builds and probes
+    val nulls = CoverTable.build(IndexedSeq(CoverTable.Polygon(null, null, null)))
+    assert(nulls.count(1.0, 1.0, 10) == 0)
+    assert(CoverTable.build(IndexedSeq.empty).count(1.0, 1.0, 10) == 0)
+  }
+
   test("ngram_hash_set == sorted distinct portableHash60 over char n-grams") {
     def naive(s: String, n: Int): Seq[Long] = {
       val grams =

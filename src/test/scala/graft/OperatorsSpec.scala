@@ -76,6 +76,24 @@ class OperatorsSpec extends SparkTestBase {
     assert(plain.length == want.size && plain.toSet == want, "broadcast branch != oracle")
   }
 
+  test("spatial join: cover-table pairs == salted pairs on the adversarial layer") {
+    val layer = AdversarialLayer
+    val pts = layer.points.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+      .toDF("point_id", "lon", "lat")
+    val polys = layer.polygons.toDF("poly_id", "wkt")
+      .select($"poly_id", st_geomfromtext($"wkt").as("geom"))
+    def pairs(broadcastCover: Boolean) = SpatialJoin.pointsInPolygons(pts, polys,
+      level = 9, broadcastCover = broadcastCover, hotThreshold = 200L)
+      .select("point_id", "poly_id").as[(Long, Long)].collect()
+    val table = pairs(broadcastCover = true)
+    val salted = pairs(broadcastCover = false)
+    assert(table.length == table.toSet.size, "the cover table emitted a pair twice")
+    assert(table.toSet == salted.toSet && table.length == salted.length,
+      s"table-salted=${(table.toSet -- salted).take(5)} salted-table=${(salted.toSet -- table).take(5)}")
+    // every point lies in the world polygon
+    assert(table.count(_._2 == 8L) == layer.points.length)
+  }
+
   test("expanding k-ring kNN == brute force") {
     val pts = randomPoints(3000).toDF("point_id", "lon", "lat")
     val qs = (0 until 20).map(i => (i.toLong, (i * 37 % 340) - 170.0 + 0.3, (i * 53 % 160) - 80.0 + 0.7))

@@ -1,16 +1,19 @@
 package graft
 
 import graft.functions.GraftFunctions._
+import graft.functions.exprs
 import graft.operators.{Ann, Dedup, SpatialJoin}
 import graft.sources.SynthData
-import org.apache.spark.grafttest.Bus
+import org.apache.spark.grafttest.{Blocks, Bus}
 import org.apache.spark.sql.grafttest.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -30,14 +33,21 @@ class PlanAuditSpec extends SparkTestBase {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString()
 
-  test("spatial join: cover side broadcast, no cartesian, raycast after equijoin") {
+  test("spatial join: cover table probe, no cell equijoin, no cartesian") {
     val polys = SynthData.polygons(spark, dir)
       .withColumn("geom", st_geomfromtext(col("wkt"))).select("poly_id", "geom")
-    val p = plan(SpatialJoin.pointsInPolygons(
-      SynthData.points(spark, dir), polys, level = 10, broadcastCover = true))
-    assert(p.contains("BroadcastHashJoin"), "cover must broadcast-hash-join")
-    assert(!p.contains("CartesianProduct"), "no cartesian product")
-    assert(p.contains("st_contains_rings"), "raycast refinement present as a filter")
+    val exec = SpatialJoin.pointsInPolygons(
+      SynthData.points(spark, dir), polys, level = 10, broadcastCover = true)
+      .queryExecution.executedPlan
+    val generators = AqeTree.collect(exec) { case g: GenerateExec => g.generator }
+    assert(generators.count(_.isInstanceOf[exprs.StCoverProbe]) == 1,
+      s"one cover probe per point, generators: $generators")
+    assert(!exec.toString.contains("st_cell_ancestors"), "no ancestor explode")
+    val joinKeys = AqeTree.collect(exec) {
+      case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
+    }.flatten.flatMap(_.references.map(_.name))
+    assert(!joinKeys.contains("cell"), s"no broadcast hash join on cell, keys: $joinKeys")
+    assert(!exec.toString.contains("CartesianProduct"), "no cartesian product")
   }
 
   test("spatial join: q16 runs q15's plan, no hot-cell sample job, no cache") {
@@ -129,6 +139,48 @@ class PlanAuditSpec extends SparkTestBase {
     assert(readers.head.logical.toString.contains(s"$work/tile_stats"),
       s"the images reader must be the tile_stats write:\n${readers.head.logical.treeString.take(1500)}")
     assert(imageScans(readers.head.optimizedPlan) == 1, "images scanned once")
+    // the per-image match count comes from the cover probe in the scan's
+    // stage: nothing shuffles or broadcasts between the images scan and the
+    // tile explode
+    val tileExplode = AqeTree.collect(readers.head.executedPlan) {
+      case g: GenerateExec if g.generator.toString.contains("image_tile_blocks") => g
+    }
+    assert(tileExplode.size == 1, s"one tile explode, got ${tileExplode.size}")
+    val below = AqeTree.collect(tileExplode.head) {
+      case e: Exchange => e.nodeName
+      case q: QueryStageExec => q.nodeName
+    }
+    assert(below.isEmpty, s"no exchange between the images scan and the tile explode: $below")
+    assert(AqeTree.collect(tileExplode.head) {
+      case s: FileSourceScanExec => images(s.relation)
+    }.sum == 1, "the tile explode reads the images scan directly")
+  }
+
+  /** A prepared sf0.001 flagship work dir, shared by the run-budget cases. */
+  private lazy val pipelineWork: String = {
+    val work = java.nio.file.Files.createTempDirectory("pipe-budget").toString
+    Pipeline.prepare(spark, dir, work)
+    work
+  }
+
+  test("pipeline: a first commit runs at most 5 Spark jobs") {
+    // prepared outside the count
+    val work = pipelineWork
+    val jobs = Bus.jobsOf(spark.sparkContext)(Pipeline.run(spark, work, snapshotId = 100L))
+    assert(jobs <= 5, s"Pipeline.run started $jobs jobs")
+  }
+
+  test("pipeline: sequential runs leave no cover table broadcast behind") {
+    val sc = spark.sparkContext
+    val cls = classOf[graft.core.CoverTable]
+    val baseline = Blocks.broadcastValues(sc, cls)
+    (1 to 5).foreach(i => Pipeline.run(spark, pipelineWork, snapshotId = 200L + i))
+    // Broadcast.destroy() removes the blocks asynchronously
+    val deadline = System.nanoTime() + 20000000000L
+    while (Blocks.broadcastValues(sc, cls) > baseline && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    val left = Blocks.broadcastValues(sc, cls)
+    assert(left <= baseline, s"cover table broadcasts $baseline -> $left after 5 runs")
   }
 
   test("exact dedup: partial (map-side) aggregation precedes the shuffle") {
