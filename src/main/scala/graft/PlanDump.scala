@@ -10,8 +10,9 @@ package graft
   * Respects SPARK_GRAFT_ONLY for targeted dumps. Note q42/q55/q41 execute
   * their embedded preparation actions (snapshot writes, centroid sample)
   * while the plan is being built, and so do q15/q16/q37: the broadcast
-  * spatial join collects its cover table when it is called. The dump pays
-  * those, which is why it is a separate main and never timed.
+  * spatial join collects its cover table when it is called, and q17: kNN
+  * counts the points to size its first disk. The dump pays those, which is
+  * why it is a separate main and never timed.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

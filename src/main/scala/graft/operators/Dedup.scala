@@ -51,24 +51,26 @@ object Dedup {
     * round is two skinny (id, lbl) shuffles OVER PAIRED NODES ONLY — the
     * singleton majority of a real corpus never enters the loop and is
     * attached at the end with one left join; per-round results are
-    * checkpoint-truncated (the [[Knn]] lesson: without truncation the plan
-    * tree doubles per round and the driver dies printing it) and the
-    * previous round's blocks are released immediately. Termination is the
-    * round's changed-label count — the same action that materializes the
-    * new labels. `reliableCheckpoint = true` (with `sc.setCheckpointDir`)
-    * makes rounds durable on a real cluster, as in [[Knn.knn]].
+    * checkpoint-truncated (without truncation the plan tree doubles per
+    * round and the driver dies printing it) and the previous round's blocks
+    * are released immediately. Termination is the round's changed-label
+    * count — the same action that materializes the new labels.
+    *
+    * Durability: when the session has a checkpoint dir
+    * (`sc.setCheckpointDir`) rounds are truncated with a reliable
+    * `checkpoint()`, which survives executor loss on a real cluster, as
+    * GraphX and MLlib's iterative algorithms do; without one they use
+    * executor-local `localCheckpoint()`, which is correct and needs no
+    * checkpoint-dir I/O in local mode.
     *
     * Exactness: labels start at own id and only ever decrease via mins over
     * component members, so the fixpoint label of every node is exactly the
     * component minimum — no data assumptions, DuckDB-oracle-provable via a
     * recursive-CTE transitive closure (q51). */
-  def dedupGroups(nodes: DataFrame, pairs: DataFrame, idCol: String,
-                  reliableCheckpoint: Boolean = false): DataFrame = {
-    if (reliableCheckpoint)
-      require(nodes.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "dedupGroups(reliableCheckpoint = true) needs sc.setCheckpointDir(...)")
+  def dedupGroups(nodes: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
+    val reliable = nodes.sparkSession.sparkContext.getCheckpointDir.isDefined
     def truncate(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
+      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     // pairs referencing ids absent from `nodes` (stale/filtered pair
     // files) are dropped up front: otherwise a foreign id could win the
     // component minimum and be emitted as a rep_id that names no real

@@ -57,9 +57,11 @@ import org.apache.spark.sql.types.IntegerType
 object SpatialJoin {
 
   // salt buckets per hot cell, and the point-side sample of the hot-cell
-  // pre-pass
+  // pre-pass; the sample is seeded so identical inputs get one hot set and
+  // one plan
   private val salt = 8
   private val sampleFraction = 0.01
+  private val sampleSeed = 0x5a17L
 
   /** Explode a polygon layer (must carry `geom`) into its cover cells.
     * The covering (quadtree descent per polygon) is CPU-heavy relative to
@@ -156,7 +158,7 @@ object SpatialJoin {
       val cover = coverSide(polys, level)
       val pts = points.withColumn("cell",
         explode(st_cell_ancestors(col("lon"), col("lat"), level)))
-      val hot = points.sample(sampleFraction)
+      val hot = points.sample(sampleFraction, sampleSeed)
         .select(explode(st_cell_ancestors(col("lon"), col("lat"), level)).as("cell"))
         .groupBy("cell").count()
         .where(col("count") >= math.max(1L, (hotThreshold * sampleFraction).toLong))

@@ -106,16 +106,57 @@ class OperatorsSpec extends SparkTestBase {
     assert(brute.size == 20 * 7)
   }
 
-  test("kNN with reliable checkpointing matches the default path") {
-    val dir = java.nio.file.Files.createTempDirectory("knn-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val pts = randomPoints(500).toDF("point_id", "lon", "lat")
-    val qs = randomPoints(520).drop(500).toDF("query_id", "qlon", "qlat")
-    val a = Knn.knn(qs, pts, k = 4, level = 6)
-      .select("query_id", "point_id", "rnk").as[(Long, Long, Int)].collect().toSet
-    val b = Knn.knn(qs, pts, k = 4, level = 6, reliableCheckpoint = true)
-      .select("query_id", "point_id", "rnk").as[(Long, Long, Int)].collect().toSet
-    assert(a == b && a.nonEmpty)
+  test("kNN == brute force on ties, duplicates, empty regions, grid edges, k > n and INT ids") {
+    val rnd = new scala.util.Random(31)
+    // a uniform cloud with a hole around the lattice, so the lattice
+    // queries' k-th distance is a tie among lattice points alone
+    val cloud = Iterator.continually((rnd.nextDouble() * 120 - 60, rnd.nextDouble() * 100 - 50))
+      .filterNot { case (x, y) => x > 16 && x < 24 && y > 16 && y < 24 }.take(1500).toSeq
+    val lattice = for (i <- -4 to 4; j <- -4 to 4) yield (20.0 + i * 0.5, 20.0 + j * 0.5)
+    val dups = Seq((-30.0, -30.0), (5.5, -12.25)).flatMap(Seq.fill(3)(_))
+    // clusters at the four grid corners: their queries take the disk route
+    // with rings clipped at the grid edge
+    val corners = for {
+      (cx, cy) <- Seq((179.6, 89.6), (-179.6, 89.6), (179.6, -89.6), (-179.6, -89.6))
+      _ <- 0 until 40
+    } yield (cx + rnd.nextDouble() * 0.6 - 0.3, cy + rnd.nextDouble() * 0.6 - 0.3)
+    val pts = (cloud ++ lattice ++ dups ++ corners).zipWithIndex
+      .map { case ((x, y), i) => (i.toLong, x, y) }.toDF("point_id", "lon", "lat")
+    val qs = (Seq(
+      (20.0, 20.0), (20.25, 20.25), (20.5, 19.0), // lattice: ties at the k-th distance
+      (-30.0, -30.0), (5.5, -12.0), // duplicated coordinates
+      (150.0, -40.0), (-120.0, 30.0), // empty regions
+      (179.9, 89.9), (-179.9, 89.9), (179.9, -89.9), (-179.9, -89.9), // corners
+      (179.9, 0.0), (-179.9, 0.0), (0.0, 89.9), (0.0, -89.9)) ++ // empty edges
+      Seq.fill(20)((rnd.nextDouble() * 120 - 60, rnd.nextDouble() * 100 - 50)))
+      .zipWithIndex.map { case ((x, y), i) => (i, x, y) } // INT query_id, as q17's
+      .toDF("query_id", "qlon", "qlat")
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
+    val fast = Knn.knn(qs, pts, k = 6, level = 6)
+    val got = rows(fast) // collects `fast` itself, so its plan carries the metrics
+    assert(got == rows(Knn.knnBrute(qs, pts, k = 6)))
+    assert(got.size == 35 * 6)
+    // both routes emitted rows: the union's first input is the disk route,
+    // its second the brute-force cross join
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan, UnionExec}
+    def outRows(p: SparkPlan): Long = p match {
+      case f: FilterExec => f.metrics("numOutputRows").value
+      case _ => p.children.map(outRows).sum
+    }
+    val union = AqeTree.collect(fast.queryExecution.executedPlan) { case u: UnionExec => u }
+    assert(union.length == 1, s"one union of the two routes, got $union")
+    val Seq(viaDisk, viaBrute) = union.head.children.map(outRows)
+    assert(viaDisk > 0 && viaBrute > 0 && viaDisk + viaBrute == got.size,
+      s"disk route $viaDisk rows, brute route $viaBrute rows")
+
+    // k beyond the point count: every query gets every point
+    val few = pts.where($"point_id" < 5)
+    val fewGot = rows(Knn.knn(qs, few, k = 9, level = 6))
+    assert(fewGot == rows(Knn.knnBrute(qs, few, k = 9)) && fewGot.size == 35 * 5)
+    // no queries: no rows
+    assert(Knn.knn(qs.limit(0), pts, k = 6, level = 6).collect().isEmpty)
   }
 
   test("kNN with k larger than point count falls back to brute force") {
@@ -388,6 +429,20 @@ class OperatorsSpec extends SparkTestBase {
         Seq.empty[(Long, Long)].toDF("id_a", "id_b"), "doc_id")
       .as[(Long, Long)].collect().toMap
     assert(clean == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  test("dedupGroups checkpoints reliably when the session has a checkpoint dir") {
+    val nodes = (0L until 60L).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 22L), (22L, 21L))
+      .toDF("id_a", "id_b")
+    def groups() = Dedup.dedupGroups(nodes, pairs, "doc_id").as[(Long, Long)].collect().toMap
+    val local = groups()
+    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt")
+    val reliable = org.apache.spark.grafttest.Checkpoints.withDir(spark.sparkContext, dir.toString)(groups())
+    val files = java.nio.file.Files.walk(dir)
+      .filter(f => java.nio.file.Files.isRegularFile(f)).count()
+    assert(files > 0, s"no checkpoint files under $dir")
+    assert(reliable == local && local(4L) == 1L && local(21L) == 20L && local(59L) == 59L)
   }
 
   test("decontamination flags exactly the docs sharing a word 13-gram with the eval set") {

@@ -2,13 +2,14 @@ package graft
 
 import graft.functions.GraftFunctions._
 import graft.functions.exprs
-import graft.operators.{Ann, Dedup, SpatialJoin}
+import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
 import graft.sources.SynthData
 import org.apache.spark.grafttest.{Blocks, Bus}
 import org.apache.spark.sql.grafttest.Caches
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -83,6 +84,51 @@ class PlanAuditSpec extends SparkTestBase {
     val (rdds, cached) = (sc.getPersistentRDDs.size, Caches.entries(spark))
     assert(rdds == rdds0, s"persisted RDDs $rdds0 -> $rdds")
     assert(cached == cached0, s"cache entries $cached0 -> $cached")
+  }
+
+  test("spatial join: the salted branch's hot-cell sample is seeded, one hot set per input") {
+    val pts = SynthData.points(spark, dir)
+    val polys = SynthData.polygons(spark, dir)
+      .withColumn("geom", st_geomfromtext(col("wkt"))).select("poly_id", "geom")
+    def hotSet(): Set[Any] = SpatialJoin.pointsInPolygons(pts, polys, level = 10,
+        broadcastCover = false, hotThreshold = 100L)
+      .queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case i: InSet => i.hset })).flatten.toSet
+    val (a, b) = (hotSet(), hotSet())
+    assert(a.nonEmpty, "the sample found no hot cell")
+    assert(a == b, s"hot sets differ: ${(a -- b).size} and ${(b -- a).size} cells only in one")
+  }
+
+  test("kNN: repeated calls leave no persisted RDD, cache entry or RDD block") {
+    val sc = spark.sparkContext
+    val (qs, pts) = (SynthData.knnQueries(spark, dir), SynthData.points(spark, dir))
+    def held() = (sc.getPersistentRDDs.size, Caches.entries(spark), Blocks.rddBlocks(sc))
+    val before = held()
+    (0 until 10).foreach(_ => Knn.knn(qs, pts, k = 5, level = 7).collect())
+    assert(held() == before, "(persisted RDDs, cache entries, RDD blocks)")
+    val plan = Knn.knn(qs, pts, k = 5, level = 7).queryExecution.optimizedPlan
+    assert(plan.collect { case r: LogicalRDD => r; case r: InMemoryRelation => r }.isEmpty,
+      s"no checkpoint or cache in the returned plan:\n$plan")
+  }
+
+  test("kNN: a fixed number of jobs per call, 11 on q17's input") {
+    def jobs(qs: DataFrame, pts: DataFrame): Int =
+      Bus.jobsOf(spark.sparkContext)(Knn.knn(qs, pts, k = 5, level = 7).collect())
+    val q17 = jobs(SynthData.knnQueries(spark, dir), SynthData.points(spark, dir))
+    assert(q17 <= 11, s"q17's input ran $q17 jobs")
+    // two inputs that both send queries down both routes, one sparse and
+    // one clustered with a few outlying queries: the job count must not
+    // follow the density
+    val rnd = new scala.util.Random(5)
+    def cloud(n: Int, x0: Double, w: Double) =
+      Seq.fill(n)((x0 + rnd.nextDouble() * w, rnd.nextDouble() * w / 2 - w / 4))
+    def frame(xys: Seq[(Double, Double)], names: String*) =
+      xys.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }.toDF(names: _*)
+    val sparse = jobs(frame(cloud(50, -150, 300), "query_id", "qlon", "qlat"),
+      frame(cloud(500, -150, 300), "point_id", "lon", "lat"))
+    val clustered = jobs(frame(cloud(45, -60, 100) ++ cloud(5, 150, 20), "query_id", "qlon", "qlat"),
+      frame(cloud(5000, -60, 100), "point_id", "lon", "lat"))
+    assert(sparse == clustered, s"sparse input ran $sparse jobs, clustered $clustered")
   }
 
   test("pipeline probe side: bytes/caption pruned from the join scan") {
