@@ -22,25 +22,6 @@ object ParUtil {
     if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
   }
 
-  /** Free the executor blocks behind a (local)checkpoint'd DataFrame NOW.
-    *
-    * `Dataset.unpersist` consults only the SQL CacheManager, which never
-    * holds checkpointed plans — on a checkpointed frame it is a silent
-    * no-op (verified on Spark 4.1.2: blocks stay pinned until the GC +
-    * ContextCleaner eventually reach the underlying RDD). Iterative
-    * operators (kNN rounds, dedupGroups label propagation) need
-    * deterministic per-round release, so this walks the analyzed plan to
-    * the LogicalRDD and unpersists the RDD itself.
-    *
-    * CALL ONLY once nothing live still reads the frame: lineage is
-    * truncated, so the blocks are the only copy. No-op for plans without a
-    * LogicalRDD (e.g. a merely cached frame). */
-  def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** The local session every non-frozen main starts from: `cores` task
     * slots and as many shuffle partitions, AQE with skew-join splitting, no
     * UI, WARN logging, the graft functions registered, and the per-stage

@@ -34,9 +34,10 @@ object ScaleBench {
     try {
       def once(): (Double, Double) = {
         // clean slate per pass: clearCache drops CacheManager entries, and
-        // the explicit sweep drops (local)checkpoint blocks too — those
-        // live in the BlockManager only (dedupGroups' final labels), so
-        // clearCache alone would leak one per pass
+        // the explicit sweep drops persisted and (local)checkpointed RDDs
+        // too — those live in the BlockManager only (dedupGroups' final
+        // labels RDD, which its returned plan still reads), so clearCache
+        // alone would leak one per pass
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         val t0 = System.nanoTime()

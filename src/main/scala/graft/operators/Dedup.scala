@@ -1,14 +1,20 @@
 package graft.operators
 
 import graft.functions.GraftFunctions._
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Deduplication operators for training-data curation at 100 TB scale.
-  * Every variant is a pure DataFrame pipeline: exact dedup is one
-  * hash-groupBy shuffle; the near-dup variants bound candidate generation
-  * with LSH bucketing so the expensive pairwise verify only runs inside
-  * buckets (never all-pairs).
+  * Every pair-finding variant is a pure DataFrame pipeline: exact dedup is
+  * one hash-groupBy shuffle; the near-dup variants bound candidate
+  * generation with LSH bucketing so the expensive pairwise verify only runs
+  * inside buckets (never all-pairs). The iterative grouping stage,
+  * [[dedupGroups]], runs on RDD pair operators (see there why).
   */
 object Dedup {
 
@@ -47,114 +53,131 @@ object Dedup {
     * round first takes the min label over graph neighbors, then replaces
     * every label by its label's label (path halving), so convergence is
     * O(log diameter) rounds rather than O(diameter): an adversarial
-    * near-dup CHAIN of length 10^6 resolves in ~20 rounds, not 10^6. Each
-    * round is two skinny (id, lbl) shuffles OVER PAIRED NODES ONLY — the
-    * singleton majority of a real corpus never enters the loop and is
-    * attached at the end with one left join; per-round results are
-    * checkpoint-truncated (without truncation the plan tree doubles per
-    * round and the driver dies printing it) and the previous round's blocks
-    * are released immediately. Termination is the round's changed-label
-    * count — the same action that materializes the new labels.
+    * near-dup CHAIN of length 10^6 resolves in ~20 rounds, not 10^6. Only
+    * PAIRED nodes enter the loop — the singleton majority of a real corpus
+    * is attached at the end with one left join. The first neighbor-min
+    * round is fused into the seed, so clique-shaped groups (the common
+    * case) converge in one confirming round.
     *
-    * Durability: when the session has a checkpoint dir
-    * (`sc.setCheckpointDir`) rounds are truncated with a reliable
-    * `checkpoint()`, which survives executor loss on a real cluster, as
-    * GraphX and MLlib's iterative algorithms do; without one they use
-    * executor-local `localCheckpoint()`, which is correct and needs no
-    * checkpoint-dir I/O in local mode.
+    * Execution: the whole operator runs on `RDD[(Long, Long)]` pair
+    * operators over ONE shared `HashPartitioner` (the session's shuffle
+    * partition count). Every join is narrow: both sides are partitioned
+    * alike, so partition i of one is zipped with partition i of the other
+    * and the label-sized side is built into a `LongMap`; the corpus-sized
+    * node rows are only streamed (a cogroup-based version, which buffers
+    * every key of both sides, took twice as long on `ScaleBench dedup` at
+    * 4M ids). A round is three skinny shuffles (messages to neighbors, the
+    * pointer jump's request to the label's partition, the answer back) and
+    * ONE action: the changed-label count, which also materializes the
+    * round's labels. No round is a SQL plan, so no round generates code or
+    * pays adaptive execution's job per exchange; a dedup pass's generated
+    * classes then fit the session's codegen cache instead of being
+    * recompiled every pass. Every shuffled record's key and value is a
+    * primitive `Long`: Spark picks Kryo for a `partitionBy`/`reduceByKey`
+    * shuffle only when both classes qualify (a tuple value falls back to
+    * Java serialization, measured 28% slower on `ScaleBench dedup` at one
+    * core). Ids are read as `bigint`; a null id names no document and gets
+    * no row.
+    *
+    * The edge list is persisted once; each round's labels are
+    * checkpoint-truncated, or the lineage would grow by a round each time,
+    * and the previous round's blocks are freed at once. Durability: when
+    * the session has a checkpoint dir (`sc.setCheckpointDir`) rounds are
+    * truncated with a reliable `checkpoint()`, which survives executor
+    * loss on a real cluster, as GraphX and MLlib's iterative algorithms
+    * do; without one they use executor-local `localCheckpoint()`, which is
+    * correct and needs no checkpoint-dir I/O in local mode.
     *
     * Exactness: labels start at own id and only ever decrease via mins over
     * component members, so the fixpoint label of every node is exactly the
     * component minimum — no data assumptions, DuckDB-oracle-provable via a
     * recursive-CTE transitive closure (q51). */
   def dedupGroups(nodes: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
-    val reliable = nodes.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+    val spark = nodes.sparkSession
+    val reliable = spark.sparkContext.getCheckpointDir.isDefined
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    // marks `rdd` for truncation; the next action over it materializes it
+    def truncate(rdd: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      if (reliable) rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      else rdd.localCheckpoint()
+      rdd
+    }
+    // (id, 0L) per node row: the key set of the two semi-joins, and the
+    // rows that get the final labels
+    val nodeRows = nodes.select(col(idCol).cast("long")).queryExecution.toRdd
+      .flatMap(r => if (r.isNullAt(0)) Iterator.empty else Iterator((r.getLong(0), 0L)))
+      .partitionBy(part)
+    // Every join below zips two RDDs partitioned by `part` (partition i of
+    // one holds exactly the keys of partition i of the other) and builds a
+    // LongMap of the pair- or label-sized side.
+    // `rows` kept where their key is a node id (a semi-join)
+    def keepNodes(rows: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      rows.zipPartitions(nodeRows, preservesPartitioning = true) { (rs, ns) =>
+        val buf = rs.toArray
+        val isNode = mutable.LongMap.from(buf.iterator.map(r => (r._1, false)))
+        ns.foreach { case (id, _) => if (isNode.contains(id)) isNode(id) = true }
+        buf.iterator.filter(r => isNode(r._1))
+      }
+    // each row (k, v) whose key has a `table` value t becomes f(k, v, t);
+    // `table` holds one value per key
+    def lookup(rows: RDD[(Long, Long)], table: RDD[(Long, Long)], sameKey: Boolean)(
+        f: (Long, Long, Long) => (Long, Long)): RDD[(Long, Long)] =
+      rows.zipPartitions(table, preservesPartitioning = sameKey) { (rs, ts) =>
+        val m = mutable.LongMap.from(ts)
+        rs.collect { case (k, v) if m.contains(k) => f(k, v, m(k)) }
+      }
     // pairs referencing ids absent from `nodes` (stale/filtered pair
     // files) are dropped up front: otherwise a foreign id could win the
     // component minimum and be emitted as a rep_id that names no real
-    // document — two semi-joins, paid once before the loop
-    val nodeIds = nodes.select(col(idCol).as("nid"))
-    val edges0 = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-    // materialized ONCE (checkpoint-truncated): `pairs` is usually the
-    // lazy output of a whole near-dup pipeline (minhash signatures + band
-    // join for q51), and every loop round reads the edge list — without
-    // truncation each round would re-execute that entire upstream pipeline
-    val edges = truncate(edges0
-      .join(nodeIds.withColumnRenamed("nid", "src"), Seq("src"), "left_semi")
-      .join(nodeIds.withColumnRenamed("nid", "dst"), Seq("dst"), "left_semi"))
-    // iterate ONLY over nodes that appear in a pair: in a dedup corpus the
-    // overwhelming majority of documents are singletons, and carrying them
-    // through every propagation round would multiply each round's shuffle
-    // by corpus size for rows whose label can never change. Singletons are
-    // attached after the fixpoint with one left join (rep = self).
-    // The FIRST neighbor-min round is fused into the seed: with identity
-    // labels it is simply min(neighbors ∪ self) — one agg over the edge
-    // list, no join — so clique-shaped dup groups (the common case)
-    // converge in a single confirming loop iteration.
-    // the paired-node count rides the seed materialization as an observed
-    // metric (r6) — the previous isEmpty probe was a separate job/barrier
-    val seedObs = org.apache.spark.sql.Observation(
-      s"cc-seed-${java.util.UUID.randomUUID}")
-    var labels = truncate(
-      edges.select(col("src").as("id"), col("dst").as("lbl"))
-        .union(edges.select(col("src").as("id"), col("src").as("lbl")))
-        .groupBy("id").agg(min("lbl").as("lbl"))
-        .observe(seedObs, count(lit(1)).as("n")))
-    var changed = seedObs.get.get("n") match {
-      case Some(v: java.lang.Number) if v.longValue > 0 => 1L
-      case _ => 0L
-    }
+    // document. Both directions keyed by src, kept if src is a node, then
+    // re-keyed by dst and kept if dst is a node: the edge set is symmetric,
+    // so the survivors keyed by dst are exactly the valid edges keyed by src.
+    // Persisted once: `pairs` is usually the lazy output of a whole
+    // near-dup pipeline (minhash signatures + band join for q51), and every
+    // round reads the edge list.
+    val edges = keepNodes(keepNodes(
+        pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+          .queryExecution.toRdd
+          .flatMap { r =>
+            if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+            else { val (a, b) = (r.getLong(0), r.getLong(1)); Iterator((a, b), (b, a)) }
+          }
+          .partitionBy(part))
+        .map(_.swap).partitionBy(part))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // seed = the first neighbor-min round: min(neighbors ∪ self), a narrow
+    // aggregate over the src-partitioned edges; its count (the paired-node
+    // count) is the action that materializes the edges and the seed
+    var labels = truncate(edges.reduceByKey(part, math.min(_, _))
+      .mapPartitions(_.map { case (id, l) => (id, math.min(id, l)) }, preservesPartitioning = true))
+    var changed = labels.count()
     while (changed > 0) {
-      // neighbor min: lbl'(v) = min(lbl(v), min over u~v of lbl(u)).
-      // The node's OWN previous label rides along as `prev` (non-null only
-      // on the self row, exactly one per id), so the termination check
-      // below is a scan of the just-materialized blocks — NOT the extra
-      // per-round shuffle join with the previous labels it used to be
-      // (profiled: that join plus its AQE staging was pure driver-serial
-      // latency, the dominant scaling-efficiency cost of the loop)
-      // persisted (r6): the pointer jump below SELF-JOINS this frame, and
-      // without the cache the whole neighbor-min subtree — the edges join,
-      // the union, the aggregation — was planned and executed twice per
-      // round (stage profile at 12M: two identical 16-task join+agg stages
-      // every round). The cache fills inside the round's single checkpoint
-      // action and is dropped as soon as the round's labels materialize.
-      val nbrMin = edges.join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("lbl"), lit(null).cast("long").as("prev"))
-        .union(labels.select(col("id"), col("lbl"), col("lbl").as("prev")))
-        .groupBy("id").agg(min("lbl").as("lbl"), max("prev").as("prev"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // pointer jump: lbl''(v) = lbl'(lbl'(v)) — labels are node ids, so
-      // the inner join always matches
-      val jumped = nbrMin
-        .join(nbrMin.select(col("id").as("jid"), col("lbl").as("jlbl")),
-          col("lbl") === col("jid"))
-        .select(col("id"), least(col("lbl"), col("jlbl")).as("lbl"), col("prev"))
-      // the changed-label count rides the checkpoint job as an observed
-      // metric (r6) instead of a second action over the materialized
-      // blocks: one driver round-trip per propagation round instead of two
-      // — per-round serial latency is the dominant scaling-efficiency cost
-      // of the loop (BENCH/BASELINE.md round-5 table). Every node has a
-      // self row, so `prev` is never null and the sum counts exactly the
-      // rows the old count() action did.
-      val obs = org.apache.spark.sql.Observation(
-        s"cc-changed-${java.util.UUID.randomUUID}")
-      val next = truncate(jumped.observe(obs,
-        sum(when(col("lbl") =!= col("prev"), 1L).otherwise(0L)).as("changed")))
-      changed = obs.get.get("changed") match {
-        case Some(v: java.lang.Number) => v.longValue
-        case _ => 0L // empty frame: the sum is null
-      }
+      // neighbor min: lbl'(v) = min(lbl(v), min over u~v of lbl(u));
+      // persisted because the pointer jump reads it three times
+      val nbrMin = lookup(edges, labels, sameKey = false)((_, dst, l) => (dst, l))
+        .union(labels).reduceByKey(part, math.min(_, _))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // pointer jump: lbl''(v) = min(lbl'(v), lbl'(lbl'(v))). Each node
+      // asks its label's partition for the label's label (labels are node
+      // ids, so every request is answered), and the answer goes back to the
+      // node's partition to meet its own label.
+      val answers = lookup(nbrMin.map(_.swap).partitionBy(part), nbrMin, sameKey = false)(
+        (_, id, jl) => (id, jl))
+      val next = truncate(lookup(answers.partitionBy(part), nbrMin, sameKey = true)(
+        (id, jl, l) => (id, math.min(jl, l))))
+      changed = lookup(next, labels, sameKey = false)((_, n, o) => (n, o))
+        .filter(r => r._1 != r._2).count()
       nbrMin.unpersist(false) // next is materialized; the round cache is dead
-      graft.ParUtil.freeCheckpoint(labels) // Dataset.unpersist is a no-op here
+      labels.unpersist(false)
       labels = next
     }
-    graft.ParUtil.freeCheckpoint(edges) // final select reads only labels + nodes
-    nodes.select(col(idCol))
-      .join(labels.select(col("id").as(idCol), col("lbl")), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("lbl"), col(idCol)).as("rep_id"))
+    edges.unpersist(false) // the final join reads only labels + nodes
+    // singletons (no label) represent themselves
+    val groups = nodeRows.zipPartitions(labels) { (ns, ls) =>
+      val m = mutable.LongMap.from(ls)
+      ns.map { case (id, _) => (id, m.getOrElse(id, id)) }
+    }
+    spark.createDataFrame(groups).toDF(idCol, "rep_id")
   }
 
   /** MinHash+LSH near-duplicate candidate pairs above a Jaccard estimate
@@ -200,7 +223,7 @@ object Dedup {
     // plans (see jaccardPairsDict docstring).
     val sigs = widen(df.where(col(textCol).rlike("\\S")))
       .select(col(idCol).as("id"), minhash(col(textCol), numHashes, shingleW).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val withBands = sigs
       .select(col("id"), col("sig"),
         posexplode(expr(s"slice(lsh_bands(sig, $nBands), 1, $probeBands)"))
@@ -230,7 +253,7 @@ object Dedup {
     // both-sides-of-the-self-join reason as minhashPairs (r6)
     val sigs0 = widen(df.where(col(textCol).rlike("\\S")))
       .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val sigs = sigs0
       .withColumn("band_idx", explode(sequence(lit(0), lit(3))))
       .withColumn("bucket", expr("(sig >> (band_idx * 15)) & 32767"))
@@ -304,9 +327,12 @@ object Dedup {
     // once for the probe and again for whichever plan wins (measured as a
     // duplicated q27 stage in round 6). Same CacheManager lifecycle contract
     // as the plans themselves (see jaccardPairsDict docstring).
-    val toks = toks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = toks0.persist(StorageLevel.MEMORY_AND_DISK)
+    // unordered: the route depends only on the count, and jaccardPairsDict
+    // sorts the vocabulary itself (a sort here cost a range exchange, its
+    // sampling job and the sort's generated classes)
     val vocab = toks.select(explode(col("toks")).as("tok")).distinct()
-      .orderBy("tok").as(org.apache.spark.sql.Encoders.scalaLong).take(65)
+      .as(org.apache.spark.sql.Encoders.scalaLong).take(65)
     if (vocab.length <= 64) jaccardPairsDict(toks, vocab, threshold)
     else jaccardPairsPrefix(toks, threshold)
   }
@@ -368,7 +394,7 @@ object Dedup {
         (acc, t) => acc.bitwiseOR(
           call_function("shiftleft", lit(1L), element_at(vmap, t)))))
       .select("id", "mask")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // persisted (r6): the distinct-mask frame feeds BOTH sides of the
     // blocked self-join below, and without the cache the distinct
     // aggregation over the corpus-sized mask cache was planned and executed
@@ -376,7 +402,7 @@ object Dedup {
     // full-corpus aggregation pass. Same CacheManager lifecycle contract
     // as `withMask` (docstring above).
     val masks = withMask.select("mask").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // same-mask pairs: J = 1.0 by construction (row-level self-join — no
     // per-group array materialization)
@@ -473,8 +499,8 @@ object Dedup {
     // until the caller clears it; see that docstring). Skipped when the
     // caller (adaptiveJaccard) already persisted it.
     val toks =
-      if (toks0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        toks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (toks0.storageLevel == StorageLevel.NONE)
+        toks0.persist(StorageLevel.MEMORY_AND_DISK)
       else toks0
     // the prefix frame has two consumers — both sides of the candidate
     // self-join: ReuseExchange does NOT deduplicate the two sides here (the
@@ -483,7 +509,7 @@ object Dedup {
     // under a BroadcastExchange), so persist it; same CacheManager
     // lifecycle contract as `toks`
     val prefix = prefixIndex(toks, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
           lit(threshold) * greatest(col("a.sz"), col("b.sz")) <=

@@ -3,6 +3,8 @@ package graft
 import graft.core.{RayCast, WktParser}
 import graft.functions.GraftFunctions._
 import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
+import org.apache.spark.grafttest.{Bus, Codegen}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Operator-level correctness: spatial join vs an O(n*m) brute-force oracle
@@ -389,6 +391,18 @@ class OperatorsSpec extends SparkTestBase {
       b == math.ceil(math.sqrt(4.0 * spark.sparkContext.defaultParallelism)).toInt)
   }
 
+  /** 400 nodes: a random sparse graph on 0-199, a 140-node CHAIN on
+    * 200-339 (pointer jumping's worst case: diameter >> 1, must converge in
+    * O(log d) rounds) and isolated nodes above. */
+  private lazy val ccEdges: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(21)
+    val randomEdges = (0 until 150).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+      .filter { case (a, b) => a != b }
+    randomEdges ++ (200 until 339).map(i => (i.toLong, (i + 1).toLong)) // 140-node path
+  }
+  private def ccNodes = (0 until 400).map(_.toLong).toDF("doc_id")
+  private def ccPairs = ccEdges.toDF("id_a", "id_b")
+
   test("dedupGroups == naive union-find (random graph, chain, singletons)") {
     def naiveCC(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = Array.tabulate(n)(identity)
@@ -399,16 +413,7 @@ class OperatorsSpec extends SparkTestBase {
       }
       (0 until n).map(i => i.toLong -> find(i).toLong).toMap
     }
-    val rnd = new scala.util.Random(21)
-    // random sparse graph + a long CHAIN (pointer jumping's worst case:
-    // diameter >> 1, must converge in O(log d) rounds) + isolated nodes
-    val n = 400
-    val randomEdges = (0 until 150).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
-      .filter { case (a, b) => a != b }
-    val chain = (200 until 339).map(i => (i.toLong, (i + 1).toLong)) // 140-node path
-    val edges = randomEdges ++ chain
-    val nodes = (0 until n).map(_.toLong).toDF("doc_id")
-    val pairs = edges.toDF("id_a", "id_b")
+    val (n, edges, nodes, pairs) = (400, ccEdges, ccNodes, ccPairs)
     val got = Dedup.dedupGroups(nodes, pairs, "doc_id")
       .as[(Long, Long)].collect().toMap
     val want = naiveCC(n, edges)
@@ -422,9 +427,8 @@ class OperatorsSpec extends SparkTestBase {
       .as[(Long, Long)].collect().toMap
     assert(dirty == Map(5L -> 5L, 6L -> 5L),
       s"foreign-id pairs must be dropped, got $dirty")
-    // EMPTY pair set (clean corpus): every node is its own representative.
-    // Also pins the r6 observed-metric seed path on a zero-row aggregate —
-    // a metrics-never-delivered regression would hang here, not just fail.
+    // EMPTY pair set (clean corpus): every node is its own representative,
+    // and the loop must not start on an empty seed
     val clean = Dedup.dedupGroups(Seq(1L, 2L, 3L).toDF("doc_id"),
         Seq.empty[(Long, Long)].toDF("id_a", "id_b"), "doc_id")
       .as[(Long, Long)].collect().toMap
@@ -443,6 +447,23 @@ class OperatorsSpec extends SparkTestBase {
       .filter(f => java.nio.file.Files.isRegularFile(f)).count()
     assert(files > 0, s"no checkpoint files under $dir")
     assert(reliable == local && local(4L) == 1L && local(21L) == 20L && local(59L) == 59L)
+  }
+
+  test("dedupGroups runs one job per round and compiles no code when warm") {
+    val sc = spark.sparkContext
+    def groups(nodes: DataFrame, pairs: DataFrame) =
+      Dedup.dedupGroups(nodes, pairs, "doc_id").as[(Long, Long)].collect().toMap
+    // the seed, one job per round (8 on the 400-node graph) and the collect
+    val jobs = Bus.jobsOf(sc)(groups(ccNodes, ccPairs))
+    assert(jobs <= 10, s"dedupGroups ran $jobs jobs")
+    // a different graph converging in a different number of rounds: with
+    // the input and output plans warm, the rounds generate no code
+    val (cliqueNodes, cliquePairs) = ((0L until 50L).toDF("doc_id"),
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)).toDF("id_a", "id_b"))
+    var clique = Map.empty[Long, Long]
+    val compiled = Codegen.compiled { clique = groups(cliqueNodes, cliquePairs) }
+    assert(compiled == 0, s"a warm dedupGroups call compiled $compiled classes")
+    assert(clique(3L) == 1L && clique(11L) == 10L && clique(49L) == 49L)
   }
 
   test("decontamination flags exactly the docs sharing a word 13-gram with the eval set") {
