@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   *    (10% of ids in 4-node chains, the realistic dup-group shape) — the
   *    operator a 100 TB curation run iterates in;
   *  - `ivf`: [[graft.operators.Ann.ivfTopK]] (index build + exact search,
-  *    1000 queries) over synthesized 32-dim embeddings.
+  *    1000 queries) over synthesized 32-dim embeddings;
+  *  - `ngram`: [[graft.operators.Dedup.ngramJaccardPairs]] (n = 16,
+  *    t = 0.8, q52's call) over `<sfDir>/documents.parquet` as it is;
+  *    `rows` is ignored and the document count is reported.
   *
   * Usage: ScaleBench <sfDir> <workDir> [rows] [N] [job]
   */
@@ -71,6 +74,7 @@ object ScaleBench {
 
     // ---- prepare once (32 cores), job-specific input ----
     val prep = ParUtil.localSession("graft-scale-32", 32)
+    var docRows = 0L
     try job match {
       case "pipeline" =>
         // the count file is written LAST: a crashed prepare (e.g. ENOSPC)
@@ -117,7 +121,9 @@ object ScaleBench {
             .repartition(32).write.mode("overwrite").parquet(s"$work/vecs")
           new java.io.File(s"$work/_READY-ivf-$rows").createNewFile()
         }
-      case other => sys.error(s"unknown job '$other' (pipeline|dedup|ivf)")
+      case "ngram" =>
+        docRows = prep.read.parquet(s"$sfDir/documents.parquet").count()
+      case other => sys.error(s"unknown job '$other' (pipeline|dedup|ivf|ngram)")
     } finally prep.stop()
 
     // ---- the measured job ----
@@ -133,6 +139,10 @@ object ScaleBench {
         val vecs = spark.read.parquet(s"$work/vecs")
         val queries = vecs.where(pmod(col("vec_id"), lit(math.max(1L, rows / 1000))) === 0)
         Bench.force(graft.operators.Ann.ivfTopK(vecs, queries, k = 10))
+      case "ngram" =>
+        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        Bench.force(graft.operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+          n = 16, threshold = 0.8))
     }
 
     // throughput must reflect the data ACTUALLY on disk: a pipeline workDir
@@ -145,6 +155,7 @@ object ScaleBench {
         if (java.nio.file.Files.exists(f))
           java.nio.file.Files.readString(f).trim.toLong
         else rows
+      case "ngram" => docRows
       case _ => rows // per-job-and-size _READY marker guarantees the match
     }
     val (bestN, rpsN) = timed(nCores, effRows)(run)

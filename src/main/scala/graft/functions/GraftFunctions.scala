@@ -59,7 +59,6 @@ object GraftFunctions {
     "vec_norm2" -> arity(1, a => vecexprs.VecNorm2(a(0))),
     "vec_lsh_bucket" -> arity(2, a => vecexprs.VecLshBucket(a(0), a(1))),
     "sig_agree" -> arity(2, a => vecexprs.SigAgree(a(0), a(1))),
-    "sorted_inter_count" -> arity(2, a => vecexprs.SortedInterCount(a(0), a(1))),
     "minhash" -> arity(3, a => textexprs.MinHash(a(0), a(1), a(2))),
     "lsh_bands" -> arity(2, a => textexprs.LshBands(a(0), a(1))),
     "simhash" -> arity(1, a => textexprs.SimHash(a(0))),
@@ -161,8 +160,6 @@ object GraftFunctions {
   def vec_lsh_bucket(v: Column, nBits: Int): Column =
     call_function("vec_lsh_bucket", v, lit(nBits))
   def sig_agree(a: Column, b: Column): Column = call_function("sig_agree", a, b)
-  def sorted_inter_count(a: Column, b: Column): Column =
-    call_function("sorted_inter_count", a, b)
   def minhash(text: Column, n: Int, shingleWidth: Int = 3): Column =
     call_function("minhash", text, lit(n), lit(shingleWidth))
   def lsh_bands(sig: Column, bands: Int): Column = call_function("lsh_bands", sig, lit(bands))

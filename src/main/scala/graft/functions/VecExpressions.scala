@@ -88,56 +88,6 @@ object vecexprs {
     override def prettyName: String = "sig_agree"
   }
 
-  /** Intersection size of two SORTED ascending long arrays (allocation-free
-    * two-pointer merge) — the per-candidate-pair verify kernel of the
-    * word-set and n-gram Jaccard joins, which both carry token sets as
-    * hashed longs. `array_intersect` builds a hash set per CALL;
-    * on a near-all-pairs candidate set (template corpora defeat prefix
-    * filtering) that allocation dominated the stage. Inputs must be sorted
-    * and duplicate-free (array_sort(array_distinct(...)) upstream) — with
-    * duplicates the count is undefined, so this stays an internal kernel
-    * with its contract enforced by the caller. */
-  case class SortedInterCount(left: Expression, right: Expression)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
-    override def dataType: DataType = IntegerType
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val na = x.numElements(); val nb = y.numElements()
-      var i = 0; var j = 0; var c = 0
-      while (i < na && j < nb) {
-        val xv = x.getLong(i); val yv = y.getLong(j)
-        if (xv == yv) { c += 1; i += 1; j += 1 }
-        else if (xv < yv) i += 1
-        else j += 1
-      }
-      c
-    }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-        val i = ctx.freshName("i"); val j = ctx.freshName("j")
-        val c = ctx.freshName("c")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
-           |final int $na = $a.numElements();
-           |final int $nb = $b.numElements();
-           |int $i = 0, $j = 0, $c = 0;
-           |while ($i < $na && $j < $nb) {
-           |  final long $xv = $a.getLong($i);
-           |  final long $yv = $b.getLong($j);
-           |  if ($xv == $yv) { $c++; $i++; $j++; }
-           |  else if ($xv < $yv) { $i++; } else { $j++; }
-           |}
-           |${ev.value} = $c;
-         """.stripMargin
-      })
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedInterCount =
-      copy(left = l, right = r)
-    override def prettyName: String = "sorted_inter_count"
-  }
-
   /** Deterministic sparse-hyperplane weight for LSH plane `p`, component
     * `j`: splitmix64 of a (p, j) key reduced to {-1, 0, 1}. Shared by the
     * interpreted and generated paths so they are bit-identical. */

@@ -1,20 +1,25 @@
 package graft.operators
 
+import graft.core.SortedLongs
 import graft.functions.GraftFunctions._
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
 /** Deduplication operators for training-data curation at 100 TB scale.
-  * Every pair-finding variant is a pure DataFrame pipeline: exact dedup is
-  * one hash-groupBy shuffle; the near-dup variants bound candidate
-  * generation with LSH bucketing so the expensive pairwise verify only runs
-  * inside buckets (never all-pairs). The iterative grouping stage,
-  * [[dedupGroups]], runs on RDD pair operators (see there why).
+  * Exact dedup is one hash-groupBy shuffle; the LSH variants
+  * ([[minhashPairs]], [[simhashPairs]]) and the small-vocabulary Jaccard
+  * plan ([[jaccardPairsDict]]) are DataFrame pipelines that bound candidate
+  * generation by bucketing, so the pairwise verify only runs inside buckets
+  * (never all-pairs). The exact Jaccard prefix join ([[jaccardPairsPrefix]])
+  * and the iterative grouping stage ([[dedupGroups]]) run on RDD pair
+  * operators over one `HashPartitioner`: one job each instead of one
+  * adaptive-execution job per exchange, and no generated code (see there).
   */
 object Dedup {
 
@@ -279,7 +284,9 @@ object Dedup {
     *  - otherwise: [[jaccardPairsPrefix]] — PPJoin-style prefix filter.
     *
     * Tokens are carried as 64-bit `xxhash64` values (see [[tokenSets]]),
-    * the same sorted-long representation as [[ngramJaccardPairs]]. */
+    * the same sorted-long representation as [[ngramJaccardPairs]]. The
+    * tokenize frame is cached before the probe (see [[jaccardPairsDict]]
+    * for the lifecycle), so the probe and the chosen plan read it once. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, minTokenLen: Int = 0): DataFrame =
     adaptiveJaccard(tokenSets(df, idCol, textCol, minTokenLen), threshold)
@@ -303,7 +310,9 @@ object Dedup {
     * Jaccard except under a 60-bit collision (p < 1e-9 per corpus), and
     * both engines hash identically so the comparison can never drift.
     * Goes straight to the PPJoin prefix plan (an n-gram vocabulary is
-    * never <= 64). For web-scale fuzzy matching use [[minhashPairs]]
+    * never <= 64), with no probe and no cache: the gram pass runs once,
+    * inside the prefix plan's one job. A null text has no gram set and
+    * pairs with nothing. For web-scale fuzzy matching use [[minhashPairs]]
     * (LSH-bounded candidates); exact n-gram Jaccard is the verifier tier. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 12, threshold: Double = 0.8): DataFrame = {
@@ -314,7 +323,6 @@ object Dedup {
     // a string-parse per gram)
     val grams = widen(df).select(col(idCol).as("id"),
         ngram_hash_set(col(textCol), n).as("toks"))
-      .withColumn("sz", size(col("toks")))
     jaccardPairsPrefix(grams, threshold)
   }
 
@@ -344,8 +352,8 @@ object Dedup {
     * Jaccard over the words except under a 64-bit collision, and the
     * sorted-long contract is the one [[jaccardPairsPrefix]]'s merge verify
     * and [[jaccardPairsDict]]'s mask encoding read. */
-  private def tokenSets(df: DataFrame, idCol: String, textCol: String,
-                        minTokenLen: Int): DataFrame =
+  private[graft] def tokenSets(df: DataFrame, idCol: String, textCol: String,
+                               minTokenLen: Int): DataFrame =
     widen(df).select(col(idCol).as("id"),
         array_sort(array_distinct(transform(
           filter(split(col(textCol), " "), t => length(t) >= minTokenLen),
@@ -378,7 +386,9 @@ object Dedup {
     * unaffected; a long-lived session issuing MANY dedup calls must
     * materialize each result (write / localCheckpoint(eager = true)) and
     * then `spark.catalog.clearCache()` between calls. Same contract for
-    * the prefix plan's token cache and [[graft.operators.Ann.ivfTopK]]. */
+    * [[jaccardPairs]]' tokenize cache (taken before the route probe, on
+    * both routes) and [[graft.operators.Ann.ivfTopK]]; the prefix plan
+    * itself caches nothing. */
   def jaccardPairsDict(toks: DataFrame, vocab: Array[Long],
                        threshold: Double): DataFrame = {
     val spark = toks.sparkSession
@@ -481,70 +491,346 @@ object Dedup {
     *      overlap <= (ceil(c*sa) - 1) + (ceil(c*sb) - 1) < c*(sa+sb)
     *      with c = t/(1+t) — but J >= t forces overlap >= c*(sa+sb).
     *      Contradiction, so every qualifying pair collides on a prefix
-    *      token. Hub tokens never enter the index, so the self-join
+    *      token. Hub tokens never enter the index, so the candidate
     *      fan-out is bounded by rare-token df, not corpus size;
     *   3. candidates are size-filtered (t * max(sa, sb) <= min(sa, sb) is
-    *      necessary for J >= t) and verified EXACTLY on the full token
-    *      sets with the allocation-free two-pointer merge
-    *      [[graft.functions.vecexprs.SortedInterCount]] — no approximation
-    *      anywhere.
+    *      necessary for J >= t) and position-filtered (PPJoin, Xiao et al.
+    *      WWW'08: a pair is dropped under a token whose positions bound
+    *      the overlap below t if that token were the pair's first common
+    *      one — see [[CandidatePairs]] why that loses no pair), then
+    *      verified EXACTLY on the full token sets with the
+    *      allocation-free two-pointer merge
+    *      [[graft.core.SortedLongs.interCount]]: a pair is kept when
+    *      inter / (sa + sb - inter) >= t as a double compare, with
+    *      id_a < id_b — no approximation anywhere.
     *
-    * Contract: `toks` holds (id, toks, sz) with `toks` a SORTED,
+    * Execution: one lazy pipeline of RDD pair operators over ONE
+    * `HashPartitioner` (the session's shuffle partition count), the model
+    * of [[dedupGroups]], so a call costs the caller's action ONE Spark job,
+    * generates no code between its input and output plans and caches
+    * nothing:
+    *   1. (tok, id) rows are shuffled by token and sorted within each
+    *      partition, so a token's posting list is one run and its length
+    *      is the token's exact document frequency — no frequency
+    *      aggregate and no frequency join;
+    *   2. one shuffle by id gives each document its (tok, df) entries:
+    *      its sorted full set, and its prefix in (df, tok) order;
+    *   3. one shuffle of prefix entries by token emits each posting list's
+    *      filtered pairs (smaller id, larger id), deduplicated map-side in
+    *      a bounded primitive open-addressing set;
+    *   4. one shuffle by the smaller id deduplicates its pairs and attaches
+    *      its set, and one shuffle by the larger id verifies against that
+    *      id's set.
+    * The by-id output of step 2 is read three times (steps 3, 4 and 4
+    * again) rather than cached. Token-keyed stages hold one posting list
+    * at a time (the shuffle's sorter spills). The by-id stages stream the
+    * documents in id order, one at a time: the verify merges them with the
+    * id-sorted payloads, and the pair dedup holds only its partition's
+    * candidate pairs, in a `LongMap` (8 bytes a pair: the candidate-sized
+    * side, as in [[dedupGroups]]' joins). Every shuffled key is a `Long`
+    * and every value a `Long` or an `Array[Long]`, so Spark picks Kryo for
+    * every shuffle (see [[dedupGroups]]), and per-row code works on
+    * primitive arrays. The result comes back through `createDataFrame`.
+    * Under adaptive execution, an input plan with an exchange of its own
+    * (a `widen` repartition, say) runs that exchange as a separate job
+    * when the call builds its input RDD; a scan or a cached frame does
+    * not.
+    *
+    * Contract: `toks` holds (id, toks) with an integral `id` (the output
+    * ids keep its type; any other type is refused) and `toks` a SORTED,
     * duplicate-free `array<bigint>` — [[tokenSets]] and `ngram_hash_set`
-    * both produce it. */
-  def jaccardPairsPrefix(toks0: DataFrame, threshold: Double): DataFrame = {
-    // the tokenize/gram subtree feeds THREE consumers (the inverted index
-    // and both sides of the verify join) — persist it once, same lifecycle
-    // contract as jaccardPairsDict's mask cache (held by the CacheManager
-    // until the caller clears it; see that docstring). Skipped when the
-    // caller (adaptiveJaccard) already persisted it.
-    val toks =
-      if (toks0.storageLevel == StorageLevel.NONE)
-        toks0.persist(StorageLevel.MEMORY_AND_DISK)
-      else toks0
-    // the prefix frame has two consumers — both sides of the candidate
-    // self-join: ReuseExchange does NOT deduplicate the two sides here (the
-    // r6 q52/q27 before-plans show the whole inverted-index subtree — df
-    // aggregate, df join, per-doc sort, prefix explode — planned twice, once
-    // under a BroadcastExchange), so persist it; same CacheManager
-    // lifecycle contract as `toks`
-    val prefix = prefixIndex(toks, threshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-          lit(threshold) * greatest(col("a.sz"), col("b.sz")) <=
-            least(col("a.sz"), col("b.sz")).cast("double"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // exact verify on the full token sets
-    val full = toks.select(col("id"), col("toks"), col("sz"))
-    cand
-      .join(full.select(col("id").as("id_a"), col("toks").as("toks_a"), col("sz").as("sz_a")), "id_a")
-      .join(full.select(col("id").as("id_b"), col("toks").as("toks_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("inter", sorted_inter_count(col("toks_a"), col("toks_b")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    * both produce it; other columns are ignored. A null id or a null set
+    * names no document, and an empty set pairs with nothing (J of two
+    * empty sets is 0/0). */
+  def jaccardPairsPrefix(toks: DataFrame, threshold: Double): DataFrame = {
+    val spark = toks.sparkSession
+    val idType = toks.schema("id").dataType
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
+      s"jaccardPairsPrefix needs an integral id column, got ${idType.simpleString}")
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val c = threshold / (1.0 + threshold)
+    // 1-2. (tok, id) by token: a run is one posting list, its length the
+    // token's df; then (id, [tok, df, ...]) by id, one run per document
+    val byId = toks.select(col("id").cast("long"), col("toks")).queryExecution.toRdd
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else {
+          val id = r.getLong(0)
+          val ts = r.getArray(1).toLongArray()
+          Iterator.tabulate(ts.length)(i => (ts(i), id))
+        }
+      }
+      .repartitionAndSortWithinPartitions(part)
+      .mapPartitions { it =>
+        // a document's [tok, df, tok, df, ...] entries leave in one record
+        // per batch, so the by-id shuffle moves about one record per
+        // document and task, not one per token; a batch holds at most
+        // `batchEntries` entries, never the whole partition
+        val ids = new LongBuf
+        val batch = mutable.LongMap.empty[LongBuf]
+        var held = 0
+        def flush(): Iterator[(Long, Array[Long])] = {
+          val out = batch.toArray.map { case (id, b) => (id, java.util.Arrays.copyOf(b.array, b.size)) }
+          batch.clear(); held = 0
+          out.iterator
+        }
+        runs(it).flatMap { case (tok, vs) =>
+          ids.clear(); vs.foreach(ids += _)
+          val df = ids.size.toLong
+          var i = 0
+          while (i < ids.size) {
+            val b = batch.getOrElseUpdate(ids(i), new LongBuf)
+            b += tok; b += df
+            i += 1
+          }
+          held += ids.size
+          if (held >= batchEntries) flush() else Iterator.empty
+        } ++ flush()
+      }
+      .repartitionAndSortWithinPartitions(part)
+    // every document's full sorted set, in id order
+    val docs = byId.mapPartitions({ it =>
+      val buf = new LongBuf
+      runs(it).map { case (id, vs) =>
+        buf.clear()
+        vs.foreach { e => var k = 0; while (k < e.length) { buf += e(k); k += 2 } }
+        val set = java.util.Arrays.copyOf(buf.array, buf.size)
+        java.util.Arrays.sort(set)
+        (id, set)
+      }
+    }, preservesPartitioning = true)
+    // 3. prefix entries (tok, [id, sz << 32 | position]) by token ->
+    // candidate pairs
+    val cands = byId.mapPartitions { it =>
+      val toks = new LongBuf
+      val dfs = new LongBuf
+      runs(it).flatMap { case (id, vs) =>
+        toks.clear(); dfs.clear()
+        vs.foreach { e => var k = 0; while (k < e.length) { toks += e(k); dfs += e(k + 1); k += 2 } }
+        val sz = toks.size
+        val set = java.util.Arrays.copyOf(toks.array, sz)
+        java.util.Arrays.sort(set)
+        // (df asc, tok asc) as one long: df (saturated at 2^32 - 1, still
+        // one global total order) above the token's index in the sorted set
+        val order = new Array[Long](sz)
+        var i = 0
+        while (i < sz) {
+          order(i) = (math.min(dfs(i), 0xFFFFFFFFL) << 31) |
+            java.util.Arrays.binarySearch(set, toks(i))
+          i += 1
+        }
+        java.util.Arrays.sort(order)
+        // FP-safe overlap bound: subtract an epsilon before ceil so a
+        // rounding artifact that lands c*sz infinitesimally ABOVE an exact
+        // integer cannot shorten the prefix by one (longer prefix = extra
+        // candidates only; the exact verify removes them)
+        val plen = math.min(sz, sz - math.ceil(c * sz - 1e-9).toInt + 1)
+        // each entry carries the token's position k in the doc's global
+        // order, for the positional filter of step 3
+        Iterator.tabulate(plen)(k =>
+          (set((order(k) & 0x7FFFFFFFL).toInt), Array(id, (sz.toLong << 32) | k)))
+      }
+    }
+      .repartitionAndSortWithinPartitions(part)
+      .mapPartitions(it => new CandidatePairs(runs(it), threshold))
+    // 4. by the smaller id: its partners are held in a LongMap (the
+    // candidate-sized side, as in dedupGroups' narrow joins) while the
+    // documents stream past; each distinct partner is sent the id's set
+    // (with the id appended) to the larger id's partition
+    val withSetA = cands.partitionBy(part)
+      .zipPartitions(docs) { (cs, ds) =>
+        val partners = mutable.LongMap.empty[LongBuf]
+        cs.foreach { case (a, b) => partners.getOrElseUpdate(a, new LongBuf) += b }
+        ds.flatMap { case (a, set) =>
+          partners.get(a) match {
+            case None => Iterator.empty
+            case Some(bs) =>
+              java.util.Arrays.sort(bs.array, 0, bs.size)
+              val payload = java.util.Arrays.copyOf(set, set.length + 1)
+              payload(set.length) = a
+              Iterator.range(0, bs.size)
+                .filter(k => k == 0 || bs(k) != bs(k - 1))
+                .map(k => (bs(k), payload))
+          }
+        }
+      }
+    // ... and verified there against the larger id's set
+    val pairs = withSetA.repartitionAndSortWithinPartitions(part)
+      .zipPartitions(docs) { (ps, ds) =>
+        val doc = ds.buffered
+        ps.flatMap { case (b, setA) =>
+          while (doc.head._1 < b) doc.next()
+          val setB = doc.head._2
+          val na = setA.length - 1
+          val inter = SortedLongs.interCount(setA, na, setB, setB.length)
+          val jaccard = inter.toDouble / (na + setB.length - inter).toDouble
+          if (jaccard >= threshold) Iterator.single((setA(na), b, jaccard)) else Iterator.empty
+        }
+      }
+    val out = spark.createDataFrame(pairs).toDF("id_a", "id_b", "jaccard")
+    if (idType == LongType) out
+    else out.select(col("id_a").cast(idType), col("id_b").cast(idType), col("jaccard"))
   }
 
-  /** The per-doc prefix inverted index of [[jaccardPairsPrefix]] steps 1-2
-    * (one row per (id, indexed prefix token), with the doc size). */
-  private def prefixIndex(toks: DataFrame, threshold: Double): DataFrame = {
-    val c = threshold / (1.0 + threshold)
-    val inv = toks.select(col("id"), explode(col("toks")).as("tok"))
-    val dfreq = inv.groupBy("tok").agg(count(lit(1)).as("df"))
-    // per-doc prefix in global (df, tok) order
-    inv.join(dfreq, "tok")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("sorted"))
-      .withColumn("sz", size(col("sorted")))
-      // FP-safe overlap bound: subtract an epsilon before ceil so a
-      // rounding artifact that lands c*sz infinitesimally ABOVE an exact
-      // integer cannot shorten the prefix by one (longer prefix = extra
-      // candidates only; the exact verify removes them)
-      .withColumn("plen", (col("sz") - ceil(lit(c) * col("sz") - lit(1e-9)) + 1).cast("int"))
-      .select(col("id"), col("sz"),
-        explode(expr("transform(slice(sorted, 1, plen), s -> s.tok)")).as("tok"))
+  /** Entries a by-token task of [[jaccardPairsPrefix]] batches per
+    * document before it sends them (16 bytes each). */
+  private val batchEntries = 1 << 16
+
+  /** The runs of equal keys of a key-sorted iterator, as (key, values).
+    * A run's values are read from the underlying iterator, so they are
+    * valid until the next run is asked for (unread ones are skipped). */
+  private def runs[V](sorted: Iterator[(Long, V)]): Iterator[(Long, Iterator[V])] = {
+    val it = sorted.buffered
+    new Iterator[(Long, Iterator[V])] {
+      private var open = false
+      private var key = 0L
+      def hasNext: Boolean = {
+        if (open) { while (it.hasNext && it.head._1 == key) it.next(); open = false }
+        it.hasNext
+      }
+      def next(): (Long, Iterator[V]) = {
+        if (!hasNext) throw new NoSuchElementException
+        val k = it.head._1
+        key = k; open = true
+        (k, new Iterator[V] {
+          def hasNext: Boolean = it.hasNext && it.head._1 == k
+          def next(): V = it.next()._2
+        })
+      }
+    }
+  }
+
+  /** Growable primitive `long` buffer, reused from one run to the next. */
+  private final class LongBuf {
+    var array = new Array[Long](16)
+    var size = 0
+    def clear(): Unit = size = 0
+    def +=(v: Long): Unit = {
+      if (size == array.length) array = java.util.Arrays.copyOf(array, size * 2)
+      array(size) = v
+      size += 1
+    }
+    def apply(i: Int): Long = array(i)
+  }
+
+  /** Step 3 of [[jaccardPairsPrefix]]: the pairs (smaller id, larger id)
+    * of each posting list (entries [id, sz << 32 | position of the token
+    * in the doc's global order]) that pass the size and positional filters,
+    * skipping pairs this task already sent.
+    *
+    * Positional filter (PPJoin, Xiao et al. WWW'08): if the token is the
+    * pair's FIRST common token at positions p_a and p_b, the overlap is at
+    * most ub = 1 + min(sa - p_a - 1, sb - p_b - 1). A pair whose
+    * ub / (sa + sb - ub) — the verify's own double expression, monotone in
+    * the overlap — is below t cannot qualify if this token is its first
+    * common one, and if it is not, the pair is also emitted under its first
+    * common prefix token, where the bound holds. So dropping it here loses
+    * nothing, and later (shorter-suffix) common tokens emit fewer
+    * duplicates. */
+  private final class CandidatePairs(postings: Iterator[(Long, Iterator[Array[Long]])],
+                                     threshold: Double) extends Iterator[(Long, Long)] {
+    private val ids = new LongBuf
+    private val rest = new LongBuf // sz - position - 1, per entry
+    private val bySize = new LongBuf // sz << 32 | entry index, ascending
+    private val seen = new PairSet
+    private var i = 0
+    private var j = 0
+    private var a = 0L
+    private var b = 0L
+    private var ready = false
+
+    private def load(): Unit = {
+      ids.clear(); rest.clear(); bySize.clear()
+      postings.next()._2.foreach { e =>
+        val sz = e(1) >>> 32
+        bySize += (sz << 32) | ids.size
+        rest += sz - (e(1) & 0xFFFFFFFFL) - 1
+        ids += e(0)
+      }
+      java.util.Arrays.sort(bySize.array, 0, bySize.size)
+      i = 0; j = 1
+    }
+
+    private def advance(): Boolean = {
+      while (true) {
+        while (i < bySize.size) {
+          val si = bySize(i) >>> 32
+          val ki = (bySize(i) & 0xFFFFFFFFL).toInt
+          while (j < bySize.size) {
+            val sj = bySize(j) >>> 32
+            // sizes ascend, so sj = max(si, sj); once t * sj > si no later
+            // entry passes either
+            if (threshold * sj > si) j = bySize.size
+            else {
+              val kj = (bySize(j) & 0xFFFFFFFFL).toInt
+              j += 1
+              val ub = 1 + math.min(rest(ki), rest(kj))
+              val x = ids(ki); val y = ids(kj)
+              if (ub.toDouble / (si + sj - ub).toDouble >= threshold && x != y &&
+                  seen.add(math.min(x, y), math.max(x, y))) {
+                a = math.min(x, y); b = math.max(x, y)
+                return true
+              }
+            }
+          }
+          i += 1; j = i + 1
+        }
+        if (!postings.hasNext) return false
+        load()
+      }
+      false
+    }
+
+    def hasNext: Boolean = ready || { ready = advance(); ready }
+    def next(): (Long, Long) = {
+      if (!hasNext) throw new NoSuchElementException
+      ready = false
+      (a, b)
+    }
+  }
+
+  /** Open-addressing set of (a, b) long pairs, the map-side candidate
+    * dedup of [[jaccardPairsPrefix]]. It doubles up to 2^20 slots and,
+    * half full at that size, forgets everything: memory stays bounded, and
+    * a forgotten pair is only sent again (step 4 deduplicates). */
+  private final class PairSet {
+    private val maxSlots = 1 << 20
+    private var slots = 1 << 10
+    private var as = new Array[Long](slots)
+    private var bs = new Array[Long](slots)
+    private var used = new Array[Boolean](slots)
+    private var size = 0
+
+    private def slot(a: Long, b: Long): Int = {
+      var h = a * 0x9E3779B97F4A7C15L ^ b
+      h ^= h >>> 32; h *= 0xD6E8FEB86659FD93L; h ^= h >>> 32
+      h.toInt & (slots - 1)
+    }
+
+    private def insert(a: Long, b: Long): Boolean = {
+      var h = slot(a, b)
+      while (used(h)) {
+        if (as(h) == a && bs(h) == b) return false
+        h = (h + 1) & (slots - 1)
+      }
+      used(h) = true; as(h) = a; bs(h) = b; size += 1
+      true
+    }
+
+    /** true if (a, b) was not in the set */
+    def add(a: Long, b: Long): Boolean = {
+      if (2 * size >= slots) {
+        size = 0
+        if (slots == maxSlots) java.util.Arrays.fill(used, false)
+        else {
+          val (oa, ob, ou) = (as, bs, used)
+          slots *= 2
+          as = new Array[Long](slots); bs = new Array[Long](slots); used = new Array[Boolean](slots)
+          var k = 0
+          while (k < oa.length) { if (ou(k)) insert(oa(k), ob(k)); k += 1 }
+        }
+      }
+      insert(a, b)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.SortedLongs
 import graft.functions.GraftFunctions._
 import graft.functions.textexprs
 import org.apache.spark.sql.functions._
@@ -95,16 +96,21 @@ class KernelSpec extends SparkTestBase {
     }
   }
 
-  test("sorted_inter_count == intersection size on sorted distinct long arrays") {
+  test("SortedLongs.interCount == intersection size on sorted distinct long arrays") {
     val cases = Seq.fill(80) {
       val a = Seq.fill(rnd.nextInt(30))(rnd.nextInt(40).toLong).distinct.sorted
       val b = Seq.fill(rnd.nextInt(30))(rnd.nextInt(40).toLong).distinct.sorted
       (a, b)
-    } :+ ((Seq.empty[Long], Seq(1L, 2L))) :+ ((Seq.empty[Long], Seq.empty[Long]))
-    val got = cases.toDF("a", "b")
-      .select(sorted_inter_count($"a", $"b")).collect().map(_.getInt(0))
-    cases.zip(got).foreach { case ((a, b), g) =>
-      assert(g == (a.toSet intersect b.toSet).size, s"a=$a b=$b")
+    } :+ ((Seq.empty[Long], Seq(1L, 2L))) :+ ((Seq.empty[Long], Seq.empty[Long])) :+
+      ((Seq(Long.MinValue, -1L, 0L, Long.MaxValue), Seq(Long.MinValue, 0L, 5L, Long.MaxValue)))
+    cases.foreach { case (a, b) =>
+      assert(SortedLongs.interCount(a.toArray, a.size, b.toArray, b.size) ==
+        (a.toSet intersect b.toSet).size, s"a=$a b=$b")
+      // a shorter range counts only its own elements (the verify appends
+      // the id after the set)
+      val k = a.size / 2
+      assert(SortedLongs.interCount(a.toArray, k, b.toArray, b.size) ==
+        (a.take(k).toSet intersect b.toSet).size, s"a=$a (first $k) b=$b")
     }
   }
 

@@ -5,6 +5,10 @@ import graft.functions.GraftFunctions._
 import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
 import org.apache.spark.grafttest.{Bus, Codegen}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.ExternalRDD
+import org.apache.spark.sql.grafttest.Caches
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.functions._
 
 /** Operator-level correctness: spatial join vs an O(n*m) brute-force oracle
@@ -250,21 +254,23 @@ class OperatorsSpec extends SparkTestBase {
       base ++ base.take(n / 3).map { case (id, s) => (id + 1000L, s.replace(" ", "  ") + " x") } ++
         Seq((5000L, "a b  c "), (5001L, "a b c"), (5002L, ""), (5003L, " "))
     }
-    def run(docs: Seq[(Long, String)], t: Double, minLen: Int): (Set[(Long, Long)], String) = {
+    def run(docs: Seq[(Long, String)], t: Double, minLen: Int): (Set[(Long, Long)], LogicalPlan) = {
       val out = Dedup.jaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text", t,
         minTokenLen = minLen)
-      val plan = out.queryExecution.optimizedPlan.toString
+      val plan = out.queryExecution.optimizedPlan
       (out.select("id_a", "id_b").as[(Long, Long)].collect().toSet, plan)
     }
+    // the prefix route leaves SQL at its input and comes back as one RDD
+    def viaRdd(plan: LogicalPlan) = plan.collect { case r: ExternalRDD[_] => r }.nonEmpty
     val small = corpus((1 to 12).map(i => s"t$i") ++ Seq("u", "v"), 60, 7)
     val big = corpus((1 to 200).map(i => s"w$i") ++ Seq("u", "v"), 60, 20)
     for ((minLen, t) <- Seq((0, 0.5), (2, 0.8))) {
       val (dictPairs, dictPlan) = run(small, t, minLen)
-      assert(dictPlan.contains("bit_count") && !dictPlan.contains("sorted_inter_count"),
+      assert(dictPlan.toString.contains("bit_count") && !viaRdd(dictPlan),
         "a vocabulary of <= 64 tokens takes the dict route")
       assert(dictPairs == naive(small, t, minLen), s"dict route, minTokenLen=$minLen t=$t")
       val (prefixPairs, prefixRoutePlan) = run(big, t, minLen)
-      assert(prefixRoutePlan.contains("sorted_inter_count"),
+      assert(viaRdd(prefixRoutePlan) && !prefixRoutePlan.toString.contains("bit_count"),
         "a vocabulary above 64 tokens takes the prefix route")
       assert(prefixPairs == naive(big, t, minLen), s"prefix route, minTokenLen=$minLen t=$t")
       spark.catalog.clearCache()
@@ -305,6 +311,96 @@ class OperatorsSpec extends SparkTestBase {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet.contains((1L, 3L)),
       "sanity: the word-set variant DOES pair the word salad")
     assert(got.contains((5L, 6L)), "empty texts are exact duplicates of each other")
+  }
+
+  /** Naive all-pairs Jaccard over the documents with a non-null id and a
+    * non-empty set, with the operator's double compare. */
+  private def naiveJaccard[T](sets: Seq[(Option[Long], Option[Set[T]])],
+                              t: Double): Map[(Long, Long), Double] = {
+    val docs = sets.collect { case (Some(id), Some(s)) if s.nonEmpty => (id, s) }
+    (for {
+      (a, sa) <- docs; (b, sb) <- docs if a < b
+      inter = (sa intersect sb).size
+      j = inter.toDouble / (sa.size + sb.size - inter).toDouble
+      if j >= t
+    } yield (a, b) -> j).toMap
+  }
+
+  test("jaccard prefix route == naive all-pairs: null ids, null and empty sets, size-1 sets, df ties, t = 1.0, integral c*sz") {
+    val rnd = new scala.util.Random(2024)
+    // 30 tokens over ~200 sets: many tokens share a df, so the (df, tok)
+    // order breaks ties by token. c = t/(1+t): sizes 3, 6 and 9 put c*sz on
+    // an integer at t = 0.5, sizes 9 and 18 at t = 0.8, and at t = 0.4 the
+    // double c*sz lands just ABOVE 2 and 4 at sizes 7 and 14, the case
+    // the plen epsilon exists for.
+    val base = (0 until 120).map { i =>
+      val sz = Seq(1, 2, 3, 6, 7, 9, 14, 18, rnd.nextInt(12))(rnd.nextInt(9))
+      rnd.shuffle((0 until 30).toList).take(sz).map(_.toLong * 7919L - 50000L).toSet
+    }
+    // near-duplicates: one token swapped, dropped or added
+    val near = base.take(60).map { s =>
+      rnd.nextInt(3) match {
+        case 0 if s.nonEmpty => s - s.head + 99L
+        case 1 if s.size > 1 => s - s.head
+        case _ => s + 77L
+      }
+    }
+    val sets: Seq[(Option[Long], Option[Set[Long]])] =
+      (base ++ near ++ base.take(10)).zipWithIndex.map { case (s, i) => (Some(i.toLong), Some(s)) } ++
+        Seq((None, Some(base(0))), (None, Some(base(0))), // null ids pair with nothing
+          (Some(900L), None), (Some(901L), Some(Set.empty[Long])), (Some(902L), Some(Set.empty[Long])),
+          (Some(903L), Some(Set(5L))), (Some(904L), Some(Set(5L)))) // size-1 twins
+    val toks = sets.map { case (id, s) => (id, s.map(_.toSeq.sorted)) }.toDF("id", "toks")
+    for (t <- Seq(0.4, 0.5, 0.8, 1.0)) {
+      val got = Dedup.jaccardPairsPrefix(toks, t).as[(Long, Long, Double)].collect()
+      assert(got.length == got.map(p => (p._1, p._2)).distinct.length, s"duplicate pairs at t=$t")
+      assert(got.map(p => (p._1, p._2) -> p._3).toMap == naiveJaccard(sets, t), s"word sets, t=$t")
+    }
+    assert(Dedup.jaccardPairsPrefix(toks.limit(0), 0.5).collect().isEmpty, "empty corpus")
+    // n-gram route: null text has no set, the empty text's one gram is the
+    // empty string, and a text shorter than n is its own single gram
+    def grams(s: String, n: Int): Set[String] =
+      if (s.length <= n) Set(s) else (0 to s.length - n).map(i => s.substring(i, i + n)).toSet
+    val words = Seq("ab", "cd", "ef", "gh", "ij")
+    val texts: Seq[(Option[Long], Option[String])] =
+      (0 until 80).map(i => (Some(i.toLong),
+        Some(Seq.fill(1 + rnd.nextInt(6))(words(rnd.nextInt(words.size))).mkString(" ")))) ++
+        Seq((None, Some("ab cd")), (Some(200L), None), (Some(201L), Some("")), (Some(202L), Some("")),
+          (Some(203L), Some("x")), (Some(204L), Some("x")))
+    for (t <- Seq(0.5, 1.0)) {
+      val got = Dedup.ngramJaccardPairs(texts.toDF("doc_id", "text"), "doc_id", "text", n = 4, threshold = t)
+        .as[(Long, Long, Double)].collect()
+      val want = naiveJaccard(texts.map { case (id, s) => (id, s.map(grams(_, 4))) }, t)
+      assert(got.map(p => (p._1, p._2) -> p._3).toMap == want, s"4-grams, t=$t")
+      assert(want.contains((201L, 202L)) && want.contains((203L, 204L)))
+    }
+  }
+
+  test("jaccard prefix route: one job, no generated code when warm, no cache, integral ids kept") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(5)
+    def corpus(n: Int) = (0 until n).map { i =>
+      (i.toLong, Seq.fill(3 + rnd.nextInt(8))(s"w${rnd.nextInt(25)}").mkString(" "))
+    }.toDF("doc_id", "text")
+    def pairs(df: DataFrame) =
+      Dedup.ngramJaccardPairs(df, "doc_id", "text", n = 6, threshold = 0.5).collect()
+    val (first, second) = (corpus(120), corpus(90))
+    pairs(first) // warm: the input and output plans compile once
+    val baseline = (sc.getPersistentRDDs.size, Caches.entries(spark))
+    val jobs = Bus.jobsOf(sc)(pairs(first))
+    assert(jobs == 1, s"a warm ngramJaccardPairs collect ran $jobs jobs")
+    val compiled = Codegen.compiled(pairs(second))
+    assert(compiled == 0, s"a call over another corpus compiled $compiled classes")
+    assert((sc.getPersistentRDDs.size, Caches.entries(spark)) == baseline,
+      "the prefix route must leave no persisted RDD or cache entry")
+    // an INT id comes back as INT with the same pairs; a STRING id is refused
+    val asInt = Dedup.ngramJaccardPairs(first.select(col("doc_id").cast("int"), col("text")),
+      "doc_id", "text", n = 6, threshold = 0.5)
+    assert(asInt.schema("id_a").dataType == IntegerType && asInt.schema("id_b").dataType == IntegerType)
+    assert(asInt.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getDouble(2))).toSet ==
+      pairs(first).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    intercept[IllegalArgumentException](Dedup.ngramJaccardPairs(
+      first.select(col("doc_id").cast("string"), col("text")), "doc_id", "text", n = 6))
   }
 
   test("ANN LSH top-k achieves high recall vs brute force") {

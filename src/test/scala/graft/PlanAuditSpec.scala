@@ -9,7 +9,7 @@ import org.apache.spark.sql.grafttest.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.{ExternalRDD, FileSourceScanExec, GenerateExec, LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -306,19 +306,25 @@ class PlanAuditSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val opt = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5).queryExecution.optimizedPlan
     val p = opt.toString
-    assert("sorted_inter_count\\(".r.findFirstIn(p).isDefined, "merge-kernel verify expected")
-    assert(!p.contains("array_intersect"), "no per-pair hash-set intersect")
-    // token columns anywhere in the plan, including inside the cached
-    // tokenize/prefix subtrees, are array<bigint> — never array<string>
-    val stringArrays = opt.collect {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        r.cacheBuilder.cachedPlan.collect { case n => n.output }.flatten
-      case n => n.output
-    }.flatten.filter(_.dataType match {
-      case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, _) => true
-      case _ => false
-    })
-    assert(stringArrays.isEmpty, s"array<string> columns in the plan: $stringArrays")
+    // the prefix route: its verify (the SortedLongs merge) runs in the RDD
+    // pipeline, which returns as one external RDD leaf; no dict masks, no
+    // per-pair hash-set intersect
+    assert(opt.collect { case r: ExternalRDD[_] => r }.size == 1, s"one RDD leaf expected:\n$p")
+    assert(!p.contains("bit_count") && !p.contains("array_intersect"), p)
+    // the tokens leave SQL as the route's one cached frame, the tokenize
+    // plan: its token column is array<bigint>, and no column anywhere in
+    // it is array<string>
+    val toks = Dedup.tokenSets(docs, "doc_id", "text", 0)
+    assert(Caches.entries(spark) == 1 && Caches.holds(spark, toks),
+      "the route must read the cached tokenize frame")
+    assert(toks.schema("toks").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType == org.apache.spark.sql.types.LongType, toks.schema.treeString)
+    val stringArrays = toks.queryExecution.optimizedPlan.collect { case n => n.output }.flatten
+      .filter(_.dataType match {
+        case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, _) => true
+        case _ => false
+      })
+    assert(stringArrays.isEmpty, s"array<string> columns in the tokenize plan: $stringArrays")
     spark.catalog.clearCache()
   }
 
