@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
   *    1000 queries) over synthesized 32-dim embeddings;
   *  - `ngram`: [[graft.operators.Dedup.ngramJaccardPairs]] (n = 16,
   *    t = 0.8, q52's call) over `<sfDir>/documents.parquet` as it is;
-  *    `rows` is ignored and the document count is reported.
+  *    `rows` is ignored and the document count is reported;
+  *  - `minhash`: [[graft.operators.Dedup.minhashPairs]] (64 hashes, 64
+  *    bands, 3-word shingles, t = 0.5, q23's call) over the same file,
+  *    reported the same way.
   *
   * Usage: ScaleBench <sfDir> <workDir> [rows] [N] [job]
   */
@@ -121,9 +124,9 @@ object ScaleBench {
             .repartition(32).write.mode("overwrite").parquet(s"$work/vecs")
           new java.io.File(s"$work/_READY-ivf-$rows").createNewFile()
         }
-      case "ngram" =>
+      case "ngram" | "minhash" =>
         docRows = prep.read.parquet(s"$sfDir/documents.parquet").count()
-      case other => sys.error(s"unknown job '$other' (pipeline|dedup|ivf|ngram)")
+      case other => sys.error(s"unknown job '$other' (pipeline|dedup|ivf|ngram|minhash)")
     } finally prep.stop()
 
     // ---- the measured job ----
@@ -143,6 +146,10 @@ object ScaleBench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         Bench.force(graft.operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
           n = 16, threshold = 0.8))
+      case "minhash" =>
+        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        Bench.force(graft.operators.Dedup.minhashPairs(docs, "doc_id", "text",
+          numHashes = 64, bands = 64, shingleW = 3, threshold = 0.5))
     }
 
     // throughput must reflect the data ACTUALLY on disk: a pipeline workDir
@@ -155,7 +162,7 @@ object ScaleBench {
         if (java.nio.file.Files.exists(f))
           java.nio.file.Files.readString(f).trim.toLong
         else rows
-      case "ngram" => docRows
+      case "ngram" | "minhash" => docRows
       case _ => rows // per-job-and-size _READY marker guarantees the match
     }
     val (bestN, rpsN) = timed(nCores, effRows)(run)

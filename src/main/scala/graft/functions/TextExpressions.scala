@@ -91,12 +91,16 @@ object textexprs {
     out
   }
 
+  /** The whitespace-separated tokens of a text (none for an empty or
+    * whitespace-only text): the words of [[shingles]] and [[SimHash]]. */
+  def words(text: String): Array[String] = text.split("\\s+").filter(_.nonEmpty)
+
   /** Word w-shingles of a whitespace-tokenized text. Zero-token (empty or
     * whitespace-only) text yields NO shingles — a degenerate doc must not
     * acquire a real signature, or two empty docs would be reported as
     * near-duplicates that the shingle-based oracle never emits. */
   def shingles(text: String, w: Int): Array[String] = {
-    val toks = text.split("\\s+").filter(_.nonEmpty)
+    val toks = words(text)
     if (toks.isEmpty) Array.empty
     else if (toks.length < w) Array(toks.mkString(" "))
     else Array.tabulate(toks.length - w + 1)(i => toks.slice(i, i + w).mkString(" "))
@@ -106,6 +110,24 @@ object textexprs {
     * portable md5-based hash pushed through the affine permutation family
     * h_j(x) = ((2j+3)x + (5j+7)) mod (2^61-1) — every step reproducible in
     * DuckDB SQL, so the signature itself is oracle-checkable. */
+  def minhashOf(shingles: Array[String], n: Int): Array[Long] = {
+    val sig = Array.fill(n)(Long.MaxValue)
+    var i = 0
+    while (i < shingles.length) {
+      val base = portableHash60(shingles(i))
+      var j = 0
+      while (j < n) {
+        val h = affineMod61(2L * j + 3L, base, 5L * j + 7L)
+        if (h < sig(j)) sig(j) = h
+        j += 1
+      }
+      i += 1
+    }
+    sig
+  }
+
+  /** `minhash(text, n, w)`: [[minhashOf]] the text's w-shingles; null for
+    * a zero-shingle text. */
   case class MinHash(first: Expression, second: Expression, third: Expression)
       extends TernaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -116,24 +138,23 @@ object textexprs {
       // vector would make every empty doc a perfect near-duplicate of every
       // other empty doc, which the shingle-based oracles never emit
       if (sh.isEmpty) return null
-      val n = nAny.asInstanceOf[Int]
-      val sig = Array.fill(n)(Long.MaxValue)
-      var i = 0
-      while (i < sh.length) {
-        val base = portableHash60(sh(i))
-        var j = 0
-        while (j < n) {
-          val h = affineMod61(2L * j + 3L, base, 5L * j + 7L)
-          if (h < sig(j)) sig(j) = h
-          j += 1
-        }
-        i += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(sig)
+      UnsafeArrayData.fromPrimitiveArray(minhashOf(sh, nAny.asInstanceOf[Int]))
     }
     override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): MinHash =
       copy(first = f, second = s, third = t)
     override def prettyName: String = "minhash"
+  }
+
+  /** The key of band `b` of `bands` of a MinHash signature: a hash of its
+    * `sig.length / bands` (at least 1) positions, with the band index
+    * folded in. */
+  def bandKey(sig: Array[Long], bands: Int, b: Int): Long = {
+    val rows = math.max(1, sig.length / bands)
+    var h = 0x1234567L + b
+    var i = b * rows
+    val end = math.min(sig.length, i + rows)
+    while (i < end) { h = mix64(h ^ sig(i)); i += 1 }
+    h
   }
 
   /** LSH band keys from a MinHash signature: hash each of `bands` rows-sized
@@ -144,18 +165,7 @@ object textexprs {
     override protected def nullSafeEval(sigAny: Any, bandsAny: Any): Any = {
       val sig = sigAny.asInstanceOf[ArrayData].toLongArray()
       val bands = bandsAny.asInstanceOf[Int]
-      val rows = math.max(1, sig.length / bands)
-      val out = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var h = 0x1234567L + b
-        var i = b * rows
-        val end = math.min(sig.length, i + rows)
-        while (i < end) { h = mix64(h ^ sig(i)); i += 1 }
-        out(b) = h
-        b += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(out)
+      UnsafeArrayData.fromPrimitiveArray(Array.tabulate(bands)(bandKey(sig, bands, _)))
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): LshBands =
       copy(left = l, right = r)
@@ -165,28 +175,34 @@ object textexprs {
   /** 60-bit SimHash over word tokens (sign of per-bit weighted sums),
     * built on the portable md5-based token hash so a SQL oracle can
     * recompute the signature bit-for-bit. */
+  def simhashOf(words: Array[String]): Long = {
+    val acc = new Array[Int](60)
+    var i = 0
+    while (i < words.length) {
+      val h = portableHash60(words(i))
+      var b = 0
+      while (b < 60) {
+        if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
+        b += 1
+      }
+      i += 1
+    }
+    var out = 0L
+    var b = 0
+    while (b < 60) { if (acc(b) > 0) out |= (1L << b); b += 1 }
+    out
+  }
+
+  /** `simhash(text)`: [[simhashOf]] the text's words; null for a
+    * token-less text. */
   case class SimHash(child: Expression)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = LongType
     override def nullable: Boolean = true
     override protected def nullSafeEval(text: Any): Any = {
-      val toks = text.asInstanceOf[UTF8String].toString.split("\\s+").filter(_.nonEmpty)
+      val toks = words(text.asInstanceOf[UTF8String].toString)
       if (toks.isEmpty) return null // token-less doc: no signature (see MinHash)
-      val acc = new Array[Int](60)
-      var i = 0
-      while (i < toks.length) {
-        val h = portableHash60(toks(i))
-        var b = 0
-        while (b < 60) {
-          if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
-          b += 1
-        }
-        i += 1
-      }
-      var out = 0L
-      var b = 0
-      while (b < 60) { if (acc(b) > 0) out |= (1L << b); b += 1 }
-      out
+      simhashOf(toks)
     }
     override protected def withNewChildInternal(c: Expression): SimHash = copy(child = c)
     override def prettyName: String = "simhash"

@@ -2,24 +2,29 @@ package graft.operators
 
 import graft.core.SortedLongs
 import graft.functions.GraftFunctions._
-import org.apache.spark.HashPartitioner
+import graft.functions.textexprs
+import org.apache.spark.{HashPartitioner, SortedRuns}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for training-data curation at 100 TB scale.
-  * Exact dedup is one hash-groupBy shuffle; the LSH variants
-  * ([[minhashPairs]], [[simhashPairs]]) and the small-vocabulary Jaccard
-  * plan ([[jaccardPairsDict]]) are DataFrame pipelines that bound candidate
-  * generation by bucketing, so the pairwise verify only runs inside buckets
-  * (never all-pairs). The exact Jaccard prefix join ([[jaccardPairsPrefix]])
-  * and the iterative grouping stage ([[dedupGroups]]) run on RDD pair
-  * operators over one `HashPartitioner`: one job each instead of one
-  * adaptive-execution job per exchange, and no generated code (see there).
+  * Exact dedup is one hash-groupBy shuffle and the small-vocabulary
+  * Jaccard plan ([[jaccardPairsDict]]) a DataFrame pipeline. The LSH
+  * variants ([[minhashPairs]], [[simhashPairs]], both on [[bandedPairs]]),
+  * the exact Jaccard prefix join ([[jaccardPairsPrefix]]) and the
+  * iterative grouping stage ([[dedupGroups]]) run on RDD pair operators
+  * over one `HashPartitioner`: one job each instead of one
+  * adaptive-execution job per exchange, no generated code and no cache
+  * (see there). Candidate generation is bounded by bucketing (band
+  * buckets, prefix tokens), so the pairwise verify only runs inside
+  * buckets, never all-pairs; the key-sorted shuffles sort on Spark's
+  * spillable Tungsten sorter ([[org.apache.spark.SortedRuns]]).
   */
 object Dedup {
 
@@ -100,7 +105,7 @@ object Dedup {
   def dedupGroups(nodes: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
     val spark = nodes.sparkSession
     val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val part = shufflePartitioner(nodes)
     // marks `rdd` for truncation; the next action over it materializes it
     def truncate(rdd: RDD[(Long, Long)]): RDD[(Long, Long)] = {
       if (reliable) rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
@@ -186,90 +191,176 @@ object Dedup {
   }
 
   /** MinHash+LSH near-duplicate candidate pairs above a Jaccard estimate
-    * threshold: shingle -> minhash signature -> band-bucket join -> verify
+    * threshold: shingle -> minhash signature -> band buckets -> verify
     * with the signature agreement rate (marginally unbiased Jaccard
     * estimator; note the SQL-portable affine permutation family trades
     * statistical independence across rows for oracle reproducibility — the
     * rows are correlated, so `est_jaccard` is coarser than an ideal
     * 64-trial estimate).
     *
-    * Scale shape: explode by `bands` band keys, self-join on (band, bucket)
-    * — only colliding docs meet; signature verify is a zip-compare, no
-    * original text needed after the signature pass. */
+    * Execution: one lazy job on [[bandedPairs]]. The signature
+    * ([[graft.functions.textexprs.minhashOf]] over the text's shingles)
+    * and its band keys ([[graft.functions.textexprs.bandKey]]) are computed
+    * in the RDD pass that feeds the bucket sort, so only documents sharing
+    * a band bucket meet, the verify is a compare of two signatures, and no
+    * SQL plan, generated code or cache sits between the input and the
+    * pairs.
+    *
+    * Contract: `idCol` is integral (the output ids keep its type; any
+    * other type is refused). A null id or text, or a text with no word
+    * (zero shingles, no signature), names no document. */
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleW: Int = 3,
       threshold: Double = 0.7): DataFrame = {
-    // bands beyond the signature length would hash ZERO elements — LshBands
-    // gives every doc the identical constant key there, degenerating the
-    // candidate join into an all-pairs cross product — so clamp first
+    val (docs, idType) = docTexts(df, idCol, textCol, "minhashPairs")
+    val sigs = docs.flatMap { case (id, text) =>
+      val sh = textexprs.shingles(text, shingleW)
+      if (sh.isEmpty) None else Some((id, textexprs.minhashOf(sh, numHashes)))
+    }
+    pairFrame(minhashSigPairs(sigs, shufflePartitioner(df), numHashes, bands, threshold),
+      df.sparkSession, "est_jaccard", idType)
+  }
+
+  /** The pairs of [[minhashPairs]] over (id, numHashes-long signature)
+    * rows: (smaller id, larger id, est_jaccard). */
+  private[graft] def minhashSigPairs(sigs: RDD[(Long, Array[Long])], part: HashPartitioner,
+                                     numHashes: Int, bands: Int,
+                                     threshold: Double): RDD[(Long, Long, Double)] = {
+    // bands beyond the signature length would hash ZERO elements — every
+    // doc would get the identical constant key there, degenerating the
+    // candidate search into all-pairs — so clamp first
     val nBands = math.min(bands, numHashes)
     // one-row-band mode (bands == numHashes, recall provably 1.0): a pair
     // above threshold agrees on >= ceil(t*n) positions, so it disagrees on
     // at most n - ceil(t*n) — among any fixed n - ceil(t*n) + 1 positions
     // at least one agrees (pigeonhole). Probing only that prefix of bands
-    // halves the index explode at t = 0.5 with zero recall loss.
+    // halves the bucket entries at t = 0.5 with zero recall loss.
     val probeBands =
       if (nBands >= numHashes) nBands - math.ceil(threshold * numHashes).toInt + 1
       else nBands
-    // zero-token docs have no shingles and therefore no signature — exclude
-    // them up front so engine and oracle agree on degenerate inputs (rlike
-    // \S, because trim() strips only spaces and a tab/newline-only doc is
-    // just as tokenless)
-    // signature frame persisted BELOW the band explode: both sides of the
-    // band self-join read it, and the r6 plan audit showed the signature
-    // pass — the expensive kernel, one md5 + 64 affine perms per shingle
-    // over the whole corpus — planned TWICE (the b-side under a
-    // BroadcastExchange; ReuseExchange does not dedup across a broadcast
-    // boundary). Caching the compact (id, sig) rows rather than the
-    // exploded band rows keeps the cache bands-times smaller (measured 89
-    // vs ~3 MB at sf0.1); the explode re-runs per consumer but is pure
-    // projection. Same CacheManager lifecycle contract as the jaccard
-    // plans (see jaccardPairsDict docstring).
-    val sigs = widen(df.where(col(textCol).rlike("\\S")))
-      .select(col(idCol).as("id"), minhash(col(textCol), numHashes, shingleW).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val withBands = sigs
-      .select(col("id"), col("sig"),
-        posexplode(expr(s"slice(lsh_bands(sig, $nBands), 1, $probeBands)"))
-          .as(Seq("band_idx", "bucket")))
-    val a = withBands.select(col("id").as("id_a"), col("sig").as("sig_a"), col("band_idx"), col("bucket"))
-    val b = withBands.select(col("id").as("id_b"), col("sig").as("sig_b"), col("band_idx"), col("bucket"))
-    // verify INSIDE the band join (codegen'd sig_agree, no materialization),
-    // so the dedup shuffle only carries surviving pairs — on hub-heavy
-    // corpora the candidate set approaches all-pairs while survivors stay
-    // tiny, and deduping candidates first would be the dominant shuffle
-    a.join(b, Seq("band_idx", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("est_jaccard",
-        sig_agree(col("sig_a"), col("sig_b")).cast("double") / lit(numHashes))
-      .where(col("est_jaccard") >= threshold)
-      .dropDuplicates("id_a", "id_b")
-      .select("id_a", "id_b", "est_jaccard")
+    // entries are [band, id, sig...]: the agreement counts positions 2..
+    bandedPairs(sigs, part)(
+        sig => Array.tabulate(math.max(0, probeBands))(textexprs.bandKey(sig, nBands, _))) { (x, y) =>
+      var agree = 0
+      var i = 2
+      while (i < x.length) { if (x(i) == y(i)) agree += 1; i += 1 }
+      agree
+    }(_.toDouble / numHashes >= threshold)
+      .map { case (a, b, agree) => (a, b, agree.toDouble / numHashes) }
   }
 
   /** SimHash near-dup pairs: bucket by the 4 15-bit sub-bands of the 60-bit
     * signature (any pair at hamming distance <= 3 shares at least one exact
     * sub-band — pigeonhole, so recall is PROVABLY 1.0 at maxHamming <= 3),
-    * verify by full hamming distance. */
+    * verify by full hamming distance. Same one-job [[bandedPairs]]
+    * execution and contract as [[minhashPairs]]; a bucket key is its band
+    * index above the sub-band's 15 bits. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3): DataFrame = {
-    // exclude zero-token docs (no tokens -> no signature), same as minhash
-    // signature frame persisted below the band explode, for the same
-    // both-sides-of-the-self-join reason as minhashPairs (r6)
-    val sigs0 = widen(df.where(col(textCol).rlike("\\S")))
-      .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sigs = sigs0
-      .withColumn("band_idx", explode(sequence(lit(0), lit(3))))
-      .withColumn("bucket", expr("(sig >> (band_idx * 15)) & 32767"))
-    val a = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"), col("band_idx"), col("bucket"))
-    val b = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"), col("band_idx"), col("bucket"))
-    a.join(b, Seq("band_idx", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming_dist(col("sig_a"), col("sig_b")))
-      .where(col("hamming") <= maxHamming) // verify before dedup: tiny shuffle
-      .dropDuplicates("id_a", "id_b")
-      .select("id_a", "id_b", "hamming")
+    val (docs, idType) = docTexts(df, idCol, textCol, "simhashPairs")
+    val sigs = docs.flatMap { case (id, text) =>
+      val ws = textexprs.words(text)
+      if (ws.isEmpty) None else Some((id, Array(textexprs.simhashOf(ws))))
+    }
+    val pairs = bandedPairs(sigs, shufflePartitioner(df))(
+        sig => Array.tabulate(4)(b => (b.toLong << 15) | ((sig(0) >>> (15 * b)) & 32767L)))(
+        (x, y) => java.lang.Long.bitCount(x(2) ^ y(2)))(_ <= maxHamming)
+    pairFrame(pairs, df.sparkSession, "hamming", idType)
+  }
+
+  /** The banded-bucket pair search of [[minhashPairs]] and
+    * [[simhashPairs]], as one lazy pipeline of RDD operators over one
+    * `HashPartitioner`. Each (id, sig) enters the bucket of each of its
+    * band keys (`keys(sig)`, indexed by band); two documents are a
+    * candidate when they share a bucket IN THE SAME BAND, and a candidate
+    * is kept when `keep(score(x, y))` on its two [band, id, sig...]
+    * entries. Returns (smaller id, larger id, score), each pair once.
+    *   1. (bucket, [band, id, sig...]) entries are sorted by bucket
+    *      ([[org.apache.spark.SortedRuns]]); a bucket's run is split by
+    *      exact band (two bands can share a key) and each new pair of a
+    *      band group is scored, the pairs this task already met skipped in
+    *      a bounded [[PairSet]];
+    *   2. kept pairs (smaller id, [larger id, score]) are sorted by the
+    *      smaller id, and each run drops the partners it repeats (a pair
+    *      met in two tasks, or forgotten by the set).
+    * A bucket's run is held while its pairs are enumerated (a hub bucket's
+    * candidates are quadratic in it either way); the sorts spill. Keys and
+    * values are `Long` and `Array[Long]`, so every shuffle uses Kryo. */
+  private def bandedPairs(sigs: RDD[(Long, Array[Long])], part: HashPartitioner)(
+      keys: Array[Long] => Array[Long])(score: (Array[Long], Array[Long]) => Int)(
+      keep: Int => Boolean): RDD[(Long, Long, Int)] = {
+    val entries = sigs.flatMap { case (id, sig) =>
+      val ks = keys(sig)
+      Iterator.tabulate(ks.length) { b =>
+        val e = new Array[Long](sig.length + 2)
+        e(0) = b; e(1) = id
+        System.arraycopy(sig, 0, e, 2, sig.length)
+        (ks(b), e)
+      }
+    }
+    val kept = SortedRuns.byKey(entries, part).mapPartitions { it =>
+      val seen = new PairSet
+      runs(it).flatMap { case (_, vs) =>
+        val group = vs.toArray.sortBy(_(0)) // by band
+        Iterator.range(0, group.length).flatMap { i =>
+          val x = group(i)
+          Iterator.range(i + 1, group.length).takeWhile(j => group(j)(0) == x(0)).flatMap { j =>
+            val y = group(j)
+            val (a, b) = (math.min(x(1), y(1)), math.max(x(1), y(1)))
+            if (a == b || !seen.add(a, b)) Iterator.empty
+            else {
+              val s = score(x, y)
+              if (keep(s)) Iterator.single((a, Array(b, s.toLong))) else Iterator.empty
+            }
+          }
+        }
+      }
+    }
+    SortedRuns.byKey(kept, part).mapPartitions { it =>
+      runs(it).flatMap { case (a, vs) =>
+        val bs = vs.toArray.sortBy(_(0))
+        Iterator.range(0, bs.length).collect {
+          case k if k == 0 || bs(k)(0) != bs(k - 1)(0) => (a, bs(k)(0), bs(k)(1).toInt)
+        }
+      }
+    }
+  }
+
+  /** (id, text) rows of `df` for the signature operators, spread over at
+    * least `defaultParallelism` partitions by an id-hashed `partitionBy`:
+    * [[widen]] at the RDD level, so building the rows runs no job (a
+    * DataFrame widen is an exchange, which adaptive execution runs as a job
+    * of its own when the RDD is built). Returns the id column's type, which
+    * must be integral. A null id or text names no document. */
+  private def docTexts(df: DataFrame, idCol: String, textCol: String,
+                       op: String): (RDD[(Long, String)], DataType) = {
+    val idType = integralId(df.schema(idCol).dataType, op)
+    val rows = df.select(col(idCol).cast("long"), col(textCol).cast("string")).queryExecution.toRdd
+      .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None else Some((r.getLong(0), r.getString(1))))
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    (if (rows.getNumPartitions >= par) rows else rows.partitionBy(new HashPartitioner(par)), idType)
+  }
+
+  /** `t`, if it is an integral type: the id types the RDD operators carry
+    * as `Long` and cast back. */
+  private def integralId(t: DataType, op: String): DataType = {
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(t),
+      s"$op needs an integral id column, got ${t.simpleString}")
+    t
+  }
+
+  /** The `HashPartitioner` of the RDD operators: the session's shuffle
+    * partition count. */
+  private def shufflePartitioner(df: DataFrame): HashPartitioner =
+    new HashPartitioner(df.sparkSession.sessionState.conf.numShufflePartitions)
+
+  /** (id_a, id_b, `scoreCol`) rows of an RDD operator's pairs, the ids
+    * cast back to `idType`. */
+  private def pairFrame[T: TypeTag](pairs: RDD[(Long, Long, T)], spark: SparkSession,
+                                    scoreCol: String, idType: DataType): DataFrame = {
+    val out = spark.createDataFrame(pairs).toDF("id_a", "id_b", scoreCol)
+    if (idType == LongType) out
+    else out.select(col("id_a").cast(idType), col("id_b").cast(idType), col(scoreCol))
   }
 
   /** Exact word-set Jaccard similar pairs. Adaptive: one cheap probe
@@ -285,8 +376,8 @@ object Dedup {
     *
     * Tokens are carried as 64-bit `xxhash64` values (see [[tokenSets]]),
     * the same sorted-long representation as [[ngramJaccardPairs]]. The
-    * tokenize frame is cached before the probe (see [[jaccardPairsDict]]
-    * for the lifecycle), so the probe and the chosen plan read it once. */
+    * probe is one job that caches nothing; the chosen plan tokenizes
+    * again (the dict plan caches its masks, see [[jaccardPairsDict]]). */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, minTokenLen: Int = 0): DataFrame =
     adaptiveJaccard(tokenSets(df, idCol, textCol, minTokenLen), threshold)
@@ -326,21 +417,34 @@ object Dedup {
     jaccardPairsPrefix(grams, threshold)
   }
 
-  /** Shared dispatch: one bounded vocabulary probe (<= 65 rows collected)
-    * picks the dictionary/bitmask plan for tiny vocabularies, the
-    * PPJoin-style prefix plan otherwise. */
-  private def adaptiveJaccard(toks0: DataFrame, threshold: Double): DataFrame = {
-    // persist the tokenize subtree BEFORE the vocabulary probe: the probe is
-    // an action, and without the cache the full tokenize pass would execute
-    // once for the probe and again for whichever plan wins (measured as a
-    // duplicated q27 stage in round 6). Same CacheManager lifecycle contract
-    // as the plans themselves (see jaccardPairsDict docstring).
-    val toks = toks0.persist(StorageLevel.MEMORY_AND_DISK)
-    // unordered: the route depends only on the count, and jaccardPairsDict
-    // sorts the vocabulary itself (a sort here cost a range exchange, its
-    // sampling job and the sort's generated classes)
-    val vocab = toks.select(explode(col("toks")).as("tok")).distinct()
-      .as(org.apache.spark.sql.Encoders.scalaLong).take(65)
+  /** Shared dispatch: one bounded vocabulary probe picks the
+    * dictionary/bitmask plan for tiny vocabularies (<= 64 distinct tokens),
+    * the PPJoin-style prefix plan otherwise.
+    *
+    * The probe is one job over the tokenize RDD: each partition stops once
+    * it has seen 65 distinct tokens, and the driver unions at most 65 per
+    * partition, capped at 65. A union of 64 or fewer means no partition
+    * stopped early, so it is the whole vocabulary and the route is exact. A
+    * large-vocabulary corpus only tokenizes up to its first 65 distinct
+    * tokens per partition. Nothing is cached: the chosen plan tokenizes
+    * again (the dict plan persists its masks itself), which costs less
+    * than caching the tokenize frame for one more read. Unordered:
+    * [[jaccardPairsDict]] sorts the vocabulary itself. */
+  private def adaptiveJaccard(toks: DataFrame, threshold: Double): DataFrame = {
+    val vocab = toks.select(col("toks")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val seen = mutable.LongMap.empty[Unit]
+        while (rows.hasNext && seen.size <= 64) {
+          val r = rows.next()
+          if (!r.isNullAt(0)) {
+            val ts = r.getArray(0)
+            var i = 0
+            while (i < ts.numElements() && seen.size <= 64) { seen(ts.getLong(i)) = (); i += 1 }
+          }
+        }
+        Iterator.single(seen.keys.toArray)
+      }
+      .collect().iterator.flatten.distinct.take(65).toArray
     if (vocab.length <= 64) jaccardPairsDict(toks, vocab, threshold)
     else jaccardPairsPrefix(toks, threshold)
   }
@@ -386,9 +490,8 @@ object Dedup {
     * unaffected; a long-lived session issuing MANY dedup calls must
     * materialize each result (write / localCheckpoint(eager = true)) and
     * then `spark.catalog.clearCache()` between calls. Same contract for
-    * [[jaccardPairs]]' tokenize cache (taken before the route probe, on
-    * both routes) and [[graft.operators.Ann.ivfTopK]]; the prefix plan
-    * itself caches nothing. */
+    * [[graft.operators.Ann.ivfTopK]]; the route probe of [[jaccardPairs]]
+    * and the prefix plan cache nothing. */
   def jaccardPairsDict(toks: DataFrame, vocab: Array[Long],
                        threshold: Double): DataFrame = {
     val spark = toks.sparkSession
@@ -521,10 +624,15 @@ object Dedup {
     *   4. one shuffle by the smaller id deduplicates its pairs and attaches
     *      its set, and one shuffle by the larger id verifies against that
     *      id's set.
-    * The by-id output of step 2 is read three times (steps 3, 4 and 4
-    * again) rather than cached. Token-keyed stages hold one posting list
-    * at a time (the shuffle's sorter spills). The by-id stages stream the
-    * documents in id order, one at a time: the verify merges them with the
+    * Every key-sorted shuffle (steps 1, 2, 3 and the verify's) sorts with
+    * [[org.apache.spark.SortedRuns]]: Spark's Tungsten sorter, which
+    * accounts memory in bytes, radix-sorts the `Long` key and spills (the
+    * shuffle reader's boxed sort it replaces spent most of its time in
+    * `SizeEstimator` sampling). The by-id output of step 2 is read three
+    * times (steps 3, 4 and 4 again) rather than cached, each read
+    * re-sorting the shuffled records. Token-keyed stages hold one posting
+    * list at a time. The by-id stages stream the documents in id order,
+    * one at a time: the verify merges them with the
     * id-sorted payloads, and the pair dedup holds only its partition's
     * candidate pairs, in a `LongMap` (8 bytes a pair: the candidate-sized
     * side, as in [[dedupGroups]]' joins). Every shuffled key is a `Long`
@@ -543,15 +651,12 @@ object Dedup {
     * names no document, and an empty set pairs with nothing (J of two
     * empty sets is 0/0). */
   def jaccardPairsPrefix(toks: DataFrame, threshold: Double): DataFrame = {
-    val spark = toks.sparkSession
-    val idType = toks.schema("id").dataType
-    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
-      s"jaccardPairsPrefix needs an integral id column, got ${idType.simpleString}")
-    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val idType = integralId(toks.schema("id").dataType, "jaccardPairsPrefix")
+    val part = shufflePartitioner(toks)
     val c = threshold / (1.0 + threshold)
     // 1-2. (tok, id) by token: a run is one posting list, its length the
     // token's df; then (id, [tok, df, ...]) by id, one run per document
-    val byId = toks.select(col("id").cast("long"), col("toks")).queryExecution.toRdd
+    val tokIds = toks.select(col("id").cast("long"), col("toks")).queryExecution.toRdd
       .flatMap { r =>
         if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
         else {
@@ -560,8 +665,7 @@ object Dedup {
           Iterator.tabulate(ts.length)(i => (ts(i), id))
         }
       }
-      .repartitionAndSortWithinPartitions(part)
-      .mapPartitions { it =>
+    val byId = SortedRuns.byKey(SortedRuns.byKey(tokIds, part).mapPartitions { it =>
         // a document's [tok, df, tok, df, ...] entries leave in one record
         // per batch, so the by-id shuffle moves about one record per
         // document and task, not one per token; a batch holds at most
@@ -586,8 +690,7 @@ object Dedup {
           held += ids.size
           if (held >= batchEntries) flush() else Iterator.empty
         } ++ flush()
-      }
-      .repartitionAndSortWithinPartitions(part)
+      }, part)
     // every document's full sorted set, in id order
     val docs = byId.mapPartitions({ it =>
       val buf = new LongBuf
@@ -601,7 +704,7 @@ object Dedup {
     }, preservesPartitioning = true)
     // 3. prefix entries (tok, [id, sz << 32 | position]) by token ->
     // candidate pairs
-    val cands = byId.mapPartitions { it =>
+    val prefixes = byId.mapPartitions { it =>
       val toks = new LongBuf
       val dfs = new LongBuf
       runs(it).flatMap { case (id, vs) =>
@@ -631,7 +734,7 @@ object Dedup {
           (set((order(k) & 0x7FFFFFFFL).toInt), Array(id, (sz.toLong << 32) | k)))
       }
     }
-      .repartitionAndSortWithinPartitions(part)
+    val cands = SortedRuns.byKey(prefixes, part)
       .mapPartitions(it => new CandidatePairs(runs(it), threshold))
     // 4. by the smaller id: its partners are held in a LongMap (the
     // candidate-sized side, as in dedupGroups' narrow joins) while the
@@ -655,7 +758,7 @@ object Dedup {
         }
       }
     // ... and verified there against the larger id's set
-    val pairs = withSetA.repartitionAndSortWithinPartitions(part)
+    val pairs = SortedRuns.byKey(withSetA, part)
       .zipPartitions(docs) { (ps, ds) =>
         val doc = ds.buffered
         ps.flatMap { case (b, setA) =>
@@ -667,9 +770,7 @@ object Dedup {
           if (jaccard >= threshold) Iterator.single((setA(na), b, jaccard)) else Iterator.empty
         }
       }
-    val out = spark.createDataFrame(pairs).toDF("id_a", "id_b", "jaccard")
-    if (idType == LongType) out
-    else out.select(col("id_a").cast(idType), col("id_b").cast(idType), col("jaccard"))
+    pairFrame(pairs, toks.sparkSession, "jaccard", idType)
   }
 
   /** Entries a by-token task of [[jaccardPairsPrefix]] batches per

@@ -2,8 +2,10 @@ package graft
 
 import graft.core.{RayCast, WktParser}
 import graft.functions.GraftFunctions._
+import graft.functions.textexprs
 import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
-import org.apache.spark.grafttest.{Bus, Codegen}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.grafttest.{Bus, Codegen, Confs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.ExternalRDD
@@ -654,5 +656,140 @@ class OperatorsSpec extends SparkTestBase {
         numHashes = 16, bands = 64, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(clamped == sane, "bands > numHashes must behave as bands == numHashes")
+  }
+
+  /** Brute-force minhash pairs over (id, signature) rows: every pair a < b
+    * whose agreement rate reaches t and, when `bands` is below the
+    * signature length, that shares the key of some band. With one row per
+    * band no key is consulted: the pigeonhole prefix must miss no pair. */
+  private def naiveMinhash(sigs: Seq[(Long, Array[Long])], bands: Int,
+                           t: Double): Map[(Long, Long), Double] =
+    (for {
+      (a, x) <- sigs; (b, y) <- sigs if a < b
+      est = x.indices.count(i => x(i) == y(i)).toDouble / x.length
+      if est >= t
+      if bands >= x.length ||
+        (0 until bands).exists(k => textexprs.bandKey(x, bands, k) == textexprs.bandKey(y, bands, k))
+    } yield (a, b) -> est).toMap
+
+  private def minhashSigs(texts: Seq[(Option[Long], Option[String])], n: Int): Seq[(Long, Array[Long])] =
+    texts.collect { case (Some(id), Some(s)) if textexprs.shingles(s, 3).nonEmpty =>
+      id -> textexprs.minhashOf(textexprs.shingles(s, 3), n)
+    }
+
+  test("minhash pairs == brute-force signature compare in both band modes: shared buckets, null ids, zero-token docs") {
+    val rnd = new scala.util.Random(31)
+    val vocab = (0 until 30).map(i => s"v$i")
+    val base = (0 until 50).map(_ => Seq.fill(4 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))))
+    val texts: Seq[(Option[Long], Option[String])] =
+      base.zipWithIndex.map { case (ws, i) => (Some(i.toLong), Some(ws.mkString(" "))) } ++
+        // near-duplicates (last word edited) and exact copies
+        base.take(20).zipWithIndex.map { case (ws, i) =>
+          (Some(100L + i), Some(ws.updated(ws.size - 1, "edit").mkString(" "))) } ++
+        base.take(8).zipWithIndex.map { case (ws, i) => (Some(200L + i), Some(ws.mkString(" "))) } ++
+        // null ids pair with nothing; null and zero-token texts have no signature
+        Seq((None, Some(base(0).mkString(" "))), (None, Some(base(0).mkString(" "))),
+          (Some(300L), None), (Some(301L), Some("")), (Some(302L), Some(" \t")), (Some(303L), Some("\n")))
+    val df = texts.toDF("doc_id", "text")
+    val sigs = minhashSigs(texts, 16)
+    for ((bands, t) <- Seq((4, 0.5), (16, 0.5), (16, 0.8), (64, 0.5))) {
+      val got = Dedup.minhashPairs(df, "doc_id", "text", numHashes = 16, bands = bands, threshold = t)
+        .as[(Long, Long, Double)].collect()
+      val want = naiveMinhash(sigs, math.min(bands, 16), t)
+      assert(want.values.exists(_ < 1.0), s"bands=$bands, t=$t: no near-duplicate below J = 1")
+      assert(got.length == got.map(p => (p._1, p._2)).distinct.length, s"duplicate pairs, bands=$bands, t=$t")
+      assert(got.map(p => (p._1, p._2) -> p._3).toMap == want, s"bands=$bands, t=$t")
+    }
+
+    // A bucket shared by two bands. A band key starts from 0x1234567 + band,
+    // so a band-1 slice whose first value differs from a band-0 slice's by
+    // 0x1234567 ^ 0x1234568 hashes to the same key.
+    val sc = spark.sparkContext
+    val shift = 0x1234567L ^ 0x1234568L
+    val (a, b, c, d, e, f) = (11L, 22L, 33L, 44L, 55L, 66L)
+    def run(rows: Seq[(Long, Array[Long])], bands: Int) =
+      Dedup.minhashSigPairs(sc.parallelize(rows, 3), new HashPartitioner(4), numHashes = 4,
+        bands = bands, threshold = 0.5).collect()
+    // two rows per band: 1 and 2 agree on 2 of 4 positions, and 1's band-0
+    // key is 2's band-1 key, but they share no band, so they are no pair;
+    // 1 and 3 share band 0
+    val banded = Seq(1L -> Array(a, b, c, b), 2L -> Array(a, d, a ^ shift, b), 3L -> Array(a, b, c, d))
+    assert(textexprs.bandKey(banded(0)._2, 2, 0) == textexprs.bandKey(banded(1)._2, 2, 1))
+    assert(run(banded, 2).toSeq == Seq((1L, 3L, 0.75)))
+    assert(naiveMinhash(banded, 2, 0.5) == Map((1L, 3L) -> 0.75))
+    // one row per band (3 of 4 bands probed at t = 0.5): 1 and 2 meet in a
+    // shared bucket of bands 0 and 1 and in band 2, and are reported once;
+    // 2 and 3 share band 1 but agree on 1 of 4; 1 and 4 share bands 0 and 1
+    val oneRow = Seq(1L -> Array(a, b, c, d), 2L -> Array(e, a ^ shift, c, d),
+      3L -> Array(f, a ^ shift, e, a), 4L -> Array(a, b, e, f))
+    assert(textexprs.bandKey(oneRow(0)._2, 4, 0) == textexprs.bandKey(oneRow(1)._2, 4, 1))
+    assert(run(oneRow, 4).toSet == Set((1L, 2L, 0.5), (1L, 4L, 0.5)))
+    assert(naiveMinhash(oneRow, 4, 0.5) == Map((1L, 2L) -> 0.5, (1L, 4L) -> 0.5))
+  }
+
+  test("minhash pairs: one job, no generated code when warm, no cache, integral ids kept") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(8)
+    // every fourth document repeats the previous one with its last word changed
+    def corpus(n: Int) = {
+      val docs = (0 until n).map(_ => Seq.fill(6 + rnd.nextInt(8))(s"w${rnd.nextInt(40)}"))
+      docs.indices.map { i =>
+        val ws = if (i % 4 == 3) docs(i - 1).updated(docs(i - 1).size - 1, "edit") else docs(i)
+        (i.toLong, ws.mkString(" "))
+      }.toDF("doc_id", "text")
+    }
+    def pairs(df: DataFrame) =
+      Dedup.minhashPairs(df, "doc_id", "text", numHashes = 16, bands = 8, threshold = 0.5).collect()
+    val (first, second) = (corpus(120), corpus(90))
+    assert(pairs(first).nonEmpty) // warm: the input and output plans compile once
+    val baseline = (sc.getPersistentRDDs.size, Caches.entries(spark))
+    val jobs = Bus.jobsOf(sc)(pairs(first))
+    assert(jobs == 1, s"a warm minhashPairs collect ran $jobs jobs")
+    val compiled = Codegen.compiled(pairs(second))
+    assert(compiled == 0, s"a call over another corpus compiled $compiled classes")
+    assert((sc.getPersistentRDDs.size, Caches.entries(spark)) == baseline,
+      "minhashPairs must leave no persisted RDD or cache entry")
+    // an INT id comes back as INT with the same pairs; a STRING id is refused
+    val asInt = Dedup.minhashPairs(first.select(col("doc_id").cast("int"), col("text")),
+      "doc_id", "text", numHashes = 16, bands = 8, threshold = 0.5)
+    assert(asInt.schema("id_a").dataType == IntegerType && asInt.schema("id_b").dataType == IntegerType)
+    assert(asInt.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getDouble(2))).toSet ==
+      pairs(first).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    val asString = first.select(col("doc_id").cast("string"), col("text"))
+    intercept[IllegalArgumentException](Dedup.minhashPairs(asString, "doc_id", "text"))
+    intercept[IllegalArgumentException](Dedup.simhashPairs(asString, "doc_id", "text"))
+  }
+
+  test("sorted shuffles spill: prefix join and minhash pairs == naive with the sorter forced to spill") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(41)
+    val vocab = (1 to 300).map(i => s"w$i")
+    // odd documents repeat the previous one with one word swapped
+    val words = (0 until 40).map(_ => rnd.shuffle(vocab).take(20))
+    val docs = (0 until 80).map { i =>
+      val ws = words(i / 2)
+      (i.toLong, (if (i % 2 == 1) ws.updated(rnd.nextInt(ws.size), "swapped") else ws).mkString(" "))
+    }
+    val toks = docs.toDF("id", "text").select(col("id"),
+      array_sort(array_distinct(transform(split(col("text"), " "), t => xxhash64(t)))).as("toks"))
+    val texts = docs.toDF("doc_id", "text")
+    var prefix = Array.empty[(Long, Long, Double)]
+    var mh = Array.empty[(Long, Long, Double)]
+    // every sorter spills after 64 records; a sorter page left unfreed
+    // fails its task
+    val (prefixSpilled, mhSpilled) = Confs.withConfs(sc,
+        "spark.shuffle.spill.numElementsForceSpillThreshold" -> "64",
+        "spark.unsafe.exceptionOnMemoryLeak" -> "true") {
+      (Bus.diskSpilledOf(sc) { prefix = Dedup.jaccardPairsPrefix(toks, 0.8).as[(Long, Long, Double)].collect() },
+        Bus.diskSpilledOf(sc) {
+          mh = Dedup.minhashPairs(texts, "doc_id", "text", numHashes = 16, bands = 8, threshold = 0.5)
+            .as[(Long, Long, Double)].collect()
+        })
+    }
+    assert(prefixSpilled > 0 && mhSpilled > 0, s"spilled $prefixSpilled and $mhSpilled bytes")
+    val wantPrefix = naiveJaccard(docs.map { case (id, s) => (Option(id), Option(s.split(" ").toSet)) }, 0.8)
+    assert(wantPrefix.nonEmpty && prefix.map(p => (p._1, p._2) -> p._3).toMap == wantPrefix)
+    val wantMh = naiveMinhash(minhashSigs(docs.map { case (id, s) => (Option(id), Option(s)) }, 16), 8, 0.5)
+    assert(wantMh.nonEmpty && mh.map(p => (p._1, p._2) -> p._3).toMap == wantMh)
   }
 }

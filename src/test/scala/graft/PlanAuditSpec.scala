@@ -311,12 +311,12 @@ class PlanAuditSpec extends SparkTestBase {
     // per-pair hash-set intersect
     assert(opt.collect { case r: ExternalRDD[_] => r }.size == 1, s"one RDD leaf expected:\n$p")
     assert(!p.contains("bit_count") && !p.contains("array_intersect"), p)
-    // the tokens leave SQL as the route's one cached frame, the tokenize
-    // plan: its token column is array<bigint>, and no column anywhere in
-    // it is array<string>
+    // the tokens leave SQL through the tokenize plan, which the route reads
+    // without caching it: its token column is array<bigint>, and no column
+    // anywhere in it is array<string>
     val toks = Dedup.tokenSets(docs, "doc_id", "text", 0)
-    assert(Caches.entries(spark) == 1 && Caches.holds(spark, toks),
-      "the route must read the cached tokenize frame")
+    assert(Caches.entries(spark) == 0 && !Caches.holds(spark, toks),
+      "the route probe and the prefix plan must cache nothing")
     assert(toks.schema("toks").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType == org.apache.spark.sql.types.LongType, toks.schema.treeString)
     val stringArrays = toks.queryExecution.optimizedPlan.collect { case n => n.output }.flatten

@@ -1,7 +1,7 @@
 package org.apache.spark.grafttest
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Same-package access to the listener bus, so a test can wait until every
   * scheduler event of a finished action has been delivered before reading
@@ -20,5 +20,19 @@ object Bus {
     try { body; drain(sc) }
     finally sc.removeSparkListener(listener)
     started.get
+  }
+
+  /** Bytes the tasks that ran while `body` ran spilled to disk. */
+  def diskSpilledOf(sc: SparkContext)(body: => Unit): Long = {
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) spilled.addAndGet(e.taskMetrics.diskBytesSpilled)
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try { body; drain(sc) }
+    finally sc.removeSparkListener(listener)
+    spilled.get
   }
 }
