@@ -16,12 +16,16 @@ import org.apache.spark.sql.functions._
   *            one narrow pass over the images scan: WKT parse (once)
   *              -> centroid, header-only decode dims; bytes dropped
   *            polygons -> disjoint quadtree cover -> compact cover table,
-  *              collected and broadcast once
+  *              built in one job, collected and broadcast once
   *            per image, one probe of its ancestor cells with inline
   *              ray-cast refinement -> n_matches; unmatched images dropped
   *            8x8 pixel-block -> Z/X/Y tile explode, weighted by n_matches
   *            groupBy(z,x,y) tile aggregation
-  *            write with per-partition lineage snapshot (resumable).
+  *            snapshot commit: one write job whose tasks write the part
+  *              files and return their lineage stats; the driver publishes
+  *              parts, lineage, manifest and CURRENT (resumable).
+  *   A first run is 4 Spark jobs: the cover, the aggregate's and the
+  *   commit's exchanges, and the write.
   *
   * Usage: Pipeline prepare <sfDir> <workDir>
   *        Pipeline run <workDir> [zoom] [level]

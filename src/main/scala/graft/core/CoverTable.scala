@@ -114,6 +114,18 @@ object CoverTable {
   final case class Polygon(cells: Array[Long], full: Array[Boolean],
                            rings: Array[Array[Array[Double]]])
 
+  object Polygon {
+    /** Geometry `g`'s disjoint cover at `level` and its rings; a null `g`
+      * gives the polygon that matches nothing. */
+    def of(g: Geom, level: Int): Polygon =
+      if (g == null) Polygon(null, null, null)
+      else {
+        val cov = CellIndex.cover(g, level)
+        Polygon(cov.map(_.cell), cov.map(_.full),
+          g.polygonRings.map(_.map(_.toArray).toArray).toArray)
+      }
+  }
+
   /** Builds the table; polygon indexes follow `polys`' order. */
   def build(polys: IndexedSeq[Polygon]): CoverTable = {
     def cellsOf(p: Polygon) = if (p.cells == null) Array.emptyLongArray else p.cells

@@ -4,9 +4,10 @@ import scala.jdk.CollectionConverters._
 
 import graft.core.CoverTable
 import graft.functions.GraftFunctions._
-import graft.functions.exprs
+import graft.functions.{exprs, GeomData}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnBridge, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -17,7 +18,7 @@ import org.apache.spark.sql.types.IntegerType
   * One operator, [[SpatialJoin.pointsInPolygons]], with two join branches:
   *
   *   broadcastCover = true (the compact cover table):
-  *     polys ──st_cover(geom, L), st_rings(geom)──collect, one row per polygon
+  *     polys ──one RDD job: cover(geom, L), rings(geom) per polygon──collect
   *       ──▸ driver: CoverTable (cell keys, CSR entries, flat rings) ──broadcast
   *     points ──st_cover_probe(lon, lat, L)──▸ (point cols, poly_idx)
   *       walks the L+1 ancestor cells, ray-casts boundary entries inline,
@@ -90,20 +91,31 @@ object SpatialJoin {
     def close(): Unit = table.destroy()
   }
 
-  /** Collects polys(polyCols..., geom) as one row per polygon — its cover
-    * cells, their `full` flags and its rings, through a typed encoder — and
-    * broadcasts the [[CoverTable]] built from them on the driver. Runs the
-    * cover's repartition and collect now. */
+  /** Collects polys(polyCols..., geom) as one row per polygon — its
+    * attribute row and its [[CoverTable.Polygon]] (cover cells, `full`
+    * flags and rings), built in the tasks — and broadcasts the
+    * [[CoverTable]] built from them on the driver. Runs one job now: the
+    * layer is spread over every core by a round-robin RDD shuffle, because
+    * it typically arrives as one small file and the covering is CPU-heavy
+    * per row. */
   def collectCover(polys: DataFrame, level: Int): CoverBroadcast = {
     val spark = polys.sparkSession
     val attrSchema = polys.drop("geom").schema
+    val g = attrSchema.length
     val rows = polys
+      .select(attrSchema.fieldNames.toSeq.map(col) :+ col("geom").cast(GeomData.geometryType): _*)
+      .queryExecution.toRdd.map(_.copy())
       .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("cov", st_cover(col("geom"), level))
-      .select(struct(attrSchema.fieldNames.toSeq.map(col): _*).as("_1"), struct(
-        col("cov.cell").as("cells"), col("cov.full").as("full"),
-        st_rings(col("geom")).as("rings")).as("_2"))
-      .as(Encoders.tuple(Encoders.row(attrSchema), Encoders.product[CoverTable.Polygon]))
+      .mapPartitions { it =>
+        val toScala = attrSchema.fields.map(f =>
+          CatalystTypeConverters.createToScalaConverter(f.dataType))
+        it.map { r =>
+          val attrs =
+            Row.fromSeq(toScala.indices.map(i => toScala(i)(r.get(i, attrSchema(i).dataType))))
+          val geom = if (r.isNullAt(g)) null else GeomData.fromRow(r.getStruct(g, 3))
+          (attrs, CoverTable.Polygon.of(geom, level))
+        }
+      }
       .collect()
     val table = spark.sparkContext.broadcast(CoverTable.build(rows.map(_._2).toIndexedSeq))
     val attrs = Option.when(attrSchema.nonEmpty)(spark.createDataFrame(

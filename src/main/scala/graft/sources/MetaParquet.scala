@@ -6,12 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types._
 
 import Snapshots.PartitionMeta
@@ -38,6 +42,10 @@ import Snapshots.PartitionMeta
   * discipline of [[Snapshots]]. The readers skip dot- and
   * underscore-prefixed names exactly as Spark's file index does, so a torn
   * temp file, a claim lock or a tombstone is never read as table content.
+  *
+  * [[rowWriter]] is the one exception to "driver-side": it is the parquet-mr
+  * writer the snapshot write tasks open for the DATA files, kept beside
+  * the metadata writer so that one module opens every file of the store.
   */
 private[sources] object MetaParquet {
 
@@ -63,6 +71,27 @@ private[sources] object MetaParquet {
     c.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
     c.setBoolean("fs.file.impl.disable.cache", true)
     c
+  }
+
+  /** A writer of Spark rows to the new local file `path`, through Spark's
+    * own `ParquetWriteSupport`: the footer carries the Spark schema, so
+    * `spark.read.parquet` reads back exactly `schema`'s types. `sqlConf`
+    * holds the SQL keys the write support reads. This is the write path of
+    * the snapshot DATA files, called in write tasks; it opens the file
+    * with `java.nio` and no Hadoop filesystem. */
+  def rowWriter(path: Path, schema: StructType, codec: CompressionCodecName,
+                sqlConf: Map[String, String]): ParquetWriter[InternalRow] = {
+    val c = new Configuration(false)
+    sqlConf.foreach { case (k, v) => c.set(k, v) }
+    ParquetWriteSupport.setSchema(schema, c)
+    new RowWriterBuilder(new LocalOutputFile(path)).withConf(c).withCompressionCodec(codec).build()
+  }
+
+  private final class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
   }
 
   /** Write `rows` (values in `schema`'s column order) to `target`: a

@@ -4,16 +4,22 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoder, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Checkpointed partition lineage with Iceberg-shaped semantics, emulated on
   * Parquet (no Iceberg jar ships in this environment — SURVEY.md §7.6):
   *
   *   table/
-  *     data/snap_id=S/part_id=N/...parquet  -- partitions written BY snapshot S
+  *     data/snap_id=S/part_id=N/part-N.<codec>.parquet -- written BY snapshot S
   *     _meta/snapshots/...parquet       -- snapshot_id, ts, operation, n_partitions
   *     _meta/partitions/...parquet      -- snapshot_id, part_id, row_count, lineage_hash
   *     _meta/CURRENT                    -- atomically-renamed pointer file
@@ -29,13 +35,16 @@ import org.apache.spark.sql.functions._
   * Iceberg's expire_snapshots: old manifests go away, data dirs survive
   * exactly as long as some retained snapshot still resolves to them.
   *
-  * Commit protocol: data + partition lineage are written first, then the
-  * one-row manifest is PUBLISHED with an atomic no-replace rename (see
-  * [[ensureManifest]] — exactly one winner under concurrent committers),
-  * then the CURRENT pointer is moved with an atomic rename — a crashed run
-  * leaves the previous snapshot intact. Resume = read CURRENT, skip
-  * partitions already recorded for that snapshot (north_rule: "resumable
-  * from checkpoint with per-partition lineage + metrics"). Concurrent DATA
+  * Commit protocol: one Spark job writes the data, tasks writing hidden
+  * attempt files and returning each part's lineage stats; the driver moves
+  * each part's winning attempt to its fixed file name ([[DataFiles]]) and
+  * appends the partition lineage. Then the one-row manifest is PUBLISHED
+  * with an atomic no-replace rename (see [[ensureManifest]] — exactly one
+  * winner under concurrent committers), then the CURRENT pointer is moved
+  * with an atomic rename — a crashed run leaves the previous snapshot
+  * intact. Resume = read CURRENT, skip partitions already recorded for
+  * that snapshot (north_rule: "resumable from checkpoint with
+  * per-partition lineage + metrics"). Concurrent DATA
   * writes to one snapshot stay single-writer (documented in
   * [[ensureManifest]]); the metadata commit itself is race-safe.
   *
@@ -43,7 +52,8 @@ import org.apache.spark.sql.functions._
   * are read and written on the driver by [[MetaParquet]], never by a Spark
   * job: resume, winner resolution ([[winners]]) and expiry run in plain
   * Scala, and the only Spark work is the data write of a commit and the
-  * data scan of the winning dirs in [[readData]].
+  * data scan of the winning dirs in [[readData]]. The store is
+  * local-filesystem-only: every path goes through `java.nio`.
   */
 object Snapshots {
 
@@ -142,17 +152,18 @@ object Snapshots {
     // ONE job for data + stats at every width, NOT a job per partition (a
     // driver-side loop would serialize nParts small jobs and wreck N->4N
     // scaling efficiency — Amdahl) and NOT a second stats pass over a
-    // persisted copy either (guide §1.2/§5): the per-partition row counts
-    // and order-independent lineage hashes ride the write job itself as one
-    // observed [[PartStats]] aggregate, collected by the same tasks that
-    // write the files, with a buffer of 2 * nParts longs. The CollectMetrics
-    // node sits ABOVE the repartition exchange, i.e. inside the write's
-    // result stage, where the scheduler applies accumulator updates exactly
-    // once per partition (failed and duplicate speculative completions are
-    // dropped), so the lineage stats stay exact under retries at cluster
-    // scale. Dynamic partition overwrite keeps resume safe: a crashed run's
-    // partially-written partitions are simply rewritten, and
-    // already-committed partitions are filtered out up front.
+    // persisted copy either (guide §1.2/§5). The job runs the plan's own
+    // RDD: each task writes every part it holds to a hidden attempt file
+    // and returns the part's row count and order-independent sum of row
+    // hashes ([[DataFiles.writeAttempt]]). A result stage keeps one result
+    // per partition, from one successful attempt, so the lineage stats
+    // stay exact under retries and speculation. The driver then publishes
+    // each winning attempt under the part's fixed file name and deletes
+    // every other entry of the part's dir ([[DataFiles.publish]]) — a
+    // crashed run's leftovers included — before the lineage append below
+    // makes the part visible. No Hadoop committer and no staging dir: the
+    // store's own lineage, manifest and CURRENT are what publish data, as
+    // Iceberg's manifests are (SURVEY §7.6).
     val partExpr =
       if (portableParts)
         coalesce(pmod(col(keyCol).cast("long"), lit(nParts.toLong)).cast("int"), lit(0))
@@ -161,28 +172,38 @@ object Snapshots {
     val filtered = if (pending.length == nParts) withPart
                    else withPart.where(col("part_id").isin(pending: _*))
 
-    val rowHash = hash(df.columns.map(col): _*).cast("long")
-    val obs = Observation()
+    val data = df.columns.toSeq.map(col)
+    // the row hash is Spark's `hash` over the data columns; `hash` refuses
+    // maps (equal maps can hash apart), so a top-level map column enters
+    // as its entries sorted by key
+    val hashed = df.schema.fields.toSeq.map(f => f.dataType match {
+      case _: MapType => array_sort(map_entries(col(f.name)))
+      case _ => col(f.name)
+    })
     // co-locate each logical partition into ONE writer task: without this,
     // every upstream task writes a file per part_id it sees (cores x nParts
-    // small files + commit objects — the file churn was 2-3 s of fixed wall
-    // per snapshot at 32 cores on tiny outputs). One file per partition,
-    // deterministic layout. At 100 TB output scale, add a salt column to
-    // the repartition key to widen write parallelism within a partition.
-    // The write lands under THIS snapshot's own dir (never touching earlier
+    // small files — the file churn was 2-3 s of fixed wall per snapshot at
+    // 32 cores on tiny outputs). One file per partition, deterministic
+    // layout. At 100 TB output scale, add a salt column to the repartition
+    // key to widen write parallelism within a partition. The data columns
+    // lead each row; part_id and the row hash trail them.
+    val plan = filtered.repartition(nParts, col("part_id"))
+      .select(data ++ Seq(col("part_id"), hash(hashed: _*).cast("long")): _*)
+    // the write lands under THIS snapshot's own dir (never touching earlier
     // snapshots' files — that immutability is what makes asOf reads and
-    // snapshot isolation work); dynamic overwrite within it keeps the
-    // crash-resume rewrite of a partially-written partition safe.
-    filtered.repartition(nParts, col("part_id"))
-      .observe(obs, udaf(new PartStats(nParts)).apply(col("part_id"), rowHash).as("stats"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part_id")
-      .parquet(s"$table/data/snap_id=$snapshotId")
-    // the write action completed, so this returns promptly
-    val stats = obs.get("stats").asInstanceOf[scala.collection.Seq[Long]]
-    val metas = pending.map(pid =>
-      PartitionMeta(snapshotId, pid, stats(2 * pid), stats(2 * pid + 1)))
+    // snapshot isolation work)
+    val files = DataFiles(spark, s"$table/data/snap_id=$snapshotId", df.schema)
+    val qe = plan.queryExecution
+    // one SQL execution per commit, as a Dataset action would be:
+    // listeners and the UI see the plan, and tasks see the session's confs
+    val writes = SQLExecution.withNewExecutionId(qe, Some(CommitExecution)) {
+      qe.toRdd.mapPartitions(rows =>
+        files.writeAttempt(TaskContext.get.taskAttemptId, rows).iterator).collect()
+    }
+    files.publish(pending, writes)
+    val byPart = writes.map(w => w.part -> w).toMap
+    val metas = pending.map(pid => byPart.get(pid).fold(PartitionMeta(snapshotId, pid, 0L, 0L))(
+      w => PartitionMeta(snapshotId, pid, w.rows, w.hashSum)))
     // metadata-scale rows: written directly by the driver (atomic publish),
     // not via a Spark job — see MetaParquet
     MetaParquet.appendLineage(partitionsDir(table), metas)
@@ -245,26 +266,101 @@ object Snapshots {
       java.time.Instant.now.toString, operation, nParts)
   }
 
-  /** Per-part (rows, lineage hash) of a snapshot write as one flat buffer
-    * of `2 * nParts` longs: slot `2p` counts part p's rows, slot `2p + 1`
-    * sums their row hashes (order-independent, so the lineage hash does not
-    * depend on task order). An empty input yields the zero buffer. */
-  private final class PartStats(nParts: Int)
-      extends Aggregator[(Int, Long), Array[Long], Array[Long]] {
-    def zero: Array[Long] = new Array[Long](2 * nParts)
-    def reduce(b: Array[Long], in: (Int, Long)): Array[Long] = {
-      b(2 * in._1) += 1L
-      b(2 * in._1 + 1) += in._2
-      b
+  /** The name of a commit's SQL execution, as listeners see it. */
+  private[graft] val CommitExecution = "writeSnapshot"
+
+  /** What one write task reports for one part: the attempt that wrote it,
+    * its row count and the sum of its row hashes (order-independent, so
+    * the lineage hash does not depend on row order). */
+  private[graft] final case class PartWrite(part: Int, attempt: Long, rows: Long, hashSum: Long)
+
+  /** The data files of one snapshot, under `snapDir/part_id=N/`: the task
+    * side writes attempt files, the driver side publishes the winners.
+    * Everything a task needs is in this small value — the schema, the
+    * codec and the SQL keys Spark's parquet write support reads — so a
+    * write task carries no Hadoop configuration. */
+  private[graft] final case class DataFiles(
+      snapDir: String, schema: StructType, codec: CompressionCodecName,
+      sqlConf: Map[String, String]) {
+
+    private def partDir(part: Int): Path = Paths.get(snapDir, s"part_id=$part")
+    private def attemptName(attempt: Long) = s".attempt-$attempt.inprogress"
+    /** The fixed name of a part's one published file. */
+    def fileName(part: Int): String = s"part-$part${codec.getExtension}.parquet"
+
+    /** Task side: writes each row (the `schema` columns, then the int part
+      * id and the long row hash) to its part's hidden attempt file,
+      * `part_id=N/.attempt-<attempt>.inprogress`, and returns one
+      * [[PartWrite]] per part seen. */
+    def writeAttempt(attempt: Long, rows: Iterator[InternalRow]): Seq[PartWrite] = {
+      final class Open(val part: Int) {
+        private val dir = partDir(part)
+        Files.createDirectories(dir)
+        val writer =
+          MetaParquet.rowWriter(dir.resolve(attemptName(attempt)), schema, codec, sqlConf)
+        var count = 0L
+        var hashSum = 0L
+      }
+      val k = schema.length
+      // the write support writes every field of the row it is given
+      val data = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        BoundReference(i, f.dataType, f.nullable) })
+      val open = scala.collection.mutable.LinkedHashMap.empty[Int, Open]
+      try rows.foreach { r =>
+        val part = r.getInt(k)
+        val o = open.getOrElseUpdate(part, new Open(part))
+        o.writer.write(data(r))
+        o.count += 1
+        o.hashSum += r.getLong(k + 1)
+      }
+      finally open.values.foreach(_.writer.close())
+      open.values.map(o => PartWrite(o.part, attempt, o.count, o.hashSum)).toSeq
     }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
+
+    /** Driver side: for each part in `pending`, deletes every entry of its
+      * dir but the winning attempt of `writes` (failed or duplicate
+      * attempts, a crashed run's files), then moves the winner to
+      * [[fileName]] with an ATOMIC_MOVE. A pending part no attempt wrote
+      * holds no rows and keeps no dir. */
+    def publish(pending: Seq[Int], writes: Seq[PartWrite]): Unit = {
+      val winner = writes.map(w => w.part -> attemptName(w.attempt)).toMap
+      pending.foreach { part =>
+        val dir = partDir(part)
+        val keep = winner.get(part)
+        entryNames(dir).filterNot(keep.contains)
+          .foreach(n => graft.FsUtil.rmTree(dir.resolve(n).toString))
+        keep match {
+          case Some(a) =>
+            Files.move(dir.resolve(a), dir.resolve(fileName(part)), StandardCopyOption.ATOMIC_MOVE)
+          case None => graft.FsUtil.rmTree(dir.toString)
+        }
+      }
     }
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  private[graft] object DataFiles {
+    /** The data files of `df`-shaped rows under `snapDir`, with the
+      * session's parquet codec and write confs read on the driver. The
+      * columns are written nullable, as Spark's file writer does. */
+    def apply(spark: SparkSession, snapDir: String, schema: StructType): DataFiles = {
+      val keys = Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+        .map(_.key)
+      val codec = CompressionCodecName.valueOf(ParquetOptions.getParquetCompressionCodecName(
+        spark.conf.get(SQLConf.PARQUET_COMPRESSION.key)))
+      DataFiles(Paths.get(snapDir).toAbsolutePath.toString,
+        nullable(schema).asInstanceOf[StructType], codec,
+        keys.map(k => k -> spark.conf.get(k)).toMap)
+    }
+
+    private def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
   }
 
   /** Atomic CURRENT pointer flip (idempotent). */

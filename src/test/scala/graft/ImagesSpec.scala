@@ -5,6 +5,7 @@ import graft.functions.GraftFunctions._
 import graft.operators.{Images, SpatialJoin}
 import graft.sources.Snapshots
 import org.apache.spark.grafttest.Bus
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -313,7 +314,7 @@ class ImagesSpec extends SparkTestBase {
       .map(_.getInt(0)).toSeq == Seq(0))
   }
 
-  test("wide snapshot: 256 parts take the one-job observed stats path, exact on resume") {
+  test("wide snapshot: 256 parts take the one-job stats path, exact on resume") {
     val dir = java.nio.file.Files.createTempDirectory("snap-wide").toString
     val n = 256
     val nRows = 20000
@@ -690,5 +691,88 @@ class ImagesSpec extends SparkTestBase {
     assert(Snapshots.currentSnapshot(t2).contains(1L))
     assert(Snapshots.readSnapshots(spark, t2).where(col("snapshot_id") === 1).count() == 1)
     assert(Snapshots.readData(spark, t2).count() == 200)
+  }
+
+  /** Entry names of a directory, sorted. */
+  private def entries(dir: String): Seq[String] = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+  }
+
+  test("commit protocol: two attempts at one part publish one file, the winner's") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = java.nio.file.Files.createTempDirectory("snap-attempts").toString
+    val files = Snapshots.DataFiles(spark, s"$dir/snap",
+      new StructType().add("k", LongType).add("v", StringType))
+    // (k, v) data columns, then the part id and the row hash
+    def rows(n: Int, tag: String) = (1 to n).iterator.map(i =>
+      InternalRow(i.toLong, UTF8String.fromString(s"$tag$i"), 3, 10L * i))
+    // a first attempt that lost (failed, or a speculative duplicate), then
+    // the attempt whose result the job kept
+    val lost = files.writeAttempt(7L, rows(5, "lost"))
+    val won = files.writeAttempt(8L, rows(3, "won"))
+    assert(lost == Seq(Snapshots.PartWrite(3, 7L, 5L, 150L)))
+    assert(won == Seq(Snapshots.PartWrite(3, 8L, 3L, 60L)))
+    assert(entries(s"$dir/snap/part_id=3") == Seq(".attempt-7.inprogress", ".attempt-8.inprogress"))
+    files.publish(Seq(3), won)
+    assert(entries(s"$dir/snap/part_id=3") == Seq(files.fileName(3)),
+      "exactly one visible file and no hidden file")
+    val back = spark.read.parquet(s"$dir/snap/part_id=3").as[(Long, String)].collect().sorted.toSeq
+    assert(back == (1 to 3).map(i => (i.toLong, s"won$i")))
+  }
+
+  test("commit protocol: resume over a stale visible file and a hidden attempt file") {
+    val dir = java.nio.file.Files.createTempDirectory("snap-stale").toString
+    val t = s"$dir/t"
+    val input = (1 to 400).map(i => (i.toLong, s"v$i"))
+    val df = input.toDF("k", "v")
+    // run 1 commits parts 0-1 of 4, then crashes while writing part 2: its
+    // dir holds a visible file (a copy of part 0's, whose rows would be
+    // read twice if it survived) and a torn hidden attempt file
+    Snapshots.writeSnapshot(spark, df, t, snapshotId = 1L, nParts = 4, keyCol = "k",
+      portableParts = true, maxPartsPerRun = 2)
+    val part0 = java.nio.file.Paths.get(s"$t/data/snap_id=1/part_id=0")
+    val part2 = java.nio.file.Paths.get(s"$t/data/snap_id=1/part_id=2")
+    java.nio.file.Files.createDirectories(part2)
+    java.nio.file.Files.copy(part0.resolve(entries(part0.toString).head),
+      part2.resolve("part-2.stale.parquet"))
+    java.nio.file.Files.write(part2.resolve(".attempt-99.inprogress"), Array[Byte](1, 2, 3))
+    val m = Snapshots.writeSnapshot(spark, df, t, snapshotId = 1L, nParts = 4, keyCol = "k",
+      portableParts = true)
+    assert(m.map(_.rowCount).sum == 400)
+    (0 until 4).foreach { p =>
+      val names = entries(s"$t/data/snap_id=1/part_id=$p")
+      assert(names.size == 1 && !names.head.startsWith("."), s"part $p holds $names")
+    }
+    val back = Snapshots.readData(spark, t).select("k", "v").as[(Long, String)].collect().sorted.toSeq
+    assert(back == input)
+  }
+
+  test("snapshot data files round-trip every column type like a plain parquet write") {
+    val dir = java.nio.file.Files.createTempDirectory("snap-types").toString
+    val df = spark.sql("""
+      SELECT id,
+        IF(id % 5 = 0, NULL, CAST(id AS INT)) AS i,
+        IF(id % 5 = 1, NULL, CAST(id AS DOUBLE) / 3) AS d,
+        IF(id % 5 = 2, NULL, CAST(id AS DECIMAL(18, 4)) / 8) AS dec,
+        IF(id % 5 = 3, NULL, CONCAT('s', id)) AS s,
+        IF(id % 5 = 4, NULL, CAST(CONCAT('b', id) AS BINARY)) AS b,
+        IF(id % 7 = 0, NULL, DATE_ADD(DATE'2020-01-01', CAST(id AS INT))) AS dt,
+        IF(id % 7 = 1, NULL, TIMESTAMP_SECONDS(1600000000 + id * 3600)) AS ts,
+        IF(id % 7 = 2, NULL, ARRAY(id, IF(id % 2 = 0, NULL, id + 1))) AS arr,
+        IF(id % 7 = 3, NULL, NAMED_STRUCT('a', id, 's', IF(id % 2 = 0, NULL, CONCAT('x', id)))) AS st,
+        IF(id % 7 = 4, NULL, MAP(CONCAT('k', id), IF(id % 2 = 0, NULL, id))) AS m
+      FROM RANGE(0, 60)""")
+    Snapshots.writeSnapshot(spark, df, s"$dir/t", snapshotId = 1L, nParts = 4, keyCol = "id")
+    df.write.parquet(s"$dir/plain")
+    val got = Snapshots.readData(spark, s"$dir/t").drop("part_id")
+    val want = spark.read.parquet(s"$dir/plain")
+    assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
+    def json(f: DataFrame) = f.withColumn("b", hex(col("b")))
+      .select(to_json(struct(col("*")))).as[String].collect().sorted.toSeq
+    assert(json(got) == json(want))
+    assert(json(got).size == 60)
   }
 }
