@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -73,18 +73,20 @@ private[sources] object MetaParquet {
     c
   }
 
-  /** A writer of Spark rows to the new local file `path`, through Spark's
+  /** A writer of Spark rows to the local file `path`, through Spark's
     * own `ParquetWriteSupport`: the footer carries the Spark schema, so
     * `spark.read.parquet` reads back exactly `schema`'s types. `sqlConf`
     * holds the SQL keys the write support reads. This is the write path of
     * the snapshot DATA files, called in write tasks; it opens the file
-    * with `java.nio` and no Hadoop filesystem. */
+    * with `java.nio` and no Hadoop filesystem, and replaces a file left at
+    * `path` (a crashed attempt's) rather than failing on it. */
   def rowWriter(path: Path, schema: StructType, codec: CompressionCodecName,
                 sqlConf: Map[String, String]): ParquetWriter[InternalRow] = {
     val c = new Configuration(false)
     sqlConf.foreach { case (k, v) => c.set(k, v) }
     ParquetWriteSupport.setSchema(schema, c)
-    new RowWriterBuilder(new LocalOutputFile(path)).withConf(c).withCompressionCodec(codec).build()
+    new RowWriterBuilder(new LocalOutputFile(path)).withConf(c).withCompressionCodec(codec)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
   }
 
   private final class RowWriterBuilder(file: OutputFile)

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.execution.SQLExecution
@@ -173,13 +173,8 @@ object Snapshots {
                    else withPart.where(col("part_id").isin(pending: _*))
 
     val data = df.columns.toSeq.map(col)
-    // the row hash is Spark's `hash` over the data columns; `hash` refuses
-    // maps (equal maps can hash apart), so a top-level map column enters
-    // as its entries sorted by key
-    val hashed = df.schema.fields.toSeq.map(f => f.dataType match {
-      case _: MapType => array_sort(map_entries(col(f.name)))
-      case _ => col(f.name)
-    })
+    // the row hash is Spark's `hash` over the data columns ([[hashable]])
+    val hashed = df.schema.fields.toSeq.map(f => hashable(col(f.name), f.dataType))
     // co-locate each logical partition into ONE writer task: without this,
     // every upstream task writes a file per part_id it sees (cores x nParts
     // small files — the file churn was 2-3 s of fixed wall per snapshot at
@@ -266,6 +261,30 @@ object Snapshots {
       java.time.Instant.now.toString, operation, nParts)
   }
 
+  /** `c` as Spark's `hash` takes it. `hash` refuses maps (equal maps can
+    * hash apart), so every map, at any depth, enters as its entries sorted
+    * by key; a column with no map in its type is left as it is, so the
+    * hash of a map-free table does not depend on this rewrite. */
+  private def hashable(c: Column, t: DataType): Column = t match {
+    case _ if !hasMap(t) => c
+    case m: MapType =>
+      val entries = map_entries(c)
+      array_sort(if (!hasMap(m.valueType)) entries
+        else transform(entries, e =>
+          struct(e.getField("key").as("key"), hashable(e.getField("value"), m.valueType).as("value"))))
+    case a: ArrayType => transform(c, hashable(_, a.elementType))
+    case s: StructType =>
+      // a null struct stays null, not a struct of nulls
+      when(c.isNotNull, struct(s.fields.toSeq.map(f => hashable(c.getField(f.name), f.dataType).as(f.name)): _*))
+  }
+
+  private def hasMap(t: DataType): Boolean = t match {
+    case _: MapType => true
+    case a: ArrayType => hasMap(a.elementType)
+    case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+    case _ => false
+  }
+
   /** The name of a commit's SQL execution, as listeners see it. */
   private[graft] val CommitExecution = "writeSnapshot"
 
@@ -281,16 +300,20 @@ object Snapshots {
     * write task carries no Hadoop configuration. */
   private[graft] final case class DataFiles(
       snapDir: String, schema: StructType, codec: CompressionCodecName,
-      sqlConf: Map[String, String]) {
+      sqlConf: Map[String, String], token: String) {
 
     private def partDir(part: Int): Path = Paths.get(snapDir, s"part_id=$part")
-    private def attemptName(attempt: Long) = s".attempt-$attempt.inprogress"
+    /** The hidden file attempt `attempt` writes. Task attempt ids restart
+      * at 0 in every SparkContext, so the name also carries this commit's
+      * `token`: a resume in a new context never opens a crashed run's file
+      * (and [[MetaParquet.rowWriter]] would replace it if it did). */
+    def attemptName(attempt: Long): String = s".attempt-$token-$attempt.inprogress"
     /** The fixed name of a part's one published file. */
     def fileName(part: Int): String = s"part-$part${codec.getExtension}.parquet"
 
     /** Task side: writes each row (the `schema` columns, then the int part
       * id and the long row hash) to its part's hidden attempt file,
-      * `part_id=N/.attempt-<attempt>.inprogress`, and returns one
+      * `part_id=N/`[[attemptName]], and returns one
       * [[PartWrite]] per part seen. */
     def writeAttempt(attempt: Long, rows: Iterator[InternalRow]): Seq[PartWrite] = {
       final class Open(val part: Int) {
@@ -340,8 +363,9 @@ object Snapshots {
 
   private[graft] object DataFiles {
     /** The data files of `df`-shaped rows under `snapDir`, with the
-      * session's parquet codec and write confs read on the driver. The
-      * columns are written nullable, as Spark's file writer does. */
+      * session's parquet codec and write confs read on the driver and a
+      * fresh random token for the attempt file names. The columns are
+      * written nullable, as Spark's file writer does. */
     def apply(spark: SparkSession, snapDir: String, schema: StructType): DataFiles = {
       val keys = Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
         SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
@@ -350,7 +374,7 @@ object Snapshots {
         spark.conf.get(SQLConf.PARQUET_COMPRESSION.key)))
       DataFiles(Paths.get(snapDir).toAbsolutePath.toString,
         nullable(schema).asInstanceOf[StructType], codec,
-        keys.map(k => k -> spark.conf.get(k)).toMap)
+        keys.map(k => k -> spark.conf.get(k)).toMap, java.util.UUID.randomUUID.toString)
     }
 
     private def nullable(t: DataType): DataType = t match {

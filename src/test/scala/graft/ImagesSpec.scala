@@ -715,12 +715,43 @@ class ImagesSpec extends SparkTestBase {
     val won = files.writeAttempt(8L, rows(3, "won"))
     assert(lost == Seq(Snapshots.PartWrite(3, 7L, 5L, 150L)))
     assert(won == Seq(Snapshots.PartWrite(3, 8L, 3L, 60L)))
-    assert(entries(s"$dir/snap/part_id=3") == Seq(".attempt-7.inprogress", ".attempt-8.inprogress"))
+    assert(entries(s"$dir/snap/part_id=3") == Seq(files.attemptName(7L), files.attemptName(8L)).sorted)
     files.publish(Seq(3), won)
     assert(entries(s"$dir/snap/part_id=3") == Seq(files.fileName(3)),
       "exactly one visible file and no hidden file")
     val back = spark.read.parquet(s"$dir/snap/part_id=3").as[(Long, String)].collect().sorted.toSeq
     assert(back == (1 to 3).map(i => (i.toLong, s"won$i")))
+  }
+
+  test("commit protocol: an attempt file left at the very name a task writes is replaced") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = java.nio.file.Files.createTempDirectory("snap-leftover").toString
+    val files = Snapshots.DataFiles(spark, s"$dir/snap",
+      new StructType().add("k", LongType).add("v", StringType))
+    // a killed process left a torn file where attempt 0 of part 1 writes
+    // (task attempt ids restart at 0 in every SparkContext)
+    val part1 = java.nio.file.Paths.get(s"$dir/snap/part_id=1")
+    java.nio.file.Files.createDirectories(part1)
+    java.nio.file.Files.write(part1.resolve(files.attemptName(0L)), Array[Byte](1, 2, 3))
+    val input = (1 to 50).map(i => (i.toLong, s"v$i"))
+    val writes = files.writeAttempt(0L, input.iterator.map { case (k, v) =>
+      InternalRow(k, UTF8String.fromString(v), 1, k) })
+    assert(writes == Seq(Snapshots.PartWrite(1, 0L, 50L, (1 to 50).sum.toLong)))
+    files.publish(Seq(1), writes)
+    assert(entries(part1.toString) == Seq(files.fileName(1)))
+    val back = spark.read.parquet(part1.toString).as[(Long, String)].collect().sorted.toSeq
+    assert(back == input)
+  }
+
+  test("commit protocol: two commits of one snapshot name their attempt files apart") {
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val schema = new StructType().add("k", LongType)
+    val a = Snapshots.DataFiles(spark, "/unused", schema)
+    val b = Snapshots.DataFiles(spark, "/unused", schema)
+    assert(a.attemptName(0L) != b.attemptName(0L))
+    assert(a.attemptName(0L).startsWith(".") && a.attemptName(0L).endsWith(".inprogress"))
   }
 
   test("commit protocol: resume over a stale visible file and a hidden attempt file") {
@@ -774,5 +805,33 @@ class ImagesSpec extends SparkTestBase {
       .select(to_json(struct(col("*")))).as[String].collect().sorted.toSeq
     assert(json(got) == json(want))
     assert(json(got).size == 60)
+  }
+
+  test("snapshot commits maps nested in structs, arrays and maps; equal maps hash alike") {
+    val dir = java.nio.file.Files.createTempDirectory("snap-nested-maps").toString
+    // the same rows twice, every map built in the other key order
+    def frame(flip: Boolean) = {
+      def m(a: String, b: String) = if (flip) s"MAP($b, $a)" else s"MAP($a, $b)"
+      def kv(k: String, v: String) = s"$k, $v"
+      spark.sql(s"""
+        SELECT id,
+          IF(id % 4 = 0, NULL, NAMED_STRUCT('m', ${m(kv("'a'", "id"), kv("'b'", "id + 1"))})) AS sm,
+          ARRAY(${m(kv("'x'", "id"), kv("'y'", "NULL"))}, NULL) AS am,
+          ${m(kv("'p'", s"${m(kv("'q'", "id"), kv("'r'", "2"))}"), kv("'s'", "NULL"))} AS mm
+        FROM RANGE(0, 40)""")
+    }
+    val m1 = Snapshots.writeSnapshot(spark, frame(flip = false), s"$dir/a", snapshotId = 1L,
+      nParts = 3, keyCol = "id", portableParts = true)
+    val m2 = Snapshots.writeSnapshot(spark, frame(flip = true), s"$dir/b", snapshotId = 1L,
+      nParts = 3, keyCol = "id", portableParts = true)
+    assert(m1.map(_.rowCount).sum == 40)
+    assert(m1.map(m => (m.partId, m.rowCount, m.lineageHash)).sorted ==
+      m2.map(m => (m.partId, m.rowCount, m.lineageHash)).sorted)
+    frame(flip = false).write.parquet(s"$dir/plain")
+    val got = Snapshots.readData(spark, s"$dir/a").drop("part_id")
+    val want = spark.read.parquet(s"$dir/plain")
+    assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
+    def json(f: DataFrame) = f.select(to_json(struct(col("*")))).as[String].collect().sorted.toSeq
+    assert(json(got) == json(want))
   }
 }
