@@ -15,9 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * bit-deterministic across engines and partitionings (and therefore
   * oracle-checkable in DuckDB).
   *
-  * All per-pair arithmetic runs through the codegen'd [[graft.functions.vecexprs]]
-  * kernels (vec_dot / vec_norm2) — a tight primitive loop per pair, not an
-  * interpreted higher-order function.
+  * All per-pair arithmetic is a tight primitive loop per pair, not an
+  * interpreted higher-order function: the codegen'd [[graft.functions.vecexprs]]
+  * kernels (vec_dot / vec_norm2) in the SQL plans, and the same loops in
+  * [[cosineDupPairs]]' RDD compare.
   *
   *  - [[bruteTopK]]: exact top-k by squared euclidean on the quantized
   *    vectors; the correctness baseline. One broadcast of the (small) query
@@ -26,18 +27,22 @@ import org.apache.spark.storage.StorageLevel
   *    into sign-bit buckets, queries probe their bucket (plus multi-probe
   *    neighbors at hamming distance 1); candidates are re-ranked exactly.
   *    The approximate scale path for HIGH similarity thresholds / top-k.
-  *  - [[cosineDupPairs]]: EXACT cosine-threshold self-join via a block-pair
-  *    decomposition (the 1-Bucket-Theta shape of Okcan & Riedewald,
-  *    SIGMOD'11): n rows are hashed into B blocks, each unordered block
-  *    pair (i<=j) becomes one join key, and each reducer compares only its
-  *    (n/B)^2 pair square. No side is ever broadcast whole; replication is
-  *    O(B) rows per input row, reducers are uniform by construction (hash
-  *    blocks, not data-dependent buckets), and B scales with cluster size.
-  *    Exactness matters here: the synthetic corpus plants near-dup pairs
-  *    within 1e-4 of the 0.4 threshold, so NO LSH family has usable recall
-  *    at that margin — an exact-verify-everything plan with a fast kernel
-  *    is the only design that matches the oracle, and the blocked shape is
-  *    how it distributes at 10^12 rows.
+  *  - [[cosineDupPairs]]: EXACT cosine-threshold self-join on
+  *    [[Dedup.blockPairs]], the block-pair decomposition of the
+  *    1-Bucket-Theta join (Okcan & Riedewald, SIGMOD'11) as one RDD job:
+  *    n rows are hashed into B blocks, each unordered block pair (i<=j)
+  *    is one sort key, and each key compares only its (n/B)^2 pair square.
+  *    No side is ever broadcast whole; each row is sent B times, block
+  *    pairs are uniform by construction (hash blocks, not data-dependent
+  *    buckets), and B scales with cluster size. Exactness matters here:
+  *    the synthetic corpus plants near-dup pairs within 1e-4 of the 0.4
+  *    threshold, so NO LSH family has usable recall at that margin — an
+  *    exact-verify-everything plan with a tight kernel is the only design
+  *    that matches the oracle, and the blocked shape is how it
+  *    distributes at 10^12 rows.
+  *
+  * [[ivfTopK]] is the one operator whose returned plan reads persisted
+  * frames; see its lifecycle note.
   */
 object Ann {
 
@@ -164,7 +169,8 @@ object Ann {
     * Dataset-level persist is held by the session CacheManager until an
     * explicit `spark.catalog.clearCache()` / uncache (NOT freed by GC), so
     * one-shot jobs are unaffected but long-lived sessions should clear
-    * between batches. */
+    * between batches. This is the only operator with that contract: the
+    * pair operators of [[Dedup]] and [[cosineDupPairs]] cache nothing. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               maxCentroids: Int = 4096, nProbe: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
@@ -256,44 +262,36 @@ object Ann {
   /** Embedding-cosine near-duplicate pairs (quantized, exact arithmetic):
     * cos = dot/(|a||b|); compared via dot^2 >= t^2 * |a|^2 |b|^2 in exact
     * integer math (no sqrt), so the threshold decision is deterministic.
+    * The arithmetic is `vec_dot`'s and `vec_norm2`'s, in their order:
+    * `dot > 0 && dot * dot >= (t * t) * n2(id_a) * n2(id_b)` in IEEE
+    * doubles, id_a the smaller id.
     *
-    * Plan shape (scales to any corpus size — nothing is broadcast whole):
-    *   1. one narrow pass attaches (quantized vec, norm2, block = hash % B);
-    *   2. each row is shipped to the block pairs it participates in
-    *      (row with block b goes LEFT for keys (b, j>=b), RIGHT for keys
-    *      (i<=b, b)) — replication factor B+1, a shuffle of skinny
-    *      (key, id, vec) rows;
-    *   3. one shuffle join on the (ba, bb) key; inside each of the
-    *      B(B+1)/2 uniform reducers the codegen'd vec_dot kernel verifies
-    *      each pair exactly. Each unordered pair of rows meets EXACTLY once
-    *      (off-diagonal keys see it once by construction; the diagonal
-    *      filters id_l < id_r), so no dedup shuffle is needed.
-    * B defaults to ~sqrt(4 * parallelism) so the B(B+1)/2 reducers track
-    * cluster size without caller tuning (work per reducer is (n/B)^2 dots);
-    * the output row SET is identical at every B. */
-  def cosineDupPairs(corpus: DataFrame, threshold: Double, blocks: Int = 0): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val b = Dedup.ThetaBlocks.resolve(spark, blocks)
-    // persisted: the quantize+norm pass feeds BOTH sides of the block-pair
-    // self-join and was planned twice (r6, same CacheManager lifecycle
-    // contract as the Dedup signature frames)
-    val c = quantize(corpus, "vec_id", "v")
-      .withColumn("n2", vec_norm2(col("v")))
-      .withColumn("blk", pmod(hash(col("vec_id")), lit(b)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val blockPairs = (for { i <- 0 until b; j <- i until b } yield (i, j))
-      .toDF("ba", "bb")
-    val lhs = c.join(broadcast(blockPairs), col("blk") === col("ba"))
-      .select(col("ba"), col("bb"), col("vec_id").as("id_l"), col("v").as("vl"), col("n2").as("nl"))
-    val rhs = c.join(broadcast(blockPairs), col("blk") === col("bb"))
-      .select(col("ba"), col("bb"), col("vec_id").as("id_r"), col("v").as("vr"), col("n2").as("nr"))
-    val t2 = threshold * threshold
-    lhs.join(rhs, Seq("ba", "bb"))
-      .where(col("ba") =!= col("bb") || col("id_l") < col("id_r"))
-      .withColumn("dot", vec_dot(col("vl"), col("vr")))
-      .where(col("dot") > 0 && col("dot") * col("dot") >= lit(t2) * col("nl") * col("nr"))
-      .select(least(col("id_l"), col("id_r")).as("id_a"),
-        greatest(col("id_l"), col("id_r")).as("id_b"))
+    * Execution: the vectors are quantized in SQL ([[quantExpr]]) and leave
+    * it as (id, [norm2, components...]) rows of raw double bits, which meet
+    * in [[Dedup.blockPairs]]: one RDD job per action, nothing broadcast
+    * whole, no generated code between the input and output plans and no
+    * cache. Every unordered pair of rows is compared exactly once, in one
+    * of the B(B+1)/2 block pairs, B from [[Dedup.thetaBlocks]].
+    *
+    * Contract: `vec_id` is integral (the output ids keep its type; any
+    * other type is refused). A null id or vector names no document.
+    * Returns (id_a, id_b) with id_a < id_b. */
+  def cosineDupPairs(corpus: DataFrame, threshold: Double): DataFrame = {
+    val idType = Dedup.integralId(corpus.schema("vec_id").dataType, "cosineDupPairs")
+    import java.lang.Double.{doubleToRawLongBits => bits, longBitsToDouble => dbl}
+    // (id, [norm2, components...]) as raw double bits, the norm summed in
+    // vec_norm2's order
+    val vecs = Dedup.nonNullRows(quantize(corpus, "vec_id", "v"), col("vec_id").cast("long"), col("v")) { r =>
+      val v = r.getArray(1).toDoubleArray()
+      Some((r.getLong(0), (v.foldLeft(0.0)((s, x) => s + x * x) +: v).map(bits)))
+    }
+    val pairs = Dedup.blockPairs(vecs, Dedup.shufflePartitioner(corpus),
+        Dedup.thetaBlocks(corpus.sparkSession)) { (x, y) =>
+      var dot = 0.0
+      var i = 1
+      while (i < math.min(x.length, y.length)) { dot += dbl(x(i)) * dbl(y(i)); i += 1 }
+      dot > 0 && dot * dot >= threshold * threshold * dbl(x(0)) * dbl(y(0))
+    }
+    Dedup.pairFrame(pairs, corpus.sparkSession, idType)
   }
 }

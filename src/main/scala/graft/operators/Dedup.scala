@@ -5,41 +5,33 @@ import graft.functions.GraftFunctions._
 import graft.functions.textexprs
 import org.apache.spark.{HashPartitioner, SortedRuns}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for training-data curation at 100 TB scale.
-  * Exact dedup is one hash-groupBy shuffle and the small-vocabulary
-  * Jaccard plan ([[jaccardPairsDict]]) a DataFrame pipeline. The LSH
-  * variants ([[minhashPairs]], [[simhashPairs]], both on [[bandedPairs]]),
-  * the exact Jaccard prefix join ([[jaccardPairsPrefix]]) and the
-  * iterative grouping stage ([[dedupGroups]]) run on RDD pair operators
-  * over one `HashPartitioner`: one job each instead of one
-  * adaptive-execution job per exchange, no generated code and no cache
-  * (see there). Candidate generation is bounded by bucketing (band
-  * buckets, prefix tokens), so the pairwise verify only runs inside
-  * buckets, never all-pairs; the key-sorted shuffles sort on Spark's
-  * spillable Tungsten sorter ([[org.apache.spark.SortedRuns]]).
+  * Exact dedup is one hash-groupBy shuffle. Every pair operator runs on
+  * RDD pair operators over one `HashPartitioner`: one job each instead of
+  * one adaptive-execution job per exchange, no generated code and no
+  * cache. The LSH variants ([[minhashPairs]], [[simhashPairs]]) search
+  * band buckets ([[bandedPairs]]), the exact Jaccard prefix join
+  * ([[jaccardPairsPrefix]]) prefix-token posting lists, and the
+  * small-vocabulary Jaccard route ([[jaccardPairsDict]]) and
+  * [[graft.operators.Ann.cosineDupPairs]] hash blocks ([[blockPairs]]).
+  * The iterative grouping stage ([[dedupGroups]]) runs on the same RDD
+  * operators, one job per round (see there). Candidate generation is
+  * bounded by bucketing (band buckets, prefix tokens, block pairs), so the
+  * pairwise verify only runs inside a bucket or a block pair; the
+  * key-sorted shuffles sort on Spark's spillable Tungsten sorter
+  * ([[org.apache.spark.SortedRuns]]).
   */
 object Dedup {
-
-  /** Shared block-count policy for the 1-Bucket-Theta self-joins
-    * ([[jaccardPairsDict]], [[graft.operators.Ann.cosineDupPairs]]):
-    * B = ceil(sqrt(4 * defaultParallelism)), so the B(B+1)/2 uniform
-    * reducers number ~2x the available slots at ANY cluster size without
-    * caller tuning. Replication per input row is B+1; the output row set is
-    * invariant in B (each unordered pair still meets exactly once). */
-  object ThetaBlocks {
-    def resolve(spark: org.apache.spark.sql.SparkSession, requested: Int): Int =
-      if (requested > 0) requested
-      else math.max(4,
-        math.ceil(math.sqrt(4.0 * spark.sparkContext.defaultParallelism)).toInt)
-  }
 
   /** See [[graft.ParUtil.widen]] — every signature/tokenize entry point
     * widens its source before the CPU-heavy narrow pass. */
@@ -114,9 +106,7 @@ object Dedup {
     }
     // (id, 0L) per node row: the key set of the two semi-joins, and the
     // rows that get the final labels
-    val nodeRows = nodes.select(col(idCol).cast("long")).queryExecution.toRdd
-      .flatMap(r => if (r.isNullAt(0)) Iterator.empty else Iterator((r.getLong(0), 0L)))
-      .partitionBy(part)
+    val nodeRows = nonNullRows(nodes, col(idCol).cast("long"))(r => Some((r.getLong(0), 0L))).partitionBy(part)
     // Every join below zips two RDDs partitioned by `part` (partition i of
     // one holds exactly the keys of partition i of the other) and builds a
     // LongMap of the pair- or label-sized side.
@@ -146,13 +136,10 @@ object Dedup {
     // near-dup pipeline (minhash signatures + band join for q51), and every
     // round reads the edge list.
     val edges = keepNodes(keepNodes(
-        pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-          .queryExecution.toRdd
-          .flatMap { r =>
-            if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-            else { val (a, b) = (r.getLong(0), r.getLong(1)); Iterator((a, b), (b, a)) }
-          }
-          .partitionBy(part))
+        nonNullRows(pairs, col("id_a").cast("long"), col("id_b").cast("long")) { r =>
+          val (a, b) = (r.getLong(0), r.getLong(1))
+          Iterator((a, b), (b, a))
+        }.partitionBy(part))
         .map(_.swap).partitionBy(part))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // seed = the first neighbor-min round: min(neighbors ∪ self), a narrow
@@ -219,7 +206,7 @@ object Dedup {
       if (sh.isEmpty) None else Some((id, textexprs.minhashOf(sh, numHashes)))
     }
     pairFrame(minhashSigPairs(sigs, shufflePartitioner(df), numHashes, bands, threshold),
-      df.sparkSession, "est_jaccard", idType)
+      df.sparkSession, idType, "est_jaccard")
   }
 
   /** The pairs of [[minhashPairs]] over (id, numHashes-long signature)
@@ -265,7 +252,7 @@ object Dedup {
     val pairs = bandedPairs(sigs, shufflePartitioner(df))(
         sig => Array.tabulate(4)(b => (b.toLong << 15) | ((sig(0) >>> (15 * b)) & 32767L)))(
         (x, y) => java.lang.Long.bitCount(x(2) ^ y(2)))(_ <= maxHamming)
-    pairFrame(pairs, df.sparkSession, "hamming", idType)
+    pairFrame(pairs, df.sparkSession, idType, "hamming")
   }
 
   /** The banded-bucket pair search of [[minhashPairs]] and
@@ -326,6 +313,56 @@ object Dedup {
     }
   }
 
+  /** The block-pair pair search of [[jaccardPairsDict]] and
+    * [[graft.operators.Ann.cosineDupPairs]], the 1-Bucket-Theta shape of
+    * Okcan and Riedewald (SIGMOD'11) as one lazy pipeline of RDD operators
+    * over one `HashPartitioner`. Each (id, payload) row falls in block
+    * b = mix64(id) mod `blocks` and is sent to the `blocks` keys of the
+    * unordered block pairs (min(b, j), max(b, j)); the entries are sorted
+    * by key ([[org.apache.spark.SortedRuns]]) and each run compares its
+    * lower block's rows with its upper block's, or, on a diagonal key, each
+    * two of its rows once. So every unordered pair of rows meets exactly
+    * once, at any `blocks`, and no dedup shuffle follows. A pair is kept
+    * when `keep(payload of the smaller id, payload of the larger id)`;
+    * returns (smaller id, larger id), and rows with equal ids never pair.
+    * A run holds the rows of its two blocks while it compares them (the
+    * compares are quadratic in them either way); the sort spills. */
+  private[graft] def blockPairs(rows: RDD[(Long, Array[Long])], part: HashPartitioner, blocks: Int)(
+      keep: (Array[Long], Array[Long]) => Boolean): RDD[(Long, Long)] = {
+    // dense key of the block pair (lo <= hi), so consecutive keys spread
+    // over the partitions
+    def key(lo: Int, hi: Int): Long = lo.toLong * blocks - lo.toLong * (lo - 1) / 2 + (hi - lo)
+    val entries = rows.flatMap { case (id, v) =>
+      val b = java.lang.Math.floorMod(textexprs.mix64(id), blocks.toLong).toInt
+      val e = Array(b.toLong, id) ++ v // [block, id, payload...]
+      Iterator.tabulate(blocks)(j => (key(math.min(b, j), math.max(b, j)), e))
+    }
+    SortedRuns.byKey(entries, part).mapPartitions { it =>
+      runs(it).flatMap { case (k, vs) =>
+        val group = vs.toArray.sortBy(_(0))
+        val (n, ids, payloads) = (group.length, group.map(_(1)), group.map(_.drop(2)))
+        val lo = group(0)(0).toInt
+        val diagonal = k == key(lo, lo)
+        // off the diagonal, the lower block's rows meet the upper block's,
+        // from its first row on (-1, meeting none, if that block is empty)
+        val upper = if (diagonal) 0 else group.indexWhere(_(0) != lo)
+        Iterator.range(0, if (diagonal) n else upper).flatMap { i =>
+          Iterator.range(if (diagonal) i + 1 else upper, n).flatMap { j =>
+            val (s, l) = if (ids(i) < ids(j)) (i, j) else (j, i)
+            if (ids(s) != ids(l) && keep(payloads(s), payloads(l))) Some((ids(s), ids(l))) else None
+          }
+        }
+      }
+    }
+  }
+
+  /** Block count of [[blockPairs]]: B = max(4, ceil(sqrt(4 *
+    * defaultParallelism))), so the B(B+1)/2 block pairs number about twice
+    * the task slots at any cluster size without caller tuning. Each row is
+    * sent B times; the output is the same at every B. */
+  private[graft] def thetaBlocks(spark: SparkSession): Int =
+    math.max(4, math.ceil(math.sqrt(4.0 * spark.sparkContext.defaultParallelism)).toInt)
+
   /** (id, text) rows of `df` for the signature operators, spread over at
     * least `defaultParallelism` partitions by an id-hashed `partitionBy`:
     * [[widen]] at the RDD level, so building the rows runs no job (a
@@ -335,15 +372,15 @@ object Dedup {
   private def docTexts(df: DataFrame, idCol: String, textCol: String,
                        op: String): (RDD[(Long, String)], DataType) = {
     val idType = integralId(df.schema(idCol).dataType, op)
-    val rows = df.select(col(idCol).cast("long"), col(textCol).cast("string")).queryExecution.toRdd
-      .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None else Some((r.getLong(0), r.getString(1))))
+    val rows = nonNullRows(df, col(idCol).cast("long"), col(textCol).cast("string"))(
+      r => Some((r.getLong(0), r.getString(1))))
     val par = df.sparkSession.sparkContext.defaultParallelism
     (if (rows.getNumPartitions >= par) rows else rows.partitionBy(new HashPartitioner(par)), idType)
   }
 
   /** `t`, if it is an integral type: the id types the RDD operators carry
     * as `Long` and cast back. */
-  private def integralId(t: DataType, op: String): DataType = {
+  private[operators] def integralId(t: DataType, op: String): DataType = {
     require(Seq(LongType, IntegerType, ShortType, ByteType).contains(t),
       s"$op needs an integral id column, got ${t.simpleString}")
     t
@@ -351,16 +388,16 @@ object Dedup {
 
   /** The `HashPartitioner` of the RDD operators: the session's shuffle
     * partition count. */
-  private def shufflePartitioner(df: DataFrame): HashPartitioner =
+  private[operators] def shufflePartitioner(df: DataFrame): HashPartitioner =
     new HashPartitioner(df.sparkSession.sessionState.conf.numShufflePartitions)
 
-  /** (id_a, id_b, `scoreCol`) rows of an RDD operator's pairs, the ids
-    * cast back to `idType`. */
-  private def pairFrame[T: TypeTag](pairs: RDD[(Long, Long, T)], spark: SparkSession,
-                                    scoreCol: String, idType: DataType): DataFrame = {
-    val out = spark.createDataFrame(pairs).toDF("id_a", "id_b", scoreCol)
+  /** (id_a, id_b, `scoreCols`...) rows of an RDD operator's pairs, the
+    * ids cast back to `idType`. */
+  private[operators] def pairFrame[P <: Product: TypeTag](pairs: RDD[P], spark: SparkSession,
+                                                          idType: DataType, scoreCols: String*): DataFrame = {
+    val out = spark.createDataFrame(pairs).toDF("id_a" +: "id_b" +: scoreCols: _*)
     if (idType == LongType) out
-    else out.select(col("id_a").cast(idType), col("id_b").cast(idType), col(scoreCol))
+    else out.select(col("id_a").cast(idType) +: col("id_b").cast(idType) +: scoreCols.map(col): _*)
   }
 
   /** Exact word-set Jaccard similar pairs. Adaptive: one cheap probe
@@ -370,14 +407,16 @@ object Dedup {
     *    category / template corpora): [[jaccardPairsDict]] — token sets
     *    dictionary-encoded into a single 64-bit mask, identical masks
     *    collapsed, and mask pairs compared with one popcount each in a
-    *    blocked self-join. Per-pair cost is two bit-ops instead of a
+    *    block-pair search. Per-pair cost is two bit-ops instead of a
     *    sorted-array merge, and duplicate masks pay once.
     *  - otherwise: [[jaccardPairsPrefix]] — PPJoin-style prefix filter.
     *
-    * Tokens are carried as 64-bit `xxhash64` values (see [[tokenSets]]),
-    * the same sorted-long representation as [[ngramJaccardPairs]]. The
-    * probe is one job that caches nothing; the chosen plan tokenizes
-    * again (the dict plan caches its masks, see [[jaccardPairsDict]]). */
+    * Both routes are one RDD job per action that caches nothing, and
+    * return the same pairs: (smaller id, larger id, jaccard), a null id or
+    * text naming no document. Tokens are carried as 64-bit `xxhash64`
+    * values (see [[tokenSets]]), the same sorted-long representation as
+    * [[ngramJaccardPairs]]. The probe is one job that caches nothing; the
+    * chosen plan tokenizes again. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, minTokenLen: Int = 0): DataFrame =
     adaptiveJaccard(tokenSets(df, idCol, textCol, minTokenLen), threshold)
@@ -427,8 +466,8 @@ object Dedup {
     * stopped early, so it is the whole vocabulary and the route is exact. A
     * large-vocabulary corpus only tokenizes up to its first 65 distinct
     * tokens per partition. Nothing is cached: the chosen plan tokenizes
-    * again (the dict plan persists its masks itself), which costs less
-    * than caching the tokenize frame for one more read. Unordered:
+    * again, which costs less than caching the tokenize frame for one more
+    * read. Unordered:
     * [[jaccardPairsDict]] sorts the vocabulary itself. */
   private def adaptiveJaccard(toks: DataFrame, threshold: Double): DataFrame = {
     val vocab = toks.select(col("toks")).queryExecution.toRdd
@@ -455,100 +494,80 @@ object Dedup {
     * Spark's built-in `xxhash64`. Set Jaccard over the hashes equals set
     * Jaccard over the words except under a 64-bit collision, and the
     * sorted-long contract is the one [[jaccardPairsPrefix]]'s merge verify
-    * and [[jaccardPairsDict]]'s mask encoding read. */
+    * and [[jaccardPairsDict]]'s mask encoding read. A text with no token
+    * left has the empty set, which both routes pair with nothing (Jaccard
+    * over two empty sets is 0/0). */
   private[graft] def tokenSets(df: DataFrame, idCol: String, textCol: String,
                                minTokenLen: Int): DataFrame =
     widen(df).select(col(idCol).as("id"),
         array_sort(array_distinct(transform(
           filter(split(col(textCol), " "), t => length(t) >= minTokenLen),
           t => xxhash64(t)))).as("toks"))
-      .withColumn("sz", size(col("toks")))
-      // Jaccard over two EMPTY sets is 0/0: such docs pair with nothing in
-      // the naive/prefix plan, so drop them here too — otherwise the dict
-      // plan would report them as mask-0 twins with J = 1.0 and the two
-      // "provably equivalent" plans would disagree on degenerate input
-      .where(col("sz") > 0)
 
   /** Dictionary/bitmask plan (vocab <= 64): every token set becomes a long
-    * bitmask; the blocked 1-Bucket-Theta self-join (same shape as
-    * [[graft.operators.Ann.cosineDupPairs]]) runs over DISTINCT masks only
-    * — duplicate documents cost one comparison, not |group|^2 — and
-    * qualifying mask pairs are expanded back to document pairs with two
-    * skinny shuffle joins (never a collect_list: a million-document
-    * duplicate group stays a million ROWS, not one giant array row; AQE
-    * skew-join splits hot masks). The Jaccard test is
-    * popcount(a&b)/popcount(a|b) — identical integers to
-    * |intersect|/|union| on the raw sets, so the threshold decision is
-    * bit-identical to the naive plan.
+    * bitmask (bit i is the i-th token of the sorted vocabulary), and the
+    * pair search runs over DISTINCT masks, so a duplicate group costs one
+    * comparison, not |group|^2. The Jaccard test is
+    * bitCount(a & b) / bitCount(a | b) as a double compare: the same
+    * integers as |intersect| / |union| on the sets, so the threshold
+    * decision is bit-identical to the naive and prefix plans.
     *
-    * Lifecycle: the tokenize+mask subtree is persisted (MEMORY_AND_DISK)
-    * because it feeds four joins of the returned plan, and therefore CANNOT
-    * be unpersisted before the caller consumes the result. Dataset-level
-    * persist is registered with the session CacheManager, which holds it
-    * until explicitly uncached — it is NOT freed when the DataFrame is
-    * GC'd. One-shot jobs (and the bench, which clears per pass) are
-    * unaffected; a long-lived session issuing MANY dedup calls must
-    * materialize each result (write / localCheckpoint(eager = true)) and
-    * then `spark.catalog.clearCache()` between calls. Same contract for
-    * [[graft.operators.Ann.ivfTopK]]; the route probe of [[jaccardPairs]]
-    * and the prefix plan cache nothing. */
+    * Execution: one lazy pipeline of RDD operators over one
+    * `HashPartitioner`, the model of [[jaccardPairsPrefix]]: one Spark job
+    * per action, no generated code between its input and output plans and
+    * no cache.
+    *   1. (mask, id) rows are sorted by mask, so a run is one
+    *      identical-set group; each run emits its own pairs at J = 1.0 and
+    *      one distinct-mask row;
+    *   2. the distinct masks meet in [[blockPairs]], one popcount pair per
+    *      compare;
+    *   3. each qualifying mask pair (m_a, m_b) is sorted by m_a and merged
+    *      with the runs to pick up m_a's ids, then sorted by m_b and merged
+    *      again, where m_a's ids meet m_b's.
+    * The mask-sorted runs are read four times (steps 1, 2 and both merges
+    * of 3) rather than cached, each read re-sorting the shuffled records.
+    * A group's ids are held as one array while its pairs are emitted (they
+    * are quadratic in it either way).
+    *
+    * Contract: `toks` holds (id, toks) as for [[jaccardPairsPrefix]] (an
+    * integral `id`, kept in the output; a sorted, duplicate-free
+    * `array<bigint>`), and `vocab` every token of `toks`, at most 64 (a
+    * token outside it fails the job). A null id or a null set names no
+    * document, and an empty set pairs with nothing. */
   def jaccardPairsDict(toks: DataFrame, vocab: Array[Long],
                        threshold: Double): DataFrame = {
-    val spark = toks.sparkSession
-    import spark.implicits._
-    val nBlocks = ThetaBlocks.resolve(spark, 0)
-    val vmap = typedLit(vocab.sorted.zipWithIndex.toMap)
-    // cached: this subtree feeds FOUR joins below (both sides of the
-    // same-mask pairing, both sides of the mask-pair expansion) — without
-    // persist the tokenize+mask pass would re-read the corpus four times.
-    // Held by the CacheManager until the caller clears it (docstring).
-    val withMask = toks
-      .withColumn("mask", aggregate(col("toks"), lit(0L),
-        (acc, t) => acc.bitwiseOR(
-          call_function("shiftleft", lit(1L), element_at(vmap, t)))))
-      .select("id", "mask")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // persisted (r6): the distinct-mask frame feeds BOTH sides of the
-    // blocked self-join below, and without the cache the distinct
-    // aggregation over the corpus-sized mask cache was planned and executed
-    // once per side (q27 plan evidence) — at scale that is a duplicated
-    // full-corpus aggregation pass. Same CacheManager lifecycle contract
-    // as `withMask` (docstring above).
-    val masks = withMask.select("mask").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // same-mask pairs: J = 1.0 by construction (row-level self-join — no
-    // per-group array materialization)
-    val same = withMask.select(col("mask"), col("id").as("id_a"))
-      .join(withMask.select(col("mask"), col("id").as("id_b")), "mask")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-
-    // distinct-mask pairs: blocked self-join, one popcount per pair
-    val withBlk = masks.withColumn("blk", pmod(hash(col("mask")), lit(nBlocks)))
-    val blockPairs = (for { i <- 0 until nBlocks; j <- i until nBlocks } yield (i, j))
-      .toDF("ba", "bb")
-    val lhs = withBlk.join(broadcast(blockPairs), col("blk") === col("ba"))
-      .select(col("ba"), col("bb"), col("mask").as("m_l"))
-    val rhs = withBlk.join(broadcast(blockPairs), col("blk") === col("bb"))
-      .select(col("ba"), col("bb"), col("mask").as("m_r"))
-    val maskPairs = lhs.join(rhs, Seq("ba", "bb"))
-      .where(col("m_l") =!= col("m_r") &&
-        (col("ba") =!= col("bb") || col("m_l") < col("m_r")))
-      .withColumn("jaccard",
-        bit_count(col("m_l").bitwiseAND(col("m_r"))).cast("double") /
-          bit_count(col("m_l").bitwiseOR(col("m_r"))).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select("m_l", "m_r", "jaccard")
-
-    // expand qualifying mask pairs to document pairs (skinny joins)
-    val cross = maskPairs
-      .join(withMask.select(col("mask").as("m_l"), col("id").as("id_l")), "m_l")
-      .join(withMask.select(col("mask").as("m_r"), col("id").as("id_r")), "m_r")
-      .select(least(col("id_l"), col("id_r")).as("id_a"),
-        greatest(col("id_l"), col("id_r")).as("id_b"), col("jaccard"))
-
-    same.unionByName(cross)
+    val idType = integralId(toks.schema("id").dataType, "jaccardPairsDict")
+    val dict = vocab.distinct.sorted
+    require(dict.length <= 64, s"jaccardPairsDict takes at most 64 tokens, got ${dict.length}")
+    val part = shufflePartitioner(toks)
+    def jaccard(a: Long, b: Long): Double =
+      java.lang.Long.bitCount(a & b).toDouble / java.lang.Long.bitCount(a | b).toDouble
+    // 1. (mask, sorted ids) per identical-set group, in mask order
+    val maskIds = nonNullRows(toks, col("id").cast("long"), col("toks")) { r =>
+      val mask = r.getArray(1).toLongArray().foldLeft(0L) { (m, t) =>
+        val bit = java.util.Arrays.binarySearch(dict, t)
+        require(bit >= 0, s"token $t is not in the vocabulary")
+        m | 1L << bit
+      }
+      if (mask == 0L) None else Some((mask, r.getLong(0)))
+    }
+    val groups = SortedRuns.byKey(maskIds, part)
+      .mapPartitions(runs(_).map { case (m, ids) => (m, ids.toArray.sorted) }, preservesPartitioning = true)
+    val same = groups.flatMap { case (_, ids) =>
+      for (i <- Iterator.range(0, ids.length); j <- Iterator.range(i + 1, ids.length) if ids(i) < ids(j))
+        yield (ids(i), ids(j), 1.0)
+    }
+    // 2. distinct-mask pairs (m_a < m_b)
+    val maskPairs = blockPairs(groups.map { case (m, _) => (m, Array(m)) }, part, thetaBlocks(toks.sparkSession))(
+      (x, y) => jaccard(x(0), y(0)) >= threshold)
+    // 3. m_a's ids, m_a appended, go to m_b's partition and meet m_b's ids
+    val toLarger = mergeSorted(SortedRuns.byKey(maskPairs, part), groups)((ma, mb, ids) => Some((mb, ids :+ ma)))
+    val cross = mergeSorted(SortedRuns.byKey(toLarger, part), groups) { (mb, idsA, idsB) =>
+      val j = jaccard(idsA.last, mb)
+      for (a <- idsA.iterator.take(idsA.length - 1); b <- idsB.iterator if a != b)
+        yield (math.min(a, b), math.max(a, b), j)
+    }
+    pairFrame(same.union(cross), toks.sparkSession, idType, "jaccard")
   }
 
   /** Benchmark decontamination — the standard train/test-overlap check a
@@ -656,15 +675,10 @@ object Dedup {
     val c = threshold / (1.0 + threshold)
     // 1-2. (tok, id) by token: a run is one posting list, its length the
     // token's df; then (id, [tok, df, ...]) by id, one run per document
-    val tokIds = toks.select(col("id").cast("long"), col("toks")).queryExecution.toRdd
-      .flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else {
-          val id = r.getLong(0)
-          val ts = r.getArray(1).toLongArray()
-          Iterator.tabulate(ts.length)(i => (ts(i), id))
-        }
-      }
+    val tokIds = nonNullRows(toks, col("id").cast("long"), col("toks")) { r =>
+      val id = r.getLong(0)
+      r.getArray(1).toLongArray().iterator.map((_, id))
+    }
     val byId = SortedRuns.byKey(SortedRuns.byKey(tokIds, part).mapPartitions { it =>
         // a document's [tok, df, tok, df, ...] entries leave in one record
         // per batch, so the by-id shuffle moves about one record per
@@ -758,24 +772,35 @@ object Dedup {
         }
       }
     // ... and verified there against the larger id's set
-    val pairs = SortedRuns.byKey(withSetA, part)
-      .zipPartitions(docs) { (ps, ds) =>
-        val doc = ds.buffered
-        ps.flatMap { case (b, setA) =>
-          while (doc.head._1 < b) doc.next()
-          val setB = doc.head._2
-          val na = setA.length - 1
-          val inter = SortedLongs.interCount(setA, na, setB, setB.length)
-          val jaccard = inter.toDouble / (na + setB.length - inter).toDouble
-          if (jaccard >= threshold) Iterator.single((setA(na), b, jaccard)) else Iterator.empty
-        }
-      }
-    pairFrame(pairs, toks.sparkSession, "jaccard", idType)
+    val pairs = mergeSorted(SortedRuns.byKey(withSetA, part), docs) { (b, setA, setB) =>
+      val na = setA.length - 1
+      val inter = SortedLongs.interCount(setA, na, setB, setB.length)
+      val jaccard = inter.toDouble / (na + setB.length - inter).toDouble
+      if (jaccard >= threshold) Some((setA(na), b, jaccard)) else None
+    }
+    pairFrame(pairs, toks.sparkSession, idType, "jaccard")
   }
 
   /** Entries a by-token task of [[jaccardPairsPrefix]] batches per
     * document before it sends them (16 bytes each). */
   private val batchEntries = 1 << 16
+
+  /** `f` over the rows of `df.select(cols)` that hold no null, as an RDD:
+    * the way the pair operators leave SQL. */
+  private[operators] def nonNullRows[T: ClassTag](df: DataFrame, cols: Column*)(
+      f: InternalRow => IterableOnce[T]): RDD[T] =
+    df.select(cols: _*).queryExecution.toRdd
+      .flatMap(r => if ((0 until r.numFields).exists(r.isNullAt)) None else f(r))
+
+  /** `f(k, v, t)` over each (k, v) of `sorted`, t the value `table` holds
+    * at k: both are key-sorted in the same partitions, and `table` holds
+    * every key of `sorted`, once. */
+  private def mergeSorted[V, T, R: ClassTag](sorted: RDD[(Long, V)], table: RDD[(Long, T)])(
+      f: (Long, V, T) => IterableOnce[R]): RDD[R] =
+    sorted.zipPartitions(table) { (vs, ts) =>
+      val t = ts.buffered
+      vs.flatMap { case (k, v) => while (t.head._1 < k) t.next(); f(k, v, t.head._2) }
+    }
 
   /** The runs of equal keys of a key-sorted iterator, as (key, values).
     * A run's values are read from the underlying iterator, so they are

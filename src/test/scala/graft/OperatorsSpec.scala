@@ -7,8 +7,6 @@ import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.grafttest.{Bus, Codegen, Confs}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.ExternalRDD
 import org.apache.spark.sql.grafttest.Caches
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.functions._
@@ -256,31 +254,31 @@ class OperatorsSpec extends SparkTestBase {
       base ++ base.take(n / 3).map { case (id, s) => (id + 1000L, s.replace(" ", "  ") + " x") } ++
         Seq((5000L, "a b  c "), (5001L, "a b c"), (5002L, ""), (5003L, " "))
     }
-    def run(docs: Seq[(Long, String)], t: Double, minLen: Int): (Set[(Long, Long)], LogicalPlan) = {
-      val out = Dedup.jaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text", t,
-        minTokenLen = minLen)
-      val plan = out.queryExecution.optimizedPlan
-      (out.select("id_a", "id_b").as[(Long, Long)].collect().toSet, plan)
+    // each route called directly; the dict route is given the corpus' vocabulary
+    def ids(df: DataFrame) = df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    def toks(docs: Seq[(Long, String)], minLen: Int) =
+      Dedup.tokenSets(docs.toDF("doc_id", "text"), "doc_id", "text", minLen)
+    def dict(docs: Seq[(Long, String)], t: Double, minLen: Int) = {
+      val ts = toks(docs, minLen)
+      val vocab = ts.select(explode(col("toks"))).distinct().as[Long].collect()
+      assert(vocab.length <= 64)
+      ids(Dedup.jaccardPairsDict(ts, vocab, t))
     }
-    // the prefix route leaves SQL at its input and comes back as one RDD
-    def viaRdd(plan: LogicalPlan) = plan.collect { case r: ExternalRDD[_] => r }.nonEmpty
+    def prefix(docs: Seq[(Long, String)], t: Double, minLen: Int) =
+      ids(Dedup.jaccardPairsPrefix(toks(docs, minLen), t))
     val small = corpus((1 to 12).map(i => s"t$i") ++ Seq("u", "v"), 60, 7)
     val big = corpus((1 to 200).map(i => s"w$i") ++ Seq("u", "v"), 60, 20)
     for ((minLen, t) <- Seq((0, 0.5), (2, 0.8))) {
-      val (dictPairs, dictPlan) = run(small, t, minLen)
-      assert(dictPlan.toString.contains("bit_count") && !viaRdd(dictPlan),
-        "a vocabulary of <= 64 tokens takes the dict route")
-      assert(dictPairs == naive(small, t, minLen), s"dict route, minTokenLen=$minLen t=$t")
-      val (prefixPairs, prefixRoutePlan) = run(big, t, minLen)
-      assert(viaRdd(prefixRoutePlan) && !prefixRoutePlan.toString.contains("bit_count"),
-        "a vocabulary above 64 tokens takes the prefix route")
-      assert(prefixPairs == naive(big, t, minLen), s"prefix route, minTokenLen=$minLen t=$t")
-      spark.catalog.clearCache()
+      val want = naive(small, t, minLen)
+      assert(dict(small, t, minLen) == want, s"dict route, minTokenLen=$minLen t=$t")
+      assert(prefix(small, t, minLen) == want, s"prefix route, small vocabulary, minTokenLen=$minLen t=$t")
+      assert(prefix(big, t, minLen) == naive(big, t, minLen), s"prefix route, minTokenLen=$minLen t=$t")
     }
     // the empty token is a real token at minTokenLen 0 and filtered above it
-    assert(!run(small, 0.99, 0)._1.contains((5000L, 5001L)))
-    assert(run(small, 0.99, 1)._1.contains((5000L, 5001L)))
-    spark.catalog.clearCache()
+    def run(docs: Seq[(Long, String)], t: Double, minLen: Int) =
+      ids(Dedup.jaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text", t, minTokenLen = minLen))
+    assert(!run(small, 0.99, 0).contains((5000L, 5001L)))
+    assert(run(small, 0.99, 1).contains((5000L, 5001L)))
   }
 
   test("character-n-gram jaccard pairs == naive; order-sensitive vs word sets") {
@@ -473,20 +471,19 @@ class OperatorsSpec extends SparkTestBase {
 
   test("blocked theta-joins: output invariant across block counts (incl. auto)") {
     val rnd = new scala.util.Random(11)
-    val base = Array.fill(40)(Array.fill(16)(rnd.nextFloat() + 0.1f))
-    val vecs = (0 until 80).map { i =>
-      val v = if (i < 40) base(i) else base(i - 40).map(x => x * 1.001f)
-      (i.toLong, v.toSeq)
-    }.toDF("vec_id", "embedding")
-    def run(blocks: Int) = Ann.cosineDupPairs(vecs, 0.95, blocks)
-      .as[(Long, Long)].collect().toSet
-    val auto = run(0)
-    assert(auto == run(3) && auto == run(16) && auto.nonEmpty,
-      "pair set must not depend on the block count")
-    // auto policy tracks parallelism: ~2x slots worth of uniform reducers
-    val b = Dedup.ThetaBlocks.resolve(spark, 0)
-    assert(b >= 4 &&
-      b == math.ceil(math.sqrt(4.0 * spark.sparkContext.defaultParallelism)).toInt)
+    // an asymmetric compare, so a swapped (smaller, larger) payload order
+    // shows; id 5 appears twice, and equal ids never pair
+    val keep = (x: Array[Long], y: Array[Long]) => x(0) <= y(0) && math.abs(x(1) - y(1)) <= 2
+    val rows = (0 until 90).map(i => (i * 7919L - 300000L, Array(rnd.nextInt(8).toLong, rnd.nextInt(20).toLong))) ++
+      Seq(5L -> Array(3L, 10L), 5L -> Array(4L, 10L))
+    val want = (for { (a, x) <- rows; (b, y) <- rows if a < b && keep(x, y) } yield (a, b)).sorted
+    def run(blocks: Int) = Dedup.blockPairs(spark.sparkContext.parallelize(rows, 3), new HashPartitioner(4),
+      blocks)(keep).collect().toSeq.sorted
+    // the policy tracks parallelism: about 2x slots worth of block pairs
+    val policy = Dedup.thetaBlocks(spark)
+    assert(policy == math.max(4, math.ceil(math.sqrt(4.0 * spark.sparkContext.defaultParallelism)).toInt))
+    for (b <- Seq(1, 3, 16, policy)) assert(run(b) == want, s"B = $b")
+    assert(want.nonEmpty && want.distinct.length < want.length, "the repeated id must pair twice")
   }
 
   /** 400 nodes: a random sparse graph on 0-199, a 140-node CHAIN on
@@ -791,5 +788,79 @@ class OperatorsSpec extends SparkTestBase {
     assert(wantPrefix.nonEmpty && prefix.map(p => (p._1, p._2) -> p._3).toMap == wantPrefix)
     val wantMh = naiveMinhash(minhashSigs(docs.map { case (id, s) => (Option(id), Option(s)) }, 16), 8, 0.5)
     assert(wantMh.nonEmpty && mh.map(p => (p._1, p._2) -> p._3).toMap == wantMh)
+  }
+
+  /** Exact cosine pairs of (id, float vector) rows with the operator's
+    * quantization and compare, id_a the smaller id. */
+  private def naiveCosine(vecs: Seq[(Long, Seq[Float])], t: Double): Set[(Long, Long)] = {
+    val q = vecs.map { case (id, v) => (id, v.map(x => math.floor(x.toDouble * 1000.0))) }
+    (for {
+      (a, x) <- q; (b, y) <- q if a < b
+      dot = x.zip(y).map { case (p, r) => p * r }.sum
+      if dot > 0 && dot * dot >= t * t * x.map(p => p * p).sum * y.map(p => p * p).sum
+    } yield (a, b)).toSet
+  }
+
+  /** 2n 8-dim vectors: n random ones and a near-copy of each. */
+  private def cosineCorpus(n: Int, seed: Int): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    val base = Seq.fill(n)(Seq.fill(8)(rnd.nextFloat() * 2 - 0.5f))
+    (base ++ base.map(_.map(x => x + (rnd.nextFloat() - 0.5f) * 0.05f))).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+  }
+
+  test("sorted shuffles spill: dict route and cosine pairs == naive") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(43)
+    // 40 tokens; every third document repeats an earlier one's set
+    val vocab = (1 to 40).map(i => s"t$i")
+    val sets = (0 until 300).map(_ => rnd.shuffle(vocab).take(4 + rnd.nextInt(5)))
+    val docs = sets.indices.map(i => (i.toLong, (if (i % 3 == 2) sets(i / 2) else sets(i)).mkString(" ")))
+    val toks = Dedup.tokenSets(docs.toDF("doc_id", "text"), "doc_id", "text", 0)
+    val dictVocab = toks.select(explode(col("toks"))).distinct().as[Long].collect()
+    val vecs = cosineCorpus(150, 47)
+    var dict = Array.empty[(Long, Long, Double)]
+    var cos = Array.empty[(Long, Long)]
+    val (dictSpilled, cosSpilled) = Confs.withConfs(sc,
+        "spark.shuffle.spill.numElementsForceSpillThreshold" -> "64",
+        "spark.unsafe.exceptionOnMemoryLeak" -> "true") {
+      (Bus.diskSpilledOf(sc) { dict = Dedup.jaccardPairsDict(toks, dictVocab, 0.6).as[(Long, Long, Double)].collect() },
+        Bus.diskSpilledOf(sc) { cos = Ann.cosineDupPairs(vecs.toDF("vec_id", "embedding"), 0.99).as[(Long, Long)].collect() })
+    }
+    assert(dictSpilled > 0 && cosSpilled > 0, s"spilled $dictSpilled and $cosSpilled bytes")
+    val wantDict = naiveJaccard(docs.map { case (id, s) => (Option(id), Option(s.split(" ").toSet)) }, 0.6)
+    assert(wantDict.values.exists(_ < 1.0) && wantDict.values.exists(_ == 1.0))
+    assert(dict.length == wantDict.size && dict.map(p => (p._1, p._2) -> p._3).toMap == wantDict)
+    val wantCos = naiveCosine(vecs, 0.99)
+    assert(wantCos.nonEmpty && cos.length == wantCos.size && cos.toSet == wantCos)
+  }
+
+  test("pair operators: null ids name no document on any route") {
+    // a null id shares a set or vector with document 1, document 4 repeats
+    // document 1, and document 3 has no set or vector
+    val texts: Seq[(Option[Long], Option[String])] = Seq((None, Some("a b c d e")), (Some(1L), Some("a b c d")),
+      (Some(2L), Some("x y z")), (Some(3L), None), (Some(4L), Some("a b c d")), (None, Some("a b c d")))
+    val want = naiveJaccard(texts.map { case (id, s) => (id, s.map(_.split(" ").toSet)) }, 0.5)
+    assert(want == Map((1L, 4L) -> 1.0))
+    val toks = Dedup.tokenSets(texts.toDF("doc_id", "text"), "doc_id", "text", 0)
+    val vocab = toks.select(explode(col("toks"))).distinct().as[Long].collect()
+    // a large-vocabulary copy (ids + 100) takes the prefix route
+    val filler = (0 until 70).map(i => (Option(200L + i), Option(s"f$i g$i h$i")))
+    val big = texts.map { case (id, s) => (id.map(_ + 100L), s) } ++ filler
+    val wantBig = want.map { case ((a, b), j) => (a + 100L, b + 100L) -> j }
+    def pairs(df: DataFrame) = df.as[(Long, Long, Double)].collect()
+    for ((got, expected) <- Seq(
+        pairs(Dedup.jaccardPairs(texts.toDF("doc_id", "text"), "doc_id", "text", 0.5)) -> want,
+        pairs(Dedup.jaccardPairsDict(toks, vocab, 0.5)) -> want,
+        pairs(Dedup.jaccardPairsPrefix(toks, 0.5)) -> want,
+        pairs(Dedup.jaccardPairs(big.toDF("doc_id", "text"), "doc_id", "text", 0.5)) -> wantBig)) {
+      assert(got.forall(p => p._1 < p._2), got.mkString(", "))
+      assert(got.map(p => (p._1, p._2) -> p._3).toMap == expected && got.length == expected.size)
+    }
+    val vecs = cosineCorpus(10, 3)
+    val withNulls: Seq[(Option[Long], Option[Seq[Float]])] =
+      vecs.map { case (id, v) => (Option(id), Option(v)) } ++ Seq((None, Some(vecs(1)._2)), (Some(99L), None))
+    val cos = Ann.cosineDupPairs(withNulls.toDF("vec_id", "embedding"), 0.99).as[(Long, Long)].collect()
+    assert(cos.forall(p => p._1 < p._2), cos.mkString(", "))
+    assert(cos.length == naiveCosine(vecs, 0.99).size && cos.toSet == naiveCosine(vecs, 0.99))
   }
 }

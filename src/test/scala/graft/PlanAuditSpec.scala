@@ -4,7 +4,7 @@ import graft.functions.GraftFunctions._
 import graft.functions.exprs
 import graft.operators.{Ann, Dedup, Knn, SpatialJoin}
 import graft.sources.{Snapshots, SynthData}
-import org.apache.spark.grafttest.{Blocks, Bus}
+import org.apache.spark.grafttest.{Blocks, Bus, Codegen}
 import org.apache.spark.sql.grafttest.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.InSet
@@ -16,6 +16,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.jdk.CollectionConverters._
@@ -244,14 +245,33 @@ class PlanAuditSpec extends SparkTestBase {
     assert(p.contains("Exchange hashpartitioning"), "hash shuffle on the dedup key")
   }
 
-  test("blocked cosine join: no broadcast of the corpus, block-pair key join") {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val p = plan(Ann.cosineDupPairs(e, 0.4, blocks = 8))
-    assert(!p.contains("CartesianProduct"), "no cartesian product")
-    assert(p.contains("vec_dot"), "codegen'd dot kernel in the verify")
-    // the only broadcasts are the tiny block-pair frames (and possibly an
-    // AQE-converted small side at this SF) — never a crossJoin of the corpus
-    assert(!p.contains("BroadcastNestedLoopJoin"), "no nested-loop broadcast join")
+  test("cosine pairs: one job, no generated code when warm, no cache") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(9)
+    // every other vector is a near-copy of the one before it
+    def corpus(n: Int) = {
+      val vs = (0 until n).map(_ => Seq.fill(16)(rnd.nextFloat() - 0.3f))
+      vs.indices.map { i =>
+        (i.toLong, if (i % 2 == 1) vs(i - 1).map(_ * 1.001f) else vs(i))
+      }.toDF("vec_id", "embedding")
+    }
+    def pairs(df: DataFrame) = Ann.cosineDupPairs(df, 0.95).collect()
+    val (first, second) = (corpus(120), corpus(90))
+    assert(pairs(first).nonEmpty) // warm: the input and output plans compile once
+    val baseline = (sc.getPersistentRDDs.size, Caches.entries(spark))
+    val jobs = Bus.jobsOf(sc)(pairs(first))
+    assert(jobs == 1, s"a warm cosineDupPairs collect ran $jobs jobs")
+    val compiled = Codegen.compiled(pairs(second))
+    assert(compiled == 0, s"a call over another corpus compiled $compiled classes")
+    assert((sc.getPersistentRDDs.size, Caches.entries(spark)) == baseline,
+      "cosineDupPairs must leave no persisted RDD or cache entry")
+    // an INT id comes back as INT with the same pairs; a STRING id is refused
+    val asInt = Ann.cosineDupPairs(first.select(col("vec_id").cast("int"), col("embedding")), 0.95)
+    assert(asInt.schema("id_a").dataType == IntegerType && asInt.schema("id_b").dataType == IntegerType)
+    assert(asInt.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toSet ==
+      pairs(first).map(r => (r.getLong(0), r.getLong(1))).toSet)
+    intercept[IllegalArgumentException](
+      Ann.cosineDupPairs(first.select(col("vec_id").cast("string"), col("embedding")), 0.95))
   }
 
   test("IVF ANN: narrow capped-centroid assignment, persisted + reused, corpus never broadcast") {
@@ -286,22 +306,53 @@ class PlanAuditSpec extends SparkTestBase {
     assert("HashAggregate".r.findAllIn(p).size >= 2, "partial+final aggregate expected")
   }
 
-  test("dict jaccard: distinct-mask frame computed once, not once per join side") {
-    spark.catalog.clearCache()
-    val docs = Seq((1L, "a b c"), (2L, "a b c"), (3L, "b c d"), (4L, "d e"),
-      (5L, "a e")).toDF("doc_id", "text")
-    val out = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
-    // the tokenize, mask and distinct-mask subtrees are all persisted, so in
-    // the optimized plan every aggregate lives INSIDE an InMemoryRelation
-    // leaf — zero live Aggregate nodes may remain in the result plan itself.
-    // (Before the r6 fix the distinct-mask aggregation appeared once per
-    // side of the blocked self-join: a duplicated corpus-sized agg at scale.)
-    val aggs = out.queryExecution.optimizedPlan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+  test("dict jaccard: one job, no generated code when warm, no cache") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(17)
+    // 20 tokens; every third document repeats the one before it
+    def corpus(n: Int) = {
+      val docs = (0 until n).map(_ => Seq.fill(3 + rnd.nextInt(5))(s"t${rnd.nextInt(20)}").mkString(" "))
+      docs.indices.map(i => (i.toLong, if (i % 3 == 2) docs(i - 1) else docs(i))).toDF("doc_id", "text")
     }
-    assert(aggs.isEmpty,
-      s"distinct-mask aggregate must come from the cache, found ${aggs.size} live")
-    spark.catalog.clearCache()
+    def toks(df: DataFrame) = Dedup.tokenSets(df, "doc_id", "text", 0)
+    def vocab(df: DataFrame) = toks(df).select(explode(col("toks"))).distinct().as[Long].collect()
+    val (first, second) = (corpus(120), corpus(90))
+    val (v1, v2) = (vocab(first), vocab(second))
+    def pairs(df: DataFrame, v: Array[Long]) = Dedup.jaccardPairsDict(toks(df), v, 0.5).collect()
+    assert(pairs(first, v1).nonEmpty) // warm: the input and output plans compile once
+    val baseline = (sc.getPersistentRDDs.size, Caches.entries(spark))
+    val jobs = Bus.jobsOf(sc)(pairs(first, v1))
+    assert(jobs == 1, s"a warm jaccardPairsDict collect ran $jobs jobs")
+    val compiled = Codegen.compiled(pairs(second, v2))
+    assert(compiled == 0, s"a call over another corpus compiled $compiled classes")
+    assert((sc.getPersistentRDDs.size, Caches.entries(spark)) == baseline,
+      "the dict route must leave no persisted RDD or cache entry")
+    // an INT id comes back as INT with the same pairs; a STRING id is refused
+    val asInt = Dedup.jaccardPairsDict(toks(first.select(col("doc_id").cast("int"), col("text"))), v1, 0.5)
+    assert(asInt.schema("id_a").dataType == IntegerType && asInt.schema("id_b").dataType == IntegerType)
+    assert(asInt.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getDouble(2))).toSet ==
+      pairs(first, v1).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    intercept[IllegalArgumentException](Dedup.jaccardPairsDict(
+      toks(first.select(col("doc_id").cast("string"), col("text"))), v1, 0.5))
+  }
+
+  test("pair operators: 50 calls leave no persisted RDD or cache entry") {
+    val sc = spark.sparkContext
+    val rnd = new scala.util.Random(29)
+    // a 16-token corpus takes the dict route, a 300-token one the prefix route
+    def corpus(vocab: Int) = (0 until 60).map(i =>
+      (i.toLong, Seq.fill(4 + rnd.nextInt(6))(s"w${rnd.nextInt(vocab)}").mkString(" "))).toDF("doc_id", "text")
+    val (small, big) = (corpus(16), corpus(300))
+    val vecs = (0 until 60).map(i => (i.toLong, Seq.fill(8)(rnd.nextFloat()))).toDF("vec_id", "embedding")
+    val calls = Seq[() => Unit](
+      () => Dedup.jaccardPairs(small, "doc_id", "text", 0.5).collect(),
+      () => Dedup.jaccardPairs(big, "doc_id", "text", 0.5).collect(),
+      () => Ann.cosineDupPairs(vecs, 0.9).collect(),
+      () => Dedup.minhashPairs(small, "doc_id", "text", numHashes = 16, bands = 8, threshold = 0.5).collect())
+    val baseline = (sc.getPersistentRDDs.size, Caches.entries(spark))
+    (0 until 50).foreach(i => calls(i % calls.size)())
+    assert((sc.getPersistentRDDs.size, Caches.entries(spark)) == baseline,
+      "pair operators must leave no persisted RDD or cache entry")
   }
 
   test("word jaccard: one hashed-long token path, merge-kernel verify") {
